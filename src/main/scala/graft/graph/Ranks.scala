@@ -1,10 +1,14 @@
 package graft.graph
 
 import graft.core.Caches.TrackedPersist
+import graft.core.LocalGate
 
+import org.apache.spark.SparkContext
 import org.apache.spark.graphx._
+import org.apache.spark.rdd.RDD
+import scala.collection.mutable
 import scala.reflect.ClassTag
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -14,21 +18,36 @@ import org.apache.spark.storage.StorageLevel
   * country–trades subgraph (`preprocess_upload_neo4j.py:401-447`,
   * maxIterations=20, dampingFactor=0.85, unweighted). Here:
   *
-  *  - vertices/edges come in as DataFrames (name-keyed); vertex ids
-  *    are `xxhash64(name)` — deterministic, no extra zipWithIndex pass,
-  *    collision-checked by the caller's key-uniqueness assert.
-  *  - PageRank: custom aggregateMessages loop with GDS's exact
-  *    delta-propagation semantics (see powerIterate scaladoc) —
-  *    verified BIT-EXACT against the reference's golden output, which
-  *    plain power iteration from init 1.0 misses by ~4%.
-  *  - ArticleRank: no GraphX built-in — same loop with denominator
-  *    `outDeg(u) + avgOutDeg` (published GDS variant).
+  *  - vertices/edges come in as DataFrames (name-keyed).
+  *  - PageRank: GDS's exact delta-propagation semantics (see
+  *    powerIterate scaladoc) — verified BIT-EXACT against the
+  *    reference's golden output, which plain power iteration from
+  *    init 1.0 misses by ~4%.
+  *  - ArticleRank: same series with denominator `outDeg(u) + avgOutDeg`
+  *    (published GDS variant).
   *
-  * Both are implemented as one aggregateMessages + join per
-  * superstep — at 1000 executors this is the standard Pregel shuffle
-  * pattern; edge partitioning via `EdgePartition2D` caps replication
-  * at 2·sqrt(P). 20 iterations == 20 shuffles, unavoidable for exact
-  * parity with the reference's fixed-iteration config.
+  * The fused PageRank/ArticleRank series ([[rankTable]],
+  * [[rankStateTable]], [[resumeRankTable]]) holds the vertex state in
+  * driver arrays — Pregelix's vertex ⋈ message join with the vertex
+  * relation broadcast and the group-by reduced on the driver:
+  *
+  *  - at or below [[LocalEdgeThreshold]] edges the edge list is
+  *    collected too, and the series runs in one job;
+  *  - above it the edges stay distributed as cached blocks of `Int`
+  *    vertex indices (one job builds them and counts out-degrees), and
+  *    each superstep is ONE shuffle-free job: broadcast the V-length
+  *    term·inv vectors, sum each block's messages into V-length arrays,
+  *    add those on the driver in partition order (deterministic);
+  *  - both forms run the same update loop over the same per-block
+  *    message kernel and differ only in where the edge blocks live;
+  *  - GraphX (`graphFromNames` + aggregateMessages supersteps, one
+  *    shuffle per round; vertex ids `xxhash64(name)`, collision-checked)
+  *    remains for distributed edges with more vertices than the shared
+  *    [[LocalGate]] value, or than one superstep's results can bring to
+  *    the driver within half of `spark.driver.maxResultSize`.
+  *
+  * The weighted and personalized variants keep their own GraphX loops
+  * above the same gate.
   */
 object Ranks {
 
@@ -161,8 +180,6 @@ object Ranks {
     result
   }
 
-  /** Ranks joined back to names (G5): DataFrame(name, pagerank,
-    * articlerank). */
   /** Vertex state of the fused delta series:
     * (prRank, prTerm, invDegPr, arRank, arTerm, invDegAr). */
   private type RankState = (Double, Double, Double, Double, Double, Double)
@@ -405,24 +422,18 @@ object Ranks {
     out
   }
 
-  /** Edge count at or below which the rank iteration runs driver-local
-    * (the aggregation producing the edge list is still fully
-    * distributed — only the O(E·iters) series math moves, the same way
-    * AQE collects stats to the driver). Small rolled-up graphs on a
-    * cluster otherwise pay `iters` near-empty scheduler round-trips. */
-  val LocalEdgeThreshold: Long = 100000L
+  /** Edge count at or below which the rank series also collects the
+    * edge list and runs in one job (the shared [[LocalGate]] value).
+    * The aggregation producing the edge list is still fully
+    * distributed — only the O(E·iters) series math moves. */
+  val LocalEdgeThreshold: Long = LocalGate.Threshold
 
   def rankTable(edges: DataFrame, src: String, dst: String,
       iters: Int = 20, damping: Double = 0.85,
       vertices: Option[DataFrame] = None,
       localThreshold: Long = LocalEdgeThreshold): DataFrame =
-    withCachedEdges(edges) { (e, nEdges) =>
-      if (nEdges <= localThreshold)
-        localRankCore(e, src, dst, vertices, None, iters - 1, damping,
-          emitTerms = false)
-      else distRankCore(e, src, dst, vertices, None, iters - 1, damping,
-        emitTerms = false, nEdges)
-    }
+    seriesTable(edges, src, dst, vertices, None, iters - 1, damping,
+      emitTerms = false, localThreshold)
 
   /** Resumable rank STATE (X138): the complete delta-series checkpoint
     * per vertex — (name, pagerank, pr_term, articlerank, ar_term)
@@ -438,13 +449,8 @@ object Ranks {
       iters: Int = 20, damping: Double = 0.85,
       vertices: Option[DataFrame] = None,
       localThreshold: Long = LocalEdgeThreshold): DataFrame =
-    withCachedEdges(edges) { (e, nEdges) =>
-      if (nEdges <= localThreshold)
-        localRankCore(e, src, dst, vertices, None, iters - 1, damping,
-          emitTerms = true)
-      else distRankCore(e, src, dst, vertices, None, iters - 1, damping,
-        emitTerms = true, nEdges)
-    }
+    seriesTable(edges, src, dst, vertices, None, iters - 1, damping,
+      emitTerms = true, localThreshold)
 
   /** Continue the rank delta series `extraRounds` rounds from a stored
     * [[rankStateTable]] checkpoint. The vertex set is the state's;
@@ -464,11 +470,11 @@ object Ranks {
       s"resumeRankTable: state must have columns ${needed.mkString("/")} " +
         s"(rankStateTable's schema), got ${state.columns.mkString(", ")}")
     // state-uniqueness probe (bounded: at most 6 names come back):
-    // duplicate `name` rows would make the local path emit duplicate
-    // output rows with stale values and the distributed path pick an
-    // arbitrary copy via outerJoinVertices — silently breaking the
-    // bit-exact-continuation contract. Fail loud like the
-    // missing-vertex probe below.
+    // duplicate `name` rows would make the driver-state paths emit
+    // duplicate output rows with stale values and the GraphX fallback
+    // pick an arbitrary copy via outerJoinVertices — silently breaking
+    // the bit-exact-continuation contract. Fail loud like the
+    // missing-vertex check of the series.
     val dupNames = state.groupBy(col("name"))
       .agg(count(lit(1)).as("_c")).filter(col("_c") > 1)
       .select(col("name").cast("string"))
@@ -477,33 +483,301 @@ object Ranks {
       "resumeRankTable: duplicate state rows for: " +
         s"${dupNames.take(5).mkString(", ")} — the checkpoint must hold " +
         "exactly one row per vertex")
-    withCachedEdges(edges) { (e, nEdges) =>
-      if (nEdges <= localThreshold)
-        localRankCore(e, src, dst, None, Some(state), extraRounds, damping,
-          emitTerms = false)
-      else distRankCore(e, src, dst, None, Some(state), extraRounds, damping,
-        emitTerms = false, nEdges)
-    }
+    seriesTable(edges, src, dst, None, Some(state), extraRounds, damping,
+      emitTerms = false, localThreshold)
   }
 
-  /** Cache the (aggregated, small) edge table around a rank run: graph
-    * construction evaluates it several times (edge RDD, vertex union,
-    * outDegrees) — without this each pass re-runs the full upstream
-    * SQL pipeline. If the CALLER already persisted it (to reuse the
-    * edges after the ranks, e.g. q_top50_partners), respect that and
-    * leave the cache. */
+  /** Cache the (aggregated, small) edge table around a rank run: the
+    * series reads it several times (gate count, vertex set, edge
+    * blocks) — without this each pass re-runs the full upstream SQL
+    * pipeline. If the CALLER already persisted it (to reuse the edges
+    * after the ranks, e.g. q_top50_partners), respect that and leave
+    * the cache. */
   private def withCachedEdges[T](edges: DataFrame)(f: (DataFrame, Long) => T): T = {
     val preCached = edges.storageLevel != StorageLevel.NONE
     val e = if (preCached) edges
-      else edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else edges.persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = e.count() // also materializes the cache
     try f(e, nEdges)
     finally if (!preCached) e.unpersist(blocking = false)
   }
 
-  /** Distributed path: GraphX aggregateMessages supersteps from a cold
-    * or stored start. */
-  private def distRankCore(e: DataFrame, src: String, dst: String,
+  /** Job description of every superstep job of the driver-state series. */
+  private[graft] val SuperstepJob = "graft.Ranks: superstep"
+
+  /** Edges `src(j) -> dst(j)` as vertex indices: the whole collected
+    * edge list (driver-local) or one edge partition. */
+  private final case class EdgeBlock(src: Array[Int], dst: Array[Int])
+
+  /** Resolve name pairs to vertex indices, keeping input order. Pairs
+    * with an unresolved endpoint are left out; up to 5 of the
+    * unresolved names come back. */
+  private def resolve(pairs: Iterator[(String, String)],
+      idx: Map[String, Int]): (EdgeBlock, Array[String]) = {
+    val s = Array.newBuilder[Int]
+    val d = Array.newBuilder[Int]
+    val missing = mutable.LinkedHashSet.empty[String]
+    pairs.foreach { case (a, b) =>
+      val ia = idx.getOrElse(a, -1)
+      val ib = idx.getOrElse(b, -1)
+      if (ia >= 0 && ib >= 0) { s += ia; d += ib }
+      else {
+        if (ia < 0 && missing.size < 5) missing += a
+        if (ib < 0 && missing.size < 5) missing += b
+      }
+    }
+    (EdgeBlock(s.result(), d.result()), missing.toArray)
+  }
+
+  /** The distinct endpoint names of distributed edges if at most
+    * `bound` exist, else None: each partition's distinct names (it stops
+    * reading past bound + 1) merged on the driver in partition order —
+    * one shuffle-free job. */
+  private def endpointNames(ends: RDD[(String, String)], bound: Long): Option[Array[String]] = {
+    val cap = math.min(bound, Int.MaxValue - 1L) + 1
+    val parts = described(ends.sparkContext, "graft.Ranks: vertex names") {
+      ends.mapPartitions { it =>
+        val seen = mutable.LinkedHashSet.empty[String]
+        while (it.hasNext && seen.size < cap) {
+          val (a, b) = it.next()
+          seen += a
+          seen += b
+        }
+        Iterator.single(seen.toArray)
+      }.collect()
+    }
+    val names = parts.iterator.flatten.distinct.toArray
+    if (names.length <= bound) Some(names) else None
+  }
+
+  private def outDegrees(b: EdgeBlock, n: Int): Array[Int] = {
+    val deg = new Array[Int](n)
+    b.src.foreach(v => deg(v) += 1)
+    deg
+  }
+
+  /** The message kernel of both series forms: one superstep's
+    * PageRank and ArticleRank message sums over one block,
+    * m(dst) += w(src) per edge in edge order (w = term·inv). */
+  private def blockMessages(b: EdgeBlock, wPr: Array[Double],
+      wAr: Array[Double]): (Array[Double], Array[Double]) = {
+    val mPr = new Array[Double](wPr.length)
+    val mAr = new Array[Double](wAr.length)
+    var j = 0
+    while (j < b.src.length) {
+      val s = b.src(j)
+      val d = b.dst(j)
+      mPr(d) += wPr(s)
+      mAr(d) += wAr(s)
+      j += 1
+    }
+    (mPr, mAr)
+  }
+
+  /** Per-vertex state of the fused PageRank + ArticleRank delta series
+    * held in driver arrays: rank, last term and inverse denominator of
+    * each series. */
+  private final class SeriesState(val pr: Array[Double], var prTerm: Array[Double],
+      val invPr: Array[Double], val ar: Array[Double], var arTerm: Array[Double],
+      val invAr: Array[Double]) {
+
+    /** `rounds` delta-propagation rounds: w = term·inv, m = the
+      * per-destination sums of w that `messages` returns,
+      * term' = d·m, rank' = rank + term'. The recurrence is memoryless
+      * given (rank, term), which is what makes [[resumeRankTable]]'s
+      * warm start EXACTLY the continued cold run. */
+    def run(rounds: Int, damping: Double)(
+        messages: (Array[Double], Array[Double]) => (Array[Double], Array[Double])): Unit = {
+      val n = pr.length
+      var i = 0
+      while (i < rounds) {
+        val wPr = new Array[Double](n)
+        val wAr = new Array[Double](n)
+        var v = 0
+        while (v < n) {
+          wPr(v) = prTerm(v) * invPr(v)
+          wAr(v) = arTerm(v) * invAr(v)
+          v += 1
+        }
+        val (mPr, mAr) = messages(wPr, wAr)
+        v = 0
+        while (v < n) {
+          mPr(v) *= damping
+          mAr(v) *= damping
+          pr(v) += mPr(v)
+          ar(v) += mAr(v)
+          v += 1
+        }
+        prTerm = mPr
+        arTerm = mAr
+        i += 1
+      }
+    }
+  }
+
+  /** Most vertices the series holds with `blocks` distributed edge
+    * blocks: `gate`, and few enough that a superstep's results (two
+    * V-length double arrays per block; the block-building job returns
+    * less) stay within half of `spark.driver.maxResultSize` (0: no
+    * limit), so a job cannot abort on it. */
+  private def driverVertexBound(sc: SparkContext, blocks: Int, gate: Long): Long = {
+    val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (maxResult <= 0) gate else math.min(gate, maxResult / 2 / (16L * blocks))
+  }
+
+  private def described[T](sc: SparkContext, desc: String)(body: => T): T = {
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty("spark.job.description", prev)
+  }
+
+  /** An edge list as index blocks for the series: each block's
+    * out-degree counts and unresolved endpoint names, the superstep
+    * message function over all blocks, and the release of what the
+    * blocks hold. */
+  private final case class Blocks(built: Seq[(Array[Int], Array[String])],
+      messages: (Array[Double], Array[Double]) => (Array[Double], Array[Double]),
+      release: () => Unit)
+
+  /** The collected edge list as one block on the driver. */
+  private def localBlocks(pairs: Array[(String, String)], idx: Map[String, Int],
+      n: Int): Blocks = {
+    val (b, miss) = resolve(pairs.iterator, idx)
+    Blocks(Seq((outDegrees(b, n), miss)), blockMessages(b, _, _), () => ())
+  }
+
+  /** One cached block per edge partition, built by one job. The lineage
+    * is cut (`localCheckpoint`), so each superstep is a single-stage
+    * job: broadcast the weights, sum each block's messages on its
+    * executor, add the V-length partial sums on the driver. */
+  private def distributedBlocks(ends: RDD[(String, String)], idx: Map[String, Int],
+      n: Int): Blocks = {
+    val sc = ends.sparkContext
+    val idxB = sc.broadcast(idx)
+    val rdd = ends.mapPartitions(it => Iterator.single(resolve(it, idxB.value)))
+      .localCheckpoint()
+    val built = described(sc, "graft.Ranks: edge blocks") {
+      sc.runJob(rdd, (it: Iterator[(EdgeBlock, Array[String])]) => {
+        val (b, miss) = it.next()
+        (outDegrees(b, n), miss)
+      }).toSeq
+    }
+    def messages(wPr: Array[Double], wAr: Array[Double]) = {
+      val wB = sc.broadcast((wPr, wAr))
+      val parts = try described(sc, SuperstepJob) {
+        sc.runJob(rdd, (it: Iterator[(EdgeBlock, Array[String])]) => {
+          val (p, a) = wB.value
+          blockMessages(it.next()._1, p, a)
+        })
+      } finally wB.destroy()
+      // partition order, not task-completion order: the float sums are
+      // the same on every run
+      val mPr = new Array[Double](n)
+      val mAr = new Array[Double](n)
+      parts.foreach { case (p, a) =>
+        var v = 0
+        while (v < n) { mPr(v) += p(v); mAr(v) += a(v); v += 1 }
+      }
+      (mPr, mAr)
+    }
+    // the index broadcast goes only after the last superstep: every
+    // superstep task still serializes the block-building closure. The
+    // blocks are checkpoint blocks, reclaimed by the ContextCleaner once
+    // unreachable (an eager unpersist of a local checkpoint only logs a
+    // lineage warning)
+    Blocks(built, messages, () => idxB.destroy())
+  }
+
+  /** The fused series behind [[rankTable]], [[rankStateTable]] and
+    * [[resumeRankTable]]: `rounds` rounds from a cold start (`vertices`
+    * as in [[graphFromNames]]: unresolved edges dropped) or from a
+    * stored checkpoint (`state`: an unresolved endpoint fails loud).
+    * Vertex state lives in driver arrays; the edges are collected at or
+    * below `localThreshold`, else kept as distributed index blocks.
+    * Distributed edges with more than `maxDriverVertices` vertices (0
+    * forces it), or more than [[driverVertexBound]] allows, run the
+    * GraphX supersteps instead. */
+  private[graft] def seriesTable(edges: DataFrame, src: String, dst: String,
+      vertices: Option[DataFrame], state: Option[DataFrame], rounds: Int,
+      damping: Double, emitTerms: Boolean, localThreshold: Long,
+      maxDriverVertices: Long = LocalGate.Threshold): DataFrame =
+    withCachedEdges(edges) { (e, nEdges) =>
+      val spark = e.sparkSession
+      import spark.implicits._
+      val ends = e.select(col(src).cast("string").as("s"),
+        col(dst).cast("string").as("d")).as[(String, String)]
+      val local = nEdges <= localThreshold
+      val rawEdges = if (local) ends.collect() else Array.empty[(String, String)]
+      // distributed edges: one block per partition, at most one per core
+      lazy val blockInput = ends.rdd.coalesce(math.max(1,
+        math.min(ends.rdd.getNumPartitions, spark.sparkContext.defaultParallelism)))
+      lazy val vertexBound = driverVertexBound(spark.sparkContext,
+        blockInput.getNumPartitions, maxDriverVertices)
+      def toDriver[T](ds: Dataset[T]): Option[Array[T]] =
+        if (local) Some(ds.collect()) else LocalGate.collectAtMost(ds, vertexBound)
+      val stateRows = state.map(st => toDriver(st.select(col("name").cast("string"),
+        col("pagerank").cast("double"), col("pr_term").cast("double"),
+        col("articlerank").cast("double"), col("ar_term").cast("double"))
+        .as[(String, Double, Double, Double, Double)]))
+      val verts: Option[Array[String]] = stateRows match {
+        case Some(rows) => rows.map(_.map(_._1))
+        case None => vertices match {
+          case Some(v) =>
+            toDriver(v.select(col("name").cast("string")).distinct().as[String])
+          case None if local => Some((rawEdges.map(_._1) ++ rawEdges.map(_._2)).distinct)
+          case None => endpointNames(blockInput, vertexBound)
+        }
+      }
+      verts match {
+        case None =>
+          graphXRankCore(e, src, dst, vertices, state, rounds, damping, emitTerms, nEdges)
+        case Some(names) =>
+          val n = names.length
+          val idx = names.zipWithIndex.toMap
+          val blocks =
+            if (local) localBlocks(rawEdges, idx, n)
+            else distributedBlocks(blockInput, idx, n)
+          try {
+            // cold start + explicit vertices: J7 inner-join semantics
+            // (drop unresolved edges). Resume: an unresolved endpoint
+            // means the graph GREW past the checkpoint — fail loud,
+            // never a silent drop
+            if (state.isDefined) {
+              val missing = blocks.built.flatMap(_._2).distinct
+              require(missing.isEmpty,
+                "resumeRankTable: graph vertices without a state row: " +
+                  s"${missing.take(5).mkString(", ")} — the store must cover the graph")
+            }
+            val outDeg = new Array[Int](n)
+            blocks.built.foreach { case (d, _) =>
+              var v = 0
+              while (v < n) { outDeg(v) += d(v); v += 1 }
+            }
+            val avgOutDeg = if (n > 0) outDeg.map(_.toLong).sum.toDouble / n else 0.0
+            val init = 1.0 - damping
+            val st = new SeriesState(Array.fill(n)(init), Array.fill(n)(init),
+              Array.tabulate(n)(i => if (outDeg(i) > 0) 1.0 / outDeg(i) else 0.0),
+              Array.fill(n)(init), Array.fill(n)(init),
+              Array.tabulate(n)(i =>
+                if (outDeg(i) + avgOutDeg > 0) 1.0 / (outDeg(i) + avgOutDeg) else 0.0))
+            stateRows.flatten.foreach(_.zipWithIndex.foreach { case ((_, p, pt, a, at), v) =>
+              st.pr(v) = p; st.prTerm(v) = pt; st.ar(v) = a; st.arTerm(v) = at
+            })
+            st.run(rounds, damping)(blocks.messages)
+            if (emitTerms)
+              names.indices.map(v =>
+                (names(v), st.pr(v), st.prTerm(v), st.ar(v), st.arTerm(v))).toSeq
+                .toDF("name", "pagerank", "pr_term", "articlerank", "ar_term")
+            else
+              names.indices.map(v => (names(v), st.pr(v), st.ar(v))).toSeq
+                .toDF("name", "pagerank", "articlerank")
+          } finally blocks.release()
+      }
+    }
+
+  /** GraphX fallback for vertex sets the driver cannot hold:
+    * aggregateMessages supersteps from a cold or stored start. */
+  private def graphXRankCore(e: DataFrame, src: String, dst: String,
       vertices: Option[DataFrame], state: Option[DataFrame],
       rounds: Int, damping: Double, emitTerms: Boolean,
       nEdges: Long): DataFrame = {
@@ -567,93 +841,5 @@ object Ranks {
     g.unpersistVertices(blocking = false)
     g.edges.unpersist(blocking = false)
     out
-  }
-
-  /** Driver-local path for small graphs: identical delta-series math
-    * over collected edges (message fold in edge order — the same order
-    * a single-partition aggregateMessages uses). */
-  private def localRankCore(e: DataFrame, src: String, dst: String,
-      vertices: Option[DataFrame], state: Option[DataFrame],
-      rounds: Int, damping: Double, emitTerms: Boolean): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val rawEdges = e.select(col(src).cast("string"), col(dst).cast("string"))
-      .as[(String, String)].collect()
-    val stateRows: Option[Array[(String, Double, Double, Double, Double)]] =
-      state.map(_.select(col("name").cast("string"),
-        col("pagerank").cast("double"), col("pr_term").cast("double"),
-        col("articlerank").cast("double"), col("ar_term").cast("double"))
-        .as[(String, Double, Double, Double, Double)].collect())
-    val verts: Array[String] = stateRows match {
-      case Some(rows) => rows.map(_._1)
-      case None => vertices match {
-        case Some(v) => v.select(col("name").cast("string")).distinct().as[String].collect()
-        case None => (rawEdges.map(_._1) ++ rawEdges.map(_._2)).distinct
-      }
-    }
-    val idx = verts.zipWithIndex.toMap
-    // cold start + explicit vertices: J7 inner-join semantics (drop
-    // unresolved edges). Resume: an unresolved endpoint means the
-    // graph GREW past the checkpoint — fail loud, never a silent drop
-    if (state.isDefined) {
-      val missing = rawEdges.flatMap(p => Seq(p._1, p._2)).distinct
-        .filterNot(idx.contains)
-      require(missing.isEmpty,
-        "resumeRankTable: graph vertices without a state row: " +
-          s"${missing.take(5).mkString(", ")} — the store must cover the graph")
-    }
-    val es = rawEdges.collect {
-      case (s, d) if idx.contains(s) && idx.contains(d) => (idx(s), idx(d))
-    }
-    val n = verts.length
-    val outDeg = new Array[Int](n)
-    es.foreach { case (s, _) => outDeg(s) += 1 }
-    val avgOutDeg = if (n > 0) es.length.toDouble / n else 0.0
-    val init = 1.0 - damping
-    val invPr = Array.tabulate(n)(i => if (outDeg(i) > 0) 1.0 / outDeg(i) else 0.0)
-    val invAr = Array.tabulate(n)(i =>
-      if (outDeg(i) + avgOutDeg > 0) 1.0 / (outDeg(i) + avgOutDeg) else 0.0)
-    val pr = new Array[Double](n)
-    val ar = new Array[Double](n)
-    var prTerm = new Array[Double](n)
-    var arTerm = new Array[Double](n)
-    stateRows match {
-      case Some(rows) =>
-        var v = 0
-        while (v < n) {
-          pr(v) = rows(v)._2; prTerm(v) = rows(v)._3
-          ar(v) = rows(v)._4; arTerm(v) = rows(v)._5
-          v += 1
-        }
-      case None =>
-        java.util.Arrays.fill(pr, init); java.util.Arrays.fill(ar, init)
-        java.util.Arrays.fill(prTerm, init); java.util.Arrays.fill(arTerm, init)
-    }
-    var i = 0
-    while (i < rounds) {
-      val mPr = new Array[Double](n)
-      val mAr = new Array[Double](n)
-      es.foreach { case (s, d) =>
-        mPr(d) += prTerm(s) * invPr(s)
-        mAr(d) += arTerm(s) * invAr(s)
-      }
-      var v = 0
-      while (v < n) {
-        mPr(v) *= damping
-        mAr(v) *= damping
-        pr(v) += mPr(v)
-        ar(v) += mAr(v)
-        v += 1
-      }
-      prTerm = mPr
-      arTerm = mAr
-      i += 1
-    }
-    if (emitTerms)
-      verts.indices.map(v => (verts(v), pr(v), prTerm(v), ar(v), arTerm(v))).toSeq
-        .toDF("name", "pagerank", "pr_term", "articlerank", "ar_term")
-    else
-      verts.indices.map(v => (verts(v), pr(v), ar(v))).toSeq
-        .toDF("name", "pagerank", "articlerank")
   }
 }

@@ -1,11 +1,15 @@
 package graft.graph
 
 import graft.core.Caches.TrackedPersist
+import graft.core.LocalGate
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Iterative graph-traversal queries the reference's graph store would
   * answer in Cypher (`MATCH (a)-[*..k]->(b)`, community detection) —
@@ -14,11 +18,14 @@ import org.apache.spark.storage.StorageLevel
   * with the frontier/label set as the only iterated state.
   *
   * Scale shape: per-superstep cost is O(frontier ⋈ edges) with
-  * short-key exchanges; the driver sees only a per-round convergence
-  * count, never vertex data. Rounds are explicitly bounded (maxHops /
-  * iters) so plan depth stays fixed; a 100 TB deployment would add a
-  * `localCheckpoint` per ~10 rounds to truncate lineage (same as
-  * `Dedup.connectedComponents`).
+  * short-key exchanges; rounds are explicitly bounded (maxHops /
+  * iters / maxRounds), and the loops that can run long truncate
+  * lineage with a per-round `localCheckpoint`. [[kCore]] and
+  * [[shortestPath]] share the [[LocalGate]] of `Ranks` and
+  * `Dedup.connectedComponents`: an edge list of at most
+  * `LocalGate.Threshold` rows comes to the driver in one bounded collect
+  * and runs the same peel / Bellman–Ford recurrence there — one job
+  * instead of one to three per round.
   */
 object Traversal {
 
@@ -102,21 +109,48 @@ object Traversal {
     * an early-stopped run equals any longer bound — which is what lets
     * a fixed-round chained-CTE oracle verify an early-exit loop.
     *
-    * Scale shape: each round is one degree partial-agg + two semi-joins
-    * on the edge list (all key-only shuffles — no vertex data rides
-    * along), with per-round `localCheckpoint` lineage truncation (the
-    * labelPropagation policy). Rounds are data-dependent but bounded
-    * by the peel depth, which is ≤ the degeneracy ordering's length —
-    * on real graphs tens of rounds, and each round strictly shrinks
-    * the edge set or exits. The early-exit count probe reads a
-    * checkpointed frame — O(1) result, no recompute. */
+    * Both forms run the same synchronous rounds (every vertex below k
+    * at a round's start peels in that round; the fixpoint is the first
+    * round that removes no edge), so `maxRounds` fails loud on exactly
+    * the same inputs on either side of the gate.
+    *
+    * Scale shape: at most `LocalGate.Threshold` RAW edge rows (counted
+    * before the symmetric union/distinct: the gate is one bounded
+    * collect) peel on the driver in that one job. Above it each round
+    * is one degree partial-agg + two semi-joins on the edge list (all
+    * key-only shuffles — no vertex data rides along), with per-round
+    * `localCheckpoint` lineage truncation (the labelPropagation
+    * policy). Rounds are data-dependent but bounded by the peel depth,
+    * which is ≤ the degeneracy ordering's length — on real graphs tens
+    * of rounds, and each round strictly shrinks the edge set or exits.
+    * The early-exit count probe reads a checkpointed frame — O(1)
+    * result, no recompute. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxRounds: Int = 1000): DataFrame = {
+      maxRounds: Int = 1000): DataFrame =
+    kCore(edges, srcCol, dstCol, k, maxRounds, LocalGate.Threshold)
+
+  /** [[kCore]] with its gate at `localThreshold` edge rows (0 forces
+    * the distributed rounds). */
+  private[graft] def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
+      maxRounds: Int, localThreshold: Long): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    val sym = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .unionByName(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .filter(col("a") =!= col("b"))
+    val keyType = sym.schema("a").dataType
+    val gated =
+      if (!driverKey(keyType)) None
+      else LocalGate.collectAtMost(edges.select(col(srcCol).cast(keyType),
+        col(dstCol).cast(keyType)), localThreshold)
+    gated match {
+      case Some(rows) =>
+        return edges.sparkSession.createDataFrame(
+          kCoreLocal(rows.map(r => (r.get(0), r.get(1))), k, maxRounds).asJava,
+          StructType(Seq(StructField("name", keyType),
+            StructField("core_degree", LongType, nullable = false))))
+      case None =>
+    }
+    var und = sym.filter(col("a") =!= col("b"))
       .distinct()
       .localCheckpoint()
     var prev = und.count()
@@ -138,15 +172,66 @@ object Traversal {
       und = next
       round += 1
     }
-    // fail-loud, not silent truncation: a maxRounds exit before the
-    // fixpoint would return vertices with degree < k still present —
-    // rounds needed scale with the peel depth, so the bound must be
-    // raised, never quietly absorbed (repo require() convention)
+    requireFixpoint(converged, maxRounds)
+    und.groupBy(col("a")).agg(count(lit(1)).as("core_degree"))
+      .withColumnRenamed("a", "name")
+  }
+
+  // fail-loud, not silent truncation: a maxRounds exit before the
+  // fixpoint would return vertices with degree < k still present —
+  // rounds needed scale with the peel depth, so the bound must be
+  // raised, never quietly absorbed (repo require() convention)
+  private def requireFixpoint(converged: Boolean, maxRounds: Int): Unit =
     require(converged,
       s"kCore: no fixpoint within maxRounds=$maxRounds rounds " +
         "(peel depth exceeds the bound) — raise maxRounds")
-    und.groupBy(col("a")).agg(count(lit(1)).as("core_degree"))
-      .withColumnRenamed("a", "name")
+
+  /** [[kCore]]'s synchronous peel on the driver: null endpoints and
+    * self-loops are dropped, parallel edges count once, as in the
+    * distributed form's filter + distinct. */
+  private def kCoreLocal(pairs: Array[(Any, Any)], k: Int, maxRounds: Int): Seq[Row] = {
+    val id = mutable.HashMap.empty[Any, Int]
+    val names = mutable.ArrayBuffer.empty[Any]
+    val adj = mutable.ArrayBuffer.empty[mutable.HashSet[Int]]
+    def vertex(x: Any): Int = id.getOrElseUpdate(x, {
+      names += x
+      adj += mutable.HashSet.empty[Int]
+      names.length - 1
+    })
+    pairs.foreach { case (a, b) =>
+      if (a != null && b != null && a != b) {
+        val (ia, ib) = (vertex(a), vertex(b))
+        adj(ia) += ib
+        adj(ib) += ia
+      }
+    }
+    val n = names.length
+    val deg = Array.tabulate(n)(adj(_).size)
+    val alive = Array.fill(n)(true)
+    var converged = n == 0
+    var round = 0
+    while (!converged && round < maxRounds) {
+      val peel = (0 until n).filter(v => alive(v) && deg(v) < k)
+      converged = peel.forall(deg(_) == 0) // no edge leaves this round
+      peel.foreach(alive(_) = false)
+      for (v <- peel; u <- adj(v) if alive(u)) deg(u) -= 1
+      round += 1
+    }
+    requireFixpoint(converged, maxRounds)
+    (0 until n).filter(alive).map(v => Row(names(v), deg(v).toLong))
+  }
+
+  /** Key types whose JVM values compare and hash as Spark's grouping
+    * and equi-joins do, so a driver-local form can key by them. */
+  private def driverKey(t: DataType): Boolean = t match {
+    case IntegerType | LongType | ShortType | ByteType => true
+    case _ => binaryString(t)
+  }
+
+  /** A string type under the default (binary) collation. */
+  private def binaryString(t: DataType): Boolean = t match {
+    case s: StringType => s.collationId == StringType.collationId
+    case _ => false
   }
 
   /** HITS hubs & authorities (X126) in EXACT integer arithmetic:
@@ -218,23 +303,43 @@ object Traversal {
     * `rounds` synchronous relaxation supersteps over directed edges
     * with non-negative integer weights, so the result is the exact
     * min-cost distance among paths of ≤ `rounds` edges. Fixed round
-    * count (no early exit) keeps the computation a pure function of
-    * (edges, seeds, rounds) — the same recurrence an oracle can chase
-    * CTE-by-CTE. BIGINT min-sums all the way: nothing to round, any
-    * engine agrees bit-for-bit.
+    * count keeps the computation a pure function of (edges, seeds,
+    * rounds) — the same recurrence an oracle can chase CTE-by-CTE.
+    * BIGINT min-sums all the way: nothing to round, any engine agrees
+    * bit-for-bit.
     *
-    * Scale shape: each superstep is one frontier ⋈ edges equi-join +
-    * one min-agg keyed by vertex — exactly a Pregel round's shuffle;
-    * state is one (vertex, dist) row per reached vertex. Unreached
-    * vertices never materialize. */
+    * Scale shape: at most `LocalGate.Threshold` edge rows with string
+    * endpoints relax on the driver after one bounded collect (stopping
+    * at the fixpoint, which later rounds would not change). Above it
+    * each superstep is one frontier ⋈ edges equi-join + one min-agg
+    * keyed by vertex — exactly a Pregel round's shuffle; state is one
+    * (vertex, dist) row per reached vertex. Unreached vertices never
+    * materialize. */
   def shortestPath(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, seeds: Seq[String], rounds: Int): DataFrame = {
+      weightCol: String, seeds: Seq[String], rounds: Int): DataFrame =
+    shortestPath(edges, srcCol, dstCol, weightCol, seeds, rounds, LocalGate.Threshold)
+
+  /** [[shortestPath]] with its gate at `localThreshold` edge rows (0
+    * forces the distributed supersteps). */
+  private[graft] def shortestPath(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: String, seeds: Seq[String], rounds: Int,
+      localThreshold: Long): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(srcCol).as("_s"), col(dstCol).as("_d"),
+    val projected = edges.select(col(srcCol).as("_s"), col(dstCol).as("_d"),
       col(weightCol).cast("long").as("_w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val stringEnds = Seq("_s", "_d").forall(c => binaryString(projected.schema(c).dataType))
+    val gated =
+      if (rounds == 0 || !stringEnds) None
+      else LocalGate.collectAtMost(projected, localThreshold)
+    gated match {
+      case Some(rows) =>
+        return spark.createDataFrame(shortestPathLocal(rows, seeds, rounds).asJava,
+          StructType(Seq(StructField("name", StringType), StructField("dist", LongType))))
+      case None =>
+    }
+    val e = projected.persist(StorageLevel.MEMORY_AND_DISK)
     var dist = seeds.toDF("name").withColumn("dist", lit(0L))
     for (_ <- 1 to rounds) {
       val relaxed = dist.join(e, col("name") === col("_s"))
@@ -254,5 +359,38 @@ object Traversal {
     // callers outside Bench's clearCache would otherwise leak it
     e.unpersist()
     dist
+  }
+
+  /** [[shortestPath]]'s relaxation rounds on the driver, SQL nulls
+    * included: a null source never joins, a null weight relaxes to a
+    * null candidate that min() skips unless nothing else reaches the
+    * vertex. */
+  private def shortestPathLocal(rows: Array[Row], seeds: Seq[String],
+      rounds: Int): Seq[Row] = {
+    var dist = new java.util.HashMap[String, java.lang.Long]()
+    seeds.foreach(dist.put(_, Long.box(0L)))
+    var round = 0
+    var changed = true
+    while (round < rounds && changed) {
+      val next = new java.util.HashMap[String, java.lang.Long](dist)
+      rows.foreach { r =>
+        val s = r.getString(0)
+        if (s != null && dist.containsKey(s)) {
+          val ds = dist.get(s)
+          val cand: java.lang.Long =
+            if (ds == null || r.isNullAt(2)) null
+            else Long.box(Math.addExact(ds.longValue, r.getLong(2)))
+          val d = r.getString(1)
+          val old = next.get(d)
+          if (!next.containsKey(d) || old == null ||
+              (cand != null && cand.longValue < old.longValue))
+            next.put(d, cand)
+        }
+      }
+      changed = next != dist
+      dist = next
+      round += 1
+    }
+    dist.asScala.map { case (name, d) => Row(name, d) }.toSeq
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core.Caches.TrackedPersist
+import graft.core.LocalGate
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -1495,22 +1496,22 @@ object Dedup {
     * path is the default above the gate and DedupSpec pins
     * local ≡ distributed. */
   def connectedComponents(pairs: DataFrame, id1: String, id2: String,
-      maxIters: Int = 50, localThreshold: Long = 100000): DataFrame = {
+      maxIters: Int = 50,
+      localThreshold: Long = LocalGate.Threshold): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     // ONE bounded action decides the gate: collect at most threshold+1
     // RAW pairs (limit stops early at scale — no full count pass
     // first). Union-find is direction- and duplicate-agnostic, so the
     // local path needs neither the symmetric union nor the distinct —
     // those exchanges are built only if the distributed path runs.
-    val gateRows = pairs
-      .select(col(id1).cast("long"), col(id2).cast("long"))
-      .limit(math.min(localThreshold, Int.MaxValue - 1L).toInt + 1)
-      .collect()
-    if (gateRows.length <= localThreshold) {
-      val local = componentsLocal(gateRows.map(r => (r.getLong(0), r.getLong(1))))
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      return local.toSeq.toDF("id", "cluster_id")
+    LocalGate.collectAtMost(
+      pairs.select(col(id1).cast("long"), col(id2).cast("long")), localThreshold) match {
+      case Some(rows) =>
+        val local = componentsLocal(rows.map(r => (r.getLong(0), r.getLong(1))))
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        return local.toSeq.toDF("id", "cluster_id")
+      case None =>
     }
     val edges = pairs.select(col(id1).cast("long").as("a"), col(id2).cast("long").as("b"))
       .union(pairs.select(col(id2).cast("long").as("a"), col(id1).cast("long").as("b")))

@@ -139,9 +139,10 @@ class RanksSpec extends SparkSpec {
         .collect()
     }
     assert(e1.getMessage.contains("state row"))
-    // the DISTRIBUTED path must fail loud too — graphFromNames'
-    // explicit-vertex build silently drops unresolved edges, so the
-    // guard must fire BEFORE the graph exists
+    // the distributed-edge (driver-state) path that localThreshold = 0
+    // selects must fail loud too: its edge blocks drop unresolved
+    // endpoints. The GraphX fallback's guard is pinned in
+    // RanksLocalDistSpec
     val e2 = intercept[IllegalArgumentException] {
       Ranks.resumeRankTable(grown, "src", "dst", state20, extraRounds = 1,
         localThreshold = 0).collect()
