@@ -3,7 +3,6 @@ package graft.graph
 import graft.core.Caches.TrackedPersist
 import graft.core.LocalGate
 
-import org.apache.spark.SparkContext
 import org.apache.spark.graphx._
 import org.apache.spark.rdd.RDD
 import scala.collection.mutable
@@ -535,7 +534,7 @@ object Ranks {
     * one shuffle-free job. */
   private def endpointNames(ends: RDD[(String, String)], bound: Long): Option[Array[String]] = {
     val cap = math.min(bound, Int.MaxValue - 1L) + 1
-    val parts = described(ends.sparkContext, "graft.Ranks: vertex names") {
+    val parts = LocalGate.described(ends.sparkContext, "graft.Ranks: vertex names") {
       ends.mapPartitions { it =>
         val seen = mutable.LinkedHashSet.empty[String]
         while (it.hasNext && seen.size < cap) {
@@ -615,22 +614,6 @@ object Ranks {
     }
   }
 
-  /** Most vertices the series holds with `blocks` distributed edge
-    * blocks: `gate`, and few enough that a superstep's results (two
-    * V-length double arrays per block; the block-building job returns
-    * less) stay within half of `spark.driver.maxResultSize` (0: no
-    * limit), so a job cannot abort on it. */
-  private def driverVertexBound(sc: SparkContext, blocks: Int, gate: Long): Long = {
-    val maxResult = sc.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
-    if (maxResult <= 0) gate else math.min(gate, maxResult / 2 / (16L * blocks))
-  }
-
-  private def described[T](sc: SparkContext, desc: String)(body: => T): T = {
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body finally sc.setLocalProperty("spark.job.description", prev)
-  }
-
   /** An edge list as index blocks for the series: each block's
     * out-degree counts and unresolved endpoint names, the superstep
     * message function over all blocks, and the release of what the
@@ -656,7 +639,7 @@ object Ranks {
     val idxB = sc.broadcast(idx)
     val rdd = ends.mapPartitions(it => Iterator.single(resolve(it, idxB.value)))
       .localCheckpoint()
-    val built = described(sc, "graft.Ranks: edge blocks") {
+    val built = LocalGate.described(sc, "graft.Ranks: edge blocks") {
       sc.runJob(rdd, (it: Iterator[(EdgeBlock, Array[String])]) => {
         val (b, miss) = it.next()
         (outDegrees(b, n), miss)
@@ -664,7 +647,7 @@ object Ranks {
     }
     def messages(wPr: Array[Double], wAr: Array[Double]) = {
       val wB = sc.broadcast((wPr, wAr))
-      val parts = try described(sc, SuperstepJob) {
+      val parts = try LocalGate.described(sc, SuperstepJob) {
         sc.runJob(rdd, (it: Iterator[(EdgeBlock, Array[String])]) => {
           val (p, a) = wB.value
           blockMessages(it.next()._1, p, a)
@@ -695,8 +678,8 @@ object Ranks {
     * Vertex state lives in driver arrays; the edges are collected at or
     * below `localThreshold`, else kept as distributed index blocks.
     * Distributed edges with more than `maxDriverVertices` vertices (0
-    * forces it), or more than [[driverVertexBound]] allows, run the
-    * GraphX supersteps instead. */
+    * forces it), or more than one superstep's results can bring within
+    * [[LocalGate.resultBudget]], run the GraphX supersteps instead. */
   private[graft] def seriesTable(edges: DataFrame, src: String, dst: String,
       vertices: Option[DataFrame], state: Option[DataFrame], rounds: Int,
       damping: Double, emitTerms: Boolean, localThreshold: Long,
@@ -711,8 +694,10 @@ object Ranks {
       // distributed edges: one block per partition, at most one per core
       lazy val blockInput = ends.rdd.coalesce(math.max(1,
         math.min(ends.rdd.getNumPartitions, spark.sparkContext.defaultParallelism)))
-      lazy val vertexBound = driverVertexBound(spark.sparkContext,
-        blockInput.getNumPartitions, maxDriverVertices)
+      // a superstep returns two V-length double arrays per block (the
+      // block-building job returns less): V stays within the result budget
+      lazy val vertexBound = LocalGate.rowsWithin(spark.sparkContext,
+        16L * blockInput.getNumPartitions, maxDriverVertices)
       def toDriver[T](ds: Dataset[T]): Option[Array[T]] =
         if (local) Some(ds.collect()) else LocalGate.collectAtMost(ds, vertexBound)
       val stateRows = state.map(st => toDriver(st.select(col("name").cast("string"),

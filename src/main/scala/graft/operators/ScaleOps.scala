@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core.Caches.TrackedPersist
+import graft.core.LocalGate
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -212,18 +213,53 @@ object ScaleOps {
     * emits one row per (document × window it overlaps) — the
     * pack-with-spillover layout a pretraining loader consumes.
     *
-    * Scale shape: the global prefix-sum is TWO-PHASE — range-partition
-    * by id, per-partition running sum (window), then the P per-
-    * partition TOTALS (not rows) come to the driver and go back as
+    * Scale shape: at most `LocalGate.Threshold` (id, tokens) rows come
+    * to the driver in one bounded collect (job `graft.ScaleOps: local
+    * pack`); the running sum runs there in id order, and its (id,
+    * tokens, end) rows go back as a local frame that the windows expand
+    * from on the executors, so the driver holds no more rows than came
+    * in. Above the gate the global prefix-sum is TWO-PHASE —
+    * range-partition by id, per-partition running sum, then the P
+    * per-partition TOTALS (not rows) come to the driver and go back as
     * broadcast offsets. No single-partition global window, which is
-    * what a naive `Window.orderBy(id)` would plan. The result is
-    * independent of where the range boundaries fall, so it is
-    * deterministic even though range partitioning samples. */
+    * what a naive `Window.orderBy(id)` would plan. For
+    * non-negative counts the result is independent of where the range
+    * boundaries fall, so it is deterministic even though range
+    * partitioning samples. Inputs the driver form does not reproduce
+    * take the two-phase plan below the gate too: repeated ids (their
+    * order is left open by the sort), a negative count (the totals are
+    * per-partition maxima, which then depend on the boundaries), and
+    * ctxLen <= 0. */
   def packSequences(df: DataFrame, idCol: String, tokenCount: Column,
-      ctxLen: Long): DataFrame = {
+      ctxLen: Long): DataFrame =
+    packSequences(df, idCol, tokenCount, ctxLen, LocalGate.Threshold)
+
+  /** Job description of [[packSequences]]' bounded collect. */
+  private[graft] val LocalPackJob = "graft.ScaleOps: local pack"
+
+  /** [[packSequences]] with its gate at `localThreshold` rows (0 forces
+    * the two-phase plan). */
+  private[graft] def packSequences(df: DataFrame, idCol: String, tokenCount: Column,
+      ctxLen: Long, localThreshold: Long): DataFrame = {
     requireIntegralId(df, idCol, "packSequences")
     val spark = df.sparkSession
     import spark.implicits._
+    val counts = df.select(col(idCol).cast("long"), tokenCount.cast("long")).as[(Long, Long)]
+    val gated =
+      if (localThreshold <= 0 || ctxLen <= 0) None
+      else LocalGate.described(spark.sparkContext, LocalPackJob) {
+        LocalGate.collectAtMost(counts,
+          LocalGate.rowsWithin(spark.sparkContext, 16L, localThreshold))
+      }.map(_.sortBy(_._1))
+        .filter(rows => rows.forall(_._2 >= 0) &&
+          (1 until rows.length).forall(i => rows(i - 1)._1 != rows(i)._1))
+    gated match {
+      case Some(rows) =>
+        var end = 0L
+        val ends = rows.toSeq.map { case (id, n) => end = Math.addExact(end, n); (id, n, end) }
+        return packWindows(ends.toDF(idCol, "_n", "_end"), idCol, ctxLen)
+      case None =>
+    }
     val parts = spark.sparkContext.defaultParallelism
     // Range-partition + in-partition sort, then a SINGLE-PASS running
     // sum per partition (mapPartitions — genuine per-partition
@@ -233,7 +269,7 @@ object ScaleOps {
     // valid for this materialized partitioning — range boundaries are
     // re-sampled per job, so an uncached recompute could move rows
     // across partitions and silently corrupt the prefix sum.
-    val local = df.select(col(idCol).cast("long"), tokenCount.cast("long"))
+    val local = counts.toDF(idCol, "_n")
       .repartitionByRange(parts, col(idCol))
       .sortWithinPartitions(col(idCol))
       .as[(Long, Long)]
@@ -253,16 +289,21 @@ object ScaleOps {
         case ((_, acc), (pid, tot)) => (pid, acc + tot)
       }.sliding(2).map { case Array((_, prev), (pid, _)) => (pid, prev) }.toSeq
     val offDf = broadcast(offsets.toDF("_pid", "_off"))
-    local.join(offDf, Seq("_pid"))
-      .filter(col("_n") > 0)
-      .withColumn("_end", col("_local_end") + col("_off"))
+    packWindows(local.join(offDf, Seq("_pid"))
+      .withColumn("_end", col("_local_end") + col("_off")), idCol, ctxLen)
+  }
+
+  /** [[packSequences]]' rows from (idCol, _n, _end) rows, `_end` the
+    * running token sum through each document: per document with tokens,
+    * one row per `ctxLen` window it overlaps. */
+  private def packWindows(ends: DataFrame, idCol: String, ctxLen: Long): DataFrame =
+    ends.filter(col("_n") > 0)
       .withColumn("token_start", col("_end") - col("_n"))
       .withColumn("pack_id", explode(sequence(
         floor(col("token_start") / ctxLen.toDouble).cast("long"),
         floor((col("_end") - 1) / ctxLen.toDouble).cast("long"))))
       .select(col(idCol), col("pack_id"), col("token_start"),
         col("_n").as("n_tokens"))
-  }
 
   /** BOUNDARY-RESPECTING best-fit packing (X215; Ding et al. 2024,
     * arXiv:2404.10830 "Fewer Truncations Improve Language Modeling"):

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core.Caches.TrackedPersist
+import graft.core.LocalGate
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -205,18 +206,44 @@ object Similarity {
     * bit-identical on any engine). Memory is the point: a vector
     * stores as m sub-codes (m·log₂(codes) bits — 64-dim float32 at
     * m=4, 16 codes is 256 bytes → 2 bytes, 128×) while brute scoring
-    * drops from dims multiplies to m table lookups per pair. */
+    * drops from dims multiplies to m table lookups per pair.
+    *
+    * Scale shape: a corpus within the k-means gate (at most
+    * `LocalGate.Threshold` `dims`-long vectors that fit within half of
+    * `spark.driver.maxResultSize`, each sub-space round within
+    * [[Clustering.LocalRoundWork]] multiply-adds) comes to the driver
+    * in ONE bounded collect that trains all m codebooks; above it each
+    * sub-space runs the distributed Lloyd loop (one job per round). */
   def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
       dims: Int, m: Int, codes: Int, iters: Int,
-      scale: Double = 1e6): Array[Array[(Int, Array[Long])]] = {
+      scale: Double = 1e6): Array[Array[(Int, Array[Long])]] =
+    pqCodebooks(corpus, idCol, vecCol, dims, m, codes, iters, scale, LocalGate.Threshold)
+
+  /** [[pqCodebooks]] with its gate at `localThreshold` rows (0 forces
+    * the distributed loops). */
+  private[graft] def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
+      dims: Int, m: Int, codes: Int, iters: Int, scale: Double,
+      localThreshold: Long): Array[Array[(Int, Array[Long])]] = {
     require(m > 0 && dims > 0 && dims % m == 0,
       s"pqCodebooks: dims=$dims must split evenly into m=$m sub-vectors")
     val subDim = dims / m
+    Clustering.driverCorpus(corpus, idCol, vecCol, scale, Some(dims),
+        _ => codes.toLong * subDim, localThreshold) match {
+      case Some(rows) =>
+        val exact = !Clustering.nativeSqDist(corpus)
+        // quantizing then slicing == slicing then quantizing: fixedPoint
+        // is element-wise
+        return (0 until m).map { i =>
+          Clustering.lloyd(rows.map { case (id, v) =>
+            (id, v.slice(i * subDim, (i + 1) * subDim)) }, codes, iters, exact)
+        }.toArray
+      case None =>
+    }
     (0 until m).map { i =>
       Clustering.kmeansCentroidsFixed(
         corpus.select(col(idCol),
           slice(col(vecCol), i * subDim + 1, subDim).as(vecCol)),
-        idCol, vecCol, codes, iters, scale)
+        idCol, vecCol, codes, iters, scale, localThreshold = 0L)
     }.toArray
   }
 
@@ -375,16 +402,57 @@ object Similarity {
     * through [[Clustering.fixedPoint]] is the identity on integers),
     * so the whole index — cells, residuals, codewords, codes — is
     * bit-identical on any engine. Returns (coarse centroids,
-    * per-sub-space residual codebooks). */
+    * per-sub-space residual codebooks).
+    *
+    * Scale shape: a corpus within the k-means gate (at most
+    * `LocalGate.Threshold` `dims`-long vectors that fit within half of
+    * `spark.driver.maxResultSize`, the coarse and each sub-space round
+    * within [[Clustering.LocalRoundWork]] multiply-adds) comes to the
+    * driver in ONE bounded collect, which feeds the coarse training,
+    * the exact residuals and all m codebooks; nothing is persisted.
+    * Above it the coarse and sub-space trainings run the distributed
+    * Lloyd loop (one job per round) over a persisted residual frame. */
   def ivfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       dims: Int, cells: Int, cellIters: Int,
       m: Int, codes: Int, pqIters: Int,
-      scale: Double = 1e6): (Array[(Int, Array[Long])], Array[Array[(Int, Array[Long])]]) = {
+      scale: Double = 1e6): (Array[(Int, Array[Long])], Array[Array[(Int, Array[Long])]]) =
+    ivfPqIndex(corpus, idCol, vecCol, dims, cells, cellIters, m, codes, pqIters, scale,
+      LocalGate.Threshold)
+
+  /** [[ivfPqIndex]] with its gate at `localThreshold` rows (0 forces the
+    * distributed loops). */
+  private[graft] def ivfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
+      dims: Int, cells: Int, cellIters: Int, m: Int, codes: Int, pqIters: Int,
+      scale: Double, localThreshold: Long)
+      : (Array[(Int, Array[Long])], Array[Array[(Int, Array[Long])]]) = {
     require(m > 0 && dims > 0 && dims % m == 0,
       s"ivfPqIndex: dims=$dims must split evenly into m=$m sub-vectors")
     val subDim = dims / m
+    Clustering.driverCorpus(corpus, idCol, vecCol, scale, Some(dims),
+        _ => math.max(cells.toLong * dims, codes.toLong * subDim), localThreshold) match {
+      case Some(rows) =>
+        val exact = !Clustering.nativeSqDist(corpus)
+        val coarse = Clustering.lloyd(rows, cells, cellIters, exact)
+        val cents = coarse.map(_._2)
+        // the residual frame's `zip_with(x - y)`, which raises on
+        // overflow under ANSI
+        val res = rows.map { case (id, v) =>
+          val c = cents(Clustering.nearest(cents, v, exact))
+          (id, Array.tabulate(v.length)(j => Math.subtractExact(v(j), c(j))))
+        }
+        // each sub-space re-quantizes its residual slice at scale 1.0,
+        // as the distributed form's array<double> cast does
+        val books = (0 until m).map { i =>
+          Clustering.lloyd(res.map { case (id, r) =>
+            (id, r.slice(i * subDim, (i + 1) * subDim)
+              .map(x => Clustering.fixedPointLocal(x.toDouble, 1.0)))
+          }, codes, pqIters, exact)
+        }.toArray
+        return (coarse, books)
+      case None =>
+    }
     val coarse = Clustering.kmeansCentroidsFixed(
-      corpus, idCol, vecCol, cells, cellIters, scale)
+      corpus, idCol, vecCol, cells, cellIters, scale, localThreshold = 0L)
     val res = graft.core.Caches.persistTracked(
       residualFrame(corpus, idCol, vecCol, coarse, scale))
     val books = (0 until m).map { i =>
@@ -392,7 +460,7 @@ object Similarity {
         res.select(col(idCol),
           slice(col("rv"), i * subDim + 1, subDim)
             .cast("array<double>").as("rv")),
-        idCol, "rv", codes, pqIters, scale = 1.0)
+        idCol, "rv", codes, pqIters, scale = 1.0, localThreshold = 0L)
     }.toArray
     (coarse, books)
   }
@@ -2108,8 +2176,9 @@ object Similarity {
     * SURVIVORS as (idCol, cluster).
     *
     * Scale shape: clustering is the exact fixed-point Lloyd loop
-    * (broadcast literal centroids, map-side argmin, one partial-agg
-    * shuffle per round — [[Clustering.kmeansFixedPoint]]); the
+    * ([[Clustering.kmeansFixedPoint]]: driver rounds after one bounded
+    * collect below the size gate; above it broadcast literal centroids,
+    * map-side argmin, one partial-agg shuffle per round); the
     * quadratic term is confined to within-cell pairing via an
     * equi-join on cluster id, pinned shuffle-hash (both sides
     * corpus-sized — never a driver broadcast). Cells are corpus/k, so

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, ScaleOps}
+import graft.core.LocalGate
 import graft.functions.TextFunctions
 
 class ScaleOpsSpec extends SparkSpec {
@@ -1082,15 +1083,48 @@ class ScaleOpsSpec extends SparkSpec {
     assert(ScaleOps.tokenBudgetFilter(docs, "doc_id", tc, tc, 0L).count() == 0)
   }
 
+  test("packSequences: driver pack == two-phase plan; negative counts take the two-phase plan") {
+    def run(rows: Seq[(Long, Long)], ctxLen: Long, gate: Long) =
+      ScaleOps.packSequences(rows.toDF("id", "n").repartition(3), "id", col("n"), ctxLen, gate)
+    def both(rows: Seq[(Long, Long)], ctxLen: Long): Set[(Long, Long, Long, Long)] = {
+      val driver = run(rows, ctxLen, LocalGate.Threshold)
+      val twoPhase = run(rows, ctxLen, 0L)
+      assert(driver.schema == twoPhase.schema)
+      // the driver holds one row per document: the windows expand in
+      // the plan, as in the two-phase form
+      assert(rows.isEmpty || driver.queryExecution.optimizedPlan.toString.contains("Generate"))
+      val got = driver.as[(Long, Long, Long, Long)].collect().toSet
+      assert(got == twoPhase.as[(Long, Long, Long, Long)].collect().toSet, s"$rows / $ctxLen")
+      got
+    }
+    // ids out of order; a zero count emits nothing; one document spans
+    // four windows
+    val rows = Seq(7L -> 3L, 2L -> 10L, 5L -> 0L, 9L -> 25L, 4L -> 1L)
+    assert(both(rows, 8L) == Set(
+      (2L, 0L, 0L, 10L), (2L, 1L, 0L, 10L), (4L, 1L, 10L, 1L), (7L, 1L, 11L, 3L),
+      (9L, 1L, 14L, 25L), (9L, 2L, 14L, 25L), (9L, 3L, 14L, 25L), (9L, 4L, 14L, 25L)))
+    assert(both(rows, 1000L).map(_._2) == Set(0L))
+    assert(both(Seq.empty, 8L).isEmpty)
+    // the two-phase offsets are per-partition MAXIMA of the running sum,
+    // so with a negative count the result depends on the range
+    // boundaries: the driver does not reproduce it and hands over
+    val negative = run(rows :+ (3L -> -4L), 8L, LocalGate.Threshold)
+    assert(negative.queryExecution.executedPlan.toString.contains("Exchange"))
+  }
+
   test("packSequences: two-phase prefix sum == naive global window") {
     val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
     val tc = graft.functions.TextFunctions.tokenCount(col("text"))
     val packed = ScaleOps.packSequences(docs, "doc_id", tc, ctxLen = 512L)
+    val twoPhase = ScaleOps.packSequences(docs, "doc_id", tc, 512L, localThreshold = 0L)
     // two-phase plan: one range exchange, NO per-pid window re-shuffle
-    val plan = packed.queryExecution.executedPlan.toString
+    val plan = twoPhase.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"),
       s"prefix sum must not plan a window:\n$plan")
     val got = packed.as[(Long, Long, Long, Long)].collect().toSet
+    // the driver pack (below the gate) == the two-phase plan
+    assert(packed.schema == twoPhase.schema)
+    assert(got == twoPhase.as[(Long, Long, Long, Long)].collect().toSet)
     // naive reference: one global window (fine at spec scale)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("doc_id")).rowsBetween(Long.MinValue, 0)

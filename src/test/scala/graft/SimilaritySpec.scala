@@ -1,10 +1,46 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.LocalGate
 import graft.operators.Similarity
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
+
+  private type Book = Array[(Int, Array[Long])]
+
+  private def sameBook(a: Book, b: Book): Boolean =
+    a.length == b.length && a.zip(b).forall { case ((c1, v1), (c2, v2)) =>
+      c1 == c2 && v1.sameElements(v2) }
+
+  /** ivfPqIndex over `vec_id` / `embedding` on both sides of the k-means
+    * gate: the driver training's index, required identical to the
+    * distributed one. */
+  private def ivfPqBoth(emb: DataFrame, dims: Int, cells: Int, cellIters: Int,
+      m: Int, codes: Int, pqIters: Int): (Book, Array[Book]) = {
+    def run(gate: Long) = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
+      dims, cells, cellIters, m, codes, pqIters, 1e6, gate)
+    val (coarse, books) = run(LocalGate.Threshold)
+    val (dCoarse, dBooks) = run(0L)
+    assert(sameBook(coarse, dCoarse) && books.length == dBooks.length &&
+      books.zip(dBooks).forall { case (a, b) => sameBook(a, b) },
+      "driver and distributed IVF-PQ training disagree")
+    (coarse, books)
+  }
+
+  /** pqCodebooks on both sides of the gate, required identical. */
+  private def pqBooksBoth(emb: DataFrame, dims: Int, m: Int, codes: Int,
+      iters: Int): Array[Book] = {
+    def run(gate: Long) = Similarity.pqCodebooks(emb, "vec_id", "embedding",
+      dims, m, codes, iters, 1e6, gate)
+    val books = run(LocalGate.Threshold)
+    val dBooks = run(0L)
+    assert(books.length == dBooks.length &&
+      books.zip(dBooks).forall { case (a, b) => sameBook(a, b) },
+      "driver and distributed PQ training disagree")
+    books
+  }
 
   test("cosine of identical vectors is 1, orthogonal is 0") {
     val df = Seq(
@@ -419,7 +455,7 @@ class SimilaritySpec extends SparkSpec {
     val q = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val n = emb.count().toInt
-    val books = Similarity.pqCodebooks(emb, "vec_id", "embedding",
+    val books = pqBooksBoth(emb,
       dims = 64, m = 4, codes = 8, iters = 2)
     assert(books.length == 4 && books.forall(_.length == 8) &&
       books.forall(_.forall(_._2.length == 16)))
@@ -445,12 +481,35 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("ivfPqIndex / pqCodebooks: vectors off dims fall back; residual overflow fails on both sides") {
+    // 4-long vectors under dims = 2: the distributed training slices the
+    // residuals to the first 2 dims; the driver side falls back to it
+    val long4 = (1 to 12).map(i => (i.toLong, Seq(i % 3, i % 5, i * 0.5, -i).map(_.toDouble)))
+      .toDF("vec_id", "embedding")
+    assert(graft.operators.Clustering.driverCorpus(long4, "vec_id", "embedding", 1e6,
+      Some(2), _ => 6L, LocalGate.Threshold).isEmpty)
+    val (coarse, books) = ivfPqBoth(long4, dims = 2, cells = 3, cellIters = 3, m = 2,
+      codes = 2, pqIters = 2)
+    assert(coarse.forall(_._2.length == 4) && books.forall(_.forall(_._2.length == 1)))
+    assert(pqBooksBoth(long4, dims = 2, m = 1, codes = 3, iters = 3).head.forall(_._2.length == 2))
+    // one cell seeded at -9e18: the residual of 9e18 leaves the Long range
+    val far = Seq((1L, Seq(-9e18)), (2L, Seq(9e18))).toDF("vec_id", "embedding")
+    Seq(LocalGate.Threshold, 0L).foreach { gate =>
+      val e = intercept[Exception] {
+        Similarity.ivfPqIndex(far, "vec_id", "embedding", 1, 1, 1, 1, 1, 1, 1.0, gate)
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(t =>
+        t.isInstanceOf[ArithmeticException] ||
+          String.valueOf(t.getMessage).contains("ARITHMETIC_OVERFLOW")), s"gate $gate: $e")
+    }
+  }
+
   test("ivfPqTopK: nprobe=cells + coarseK>=corpus recovers brute force; probe is an equi-join") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val n = emb.count().toInt
-    val (coarse, books) = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
+    val (coarse, books) = ivfPqBoth(emb,
       dims = 64, cells = 4, cellIters = 2, m = 4, codes = 8, pqIters = 2)
     assert(coarse.length == 4 && books.length == 4 &&
       books.forall(_.forall(_._2.length == 16)))
@@ -986,7 +1045,7 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int)] =
       df.select("q_id", "vec_id", "rank").as[(Long, Long, Int)].collect().toSet
     // PQ: books trained on the FULL corpus, scan filtered
-    val books = Similarity.pqCodebooks(emb, "vec_id", "embedding",
+    val books = pqBooksBoth(emb,
       dims = 64, m = 4, codes = 8, iters = 2)
     assert(rows(Similarity.filteredPqTopK(emb, q, k = 10, books,
         coarseK = 50, pred)) ==
@@ -1098,7 +1157,7 @@ class SimilaritySpec extends SparkSpec {
     assert(rows(fb).forall { case (_, v, _) => even.contains(v) })
     // IVF-PQ tier: metaCols denormalize into the codes store without
     // touching (vec_id, cell, codes)...
-    val (coarse, books) = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
+    val (coarse, books) = ivfPqBoth(emb,
       dims = 64, cells = 4, cellIters = 2, m = 4, codes = 8, pqIters = 2)
     val codesMeta = Similarity.ivfPqCodes(emb, "vec_id", "embedding",
       coarse, books, metaCols = Seq("label"))
@@ -1142,7 +1201,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val (coarse, books) = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
+    val (coarse, books) = ivfPqBoth(emb,
       dims = 64, cells = 4, cellIters = 2, m = 4, codes = 8, pqIters = 2)
     val sliceA = emb.filter(col("vec_id") % 3 === 0)
     val sliceB = emb.filter(col("vec_id") % 3 =!= 0)
@@ -1195,7 +1254,7 @@ class SimilaritySpec extends SparkSpec {
     // refresh: retrained index migrates the store's id slice by
     // re-encoding from the vector table == fresh bootstrap under the
     // new index; post-refresh probes and increments see one world
-    val (c2, b2) = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
+    val (c2, b2) = ivfPqBoth(emb,
       dims = 64, cells = 5, cellIters = 2, m = 4, codes = 8, pqIters = 2)
     val migrated = Similarity.refreshIvfPqStore(boot, emb,
       "vec_id", "embedding", c2, b2)
@@ -1302,7 +1361,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val (coarse, books) = Similarity.ivfPqIndex(emb, "vec_id", "embedding",
+    val (coarse, books) = ivfPqBoth(emb,
       dims = 64, cells = 4, cellIters = 2, m = 4, codes = 8, pqIters = 2)
     val dir = java.nio.file.Files.createTempDirectory("graft-idx").toString
     Similarity.ivfPqIndexRecords(spark, coarse, books)

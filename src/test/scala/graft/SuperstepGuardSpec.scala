@@ -5,11 +5,17 @@ import scala.collection.mutable
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-import graft.graph.Ranks
+import org.apache.spark.LiveConf
+import org.apache.spark.sql.functions.{array, col, sin}
 
-/** Job-shape guard for the driver-state rank series: a per-round
-  * shuffle or materialization must fail here, on a tiny graph, long
-  * before it shows as wall time at scale. */
+import graft.graph.Ranks
+import graft.operators.{Clustering, ScaleOps, Similarity}
+
+/** Job-shape guard for the operators that finish a small input on the
+  * driver (the rank series' supersteps, k-means / IVF-PQ training,
+  * sequence packing): a per-round shuffle, materialization or job must
+  * fail here, on a tiny input, long before it shows as wall time at
+  * scale. */
 class SuperstepGuardSpec extends SparkSpec {
   import spark.implicits._
 
@@ -54,5 +60,59 @@ class SuperstepGuardSpec extends SparkSpec {
     // outside the loop: the gate count (a shuffle map job + a result
     // job under AQE), the vertex names and the edge-block build
     assert(jobs.size <= iters + 3, s"${jobs.size} jobs for $iters iterations: $jobs")
+  }
+
+  /** 1,000 distinct 64-d vectors in one scan partition, the shape of
+    * the sf0.001 embeddings table (one parquet split). */
+  private def embeddings = spark.range(0, 1000, 1, 1).select(col("id").as("vec_id"),
+    array((1 to 64).map(j => sin(col("id") * (0.37 * j)).cast("float")): _*).as("embedding"))
+
+  test("ivfPqIndex below the gate trains in at most 2 jobs") {
+    val jobs = jobsOf {
+      Similarity.ivfPqIndex(embeddings, "vec_id", "embedding", dims = 64, cells = 8,
+        cellIters = 2, m = 4, codes = 16, pqIters = 2)
+    }
+    assert(jobs.size <= 2, s"${jobs.size} jobs: $jobs")
+    assert(jobs.forall(_.description == Clustering.LocalTrainJob), s"$jobs")
+  }
+
+  test("kmeansFixedPoint below the gate reads its input in 2 jobs, final assignment included") {
+    val jobs = jobsOf {
+      Clustering.kmeansFixedPoint(embeddings, "vec_id", "embedding", k = 8, iters = 3).collect()
+    }
+    // the vector-length probe and the bounded collect; the assignment
+    // runs on the rows that collect brought
+    assert(jobs.size <= 2, s"${jobs.size} jobs: $jobs")
+    assert(jobs.forall(_.description == Clustering.LocalTrainJob), s"$jobs")
+  }
+
+  test("packSequences below the gate over a cached input issues at most 1 job") {
+    val docs = spark.range(0, 3000, 1, 1)
+      .select(col("id").as("doc_id"), (col("id") % 700 + 1).as("nt"))
+      .cache()
+    try {
+      docs.count()
+      val jobs = jobsOf(ScaleOps.packSequences(docs, "doc_id", col("nt"), ctxLen = 512L))
+      assert(jobs.size <= 1, s"${jobs.size} jobs: $jobs")
+      assert(jobs.forall(_.description == ScaleOps.LocalPackJob), s"$jobs")
+    } finally docs.unpersist()
+  }
+
+  test("a small spark.driver.maxResultSize takes the distributed k-means loop, same centroids") {
+    def train() = Clustering.kmeansCentroidsFixed(embeddings, "vec_id", "embedding", k = 8,
+      iters = 3).map { case (c, v) => (c, v.toSeq) }.toSeq
+    def trainJobs(): (Seq[(Int, Seq[Long])], Seq[Job]) = {
+      var got: Seq[(Int, Seq[Long])] = Nil
+      val jobs = jobsOf { got = train() }
+      (got, jobs)
+    }
+    val (driver, driverJobs) = trainJobs()
+    assert(driverJobs.forall(_.stages == 1), s"driver training must not shuffle: $driverJobs")
+    // 64 KB: ~1,000 rows of 64 fixed-point dims need ~520 KB
+    val (small, jobs) = LiveConf.withSetting(spark.sparkContext,
+      "spark.driver.maxResultSize", "64k")(trainJobs())
+    assert(small == driver)
+    // the distributed loop: one shuffling job per update round
+    assert(jobs.count(_.stages > 1) >= 2, s"$jobs")
   }
 }
