@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * Everything here is a pure `Column` combinator over Spark built-ins —
   * whole-stage-codegen'd, no UDFs — so the functions stay inside
   * Catalyst and vectorize at 100 TB. The one genuine UDF the reference
-  * needs (F5 population token scan, `scrape_cia.py:256-280`) is
-  * expressed with higher-order `filter`/`aggregate` over
-  * `regexp_extract_all`, which also stays codegen-eligible.
+  * needs (F5 population token scan, `scrape_cia.py:256-280`) is a
+  * native codegen expression pair instead ([[Native.popValue]] /
+  * [[Native.popYear]]).
   */
 object FactbookFunctions {
 
@@ -84,40 +84,4 @@ object FactbookFunctions {
     * (`preprocess_upload_neo4j.py:259-266,296`): dollars -> billions,
     * 3 decimals. */
   def toBillionsR3(c: Column): Column = round(c / 1e9, 3)
-
-  /** F5 — population/year disambiguation scan
-    * (`scrape_cia.py:256-280`): over all `[\d,]+` tokens in the text,
-    * population = first token whose length != 4 (commas stripped);
-    * year = first len==4 token APPEARING AFTER the population token.
-    * Known-wrong on 3 territories; behavior preserved.
-    */
-  def populationTokens(text: Column): Column =
-    regexp_extract_all(text, lit("[\\d,]+"), lit(0))
-
-  def populationFromText(text: Column): Column =
-    try_element_at(filter(populationTokens(text), t => length(t) =!= 4), lit(1))
-
-  /** Index (1-based) of the population token within the token array,
-    * so the year scan can start after it. */
-  private def popIdx(toks: Column): Column =
-    // aggregate: carry (foundIdx, curIdx); foundIdx = first i with len!=4
-    aggregate(
-      toks,
-      struct(lit(0).as("found"), lit(0).as("i")),
-      (acc, t) => struct(
-        when(acc.getField("found") === 0 && length(t) =!= 4,
-          acc.getField("i") + 1).otherwise(acc.getField("found")).as("found"),
-        (acc.getField("i") + 1).as("i")),
-      acc => acc.getField("found"))
-
-  def yearFromPopText(text: Column): Column = {
-    val toks = populationTokens(text)
-    val pi = popIdx(toks)
-    // first len==4 token strictly after the population token
-    val after = slice(toks, pi + 1, greatest(size(toks) - pi, lit(0)))
-    when(pi > 0, try_element_at(filter(after, t => length(t) === 4), lit(1)))
-  }
-
-  def populationValue(text: Column): Column =
-    regexp_replace(populationFromText(text), ",", "").cast("double")
 }

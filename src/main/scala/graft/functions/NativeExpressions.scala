@@ -2,27 +2,30 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, GraftColumns, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions (with `doGenCode`) for the engine's two
-  * hottest scalar kernels. Both are pure single-pass Java loops over
-  * the input array — replacing deep higher-order-function trees whose
-  * generated code re-scanned the array per bit (SimHash: 60×) or
-  * unrolled 512 literal multiply-adds (hyperplane signature).
-  * Semantics are IDENTICAL to the portable md5-based definitions in
-  * TextFunctions/Dedup/Similarity, so the DuckDB oracles still match
-  * bit-for-bit.
+/** Native Catalyst expressions (with `doGenCode`) for the engine's
+  * scalar kernels: shingles, MinHash, SimHash, hyperplane signatures,
+  * dot products, integer squared distances, text normalization, the
+  * rolling hash, the population scan and the Bloom probe. Each is a
+  * pure single-pass Java loop inside whole-stage codegen, replacing
+  * higher-order-function trees that are interpreted (CodegenFallback)
+  * and re-scan the array per bit (SimHash: 60×) or unroll hundreds of
+  * literal multiply-adds (hyperplane signature). Their values equal the
+  * portable md5-based forms the DuckDB oracles mirror (the specs keep
+  * those forms as references), so the oracles match bit for bit.
   *
-  * Registered via [[GraftExtensions]]
-  * (`spark.sql.extensions=graft.GraftExtensions`) as
-  * `graft_simhash60(tokens)` and `graft_hyperplane_sig(vec, bits)`.
+  * The operators bind the expressions directly through [[Native]], in
+  * every session. [[GraftFunctionExtensions]]
+  * (`spark.sql.extensions=graft.GraftExtensions`) only registers the
+  * same expressions by name (`graft_simhash60(tokens)`, …) for SQL text.
   */
 object NativeKernels {
 
@@ -31,9 +34,9 @@ object NativeKernels {
   }
   private val shPrefix = "sh:".getBytes("UTF-8")
 
-  /** 60-bit simhash over a token array — identical to
-    * Dedup.simhash60's HOF form (md5("sh:"+tok) first 15 hex chars as
-    * the per-token hash). */
+  /** 60-bit simhash over a token array: bit b is set iff Σ_tokens
+    * (2·bit_b(hash(token)) − 1) > 0, the per-token hash being the first
+    * 15 hex chars of md5("sh:"+tok). */
   def simhash60(tokens: ArrayData): Long = {
     val votes = new Array[Int](60)
     val md = md5Local.get()
@@ -73,9 +76,9 @@ object NativeKernels {
       Array.tabulate(bits, dims)((b, d) => graft.operators.Similarity.planeCoef(b, d))
     })
 
-  /** Sign signature of a float/double vector under the deterministic
-    * hyperplanes — identical to Similarity.signSignature (same
-    * left-to-right summation order, so the same doubles). */
+  /** Sign signature of a float vector under the deterministic
+    * hyperplanes: bit b is set iff Σ_d vec(d)·planeCoef(b, d) ≥ 0,
+    * summed left to right. */
   def hyperplaneSig(vec: ArrayData, bits: Int): Long = {
     val n = vec.numElements()
     val cs = coefs(bits, n)
@@ -105,9 +108,9 @@ object NativeKernels {
     UTF8String.fromBytes(out)
   }
 
-  /** Word n-gram shingles joined by spaces — identical to
-    * TextFunctions.shingles applied to the token array (tokens are
-    * expected lowercased/non-empty; short docs → empty array). */
+  /** Word n-gram shingles: overlapping windows of `n` tokens joined by
+    * one space (tokens are expected lowercased/non-empty; docs shorter
+    * than `n` tokens → empty array). */
   def shingles(tokens: ArrayData, n: Int): ArrayData = {
     val cnt = tokens.numElements()
     if (cnt < n) return new GenericArrayData(Array.empty[Any])
@@ -129,8 +132,8 @@ object NativeKernels {
 
   /** MinHash signature over pre-computed shingles: element k = min
     * over shingles of hex(md5("k:" + shingle)); "zz_empty" sentinel
-    * for shingle-less docs. Identical to Dedup.minhashSignature
-    * (hex-string lexicographic min == unsigned-byte digest min). */
+    * for shingle-less docs (hex-string lexicographic min ==
+    * unsigned-byte digest min). */
   def minhashSig(shingleArr: ArrayData, numHashes: Int): ArrayData = {
     val n = shingleArr.numElements()
     if (n == 0) {
@@ -172,9 +175,9 @@ object NativeKernels {
     false
   }
 
-  /** Float/double-array dot product in double precision, left-to-right
-    * — identical to Similarity.dot's zip_with/aggregate fold (null on
-    * length mismatch, like zip_with's null padding poisons the sum).
+  /** Float/double-array dot product in double precision, left to right
+    * — the fold of `aggregate(zip_with(a, b, x·y), 0.0, +)` (null on
+    * length mismatch, as zip_with's null padding poisons that sum).
     * The element widths come from the expression's child types, so a
     * float column can be dotted against a literal double array (IVF
     * centroids) with the exact same widened-double products. */
@@ -193,18 +196,18 @@ object NativeKernels {
   }
 
   /** Integer squared L2 distance over two bigint arrays — the k-means
-    * fixed-point assignment kernel (Clustering.sqDistToLit's HOF form
-    * is CodegenFallback-interpreted; this runs inside whole-stage
-    * codegen). Integer arithmetic: no fold-order concerns at all.
-    * Null on length mismatch, like zip_with's null padding. */
+    * fixed-point assignment kernel. Integer arithmetic: no fold-order
+    * concerns at all. A Long overflow raises (ArithmeticException), as
+    * the ANSI `zip_with`/`aggregate` form and DuckDB do. Null on length
+    * mismatch, like zip_with's null padding. */
   def sqDistI64(a: ArrayData, b: ArrayData): java.lang.Long = {
     val n = a.numElements()
     if (n != b.numElements()) return null
     var acc = 0L
     var i = 0
     while (i < n) {
-      val d = a.getLong(i) - b.getLong(i)
-      acc += d * d
+      val d = Math.subtractExact(a.getLong(i), b.getLong(i))
+      acc = Math.addExact(acc, Math.multiplyExact(d, d))
       i += 1
     }
     java.lang.Long.valueOf(acc)
@@ -214,7 +217,7 @@ object NativeKernels {
 
   /** F5 population token (`scrape_cia.py:256-280`): first `[\d,]+`
     * token whose length != 4, commas stripped, as double; null when
-    * absent. Identical to FactbookFunctions.populationValue. */
+    * absent. */
   def popValue(s: UTF8String): java.lang.Double = {
     val m = digitRun.matcher(s.toString)
     while (m.find()) {
@@ -226,8 +229,7 @@ object NativeKernels {
   }
 
   /** F5 year token: first 4-length token strictly after the population
-    * token; null when no population token or no such year. Identical
-    * to FactbookFunctions.yearFromPopText. */
+    * token; null when no population token or no such year. */
   def popYear(s: UTF8String): UTF8String = {
     val m = digitRun.matcher(s.toString)
     var seenPop = false
@@ -243,10 +245,8 @@ object NativeKernels {
   }
 
   /** Rabin–Karp rolling hash over the characters of an already
-    * normalized string — identical to TextFunctions.rollingHash's
-    * fold ((acc*31 + codepoint) mod 1e9+7, left to right). Input is
-    * ASCII in practice; iterate unicode codepoints to match `ascii()`
-    * per split character. */
+    * normalized string: (acc*31 + codepoint) mod 1e9+7, left to right
+    * over unicode codepoints. */
   def rollingHash(s: UTF8String): Long = {
     val str = s.toString
     var acc = 0L
@@ -355,11 +355,14 @@ case class DotProductExpr(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_dot"
 
+  override def checkInputDataTypes(): TypeCheckResult =
+    Native.expectTypes(prettyName, "array<float|double>", children) {
+      case ArrayType(FloatType | DoubleType, _) => true
+    }
+
   private def isFloat(e: Expression): Boolean = e.dataType match {
     case ArrayType(FloatType, _) => true
-    case ArrayType(DoubleType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"graft_dot: expected array<float|double>, got $t")
+    case _ => false
   }
   private lazy val lFloat = isFloat(left)
   private lazy val rFloat = isFloat(right)
@@ -393,12 +396,10 @@ case class SqDistI64Expr(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "graft_sqdist_i64"
 
-  private def check(e: Expression): Unit = e.dataType match {
-    case ArrayType(LongType, _) => ()
-    case t => throw new IllegalArgumentException(
-      s"graft_sqdist_i64: expected array<bigint>, got $t")
-  }
-  check(left); check(right)
+  override def checkInputDataTypes(): TypeCheckResult =
+    Native.expectTypes(prettyName, "array<bigint>", children) {
+      case ArrayType(LongType, _) => true
+    }
 
   protected override def nullSafeEval(a: Any, b: Any): Any =
     NativeKernels.sqDistI64(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -471,18 +472,17 @@ case class PopYearExpr(child: Expression) extends UnaryExpression {
   * and breaks the codegen span. The probe matches the builder's insert
   * encoding per type: long keys via `mightContainLong`, string keys
   * via `mightContainBinary` over UTF-8 bytes (= `putString`'s
-  * encoding); any other child type is rejected at construction so a
-  * mismatched insert/probe can never silently drop rows. */
+  * encoding); any other key type fails analysis, so a mismatched
+  * insert/probe can never silently drop rows. */
 case class BloomContainsExpr(child: Expression, bloomBytes: Array[Byte])
     extends UnaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.BooleanType
   override def prettyName: String = "graft_bloom_contains"
 
-  child.dataType match {
-    case LongType | StringType => ()
-    case other => throw new IllegalArgumentException(
-      s"graft_bloom_contains: key must be bigint or string, got $other")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    Native.expectTypes(prettyName, "a bigint or string key", children.take(1)) {
+      case LongType | StringType => true
+    }
 
   @transient private lazy val bloom =
     org.apache.spark.util.sketch.BloomFilter.readFrom(
@@ -550,8 +550,44 @@ case class RollingHashExpr(child: Expression)
     copy(child = newChild)
 }
 
-/** Session extension registering the native functions:
-  * `spark.sql.extensions=graft.GraftExtensions` (root alias below). */
+/** The native expressions bound directly into Columns: what the
+  * operators call, in every session. Integer arguments (`n`,
+  * `numHashes`, `bits`) are plan constants, as the registered SQL
+  * forms require them to be literals. */
+object Native {
+  import GraftColumns.{column, expression => e}
+
+  def shingles(tokens: Column, n: Int): Column = column(ShinglesExpr(e(tokens), n))
+  def minhash(shingles: Column, numHashes: Int): Column =
+    column(MinhashSigExpr(e(shingles), numHashes))
+  def simhash60(tokens: Column): Column = column(SimHash60Expr(e(tokens)))
+  def hyperplaneSig(vec: Column, bits: Int): Column = column(HyperplaneSigExpr(e(vec), bits))
+  def dot(a: Column, b: Column): Column = column(DotProductExpr(e(a), e(b)))
+  def sqDistI64(a: Column, b: Column): Column = column(SqDistI64Expr(e(a), e(b)))
+  def normalizeText(text: Column): Column = column(NormalizeTextExpr(e(text)))
+  def rollingHash(normalized: Column): Column = column(RollingHashExpr(e(normalized)))
+  def popValue(text: Column): Column = column(PopValueExpr(e(text)))
+  def popYear(text: Column): Column = column(PopYearExpr(e(text)))
+
+  def bloomContains(key: Column, bloom: org.apache.spark.util.sketch.BloomFilter): Column = {
+    val bos = new java.io.ByteArrayOutputStream()
+    bloom.writeTo(bos)
+    column(BloomContainsExpr(e(key), bos.toByteArray))
+  }
+
+  /** Analysis-time type check: every argument's type must satisfy `ok`. */
+  private[functions] def expectTypes(name: String, want: String, args: Seq[Expression])(
+      ok: PartialFunction[DataType, Boolean]): TypeCheckResult =
+    args.map(_.dataType).find(t => !ok.applyOrElse(t, (_: DataType) => false)) match {
+      case None => TypeCheckResult.TypeCheckSuccess
+      case Some(t) => TypeCheckResult.TypeCheckFailure(
+        s"$name: expected $want, got ${t.catalogString}")
+    }
+}
+
+/** Session extension registering the native expressions by name for
+  * SQL text (`spark.sql.extensions=graft.GraftExtensions`, root alias
+  * below); the operators bind them through [[Native]] instead. */
 class GraftFunctionExtensions extends (SparkSessionExtensions => Unit) {
 
   private def reg(ext: SparkSessionExtensions, name: String, arity: Int)(

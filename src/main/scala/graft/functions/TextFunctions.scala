@@ -86,16 +86,6 @@ object TextFunctions {
   def fingerprintMd5(text: Column): Column =
     md5(array_join(tokens(lower(text)), " ").cast("binary"))
 
-  /** Rolling polynomial hash over the characters of the normalized
-    * text: h = fold(h·31 + codepoint) mod 1e9+7 — the classic
-    * Rabin–Karp fingerprint, expressed as a higher-order `aggregate`
-    * (codegen-eligible, one pass). */
-  def rollingHash(text: Column): Column =
-    aggregate(
-      filter(split(array_join(tokens(lower(text)), " "), ""), c => c =!= ""),
-      lit(0L),
-      (acc, c) => (acc * 31L + ascii(c)) % 1000000007L)
-
   /** Portable 60-bit integer hash: first 15 hex chars of
     * md5(seed:value) parsed base-16. Positive, fits signed 64-bit, and
     * byte-identical in any engine with md5 (DuckDB:
@@ -109,16 +99,10 @@ object TextFunctions {
 
   /** Canonical text normalization (NFC, accent-strip, lowercase,
     * control-char and whitespace cleanup) via the native
-    * `graft_normalize_text` kernel when the session has
-    * GraftExtensions; the Column fallback is byte-identical for ASCII
-    * input (no Unicode step exists as a built-in) — sessions without
-    * the extension get the ASCII subset of the semantics. */
+    * `graft_normalize_text` kernel ([[NativeKernels.normalizeText]]);
+    * no Unicode step exists as a Column built-in. `df` is not read. */
   def normalizeText(df: org.apache.spark.sql.DataFrame, text: Column): Column =
-    if (df.sparkSession.catalog.functionExists("graft_normalize_text"))
-      call_function("graft_normalize_text", text)
-    else
-      trim(regexp_replace(
-        regexp_replace(lower(text), "\\p{Cntrl}", " "), "\\s+", " "))
+    Native.normalizeText(text)
 
   /** PII patterns — the portable subset of Java regex ∩ RE2 (DuckDB),
     * so the exact same pattern strings drive both engines: character
@@ -146,24 +130,6 @@ object TextFunctions {
     * redacted text). */
   def piiCount(text: Column, pattern: String): Column =
     size(regexp_extract_all(text, lit(pattern), lit(0)))
-
-  /** Word n-gram shingles: overlapping windows of `n` tokens joined by
-    * a single space. Documents shorter than n tokens → empty array. */
-  def shingles(text: Column, n: Int): Column =
-    shinglesOfTokens(tokens(lower(text)), n)
-
-  /** [[shingles]] over an ALREADY-materialized token array — the
-    * shared-token-table form (r22): given `toks = tokens(lower(text))`
-    * the strings are byte-identical to `shingles(text, n)`, including
-    * the NULL case (null tokens → null size → the otherwise branch →
-    * empty array, exactly what the text form produced). */
-  def shinglesOfTokens(toks: Column, n: Int): Column = {
-    val cnt = size(toks)
-    when(cnt >= n,
-      transform(sequence(lit(1), cnt - (n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
 
   /** [[fingerprintMd5]] over an ALREADY-materialized token array —
     * byte-identical given `toks = tokens(lower(text))` (null tokens →

@@ -5,6 +5,7 @@ import graft.core.LocalGate
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Native
 
 /** Exact k-means (Lloyd's algorithm) — the centroid trainer for the IVF
   * coarse quantizer and the generic embedding-clustering primitive of a
@@ -53,29 +54,15 @@ object Clustering {
   def fixedPoint(vec: Column, scale: Double): Column =
     transform(vec, v => floor(v.cast("double") * scale + 0.5).cast("long"))
 
-  /** Whether the session has the native `graft_sqdist_i64` kernel
-    * (GraftExtensions), which wraps on Long overflow; without it the
-    * distances are the portable HOF form, which raises under ANSI. */
-  private[graft] def nativeSqDist(df: DataFrame): Boolean =
-    df.sparkSession.catalog.functionExists("graft_sqdist_i64")
-
-  /** Exact squared L2 distance to a literal centroid — the native
-    * `graft_sqdist_i64` kernel when the session has GraftExtensions
-    * (the zip_with/aggregate HOF form is CodegenFallback-interpreted,
-    * and this runs k times per row in the assignment hot path); the
-    * portable HOF otherwise. Integer arithmetic: identical values
-    * either way, short of a Long overflow (see [[nativeSqDist]]). */
-  private[operators] def sqDistToLit(df: DataFrame, qv: Column, cv: Array[Long]): Column =
-    if (nativeSqDist(df))
-      call_function("graft_sqdist_i64", qv, typedlit(cv.toSeq))
-    else
-      aggregate(
-        zip_with(qv, typedlit(cv.toSeq), (x, y) => (x - y) * (x - y)),
-        lit(0L), (acc, v) => acc + v)
+  /** Exact squared L2 distance to a literal centroid: the native
+    * codegen kernel ([[Native.sqDistI64]]), which runs k times per row
+    * in the assignment hot path and raises on a Long overflow. */
+  private[operators] def sqDistToLit(qv: Column, cv: Array[Long]): Column =
+    Native.sqDistI64(qv, typedlit(cv.toSeq))
 
   private[operators] def assignTo(cents: Array[(Int, Array[Long])])(df: DataFrame): DataFrame = {
     val entries = cents.map { case (cid, cv) =>
-      struct(sqDistToLit(df, col("qv"), cv).as("d"), lit(cid.toLong).as("c"))
+      struct(sqDistToLit(col("qv"), cv).as("d"), lit(cid.toLong).as("c"))
     }
     // lexicographic struct sort: min distance, ties to lowest cluster
     df.withColumn("_best", sort_array(array(entries: _*)).getItem(0))
@@ -94,32 +81,25 @@ object Clustering {
     math.floor(x * scale + 0.5).toLong
 
   /** Exact squared L2 distance as [[sqDistToLit]] computes it: Long
-    * arithmetic that wraps on overflow like the native kernel, or with
-    * `exact` fails loudly like the HOF form under ANSI. */
-  private[operators] def sqDist(a: Array[Long], b: Array[Long], exact: Boolean): Long = {
+    * arithmetic that fails loudly on overflow. */
+  private[operators] def sqDist(a: Array[Long], b: Array[Long]): Long = {
     var acc = 0L
     var i = 0
-    if (exact) while (i < a.length) {
+    while (i < a.length) {
       val d = Math.subtractExact(a(i), b(i))
       acc = Math.addExact(acc, Math.multiplyExact(d, d))
-      i += 1
-    }
-    else while (i < a.length) {
-      val d = a(i) - b(i)
-      acc += d * d
       i += 1
     }
     acc
   }
 
   /** Index of the centroid nearest to `v`, ties to the lowest index. */
-  private[operators] def nearest(cents: Array[Array[Long]], v: Array[Long],
-      exact: Boolean): Int = {
+  private[operators] def nearest(cents: Array[Array[Long]], v: Array[Long]): Int = {
     var best = 0
-    var bestD = sqDist(v, cents(0), exact)
+    var bestD = sqDist(v, cents(0))
     var c = 1
     while (c < cents.length) {
-      val d = sqDist(v, cents(c), exact)
+      val d = sqDist(v, cents(c))
       if (d < bestD) { best = c; bestD = d }
       c += 1
     }
@@ -176,13 +156,13 @@ object Clustering {
   /** Lloyd's algorithm on the driver with the distributed loop's rules:
     * the seeds are the first k rows (`rows` come in id order) with
     * cluster id = seed rank; each round assigns every vector to its
-    * nearest centroid (exact squared distance as [[sqDist]] computes it
-    * with `exact`, ties to the lowest cluster id) and sets each centroid
+    * nearest centroid (exact squared distance as [[sqDist]] computes it,
+    * ties to the lowest cluster id) and sets each centroid
     * to floor(Σ / n) per dimension, Σ overflow-checked as ANSI `sum` is;
     * a cluster that loses every member keeps its centroid. Returns the
     * centroids after `iters - 1` updates. */
   private[operators] def lloyd(rows: Array[(Long, Array[Long])], k: Int,
-      iters: Int, exact: Boolean): Array[(Int, Array[Long])] = {
+      iters: Int): Array[(Int, Array[Long])] = {
     require(k > 0 && iters > 0, "k and iters must be positive")
     var cents = rows.take(k).map(_._2)
     val dims = if (rows.isEmpty) 0 else rows(0)._2.length
@@ -191,7 +171,7 @@ object Clustering {
       val sums = Array.fill(cents.length)(new Array[Long](dims))
       val counts = new Array[Long](cents.length)
       rows.foreach { case (_, v) =>
-        val c = nearest(cents, v, exact)
+        val c = nearest(cents, v)
         counts(c) += 1
         val s = sums(c)
         var i = 0
@@ -215,7 +195,7 @@ object Clustering {
       : (Array[(Int, Array[Long])], Either[Array[(Long, Array[Long])], DataFrame]) = {
     require(k > 0 && iters > 0, "k and iters must be positive")
     driverCorpus(corpus, idCol, vecCol, scale, None, k.toLong * _, localThreshold) match {
-      case Some(rows) => return (lloyd(rows, k, iters, !nativeSqDist(corpus)), Left(rows))
+      case Some(rows) => return (lloyd(rows, k, iters), Left(rows))
       case None =>
     }
     val q = quantize(corpus, idCol, vecCol, scale).persistTracked()
@@ -276,11 +256,10 @@ object Clustering {
       case (cents, Left(rows)) =>
         val spark = corpus.sparkSession
         import spark.implicits._
-        val exact = !nativeSqDist(corpus)
         val cv = cents.map(_._2)
         rows.toSeq.map { case (id, v) =>
-          val c = nearest(cv, v, exact)
-          (id, c.toLong, sqDist(v, cv(c), exact))
+          val c = nearest(cv, v)
+          (id, c.toLong, sqDist(v, cv(c)))
         }.toDF("vec_id", "cluster", "dist")
       case (cents, Right(q)) =>
         assignTo(cents)(q).select(col("vec_id"), col("cluster"), col("dist"))

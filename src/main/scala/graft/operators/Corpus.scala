@@ -528,9 +528,9 @@ object Corpus {
     * before the per-doc sum, which is exact under Σ n·lp in any order. */
   def bigramSurprisal(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // per-doc gram counts feed both the model and the scoring join —
-    // persist so tokenize+explode+combine runs once. shinglesAuto picks
-    // the native codegen kernel (the Column-HOF fallback re-evaluates
-    // the token split per shingle when the lambda drops to interpreted
+    // persist so tokenize+explode+combine runs once. shinglesAuto is
+    // the native codegen kernel (a Column-HOF form re-evaluates the
+    // token split per shingle when the lambda drops to interpreted
     // mode — O(len²) per doc); spread() keeps single-split benchmark
     // files from serializing the tokenization on one core.
     val tfd = Dedup.spread(docs).select(col(idCol),

@@ -6,6 +6,7 @@ import graft.core.LocalGate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Native
 import graft.functions.TextFunctions._
 
 /** Deduplication operators for training-data pipelines, over a
@@ -31,23 +32,12 @@ import graft.functions.TextFunctions._
   */
 object Dedup {
 
-  /** Shingle column via the native codegen kernel when registered
-    * (Spark HOFs are interpreted — CodegenFallback — so the native
-    * expression is the per-row fast path), else the portable HOF.
-    * Same strings either way. */
+  /** Word n-gram shingles of `textCol` (lowercased whitespace tokens,
+    * windows of `n` joined by one space; docs shorter than `n` tokens →
+    * empty array) via the native codegen kernel ([[Native.shingles]]).
+    * `df` is not read. */
   def shinglesAuto(df: DataFrame, textCol: String, n: Int): Column =
-    if (df.sparkSession.catalog.functionExists("graft_shingles"))
-      call_function("graft_shingles", tokens(lower(col(textCol))), lit(n))
-    else shingles(col(textCol), n)
-
-  /** [[shinglesAuto]] over an ALREADY-materialized token array (the
-    * shared-token-table form, r22): the native kernel receives the
-    * token array either way, so given `toks = tokens(lower(text))`
-    * the strings are byte-identical on both paths. */
-  private def shinglesOfToksAuto(df: DataFrame, toks: Column, n: Int): Column =
-    if (df.sparkSession.catalog.functionExists("graft_shingles"))
-      call_function("graft_shingles", toks, lit(n))
-    else graft.functions.TextFunctions.shinglesOfTokens(toks, n)
+    Native.shingles(tokens(lower(col(textCol))), n)
 
   /** Shared `(idCol, _t = tokens(lower(text)))` TOKEN table (r22) —
     * one level below the r21 [[shingleBase]]: the exact-dedup
@@ -59,12 +49,6 @@ object Dedup {
     * At 100 TB each avoided re-tokenize is a full corpus pass. */
   def tokenBase(df: DataFrame, idCol: String, textCol: String): DataFrame =
     spread(df).select(col(idCol), tokens(lower(col(textCol))).as("_t"))
-
-  private def minhashAuto(df: DataFrame, textCol: String, shingleN: Int,
-      numHashes: Int): Column =
-    if (df.sparkSession.catalog.functionExists("graft_minhash"))
-      call_function("graft_minhash", shinglesAuto(df, textCol, shingleN), lit(numHashes))
-    else minhashSignature(col(textCol), shingleN, numHashes)
 
   /** Spread per-row-heavy compute across the cluster: small single-file
     * benchmark inputs arrive as one scan split, which would serialize
@@ -335,24 +319,6 @@ object Dedup {
       requested: Long): Long =
     if (requested > 0L) requested else math.max(persistedFps.count(), 1L)
 
-  /** MinHash signature: for each of `numHashes` seeds, the minimum
-    * md5(seed:shingle) hex string over the document's shingles.
-    * Min-over-strings on hex is order-isomorphic to min over the
-    * underlying 128-bit integers, and portable across engines.
-    * Returns array<string> of length numHashes (null-free; docs with
-    * no shingles get "z"-sentinels that only collide with each other).
-    */
-  def minhashSignature(text: Column, shingleN: Int, numHashes: Int): Column = {
-    val sh = shingles(text, shingleN)
-    val sig = (0 until numHashes).map { seed =>
-      coalesce(
-        array_min(transform(sh,
-          s => md5(concat(lit(seed.toString), lit(":"), s).cast("binary")))),
-        lit("zz_empty"))
-    }
-    array(sig: _*)
-  }
-
   /** LSH candidate pairs: split the signature into `bands` bands of
     * `rowsPerBand`, bucket on (bandIdx, concat(band)), emit distinct
     * (id1 < id2) pairs sharing any bucket. The band explode costs
@@ -361,7 +327,7 @@ object Dedup {
       shingleN: Int = 3, bands: Int = 4, rowsPerBand: Int = 3): DataFrame = {
     val numHashes = bands * rowsPerBand
     val withSig = spread(df).select(col(idCol).as("id"),
-      minhashAuto(df, textCol, shingleN, numHashes).as("_sig"))
+      Native.minhash(shinglesAuto(df, textCol, shingleN), numHashes).as("_sig"))
     val banded = withSig.select(col("id"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
         b => array_join(slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)), "|"))))
@@ -374,22 +340,6 @@ object Dedup {
       .filter(col("id1") < col("id2"))
       .select("id1", "id2").distinct()
   }
-
-  /** MinHash signature over an ALREADY-materialized shingle-array
-    * column — the shared-array sibling of [[minhashAuto]] (min over a
-    * set equals min over its multiset, so distinct arrays are fine). */
-  private def minhashOfShingles(df: DataFrame, sh: Column, numHashes: Int): Column =
-    if (df.sparkSession.catalog.functionExists("graft_minhash"))
-      call_function("graft_minhash", sh, lit(numHashes))
-    else {
-      val sig = (0 until numHashes).map { seed =>
-        coalesce(
-          array_min(transform(sh,
-            s => md5(concat(lit(seed.toString), lit(":"), s).cast("binary")))),
-          lit("zz_empty"))
-      }
-      array(sig: _*)
-    }
 
   /** MinHash near-dup pairs, verified: LSH candidates filtered by
     * exact n-gram Jaccard ≥ threshold.
@@ -443,7 +393,7 @@ object Dedup {
       pairBroadcastBudget: Long = 1000000L): DataFrame = {
     val numHashes = bands * rowsPerBand
     val banded = base
-      .select(col("id"), minhashOfShingles(base, col("_sh"), numHashes).as("_sig"))
+      .select(col("id"), Native.minhash(col("_sh"), numHashes).as("_sig"))
       .select(col("id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => array_join(slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)), "|"))))
@@ -485,7 +435,7 @@ object Dedup {
     spread(docs)
       .withColumn("shingles", distinctShingles(docs, textCol, shingleN))
       .select(col(idCol).as("id"), col("shingles"),
-        minhashOfShingles(docs, col("shingles"), numHashes).as("sig"))
+        Native.minhash(col("shingles"), numHashes).as("sig"))
   }
 
   /** [[nearDupStoreRecords]] over a prepared [[tokenBase]] (r22) —
@@ -496,16 +446,16 @@ object Dedup {
     val numHashes = bands * rowsPerBand
     toks
       .withColumn("shingles", coalesce(
-        array_distinct(shinglesOfToksAuto(toks, col("_t"), shingleN)),
+        array_distinct(Native.shingles(col("_t"), shingleN)),
         typedLit(Seq.empty[String])))
       .select(col(idCol).as("id"), col("shingles"),
-        minhashOfShingles(toks, col("shingles"), numHashes).as("sig"))
+        Native.minhash(col("shingles"), numHashes).as("sig"))
   }
 
   /** Distinct shingle set with NULL text coalesced to the EMPTY set —
-    * null text carries the same (non-)evidence as empty text, and the
-    * coalesce keeps the native minhash kernel (null-in → null-out) and
-    * the HOF fallback (null-in → zz_empty sentinel) on one behavior. */
+    * null text carries the same (non-)evidence as empty text, so the
+    * native minhash kernel gives it the zz_empty signature (a null
+    * shingle array would give a null signature). */
   private def distinctShingles(df: DataFrame, textCol: String,
       shingleN: Int): Column =
     coalesce(array_distinct(shinglesAuto(df, textCol, shingleN)),
@@ -579,7 +529,7 @@ object Dedup {
     incrementalNearDupCore(
       batchToks
         .withColumn("_sh", coalesce(
-          array_distinct(shinglesOfToksAuto(batchToks, col("_t"), shingleN)),
+          array_distinct(Native.shingles(col("_t"), shingleN)),
           typedLit(Seq.empty[String])))
         .drop("_t"),
       store, idCol, threshold, bands, rowsPerBand, pairBroadcastBudget)
@@ -599,7 +549,7 @@ object Dedup {
     // batch records: consumed by banding, both verify joins, and the
     // survivor anti-join — persist once (registry-released)
     val batch = withSh
-      .withColumn("_sig", minhashOfShingles(withSh, col("_sh"), numHashes))
+      .withColumn("_sig", Native.minhash(col("_sh"), numHashes))
       .persistTracked()
 
     // fail fast on a store built with different bands/rowsPerBand: a
@@ -1182,33 +1132,13 @@ object Dedup {
       .select(col("id"), col("_size"), col("_p._gk").as("_gk"))
   }
 
-  /** 60-bit SimHash over the token stream: bit b of the signature is
-    * set iff Σ_tokens (2·bit_b(hash(token)) − 1) > 0. One pass to hash
-    * tokens, then 60 integer reductions over the (small) hash array —
-    * all inside whole-stage codegen. */
-  def simhash60(text: Column): Column = {
-    val hs = transform(tokens(lower(text)), t => hexHash60Tok(t))
-    val bitCols = transform(sequence(lit(0), lit(59)), b => {
-      val votes = aggregate(hs, lit(0),
-        (acc, h) => acc +
-          when(call_function("shiftright", h, b).bitwiseAND(1) === 1, 1).otherwise(-1))
-      when(votes > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))
-    })
-    aggregate(bitCols, lit(0L), (acc, v) => acc.bitwiseOR(v))
-  }
-
-  private def hexHash60Tok(t: Column): Column =
-    conv(substring(md5(concat(lit("sh:"), t).cast("binary")), 1, 15), 16, 10)
-      .cast("long")
-
-  /** simhash60 via the native codegen expression when the session has
-    * GraftExtensions registered (single md5 pass per token vs 60
-    * array re-scans in the HOF form); falls back to the portable HOF
-    * otherwise. Same bits either way. */
+  /** 60-bit SimHash over the lowercased token stream of `textCol`: bit
+    * b of the signature is set iff Σ_tokens (2·bit_b(hash(token)) − 1)
+    * > 0, the token hash being the first 15 hex chars of md5("sh:" +
+    * token). One md5 pass per token in the native codegen kernel
+    * ([[Native.simhash60]]). `df` is not read. */
   def simhash60Auto(df: DataFrame, textCol: String): Column =
-    if (df.sparkSession.catalog.functionExists("graft_simhash60"))
-      call_function("graft_simhash60", tokens(lower(col(textCol))))
-    else simhash60(col(textCol))
+    Native.simhash60(tokens(lower(col(textCol))))
 
   /** SimHash near-dup pairs with Hamming ≤ maxDist, candidates via
     * 4-way band pigeonhole (any pair within Hamming 3 shares at least
@@ -1623,7 +1553,7 @@ object Dedup {
       minhashNearDupPairsFromBase(
         graft.core.Caches.persistTracked(
           toks.select(col(idCol).as("id"),
-            array_distinct(shinglesOfToksAuto(toks, col("_t"), shingleN))
+            array_distinct(Native.shingles(col("_t"), shingleN))
               .as("_sh"))),
         threshold, bands, rowsPerBand))
   }

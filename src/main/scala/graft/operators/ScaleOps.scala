@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.core.Caches.TrackedPersist
 import graft.core.LocalGate
+import graft.functions.Native
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -1127,37 +1128,21 @@ object ScaleOps {
     * build side's insert encoding (integral → long, string → as-is;
     * see [[requireSketchableKey]]) or pruning silently yields false
     * negatives. NULL keys always route to the FRESH side: a null never
-    * matches any stored key, and neither probe path can evaluate null
-    * (the native call returns SQL NULL — which would drop the row from
-    * BOTH slices — and `BloomFilter.mightContain(null)` throws). The
-    * native codegen probe rides inside the whole-stage codegen span; a
-    * typed Row=>Boolean filter would deserialize every row and split
-    * the span, so it is only the no-extensions fallback. */
+    * matches any stored key, and the probe of a null is SQL NULL, which
+    * would drop the row from BOTH slices. The probe is the native
+    * codegen expression ([[Native.bloomContains]]), which rides inside
+    * the whole-stage codegen span. */
   private[graft] def bloomSplit(df: DataFrame,
       bloom: org.apache.spark.util.sketch.BloomFilter,
       colName: String): (DataFrame, DataFrame) = {
-    val spark = df.sparkSession
     val probeCol = df.schema(colName).dataType match {
       case org.apache.spark.sql.types.StringType => col(colName)
       case _ => col(colName).cast("long")
     }
-    if (spark.catalog.functionExists("graft_bloom_contains")) {
-      val bos = new java.io.ByteArrayOutputStream()
-      bloom.writeTo(bos)
-      // isNotNull first makes the probe total (false for null rows,
-      // never SQL NULL), so filter(!probe) is an exact complement
-      val probe = col(colName).isNotNull &&
-        call_function("graft_bloom_contains", probeCol, lit(bos.toByteArray))
-      (df.filter(probe), df.filter(!probe))
-    } else {
-      val bc = spark.sparkContext.broadcast(bloom)
-      (df.filter((r: org.apache.spark.sql.Row) =>
-        r.getAs[Any](colName) != null &&
-          bc.value.mightContain(r.getAs[Any](colName))),
-        df.filter((r: org.apache.spark.sql.Row) =>
-          r.getAs[Any](colName) == null ||
-            !bc.value.mightContain(r.getAs[Any](colName))))
-    }
+    // isNotNull first makes the probe total (false for null rows,
+    // never SQL NULL), so filter(!probe) is an exact complement
+    val probe = col(colName).isNotNull && Native.bloomContains(probeCol, bloom)
+    (df.filter(probe), df.filter(!probe))
   }
 
   /** Row-level data-quality routing (X165): append `_violations`, the

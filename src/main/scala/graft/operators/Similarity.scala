@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.core.Caches.TrackedPersist
 import graft.core.LocalGate
+import graft.functions.Native
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,40 +24,25 @@ import org.apache.spark.sql.functions._
   *  - IVF cell assignment is a pure map-side argmax against the
   *    (bounded, driver-collected) centroid set folded into the plan as
   *    literals — zero shuffle between the scan and the cell id.
-  *  - Dot products use the `zip_with`/`aggregate` higher-order
-  *    functions — sequential left-fold, so float summation order is
+  *  - Dot products run in the native codegen kernel
+  *    ([[graft.functions.Native.dot]]): a sequential left fold after
+  *    the float→double widening, so float summation order is
   *    deterministic and matches any engine that folds left (DuckDB
-  *    `list_dot_product`), after the float→double widening — or the
-  *    native `graft_dot` kernel (identical fold) when registered.
+  *    `list_dot_product`).
   */
 object Similarity {
 
-  /** Sequential-fold dot product of two array<float/double> columns. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
+  /** Dot product of two array<float|double> columns in double
+    * precision, folded left to right (null on a length mismatch), via
+    * the native codegen kernel. `df` is not read. */
+  def dotAuto(df: DataFrame, a: Column, b: Column): Column = Native.dot(a, b)
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity, rounded to 6 decimals for cross-engine float
-    * stability (fold order is fixed; the rounding absorbs the last-ulp
-    * noise from double formatting). */
-  def cosine(a: Column, b: Column): Column =
-    round(dot(a, b) / (norm(a) * norm(b)), 6)
-
-  /** dot product via the native `graft_dot` kernel when the session has
-    * GraftExtensions registered (the zip_with/aggregate HOF path is
-    * interpreted per element); identical doubles (same fold order). */
-  def dotAuto(df: DataFrame, a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("graft_dot"))
-      call_function("graft_dot", a, b)
-    else dot(a, b)
-
-  /** cosine via the native `graft_dot` kernel when registered. */
-  def cosineAuto(df: DataFrame, a: Column, b: Column): Column = {
-    def d(x: Column, y: Column) = dotAuto(df, x, y)
-    round(d(a, b) / (sqrt(d(a, a)) * sqrt(d(b, b))), 6)
-  }
+  /** Cosine similarity over [[dotAuto]], rounded to 6 decimals for
+    * cross-engine float stability (fold order is fixed; the rounding
+    * absorbs the last-ulp noise from double formatting). `df` is not
+    * read. */
+  def cosineAuto(df: DataFrame, a: Column, b: Column): Column =
+    round(Native.dot(a, b) / (sqrt(Native.dot(a, a)) * sqrt(Native.dot(b, b))), 6)
 
   /** Symmetric int8 quantization per vector (the storage/bandwidth
     * lever for billion-vector ANN: 4× smaller than float32, dot
@@ -230,12 +216,11 @@ object Similarity {
     Clustering.driverCorpus(corpus, idCol, vecCol, scale, Some(dims),
         _ => codes.toLong * subDim, localThreshold) match {
       case Some(rows) =>
-        val exact = !Clustering.nativeSqDist(corpus)
         // quantizing then slicing == slicing then quantizing: fixedPoint
         // is element-wise
         return (0 until m).map { i =>
           Clustering.lloyd(rows.map { case (id, v) =>
-            (id, v.slice(i * subDim, (i + 1) * subDim)) }, codes, iters, exact)
+            (id, v.slice(i * subDim, (i + 1) * subDim)) }, codes, iters)
         }.toArray
       case None =>
     }
@@ -281,7 +266,7 @@ object Similarity {
         subQ(col("embedding"), i).as(s"_q$i"))): _*)
     val codesDf = enc.select(col("vec_id"), array((0 until m).map { i =>
       val entries = codebooks(i).map { case (cid, cv) =>
-        struct(Clustering.sqDistToLit(enc, col(s"_q$i"), cv).as("d"),
+        struct(Clustering.sqDistToLit(col(s"_q$i"), cv).as("d"),
           lit(cid.toLong).as("c"))
       }
       sort_array(array(entries: _*)).getItem(0).getField("c")
@@ -431,13 +416,12 @@ object Similarity {
     Clustering.driverCorpus(corpus, idCol, vecCol, scale, Some(dims),
         _ => math.max(cells.toLong * dims, codes.toLong * subDim), localThreshold) match {
       case Some(rows) =>
-        val exact = !Clustering.nativeSqDist(corpus)
-        val coarse = Clustering.lloyd(rows, cells, cellIters, exact)
+        val coarse = Clustering.lloyd(rows, cells, cellIters)
         val cents = coarse.map(_._2)
         // the residual frame's `zip_with(x - y)`, which raises on
         // overflow under ANSI
         val res = rows.map { case (id, v) =>
-          val c = cents(Clustering.nearest(cents, v, exact))
+          val c = cents(Clustering.nearest(cents, v))
           (id, Array.tabulate(v.length)(j => Math.subtractExact(v(j), c(j))))
         }
         // each sub-space re-quantizes its residual slice at scale 1.0,
@@ -446,7 +430,7 @@ object Similarity {
           Clustering.lloyd(res.map { case (id, r) =>
             (id, r.slice(i * subDim, (i + 1) * subDim)
               .map(x => Clustering.fixedPointLocal(x.toDouble, 1.0)))
-          }, codes, pqIters, exact)
+          }, codes, pqIters)
         }.toArray
         return (coarse, books)
       case None =>
@@ -536,7 +520,7 @@ object Similarity {
       (col("vec_id") +: metaCols.map(col)) :+ col("cell") :+
         array((0 until m).map { i =>
           val entries = codebooks(i).map { case (cid, cw) =>
-            struct(Clustering.sqDistToLit(enc0, col(s"_r$i"), cw).as("d"),
+            struct(Clustering.sqDistToLit(col(s"_r$i"), cw).as("d"),
               lit(cid.toLong).as("c"))
           }
           sort_array(array(entries: _*)).getItem(0).getField("c")
@@ -574,7 +558,7 @@ object Similarity {
     val qq = queries.select(col("q_id"),
       Clustering.fixedPoint(col("q_vec"), scale).as("_qv"))
     val centEntries = coarseCents.map { case (cid, cv) =>
-      struct(Clustering.sqDistToLit(qq, col("_qv"), cv).as("d"),
+      struct(Clustering.sqDistToLit(col("_qv"), cv).as("d"),
         lit(cid.toLong).as("c"))
     }
     val centLit = typedlit(coarseCents.sortBy(_._1).map(_._2.toSeq).toSeq)
@@ -589,7 +573,7 @@ object Similarity {
       array((0 until m).map { i =>
         val sub = slice(col("_qr"), i * subDim + 1, subDim)
         array(codebooks(i).sortBy(_._1).map { case (_, cw) =>
-          Clustering.sqDistToLit(probed, sub, cw) }: _*)
+          Clustering.sqDistToLit(sub, cw) }: _*)
       }: _*).as("_lut"))
     // the probe: keyed equi-join on cell — approximate distance is the
     // LUT sum, negated so the shared desc-top-k ranks ascending dist
@@ -1810,28 +1794,15 @@ object Similarity {
     finishTopK(scored, qIdCol, idCol, k)
   }
 
-  /** signSignature via the native codegen expression when the session
-    * has GraftExtensions registered (tight loop over a cached coef
-    * matrix vs `bits`×`dims` unrolled literal multiply-adds in
-    * generated code); identical doubles either way (same fold order). */
+  /** Random-hyperplane sign signature of width `bits`: bit i is set
+    * iff the dot product with pseudo-random hyperplane i is ≥ 0,
+    * summed left to right over the vector. The hyperplanes are
+    * deterministic functions of (i, dim) — md5-derived in [-0.5, 0.5),
+    * see [[planeCoef]] — so any engine reproduces them. Runs in the
+    * native codegen kernel (a tight loop over a cached coefficient
+    * matrix). `df` and `dims` are not read: the vector's length is. */
   def signSignatureAuto(df: DataFrame, vec: Column, bits: Int, dims: Int): Column =
-    if (df.sparkSession.catalog.functionExists("graft_hyperplane_sig"))
-      call_function("graft_hyperplane_sig", vec, lit(bits))
-    else signSignature(vec, bits, dims)
-
-  /** Random-hyperplane sign signature of width `bits`: bit i is the
-    * sign of the dot product with pseudo-random hyperplane i. The
-    * hyperplanes are deterministic functions of (i, dim) — md5-derived
-    * in [-0.5, 0.5) — so any engine reproduces them. */
-  def signSignature(vec: Column, bits: Int, dims: Int): Column = {
-    val sig = (0 until bits).map { b =>
-      val proj = (0 until dims).map { d =>
-        vec.getItem(d).cast("double") * planeCoef(b, d)
-      }.reduce(_ + _)
-      when(proj >= 0, 1L << b).otherwise(0L)
-    }.reduce(_.bitwiseOR(_))
-    sig
-  }
+    Native.hyperplaneSig(vec, bits)
 
   /** Deterministic pseudo-random coefficient in [-0.5, 0.5):
     * first 6 md5 hex chars of "b:d" as int / 2^24 − 0.5. Precomputed
@@ -1946,7 +1917,7 @@ object Similarity {
       (1 to maxFlips).flatMap(r => (0 until poolSize).combinations(r).map(_.toSeq))
     require(nprobe >= 1 && nprobe <= 1 + subsets.size,
       s"nprobe must be in [1, ${1 + subsets.size}] for poolSize=$poolSize/maxFlips=$maxFlips, got $nprobe")
-    // per-plane projections with the signSignature fold order, so the
+    // per-plane projections with the signSignatureAuto fold order, so the
     // derived base signature is bit-identical to the corpus side's.
     // ONE typedlit bits×dims coefficient matrix + per-plane zip_with/
     // aggregate folds, materialized ONCE into a `_proj` array column —
@@ -2404,7 +2375,7 @@ object Similarity {
       col(vecCol).as("_ev"),
       Clustering.fixedPoint(col(vecCol), scale).as("_eq"))
     val entries = cents.map { case (cid, cv) =>
-      struct(Clustering.sqDistToLit(eq, col("_eq"), cv).as("d"),
+      struct(Clustering.sqDistToLit(col("_eq"), cv).as("d"),
         lit(cid.toLong).as("c"))
     }
     val probed = eq

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.functions.TextFunctions
+import graft.functions.{Native, TextFunctions}
 import graft.functions.TextFunctions._
 import graft.operators.{Corpus, Dedup, Multimodal, Similarity}
 import graft.streaming.EventsStreaming
@@ -1150,14 +1150,8 @@ trait ExtMediaGates { this: ExtAllGates =>
             lit(" (July "), (col("c_custkey") % 24 + 2000).cast("long"),
             lit(" est.)"))))
       .select(col("c_custkey"),
-        (if (s.catalog.functionExists("graft_pop_value"))
-          call_function("graft_pop_value", col("txt"))
-        else graft.functions.FactbookFunctions.populationValue(col("txt")))
-          .as("population"),
-        (if (s.catalog.functionExists("graft_pop_year"))
-          call_function("graft_pop_year", col("txt"))
-        else graft.functions.FactbookFunctions.yearFromPopText(col("txt")))
-          .as("pop_year"))
+        Native.popValue(col("txt")).as("population"),
+        Native.popYear(col("txt")).as("pop_year"))
 
   val populationParseSql: String =
     "WITH t AS (SELECT c_custkey, CASE WHEN c_custkey % 7 = 0 THEN 'uninhabited (2020 est.)' " +

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.functions.TextFunctions
+import graft.functions.{Native, TextFunctions}
 import graft.functions.TextFunctions._
 import graft.operators.{Corpus, Dedup, Multimodal, Similarity}
 import graft.streaming.EventsStreaming
@@ -823,15 +823,10 @@ trait ExtTextGates { this: ExtAllGates =>
 
   val fingerprint: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    val rh =
-      if (s.catalog.functionExists("graft_rolling_hash"))
-        call_function("graft_rolling_hash",
-          array_join(TextFunctions.tokens(lower(col("text"))), " "))
-      else rollingHash(col("text"))
     docs.select(
       col("doc_id"),
       fingerprintMd5(col("text")).as("fp"),
-      rh.as("rhash"))
+      Native.rollingHash(array_join(tokens(lower(col("text"))), " ")).as("rhash"))
   }
 
   private[queries] val duckNormText = s"array_to_string($duckToksLower, ' ')"

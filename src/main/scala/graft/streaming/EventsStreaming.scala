@@ -732,23 +732,19 @@ object EventsStreaming {
           val b = batch.toDF()
             .select(col(id1).as("id1"), col(id2).as("id2"))
             .localCheckpoint()
-          // r22 (guide §2.6): the two snapshots are independent plans —
-          // build both on the batch thread (construction runs probes
-          // and tracked persists), then checkpoint and write each pair
-          // concurrently instead of two sequential waves
+          // both snapshots are built from the prior stores before either
+          // is written; checkpointing and writing them concurrently
+          // measured no faster (sf0.01, 6 paired runs), so they run in turn
           val lblPlan = Dedup.incrementalConnectedComponents(
             priorLabels, b, "id1", "id2")
           val pickPlan = Dedup.incrementalCanonical(
             priorLabels, priorPicks, b, scores, idCol, scoreCol)
-          val cps = graft.core.Caches.runConcurrently[DataFrame](Seq(
-            () => lblPlan.localCheckpoint(),
-            () => pickPlan.localCheckpoint()))
-          val (updatedLabels, updatedPicks) = (cps(0), cps(1))
-          graft.core.Caches.runConcurrently[Unit](Seq(
-            () => updatedLabels.write.mode("overwrite")
-              .parquet(s"$labelStorePath/batch=$batchId"),
-            () => updatedPicks.write.mode("overwrite")
-              .parquet(s"$pickStorePath/batch=$batchId")))
+          val updatedLabels = lblPlan.localCheckpoint()
+          val updatedPicks = pickPlan.localCheckpoint()
+          updatedLabels.write.mode("overwrite")
+            .parquet(s"$labelStorePath/batch=$batchId")
+          updatedPicks.write.mode("overwrite")
+            .parquet(s"$pickStorePath/batch=$batchId")
           sink(updatedPicks, batchId)
         }
         ()

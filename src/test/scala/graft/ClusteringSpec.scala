@@ -184,19 +184,11 @@ class ClusteringSpec extends SparkSpec {
     centroidsBoth(vecs(1100), k = 8, iters = 2)
   }
 
-  test("without the native distance kernel a distance overflow fails loudly on both sides") {
+  test("a squared-distance overflow fails loudly on both sides") {
     // scale 1: vectors 4e9 apart, so a squared distance leaves the Long
-    // range; the native kernel wraps, the portable HOF raises under ANSI
+    // range; the native kernel raises, as the ANSI HOF form does
     val rows = Seq((1L, Seq(0.0)), (2L, Seq(4e9)), (3L, Seq(1.0)))
-    val wide = rows.toDF("vec_id", "embedding")
-    assert(Clustering.nativeSqDist(wide))
-    centroidsBoth(wide, k = 2, iters = 2, scale = 1.0)
-    kmeansBoth(wide, k = 2, iters = 2, scale = 1.0)
-
-    val plain = spark.newSession()
-    plain.sql("DROP TEMPORARY FUNCTION graft_sqdist_i64")
-    val df = plain.createDataFrame(rows).toDF("vec_id", "embedding")
-    assert(!Clustering.nativeSqDist(df))
+    val df = rows.toDF("vec_id", "embedding")
     assert(Clustering.driverCorpus(df, "vec_id", "embedding", 1.0, None, 2L * _,
       LocalGate.Threshold).isDefined)
     def overflowed(t: Throwable): Boolean =
@@ -216,8 +208,9 @@ class ClusteringSpec extends SparkSpec {
     }
 
     // without ANSI the driver twins do not hold: the distributed loop runs
+    val plain = spark.newSession()
     plain.conf.set("spark.sql.ansi.enabled", "false")
-    assert(Clustering.driverCorpus(df, "vec_id", "embedding", 1.0, None, 2L * _,
-      LocalGate.Threshold).isEmpty)
+    assert(Clustering.driverCorpus(plain.createDataFrame(rows).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", 1.0, None, 2L * _, LocalGate.Threshold).isEmpty)
   }
 }

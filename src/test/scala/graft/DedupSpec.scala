@@ -143,7 +143,7 @@ class DedupSpec extends SparkSpec {
 
   test("simhash: identical docs have distance 0; near-dups small distance") {
     val sigs = docs.select(col("doc_id"),
-      Dedup.simhash60(col("text")).as("sig"))
+      Dedup.simhash60Auto(docs, "text").as("sig"))
       .as[(Long, Long)].collect().toMap
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L) == sigs(3L))
@@ -322,8 +322,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("shingles: short docs yield empty array, no crash") {
-    val got = Seq((1L, "one two")).toDF("doc_id", "text")
-      .select(TextFunctions.shingles(col("text"), 3).as("s"))
+    val one = Seq((1L, "one two")).toDF("doc_id", "text")
+    val got = one.select(Dedup.shinglesAuto(one, "text", 3).as("s"))
       .as[Seq[String]].collect()
     assert(got.head.isEmpty)
   }

@@ -59,11 +59,21 @@ class FactbookFunctionsSpec extends SparkSpec {
     assert(evalOne("", _ => toBillionsR3(lit(244834460000.0))) == 244.834)
   }
 
+  // the native kernels the gates run, and the portable forms the
+  // DuckDB oracle mirrors
+  private val popScans = Seq(
+    (graft.functions.Native.popValue _, graft.functions.Native.popYear _),
+    (PortableTwins.populationValue _, PortableTwins.yearFromPopText _))
+
   test("F5 population/year scan: population then year") {
-    assert(evalOne("8,403,994 (July 2021 est.)", populationValue) == 8403994.0)
-    assert(evalOne("8,403,994 (July 2021 est.)", yearFromPopText) == "2021")
+    popScans.foreach { case (populationValue, yearFromPopText) =>
+      assert(evalOne("8,403,994 (July 2021 est.)", populationValue) == 8403994.0)
+      assert(evalOne("8,403,994 (July 2021 est.)", yearFromPopText) == "2021")
+    }
   }
   test("F5 population scan: no valid tokens -> null") {
-    assert(evalOne("uninhabited", populationValue) == null)
+    popScans.foreach { case (populationValue, _) =>
+      assert(evalOne("uninhabited", populationValue) == null)
+    }
   }
 }

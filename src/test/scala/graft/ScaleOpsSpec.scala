@@ -111,14 +111,23 @@ class ScaleOpsSpec extends SparkSpec {
     val plain = fact.join(dim, Seq("n_name"))
       .select("n_name", "v", "n_nationkey")
       .collect().map(_.toString).sorted.toSeq
-    val bloomed = ScaleOps.bloomPrunedJoin(fact, dim, "n_name",
+    val joined = ScaleOps.bloomPrunedJoin(fact, dim, "n_name",
         expectedDimKeys = 100L)
+    val bloomed = joined
       .select("n_name", "v", "n_nationkey")
       .collect().map(_.toString).sorted.toSeq
     assert(bloomed == plain && plain.nonEmpty,
       s"string-key bloom prune must not drop matches: $bloomed vs $plain")
-    // and the probe really is the native codegen expression here
-    assert(spark.catalog.functionExists("graft_bloom_contains"))
+    // and the probe really is the native codegen expression: a filter
+    // condition holds it, and no typed Row => Boolean filter is planned
+    // (the analyzed plan: the optimizer folds filters over this local fact)
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, TypedFilter}
+    val analyzed = joined.queryExecution.analyzed
+    assert(analyzed.exists {
+      case f: Filter => f.condition.exists(_.isInstanceOf[graft.functions.BloomContainsExpr])
+      case _ => false
+    }, analyzed.treeString)
+    assert(!analyzed.exists(_.isInstanceOf[TypedFilter]), analyzed.treeString)
   }
 
   test("bloomPrunedJoin equals the plain join result") {

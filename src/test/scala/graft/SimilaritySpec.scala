@@ -48,7 +48,7 @@ class SimilaritySpec extends SparkSpec {
       (Seq(1.0f, 0.0f), Seq(0.0f, 1.0f), 0.0),
       (Seq(1.0f, 1.0f), Seq(1.0f, 0.0f), 0.707107))
       .toDF("a", "b", "want")
-    val got = df.select(Similarity.cosine(col("a"), col("b")).as("c"), col("want"))
+    val got = df.select(Similarity.cosineAuto(df, col("a"), col("b")).as("c"), col("want"))
       .as[(Double, Double)].collect()
     got.foreach { case (c, want) => assert(c == want) }
   }

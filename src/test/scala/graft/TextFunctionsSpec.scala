@@ -41,7 +41,9 @@ class TextFunctionsSpec extends SparkSpec {
   test("rollingHash matches the scalar Rabin-Karp fold") {
     val norm = "the quick fox"
     val want = norm.foldLeft(0L)((acc, ch) => (acc * 31 + ch.toLong) % 1000000007L)
-    assert(one[Long]("  The   Quick FOX ", rollingHash(col("text"))) == want)
+    assert(one[Long]("  The   Quick FOX ", PortableTwins.rollingHash(col("text"))) == want)
+    assert(one[Long]("  The   Quick FOX ", graft.functions.Native.rollingHash(
+      array_join(tokens(lower(col("text"))), " "))) == want)
   }
 
   test("hexHash60 equals first-15-hex-chars of md5, base 16") {
@@ -52,8 +54,11 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("shingles produces overlapping n-grams") {
-    val got = one[scala.collection.Seq[String]]("a b c d", shingles(col("text"), 3))
+    val got = one[scala.collection.Seq[String]]("a b c d", PortableTwins.shingles(col("text"), 3))
     assert(got.toSeq == Seq("a b c", "b c d"))
+    val nat = one[scala.collection.Seq[String]]("a b c d",
+      graft.functions.Native.shingles(tokens(lower(col("text"))), 3))
+    assert(nat.toSeq == got.toSeq)
   }
 
   test("qualityScore is in [0,1]") {
