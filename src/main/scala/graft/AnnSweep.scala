@@ -95,7 +95,7 @@ object AnnSweep {
         col("embedding").as("_vb"))
       val meanPairSim = a.join(b, Seq("q_id"))
         .filter(col("_a") < col("_b"))
-        .agg(avg(Similarity.cosineAuto(withVec, col("_va"), col("_vb"))))
+        .agg(avg(Similarity.cosineAuto(col("_va"), col("_vb"))))
         .head().getDouble(0)
       println(f"mmr        lambda=$lam%3d meanRel=$meanRel%.3f " +
         f"meanPairSim=$meanPairSim%.3f (${(System.nanoTime() - t0) / 1e9}%.1fs)")

@@ -100,8 +100,8 @@ object TextFunctions {
   /** Canonical text normalization (NFC, accent-strip, lowercase,
     * control-char and whitespace cleanup) via the native
     * `graft_normalize_text` kernel ([[NativeKernels.normalizeText]]);
-    * no Unicode step exists as a Column built-in. `df` is not read. */
-  def normalizeText(df: org.apache.spark.sql.DataFrame, text: Column): Column =
+    * no Unicode step exists as a Column built-in. */
+  def normalizeText(text: Column): Column =
     Native.normalizeText(text)
 
   /** PII patterns — the portable subset of Java regex ∩ RE2 (DuckDB),

@@ -39,9 +39,8 @@ object Similarity {
 
   /** Cosine similarity over [[dotAuto]], rounded to 6 decimals for
     * cross-engine float stability (fold order is fixed; the rounding
-    * absorbs the last-ulp noise from double formatting). `df` is not
-    * read. */
-  def cosineAuto(df: DataFrame, a: Column, b: Column): Column =
+    * absorbs the last-ulp noise from double formatting). */
+  def cosineAuto(a: Column, b: Column): Column =
     round(Native.dot(a, b) / (sqrt(Native.dot(a, a)) * sqrt(Native.dot(b, b))), 6)
 
   /** Symmetric int8 quantization per vector (the storage/bandwidth
@@ -119,7 +118,7 @@ object Similarity {
     val rescored = corpus
       .join(broadcast(cand), Seq("vec_id"))
       .join(broadcast(queries), Seq("q_id"))
-      .withColumn("score", cosineAuto(corpus, col("embedding"), col("q_vec")))
+      .withColumn("score", cosineAuto(col("embedding"), col("q_vec")))
     finishTopK(rescored, "q_id", "vec_id", k)
   }
 
@@ -179,7 +178,7 @@ object Similarity {
     val rescored = corpus
       .join(broadcast(cand), Seq(idCol))
       .join(broadcast(queries), Seq(qIdCol))
-      .withColumn("score", cosineAuto(corpus, col(vecCol), col(qVecCol)))
+      .withColumn("score", cosineAuto(col(vecCol), col(qVecCol)))
     finishTopK(rescored, qIdCol, idCol, k)
   }
 
@@ -293,7 +292,7 @@ object Similarity {
     val rescored = corpus
       .join(broadcast(cand), Seq("vec_id"))
       .join(broadcast(queries), Seq("q_id"))
-      .withColumn("score", cosineAuto(corpus, col("embedding"), col("q_vec")))
+      .withColumn("score", cosineAuto(col("embedding"), col("q_vec")))
     finishTopK(rescored, "q_id", "vec_id", k)
   }
 
@@ -591,7 +590,7 @@ object Similarity {
         col(vecCol).as("embedding"))
       .join(broadcast(cand), Seq("vec_id"))
       .join(broadcast(queries), Seq("q_id"))
-      .withColumn("score", cosineAuto(rerankVecs, col("embedding"), col("q_vec")))
+      .withColumn("score", cosineAuto(col("embedding"), col("q_vec")))
     finishTopK(rescored, "q_id", "vec_id", k)
   }
 
@@ -1097,7 +1096,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       qIdCol: String = "q_id", qVecCol: String = "q_vec"): DataFrame = {
     val scored = spread(corpus).join(broadcast(queries))
-      .withColumn("score", cosineAuto(corpus, col(vecCol), col(qVecCol)))
+      .withColumn("score", cosineAuto(col(vecCol), col(qVecCol)))
     finishTopK(scored, qIdCol, idCol, k)
   }
 
@@ -1357,7 +1356,7 @@ object Similarity {
     val rescored = corpus
       .join(broadcast(cand), Seq(idCol))
       .join(broadcast(queries), Seq(qIdCol))
-      .withColumn("score", cosineAuto(corpus, col(vecCol), col(qVecCol)))
+      .withColumn("score", cosineAuto(col(vecCol), col(qVecCol)))
     finishTopK(rescored, qIdCol, idCol, k)
   }
 
@@ -1572,7 +1571,7 @@ object Similarity {
     val rescored = corpus
       .join(broadcast(cand), Seq(idCol))
       .join(broadcast(queries), Seq(qIdCol))
-      .withColumn("score", cosineAuto(corpus, col(vecCol), col(qVecCol)))
+      .withColumn("score", cosineAuto(col(vecCol), col(qVecCol)))
     finishTopK(rescored, qIdCol, idCol, k)
   }
 
@@ -1647,12 +1646,12 @@ object Similarity {
       lambdaPct: Int, idCol: String = "vec_id", vecCol: String = "embedding",
       qIdCol: String = "q_id", qVecCol: String = "q_vec"): DataFrame = {
     require(fetchK >= k && k >= 1, s"need fetchK >= k >= 1, got $fetchK/$k")
-    def cos6(df: DataFrame, a: Column, b: Column): Column =
-      floor(cosineAuto(df, a, b) * 1e6 + 0.5).cast("long")
+    def cos6(a: Column, b: Column): Column =
+      floor(cosineAuto(a, b) * 1e6 + 0.5).cast("long")
     // stage 1: fetchK most-relevant candidates per query, integer rel
     val scored = spread(corpus).join(broadcast(queries))
       .select(col(qIdCol), col(idCol),
-        cos6(corpus, col(vecCol), col(qVecCol)).as("score"))
+        cos6(col(vecCol), col(qVecCol)).as("score"))
     // finishTopK's heap orders on double scores; rel6 ≤ 1e6 ≪ 2^53 so
     // the round trip back to BIGINT is exact
     val cand = finishTopK(scored, qIdCol, idCol, fetchK)
@@ -1683,8 +1682,8 @@ object Similarity {
     require(candidates.columns.contains("rel"),
       "mmrRerank: candidates must carry a BIGINT `rel` column " +
         "(1e-6-quantized relevance)")
-    def cos6(df: DataFrame, a: Column, b: Column): Column =
-      floor(cosineAuto(df, a, b) * 1e6 + 0.5).cast("long")
+    def cos6(a: Column, b: Column): Column =
+      floor(cosineAuto(a, b) * 1e6 + 0.5).cast("long")
     val cand = candidates
       .select(col(qIdCol), col(idCol), col("rel").cast("long").as("_rel"))
     // stage 2: pairwise candidate sims — candidates rejoin the corpus
@@ -1699,7 +1698,7 @@ object Similarity {
       .select(col(qIdCol),
         concat_ws("|", col("_a").cast("string"), col("_b").cast("string"))
           .as("_k"),
-        cos6(corpus, col("_va"), col("_vb")).as("_sim"))
+        cos6(col("_va"), col("_vb")).as("_sim"))
     // stage 3: per-query bounded state — candidate array (canonical id
     // order) + sim lookup map — then the greedy fold, map-side
     val candArr = cand.groupBy(col(qIdCol))
@@ -1800,8 +1799,8 @@ object Similarity {
     * deterministic functions of (i, dim) — md5-derived in [-0.5, 0.5),
     * see [[planeCoef]] — so any engine reproduces them. Runs in the
     * native codegen kernel (a tight loop over a cached coefficient
-    * matrix). `df` and `dims` are not read: the vector's length is. */
-  def signSignatureAuto(df: DataFrame, vec: Column, bits: Int, dims: Int): Column =
+    * matrix). The vector's own length sets the dimension. */
+  def signSignatureAuto(vec: Column, bits: Int): Column =
     Native.hyperplaneSig(vec, bits)
 
   /** Deterministic pseudo-random coefficient in [-0.5, 0.5):
@@ -1822,10 +1821,10 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int, dims: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       qIdCol: String = "q_id", qVecCol: String = "q_vec"): DataFrame = {
-    val c = spread(corpus).withColumn("_sig", signSignatureAuto(corpus, col(vecCol), bits, dims))
-    val q = queries.withColumn("_sig", signSignatureAuto(queries, col(qVecCol), bits, dims))
+    val c = spread(corpus).withColumn("_sig", signSignatureAuto(col(vecCol), bits))
+    val q = queries.withColumn("_sig", signSignatureAuto(col(qVecCol), bits))
     val scored = c.join(broadcast(q), Seq("_sig"))
-      .withColumn("score", cosineAuto(corpus, col(vecCol), col(qVecCol)))
+      .withColumn("score", cosineAuto(col(vecCol), col(qVecCol)))
     finishTopK(scored, qIdCol, idCol, k)
   }
 
@@ -1861,7 +1860,7 @@ object Similarity {
     require(total <= 63, s"bands*bits must fit a signed long, got $total")
     val mask = (1L << bits) - 1
     def bandRows(df: DataFrame, id: Column, vec: Column, outId: String) = {
-      val sig = signSignatureAuto(df, vec, total, dims)
+      val sig = signSignatureAuto(vec, total)
       df.select(id.as(outId), sig.as("_sig"))
         .select(col(outId), posexplode(array((0 until bands).map(b =>
           shiftrightunsigned(col("_sig"), b * bits).bitwiseAND(lit(mask))): _*))
@@ -1878,7 +1877,7 @@ object Similarity {
     val rescored = corpus
       .join(candJoin, Seq(idCol))
       .join(broadcast(queries), Seq(qIdCol))
-      .withColumn("score", cosineAuto(corpus, col(vecCol), col(qVecCol)))
+      .withColumn("score", cosineAuto(col(vecCol), col(qVecCol)))
     finishTopK(rescored, qIdCol, idCol, k)
   }
 
@@ -1971,9 +1970,9 @@ object Similarity {
       .localCheckpoint()
       .select(col(qIdCol), col(qVecCol), explode(col("_probes")).as("_sig"))
     val c = spread(corpus)
-      .withColumn("_sig", signSignatureAuto(corpus, col(vecCol), bits, dims))
+      .withColumn("_sig", signSignatureAuto(col(vecCol), bits))
     val scored = c.join(broadcast(q), Seq("_sig"))
-      .withColumn("score", cosineAuto(corpus, col(vecCol), col(qVecCol)))
+      .withColumn("score", cosineAuto(col(vecCol), col(qVecCol)))
     finishTopK(scored, qIdCol, idCol, k)
   }
 
@@ -2054,7 +2053,7 @@ object Similarity {
     val queryCells = assign(queries, col(qVecCol), nprobe)
 
     val scored = corpusCells.join(broadcast(queryCells), Seq("_cell"))
-      .withColumn("score", cosineAuto(corpus, col(vecCol), col(qVecCol)))
+      .withColumn("score", cosineAuto(col(vecCol), col(qVecCol)))
     finishTopK(scored, qIdCol, idCol, k)
   }
 
@@ -2173,7 +2172,7 @@ object Similarity {
     val b = withCell.select(col("cluster"), col(idCol).as("id2"), col(vecCol).as("_v2"))
     val dropped = a.hint("shuffle_hash").join(b, Seq("cluster"))
       .filter(col("id1") < col("id2") &&
-        cosineAuto(corpus, col("_v1"), col("_v2")) >= threshold)
+        cosineAuto(col("_v1"), col("_v2")) >= threshold)
       .select(col("id2").as(idCol)).distinct()
     withCell.join(dropped, Seq(idCol), "left_anti")
       .select(col(idCol), col("cluster"))
@@ -2314,13 +2313,13 @@ object Similarity {
     val dupVsStore = batch
       .select(col("cell"), col(idCol).as("_bid"), col(vecCol).as("_bv"))
       .hint("shuffle_hash").join(storeSide, Seq("cell"))
-      .filter(cosineAuto(newBatch, col("_bv"), col("_sv")) >= threshold)
+      .filter(cosineAuto(col("_bv"), col("_sv")) >= threshold)
       .select(col("_bid"))
     val a = batch.select(col("cell"), col(idCol).as("_id1"), col(vecCol).as("_v1"))
     val b = batch.select(col("cell"), col(idCol).as("_id2"), col(vecCol).as("_v2"))
     val dupInBatch = a.hint("shuffle_hash").join(b, Seq("cell"))
       .filter(col("_id1") < col("_id2") &&
-        cosineAuto(newBatch, col("_v1"), col("_v2")) >= threshold)
+        cosineAuto(col("_v1"), col("_v2")) >= threshold)
       .select(col("_id2").as("_bid"))
     // persisted BEFORE the budget probe (fitsBudget's contract): the
     // probe and the anti-join share one computation of the two
@@ -2383,7 +2382,7 @@ object Similarity {
         explode(slice(sort_array(array(entries: _*)), 1, nprobe)))
       .select(col("_eid"), col("_ev"), col("_pc").getField("c").as("cell"))
     val matches = t.join(broadcast(probed), Seq("cell"))
-      .withColumn("_sim", cosineAuto(train, col("_tv"), col("_ev")))
+      .withColumn("_sim", cosineAuto(col("_tv"), col("_ev")))
       .filter(col("_sim") >= threshold)
       .groupBy(col("_tid"))
       .agg(count(lit(1)).as("n_matches"), max(col("_sim")).as("max_sim"))
@@ -2409,7 +2408,7 @@ object Similarity {
     val total = bits * bands
     require(total <= 63, s"bands*bits must fit a signed long, got $total")
     val base = spread(df).select(col(idCol).as("id"), col(vecCol).as("_v"))
-      .withColumn("_sig", signSignatureAuto(df, col("_v"), total, dims))
+      .withColumn("_sig", signSignatureAuto(col("_v"), total))
     val mask = (1L << bits) - 1
     val bandCols = (0 until bands).map(b =>
       shiftrightunsigned(col("_sig"), b * bits).bitwiseAND(lit(mask)))
@@ -2428,7 +2427,7 @@ object Similarity {
     // must not broadcast one (same reasoning as Dedup's inverted index)
     a.hint("shuffle_hash").join(b, Seq("_band", "_bucket"))
       .filter(col("id1") < col("id2"))
-      .withColumn("cosine", cosineAuto(df, col("_v1"), col("_v2")))
+      .withColumn("cosine", cosineAuto(col("_v1"), col("_v2")))
       .filter(col("cosine") >= threshold)
       .select("id1", "id2", "cosine")
       .distinct() // a pair may match in several bands

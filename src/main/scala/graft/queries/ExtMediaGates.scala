@@ -10,7 +10,7 @@ import graft.core.Tables
 import graft.functions.{Native, TextFunctions}
 import graft.functions.TextFunctions._
 import graft.operators.{Corpus, Dedup, Multimodal, Similarity}
-import graft.streaming.EventsStreaming
+import graft.streaming.{EventsStreaming, Store}
 
 /** Embedding-table and multimodal gates: brute-force/LSH tiers, image/audio codecs, perceptual hashes, ingestion scrape.
   *
@@ -532,21 +532,16 @@ trait ExtMediaGates { this: ExtAllGates =>
       // bootstrap store rows come from the shared decode-once table
       // (same closed-form hashes); the STREAMED batches keep their
       // in-DAG decode — that is the behavior this gate exists to pin
-      imageWidePhashTable(s, d).filter(col("media_id") % 3 === 0)
-        .select(col("media_id").as("id"), col("phash").as("sig"))
-        .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+      Store.write(imageWidePhashTable(s, d).filter(col("media_id") % 3 === 0)
+        .select(col("media_id").as("id"), col("phash").as("sig")), storeDir, -1)
       def runOnce(): Unit = {
         val src = s.readStream.schema(docs.schema)
           .option("recursiveFileLookup", "true").parquet(srcDir)
-        val q = graft.streaming.EventsStreaming
+        runToCompletion(graft.streaming.EventsStreaming
           .streamingIncrementalFingerprintNearDup(
             hashesOf(src), storeDir, "media_id", "phash",
             bits = PHASH_GRID_W * PHASH_GRID_H, bands = PHASH_BANDS,
-            maxDist = PHASH_MAXDIST) { (_, _) => () }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+            maxDist = PHASH_MAXDIST) { (_, _) => () }, ckpt)
       }
       docs.filter(col("doc_id") % 3 === 1).write.parquet(s"$srcDir/f1")
       runOnce()
@@ -952,22 +947,16 @@ trait ExtMediaGates { this: ExtAllGates =>
         .filter(col("decoded")).select(col("media_id"), col("fhash"))
     // bootstrap rows from the shared decode-once table; the STREAMED
     // slice keeps its in-DAG decode (the behavior this gate pins)
-    videoSigTable(s, d).filter(col("media_id") % 3 === 0)
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+    Store.write(videoSigTable(s, d).filter(col("media_id") % 3 === 0), storeDir, -1)
     val src = sigsOf(
       s.readStream.schema(docsSchema).parquet(s"$d/documents.parque[t]")
         .filter(col("doc_id") % 3 =!= 0))
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    val q = EventsStreaming.streamingIncrementalVideoNearDup(
+    runToCompletion(EventsStreaming.streamingIncrementalVideoNearDup(
       src, storeDir, threshold = VIDEO_INCR_T) { (sv, _) =>
       buf ++= sv.select(col("media_id"), col("fhash"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally deleteRecursively(storeDir)
+    }, ckpt, ckpt, storeDir)
     import s.implicits._
     buf.toSeq.toDF("media_id", "fhash")
   }
@@ -995,23 +984,17 @@ trait ExtMediaGates { this: ExtAllGates =>
         Multimodal.videoMediaFromDocuments(docs),
         Multimodal.VideoFrameBytes).toDF()
         .filter(col("decoded")).select(col("media_id"), col("fhash"))
-    videoSigTable(s, d).filter(col("media_id") % 3 === 0)
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+    Store.write(videoSigTable(s, d).filter(col("media_id") % 3 === 0), storeDir, -1)
     val src = sigsOf(
       s.readStream.schema(docsSchema).parquet(s"$d/documents.parque[t]")
         .filter(col("doc_id") % 3 =!= 0))
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    val q = EventsStreaming.streamingIncrementalVideoNearDup(
+    runToCompletion(EventsStreaming.streamingIncrementalVideoNearDup(
       src, storeDir, threshold = VIDEO_INCR_T,
       maxFrameDf = VIDEO_FRAME_DF_CAP) { (sv, _) =>
       buf ++= sv.select(col("media_id"), col("fhash"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally deleteRecursively(storeDir)
+    }, ckpt, ckpt, storeDir)
     import s.implicits._
     buf.toSeq.toDF("media_id", "fhash")
   }

@@ -10,7 +10,7 @@ import graft.core.Tables
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.operators.{Corpus, Dedup, Multimodal, Similarity}
-import graft.streaming.EventsStreaming
+import graft.streaming.{EventsStreaming, Store}
 
 /** Cluster-resolution, retrieval, decontamination, DQ and warehouse-composition gates.
   *
@@ -946,7 +946,7 @@ trait ExtResolveGates { this: ExtAllGates =>
     val qv = emb.filter(col("vec_id") === 0).select(col("embedding").as("q_vec"))
     emb.join(broadcast(cands), emb("vec_id") === cands("doc_id"))
       .crossJoin(broadcast(qv))
-      .withColumn("cosine", Similarity.cosineAuto(emb, col("embedding"), col("q_vec")))
+      .withColumn("cosine", Similarity.cosineAuto(col("embedding"), col("q_vec")))
       .select(col("doc_id"), col("bm25_score"), col("cosine"))
       .withColumn("rerank",
         row_number().over(Window.orderBy(col("cosine").desc, col("doc_id").asc)))
@@ -1766,18 +1766,13 @@ trait ExtResolveGates { this: ExtAllGates =>
     val cDir =
       java.nio.file.Files.createTempDirectory("graft-unistore").toString
     val docs = Tables.documents(s, d)
-    Corpus.unigramWordCounts(docs.filter(expr(uniSeedPred)), "text")
-      .write.mode("overwrite").parquet(s"$cDir/batch=-1")
+    Store.write(Corpus.unigramWordCounts(docs.filter(expr(uniSeedPred)), "text"), cDir, -1)
     val src = s.readStream.schema(docsSchema)
       .parquet(s"$d/documents.parque[t]")
       .filter(col("doc_id") % 3 === 1)
-    val q = EventsStreaming.streamingUnigramCounts(src, cDir, "text") {
+    runToCompletion(EventsStreaming.streamingUnigramCounts(src, cDir, "text") {
       (_, _) => ()
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    runStreamThenCleanCkpt(q, ckpt)
+    }, ckpt, ckpt)
     // eager checkpoint so the temp store can be deleted before the
     // driver consumes the frame (the streamIvfPqCodes convention)
     try Corpus.unigramLmTrainFromCounts(

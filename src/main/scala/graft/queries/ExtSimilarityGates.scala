@@ -10,7 +10,7 @@ import graft.core.Tables
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.operators.{Corpus, Dedup, Multimodal, Similarity}
-import graft.streaming.EventsStreaming
+import graft.streaming.{EventsStreaming, Store}
 
 /** ANN serving-ladder and corpus-statistics gates: quantized tiers, filtered ANN, IVF-PQ store maintenance, mixing/sampling.
   *
@@ -502,9 +502,8 @@ trait ExtSimilarityGates { this: ExtAllGates =>
       java.nio.file.Files.createTempDirectory("graft-ivfpqcodes").toString
     val emb = graft.core.Caches.persistTracked(Tables.embeddings(s, d))
     val (coarse, books) = sharedIvfPqIndex(s, d)
-    Similarity.ivfPqCodes(emb.filter(col("vec_id") % 3 === 0),
-        "vec_id", "embedding", coarse, books)
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+    Store.write(Similarity.ivfPqCodes(emb.filter(col("vec_id") % 3 === 0),
+        "vec_id", "embedding", coarse, books), storeDir, -1)
     val embSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("vec_id",
         org.apache.spark.sql.types.LongType),
@@ -515,13 +514,9 @@ trait ExtSimilarityGates { this: ExtAllGates =>
     val src = s.readStream.schema(embSchema).parquet(s"$d/embeddings.parque[t]")
       .filter(col("vec_id") % 3 =!= 0)
       .select(col("vec_id"), col("embedding"))
-    val q = EventsStreaming.streamingIncrementalIvfPqCodes(
-      src, storeDir, coarse, books) { (_, _) => () }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
     try {
-      runStreamThenCleanCkpt(q, ckpt)
+      runToCompletion(EventsStreaming.streamingIncrementalIvfPqCodes(
+        src, storeDir, coarse, books) { (_, _) => () }, ckpt, ckpt)
       // result computed EAGERLY so the temp store can be deleted
       // before the driver consumes the frame
       Similarity.ivfPqTopKFromCodes(
@@ -1283,19 +1278,14 @@ trait ExtSimilarityGates { this: ExtAllGates =>
     val storeDir =
       java.nio.file.Files.createTempDirectory("graft-manstore").toString
     val cols = Seq("doc_id", "lang", "text")
-    graft.operators.ScaleOps.contentDigest(
-      Tables.documents(s, d).filter(col("doc_id") % 3 === 0), "source", cols)
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+    Store.write(graft.operators.ScaleOps.contentDigest(
+      Tables.documents(s, d).filter(col("doc_id") % 3 === 0), "source", cols), storeDir, -1)
     val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parque[t]")
       .filter(col("doc_id") % 3 =!= 0)
       .select(col("doc_id"), col("lang"), col("text"), col("source"))
-    val q = graft.streaming.EventsStreaming.streamingManifestMaintenance(
-      src, storeDir, "source", cols) { (_, _) => () }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
     try {
-      runStreamThenCleanCkpt(q, ckpt)
+      runToCompletion(graft.streaming.EventsStreaming.streamingManifestMaintenance(
+        src, storeDir, "source", cols) { (_, _) => () }, ckpt, ckpt)
       graft.streaming.EventsStreaming.mergedManifest(s, storeDir, "source")
         .localCheckpoint()
     } finally deleteRecursively(storeDir)
@@ -1318,18 +1308,13 @@ trait ExtSimilarityGates { this: ExtAllGates =>
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("text"), col("source"))
     try {
-      graft.operators.ScaleOps.contentDigest(
-        docs.filter(col("doc_id") % 3 === 0), "source", cols)
-        .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+      Store.write(graft.operators.ScaleOps.contentDigest(
+        docs.filter(col("doc_id") % 3 === 0), "source", cols), storeDir, -1)
       def runOnce(): Unit = {
-        val q = graft.streaming.EventsStreaming.streamingManifestMaintenance(
+        runToCompletion(graft.streaming.EventsStreaming.streamingManifestMaintenance(
           s.readStream.schema(docs.schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
-          storeDir, "source", cols) { (_, _) => () }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          storeDir, "source", cols) { (_, _) => () }, ckpt)
       }
       docs.filter(col("doc_id") % 3 === 1).write.parquet(s"$srcDir/f1")
       runOnce()
@@ -1380,18 +1365,13 @@ trait ExtSimilarityGates { this: ExtAllGates =>
       .select(col("doc_id"), col("lang"), col("text"), col("n_chars"),
         col("source"))
     try {
-      graft.operators.ScaleOps.dqSuite(
-        docs.filter(col("doc_id") % 3 === 0), checks, completeness, uniqueness)
-        .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+      Store.write(graft.operators.ScaleOps.dqSuite(
+        docs.filter(col("doc_id") % 3 === 0), checks, completeness, uniqueness), storeDir, -1)
       def runOnce(): Unit = {
-        val q = graft.streaming.EventsStreaming.streamingDqMaintenance(
+        runToCompletion(graft.streaming.EventsStreaming.streamingDqMaintenance(
           s.readStream.schema(docs.schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
-          storeDir, checks, completeness, uniqueness) { (_, _) => () }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          storeDir, checks, completeness, uniqueness) { (_, _) => () }, ckpt)
       }
       docs.filter(col("doc_id") % 3 === 1).write.parquet(s"$srcDir/f1")
       runOnce()
@@ -1460,21 +1440,16 @@ trait ExtSimilarityGates { this: ExtAllGates =>
       .select(col("doc_id"), col("lang"), col("text"), col("n_chars"),
         col("source"))
     try {
-      graft.operators.ScaleOps.dqSuiteByGroup(
+      Store.write(graft.operators.ScaleOps.dqSuiteByGroup(
         docs.filter(col("doc_id") % 3 === 0), "source", dqRowChecks,
-        completeness, uniqueness)
-        .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+        completeness, uniqueness), storeDir, -1)
       def runOnce(): Unit = {
-        val q = graft.streaming.EventsStreaming.streamingDqByGroupMaintenance(
+        runToCompletion(graft.streaming.EventsStreaming.streamingDqByGroupMaintenance(
           s.readStream.schema(docs.schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
           storeDir, "source", dqRowChecks, completeness, uniqueness) {
           (_, _) => ()
-        }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        }, ckpt)
       }
       docs.filter(col("doc_id") % 3 === 1).write.parquet(s"$srcDir/f1")
       runOnce()
@@ -1536,18 +1511,13 @@ trait ExtSimilarityGates { this: ExtAllGates =>
     val ckpt = s"$base/ckpt"
     val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
     try {
-      graft.operators.ScaleOps.binnedCounts(
-        docs.filter(col("doc_id") % 3 === 0), "n_chars", 50L)
-        .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+      Store.write(graft.operators.ScaleOps.binnedCounts(
+        docs.filter(col("doc_id") % 3 === 0), "n_chars", 50L), storeDir, -1)
       def runOnce(): Unit = {
-        val q = graft.streaming.EventsStreaming.streamingHistogramMaintenance(
+        runToCompletion(graft.streaming.EventsStreaming.streamingHistogramMaintenance(
           s.readStream.schema(docs.schema)
             .option("recursiveFileLookup", "true").parquet(srcDir),
-          storeDir, "n_chars", 50L) { (_, _) => () }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          storeDir, "n_chars", 50L) { (_, _) => () }, ckpt)
       }
       docs.filter(col("doc_id") % 3 === 1).write.parquet(s"$srcDir/f1")
       runOnce()
@@ -1604,16 +1574,12 @@ trait ExtSimilarityGates { this: ExtAllGates =>
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
     val validCounts = scala.collection.mutable.Map[Long, Long]()
     def runOnce(): Unit = {
-      val q = graft.streaming.EventsStreaming.streamingQuarantine(
+      runToCompletion(graft.streaming.EventsStreaming.streamingQuarantine(
         s.readStream.schema(docs.schema)
           .option("recursiveFileLookup", "true").parquet(srcDir),
         storeDir, dqRowChecks) { (ok, b) =>
         validCounts(b) = ok.count()
-      }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      }, ckpt)
     }
     try {
       docs.filter(col("doc_id") % 3 === 1).write.parquet(s"$srcDir/f1")
@@ -2076,7 +2042,7 @@ trait ExtSimilarityGates { this: ExtAllGates =>
     * NativeExpressionsSpec rather than the all-ASCII corpus. */
   val textNormalize: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    val norm = TextFunctions.normalizeText(docs, col("text"))
+    val norm = TextFunctions.normalizeText(col("text"))
     docs.select(col("doc_id"), norm.as("norm_text"),
       length(norm).as("n_chars_norm"))
   }

@@ -5,12 +5,13 @@ import graft.core.Caches.TrackedPersist
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.operators.{Corpus, Dedup, Multimodal, Similarity}
-import graft.streaming.EventsStreaming
+import graft.streaming.{EventsStreaming, Store}
 
 /** As-of/skew joins and event-time streaming gates: windows, sessions, stream-stream joins, store-maintenance streams.
   *
@@ -163,14 +164,11 @@ trait ExtStreamGates { this: ExtAllGates =>
     val ckpt = streamCkptDir("graft-ckpt-q")
     // glob, not bare file: the file stream source requires a directory
     // basePath and a glob keeps it at the parent dir
-    val q = EventsStreaming.windowedAgg(
+    runToCompletion(EventsStreaming.windowedAgg(
       EventsStreaming.readDriverEventsStream(s, s"$d/events.parque[t]"))
       .writeStream.format("memory").queryName("graft_stream_agg")
-      .option("checkpointLocation", ckpt)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    runStreamThenCleanCkpt(q, ckpt)
+      .outputMode("complete"),
+      ckpt, ckpt)
     s.table("graft_stream_agg")
       .select(unix_timestamp(col("win_start")).as("win_start_epoch"),
         col("event_type"), col("n"), col("total"))
@@ -210,15 +208,16 @@ trait ExtStreamGates { this: ExtAllGates =>
     java.nio.file.Files.createTempDirectory(base, prefix).toString
   }
 
-  /** Run a streaming query to completion, then delete its throwaway
-    * checkpoint — the memory-sink table outlives the state files, and
-    * repeated gate/bench runs must not accumulate dead checkpoints on
-    * tmpfs (that's RAM). */
-  private[queries] def runStreamThenCleanCkpt(
-      q: org.apache.spark.sql.streaming.StreamingQuery, ckpt: String): Unit = {
-    try q.awaitTermination()
-    finally deleteRecursively(ckpt)
-  }
+  /** Run the stream `w` to completion (AvailableNow) under checkpoint
+    * `ckpt`, then delete the `throwaway` directories — the checkpoint
+    * among them unless a later run resumes from it. A memory-sink
+    * table outlives its state files, and repeated gate/bench runs must
+    * not accumulate dead checkpoints on tmpfs (that's RAM). */
+  private[queries] def runToCompletion(w: DataStreamWriter[_], ckpt: String,
+      throwaway: String*): Unit =
+    try w.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    finally throwaway.foreach(deleteRecursively)
 
   /** Streaming runs size their state to the data, not the session
     * default: a fresh checkpoint pins the state-store partition count
@@ -245,13 +244,10 @@ trait ExtStreamGates { this: ExtAllGates =>
     val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parque[t]")
       .select(timestamp_micros((col("doc_id") + 1) * 1000000L).as("ts"),
         fingerprintMd5(col("text")).as("fp"))
-    val q = EventsStreaming.streamingDedup(src, "ts", "fp")
+    runToCompletion(EventsStreaming.streamingDedup(src, "ts", "fp")
       .writeStream.format("memory").queryName("graft_stream_dedup")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    runStreamThenCleanCkpt(q, ckpt)
+      .outputMode("append"),
+      ckpt, ckpt)
     s.table("graft_stream_dedup").select(col("fp"))
   }
 
@@ -274,13 +270,10 @@ trait ExtStreamGates { this: ExtAllGates =>
       .filter(col("doc_id") % 3 =!= 0)
       .select(timestamp_micros((col("doc_id") + 1) * 1000000L).as("ts"),
         fingerprintMd5(col("text")).as("fp"))
-    val q = EventsStreaming.streamingIncrementalDedup(src, prior, "ts", "fp")
+    runToCompletion(EventsStreaming.streamingIncrementalDedup(src, prior, "ts", "fp")
       .writeStream.format("memory").queryName("graft_stream_incr_dedup")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    runStreamThenCleanCkpt(q, ckpt)
+      .outputMode("append"),
+      ckpt, ckpt)
     s.table("graft_stream_incr_dedup").select(col("fp"))
   }
 
@@ -303,24 +296,18 @@ trait ExtStreamGates { this: ExtAllGates =>
     val ckpt = streamCkptDir("graft-ckpt-sie")
     val storeDir =
       java.nio.file.Files.createTempDirectory("graft-fpstore").toString
-    Tables.documents(s, d)
+    Store.write(Tables.documents(s, d)
       .filter(col("doc_id") % 3 === 0 || col("doc_id") % 5 === 0)
-      .select(TextFunctions.fingerprintMd5(col("text")).as("fp")).distinct()
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+      .select(TextFunctions.fingerprintMd5(col("text")).as("fp")).distinct(), storeDir, -1)
     val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parque[t]")
       .filter(col("doc_id") % 3 =!= 0)
       .select(col("doc_id"), col("text"), col("source"))
     val buf = scala.collection.mutable.ArrayBuffer[(Long, String, String)]()
-    val q = EventsStreaming.streamingIncrementalExactDedup(
+    runToCompletion(EventsStreaming.streamingIncrementalExactDedup(
       src, storeDir, "text", "doc_id") { (sv, _) =>
       buf ++= sv.select(col("doc_id"), col("source"), col("fp"))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally deleteRecursively(storeDir)
+    }, ckpt, ckpt, storeDir)
     import s.implicits._
     buf.toSeq.toDF("doc_id", "source", "fp")
   }
@@ -344,22 +331,19 @@ trait ExtStreamGates { this: ExtAllGates =>
       val f = Tables.documents(s, d)
         .select(col("doc_id"), fingerprintMd5(col("text")).as("fp"))
       // three disjoint history tranches, three batch partitions
-      f.filter(col("doc_id") % 3 === 0).select(col("fp")).distinct()
-        .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
-      f.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 === 0)
-        .select(col("fp")).distinct()
-        .write.mode("overwrite").parquet(s"$storeDir/batch=0")
-      f.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 =!= 0 &&
+      Store.write(f.filter(col("doc_id") % 3 === 0).select(col("fp")).distinct(), storeDir, -1)
+      Store.write(f.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 === 0)
+        .select(col("fp")).distinct(), storeDir, 0)
+      Store.write(f.filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 =!= 0 &&
           col("doc_id") % 7 === 0)
-        .select(col("fp")).distinct()
-        .write.mode("overwrite").parquet(s"$storeDir/batch=1")
+        .select(col("fp")).distinct(), storeDir, 1)
       graft.streaming.EventsStreaming.compactStore(s, storeDir,
         snapshotLayout = false)
       val store = s.read.option("basePath", storeDir).parquet(storeDir)
       val parts = store.select(col("batch").cast("long"))
         .distinct().collect().map(_.getLong(0)).toSeq
       require(parts == Seq(-1L),
-        s"compaction left partitions $parts — expected only batch=-1")
+        s"compaction left partitions $parts — expected only the bootstrap partition -1")
       val batch = Tables.documents(s, d)
         .filter(col("doc_id") % 3 =!= 0 && col("doc_id") % 5 =!= 0 &&
           col("doc_id") % 7 =!= 0)
@@ -396,8 +380,7 @@ trait ExtStreamGates { this: ExtAllGates =>
     val emb = Tables.embeddings(s, d)
     val storeSlice = emb.filter(col("vec_id") % 3 === 0)
     val cents = sharedSemStoreCents(s, d)
-    Similarity.semanticStoreRecords(storeSlice, "vec_id", "embedding", cents)
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+    Store.write(Similarity.semanticStoreRecords(storeSlice, "vec_id", "embedding", cents), storeDir, -1)
     val embSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("vec_id",
         org.apache.spark.sql.types.LongType),
@@ -409,16 +392,11 @@ trait ExtStreamGates { this: ExtAllGates =>
       .filter(col("vec_id") % 3 =!= 0)
       .select(col("vec_id"), col("embedding"))
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    val q = EventsStreaming.streamingIncrementalSemanticDedup(
+    runToCompletion(EventsStreaming.streamingIncrementalSemanticDedup(
       src, storeDir, cents, threshold = SEMDEDUP_T) { (sv, _) =>
       buf ++= sv.select(col("id"), col("cell"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally deleteRecursively(storeDir)
+    }, ckpt, ckpt, storeDir)
     import s.implicits._
     buf.toSeq.toDF("vec_id", "cell")
   }
@@ -436,30 +414,21 @@ trait ExtStreamGates { this: ExtAllGates =>
     val ckpt = streamCkptDir("graft-ckpt-sind")
     val storeDir =
       java.nio.file.Files.createTempDirectory("graft-ndstore").toString
-    // bootstrap under its own batch partition (the retry-idempotent
-    // layout: micro-batches own batch=<id> dirs; discovery rejects a
-    // flat-plus-partitioned mix)
-    Dedup.nearDupStoreRecords(
+    Store.write(Dedup.nearDupStoreRecords(
       Tables.documents(s, d).filter(col("doc_id") % 3 === 0),
       "doc_id", "text",
-      shingleN = 3, bands = MINHASH_BANDS, rowsPerBand = MINHASH_RPB)
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+      shingleN = 3, bands = MINHASH_BANDS, rowsPerBand = MINHASH_RPB), storeDir, -1)
     val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parque[t]")
       .filter(col("doc_id") % 3 =!= 0)
       .select(col("doc_id"), col("text"), col("source"))
     val buf = scala.collection.mutable.ArrayBuffer[(Long, String)]()
-    val q = EventsStreaming.streamingIncrementalNearDup(src, storeDir,
+    runToCompletion(EventsStreaming.streamingIncrementalNearDup(src, storeDir,
       "text", "doc_id", threshold = 0.7,
       shingleN = 3, bands = MINHASH_BANDS, rowsPerBand = MINHASH_RPB) {
       (survivors, _) =>
         buf ++= survivors.select(col("doc_id"), col("source"))
           .collect().map(r => (r.getLong(0), r.getString(1)))
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally deleteRecursively(storeDir)
+    }, ckpt, ckpt, storeDir)
     import s.implicits._
     buf.toSeq.toDF("doc_id", "source")
   }
@@ -483,24 +452,18 @@ trait ExtStreamGates { this: ExtAllGates =>
     val ckpt = streamCkptDir("graft-ckpt-sisub")
     val storeDir =
       java.nio.file.Files.createTempDirectory("graft-substore").toString
-    Dedup.substringStoreRecords(
+    Store.write(Dedup.substringStoreRecords(
       Tables.documents(s, d).filter(col("doc_id") % 3 === 0),
-      "doc_id", "text", L = SUBSTR_L)
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+      "doc_id", "text", L = SUBSTR_L), storeDir, -1)
     val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parque[t]")
       .filter(col("doc_id") % 3 =!= 0)
       .select(col("doc_id"), col("text"))
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Int, Long, String)]()
-    val q = EventsStreaming.streamingIncrementalSubstringDedup(
+    runToCompletion(EventsStreaming.streamingIncrementalSubstringDedup(
       src, storeDir, "text", "doc_id", L = SUBSTR_L) { (sv, _) =>
       buf ++= sv.select(col("id"), col("n_tokens"), col("n_kept"), col("kept_md5"))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getString(3)))
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally deleteRecursively(storeDir)
+    }, ckpt, ckpt, storeDir)
     import s.implicits._
     buf.toSeq.toDF("doc_id", "n_tokens", "n_kept", "kept_md5")
   }
@@ -537,34 +500,26 @@ trait ExtStreamGates { this: ExtAllGates =>
     // r22 (guide §2.6): the four bootstrap stores are independent
     // writes over materialized inputs — run them concurrently
     graft.core.Caches.runConcurrently[Unit](Seq(
-      () => toksBoot
-        .select(TextFunctions.fingerprintOfTokens(col("_t")).as("fp")).distinct()
-        .write.mode("overwrite").parquet(s"$base/exact/batch=-1"),
-      () => Dedup.nearDupStoreRecordsFromToks(storeToks, "doc_id",
-          shingleN = 3, bands = MINHASH_BANDS, rowsPerBand = MINHASH_RPB)
-        .write.mode("overwrite").parquet(s"$base/neardup/batch=-1"),
-      () => Dedup.substringStoreRecordsFromToks(storeToks, "doc_id",
-          L = SUBSTR_L)
-        .write.mode("overwrite").parquet(s"$base/substring/batch=-1"),
-      () => Similarity.semanticStoreRecords(embStore, "vec_id", "embedding",
-          cents)
-        .write.mode("overwrite").parquet(s"$base/semantic/batch=-1")))
+      () => Store.write(toksBoot.select(TextFunctions.fingerprintOfTokens(col("_t"))
+        .as("fp")).distinct(), s"$base/exact", -1),
+      () => Store.write(Dedup.nearDupStoreRecordsFromToks(storeToks, "doc_id",
+        shingleN = 3, bands = MINHASH_BANDS, rowsPerBand = MINHASH_RPB),
+        s"$base/neardup", -1),
+      () => Store.write(Dedup.substringStoreRecordsFromToks(storeToks, "doc_id",
+        L = SUBSTR_L), s"$base/substring", -1),
+      () => Store.write(Similarity.semanticStoreRecords(embStore, "vec_id",
+        "embedding", cents), s"$base/semantic", -1)))
     val src = s.readStream.schema(docsSchema).parquet(s"$d/documents.parque[t]")
       .filter(col("doc_id") % 3 =!= 0)
       .select(col("doc_id"), col("text"))
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-    val q = EventsStreaming.streamingIngestQuartet(src, base, emb, cents,
+    runToCompletion(EventsStreaming.streamingIngestQuartet(src, base, emb, cents,
       "text", "doc_id", threshold = 0.7, shingleN = 3,
       bands = MINHASH_BANDS, rowsPerBand = MINHASH_RPB, L = SUBSTR_L,
       semThreshold = SEMDEDUP_T) { (out, _) =>
       buf ++= out.select(col("doc_id"), col("cell"), col("n_kept"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally deleteRecursively(base)
+    }, ckpt, ckpt, base)
     import s.implicits._
     buf.toSeq.toDF("doc_id", "cell", "n_kept")
   }
@@ -595,10 +550,9 @@ trait ExtStreamGates { this: ExtAllGates =>
         threshold = 0.7, shingleN = 3,
         bands = MINHASH_BANDS, rowsPerBand = MINHASH_RPB)
         .select(col("id1"), col("id2")))
-    Dedup.connectedComponents(
+    Store.write(Dedup.connectedComponents(
       pairs.filter(col("id1") % 3 === 0 && col("id2") % 3 === 0),
-      "id1", "id2")
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+      "id1", "id2"), storeDir, -1)
     pairs.filter(col("id1") % 3 =!= 0 || col("id2") % 3 =!= 0)
       .coalesce(1).write.mode("overwrite").parquet(pairsDir)
     val pairSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -610,16 +564,11 @@ trait ExtStreamGates { this: ExtAllGates =>
     // each batch's sink payload is the COMPLETE updated table — keep
     // the last one
     var result: Array[(Long, Long)] = Array.empty
-    val q = EventsStreaming.streamingIncrementalClusters(src, storeDir) {
+    runToCompletion(EventsStreaming.streamingIncrementalClusters(src, storeDir) {
       (upd, _) =>
         result = upd.select(col("id"), col("cluster_id"))
           .collect().map(r => (r.getLong(0), r.getLong(1)))
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally { deleteRecursively(storeDir); deleteRecursively(pairsDir) }
+    }, ckpt, ckpt, storeDir, pairsDir)
     import s.implicits._
     result.toSeq.toDF("doc_id", "cluster_id")
   }
@@ -655,11 +604,10 @@ trait ExtStreamGates { this: ExtAllGates =>
         "id1", "id2"))
     // r22 (guide §2.6): three independent bootstrap writes — concurrent
     graft.core.Caches.runConcurrently[Unit](Seq(
-      () => bootLabels.write.mode("overwrite").parquet(s"$lblDir/batch=-1"),
-      () => Dedup.canonicalByScore(bootLabels, scores, "doc_id", "n_chars")
+      () => Store.write(bootLabels, lblDir, -1),
+      () => Store.write(Dedup.canonicalByScore(bootLabels, scores, "doc_id", "n_chars")
         .filter(col("is_canonical"))
-        .select(col("cluster_id"), col("id").as("canonical_id"), col("score"))
-        .write.mode("overwrite").parquet(s"$pickDir/batch=-1"),
+        .select(col("cluster_id"), col("id").as("canonical_id"), col("score")), pickDir, -1),
       () => pairs.filter(col("id1") % 3 =!= 0 || col("id2") % 3 =!= 0)
         .coalesce(1).write.mode("overwrite").parquet(pairsDir)))
     val pairSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -669,19 +617,11 @@ trait ExtStreamGates { this: ExtAllGates =>
         org.apache.spark.sql.types.LongType)))
     val src = s.readStream.schema(pairSchema).parquet(pairsDir)
     var result: Array[(Long, Long, Long)] = Array.empty
-    val q = EventsStreaming.streamingCanonicalMaintenance(src, lblDir,
+    runToCompletion(EventsStreaming.streamingCanonicalMaintenance(src, lblDir,
       pickDir, scores, "doc_id", "n_chars") { (upd, _) =>
       result = upd.select(col("cluster_id"), col("canonical_id"), col("score"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally {
-      deleteRecursively(lblDir); deleteRecursively(pickDir)
-      deleteRecursively(pairsDir)
-    }
+    }, ckpt, ckpt, lblDir, pickDir, pairsDir)
     import s.implicits._
     result.toSeq.toDF("cluster_id", "canonical_id", "score")
   }
@@ -719,7 +659,7 @@ trait ExtStreamGates { this: ExtAllGates =>
       docs.filter(col("doc_id") % 3 === 0).select(col("doc_id").as("id")),
       "id", pairs.filter(col("id1") % 3 === 0 && col("id2") % 3 === 0))
     graft.core.Caches.runConcurrently[Unit](Seq(
-      () => bootPlan.write.mode("overwrite").parquet(s"$wDir/batch=-1"),
+      () => Store.write(bootPlan, wDir, -1),
       () => pairs.filter(col("id1") % 3 =!= 0 || col("id2") % 3 =!= 0)
         .unionByName(docs.filter(col("doc_id") % 3 =!= 0)
           .select(col("doc_id").as("id1"), col("doc_id").as("id2")))
@@ -730,7 +670,7 @@ trait ExtStreamGates { this: ExtAllGates =>
       org.apache.spark.sql.types.StructField("id2",
         org.apache.spark.sql.types.LongType)))
     var result: Array[(Long, Long, Long, Long, Boolean)] = Array.empty
-    val q = EventsStreaming.streamingSoftDedupMaintenance(
+    runToCompletion(EventsStreaming.streamingSoftDedupMaintenance(
       s.readStream.schema(pairSchema).parquet(pairsDir), wDir) { (upd, _) =>
       result = upd
         .select(col("id"), col("cluster_id"), col("cluster_size"),
@@ -738,14 +678,7 @@ trait ExtStreamGates { this: ExtAllGates =>
         .as[(Long, Long, Long, Long, Boolean)](
           org.apache.spark.sql.Encoders.product[(Long, Long, Long, Long, Boolean)])
         .collect()
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally {
-      deleteRecursively(wDir); deleteRecursively(pairsDir)
-    }
+    }, ckpt, ckpt, wDir, pairsDir)
     result.toSeq
       .toDF("doc_id", "cluster_id", "cluster_size", "weight_bp", "keep")
   }
@@ -765,9 +698,8 @@ trait ExtStreamGates { this: ExtAllGates =>
     val srcDir =
       java.nio.file.Files.createTempDirectory("graft-pcamsrc").toString
     val emb = graft.core.Caches.persistTracked(Tables.embeddings(s, d))
-    graft.operators.Similarity.pcaMomentRecords(
-      emb.filter(col("vec_id") % 3 === 0), "embedding", EMB_DIMS)
-      .write.mode("overwrite").parquet(s"$mDir/batch=-1")
+    Store.write(graft.operators.Similarity.pcaMomentRecords(
+      emb.filter(col("vec_id") % 3 === 0), "embedding", EMB_DIMS), mDir, -1)
     emb.filter(col("vec_id") % 3 =!= 0)
       .select(col("vec_id"), col("embedding"))
       .coalesce(1).write.mode("overwrite").parquet(srcDir)
@@ -777,14 +709,9 @@ trait ExtStreamGates { this: ExtAllGates =>
       org.apache.spark.sql.types.StructField("embedding",
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType))))
-    val q = EventsStreaming.streamingPcaMoments(
+    runToCompletion(EventsStreaming.streamingPcaMoments(
       s.readStream.schema(schema).parquet(srcDir),
-      mDir, "embedding", EMB_DIMS) { (_, _) => () }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally deleteRecursively(srcDir)
+      mDir, "embedding", EMB_DIMS) { (_, _) => () }, ckpt, ckpt, srcDir)
     val comps =
       try graft.operators.Similarity.pcaComponentsFromMoments(
         EventsStreaming.foldedMoments(s, mDir), PCA_OUT, EMB_DIMS, PCA_ITERS)
@@ -821,12 +748,9 @@ trait ExtStreamGates { this: ExtAllGates =>
         col("s_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("s_ts") <= col("p_ts"))
       .select(col("user_id"), col("p_id"), col("s_id"))
-    val q = joined.writeStream.format("memory").queryName("graft_stream_join")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    runStreamThenCleanCkpt(q, ckpt)
+    runToCompletion(joined.writeStream.format("memory").queryName("graft_stream_join")
+      .outputMode("append"),
+      ckpt, ckpt)
     s.table("graft_stream_join")
   }
 
@@ -861,12 +785,9 @@ trait ExtStreamGates { this: ExtAllGates =>
       .select(col("user_id"), col("p_id"),
         coalesce(col("s_id"), lit(-1L)).as("s_id"),
         unix_micros(col("p_ts")).as("p_us"))
-    val q = joined.writeStream.format("memory").queryName("graft_stream_oj")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    runStreamThenCleanCkpt(q, ckpt)
+    runToCompletion(joined.writeStream.format("memory").queryName("graft_stream_oj")
+      .outputMode("append"),
+      ckpt, ckpt)
     s.table("graft_stream_oj")
       .select(col("user_id"), col("p_id"), col("s_id"), col("p_us"))
   }
@@ -936,14 +857,11 @@ trait ExtStreamGates { this: ExtAllGates =>
     import s.implicits._
     val ckpt = streamCkptDir("graft-ckpt-ssj")
     val dim = eventCategories.toDF("event_type", "category")
-    val q = EventsStreaming.enrichedWindowedAgg(
+    runToCompletion(EventsStreaming.enrichedWindowedAgg(
       EventsStreaming.readDriverEventsStream(s, s"$d/events.parque[t]"), dim)
       .writeStream.format("memory").queryName("graft_stream_ssj")
-      .option("checkpointLocation", ckpt)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    runStreamThenCleanCkpt(q, ckpt)
+      .outputMode("complete"),
+      ckpt, ckpt)
     s.table("graft_stream_ssj")
       .select(unix_timestamp(col("win_start")).as("win_start_epoch"),
         col("category"), col("n"), col("total"))
@@ -971,13 +889,10 @@ trait ExtStreamGates { this: ExtAllGates =>
     try {
       val ckpt = streamCkptDir("graft-ckpt-tws")
       val src = EventsStreaming.readDriverEventsStream(s, s"$d/events.parque[t]")
-      val q = EventsStreaming.runningTotals(src)
+      runToCompletion(EventsStreaming.runningTotals(src)
         .writeStream.format("memory").queryName("graft_stream_tws")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      runStreamThenCleanCkpt(q, ckpt)
+        .outputMode("append"),
+        ckpt, ckpt)
       s.table("graft_stream_tws")
     } finally {
       prevProv match {

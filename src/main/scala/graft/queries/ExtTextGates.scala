@@ -10,7 +10,7 @@ import graft.core.Tables
 import graft.functions.{Native, TextFunctions}
 import graft.functions.TextFunctions._
 import graft.operators.{Corpus, Dedup, Multimodal, Similarity}
-import graft.streaming.EventsStreaming
+import graft.streaming.{EventsStreaming, Store}
 
 /** Text-analysis gates: language ID, quality rules, stats, normalization, surprisal, tokenization.
   *
@@ -340,23 +340,17 @@ trait ExtTextGates { this: ExtAllGates =>
       java.nio.file.Files.createTempDirectory("graft-ttlstore").toString
     val early = Tables.events(s, d)
       .filter(unix_micros(col("ts")) < TTL_SPLIT_MICROS)
-    Dedup.ttlStoreRecords(early, "props", "ts")
-      .write.mode("overwrite").parquet(s"$storeDir/batch=-1")
+    Store.write(Dedup.ttlStoreRecords(early, "props", "ts"), storeDir, -1)
     val src = EventsStreaming.readDriverEventsStream(s, s"$d/events.parque[t]")
       .filter(unix_micros(col("ts")) >= TTL_SPLIT_MICROS)
     val buf = scala.collection.mutable.ArrayBuffer[(Long, Long, String, Double, String)]()
-    val q = EventsStreaming.streamingTtlDedup(src, storeDir,
+    runToCompletion(EventsStreaming.streamingTtlDedup(src, storeDir,
       "props", "event_id", "ts", ttlSeconds = 86400L) { (sv, _) =>
       buf ++= sv.select(col("event_id"), col("user_id"), col("event_type"),
         col("value"), col("props"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
           r.getDouble(3), r.getString(4)))
-    }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try runStreamThenCleanCkpt(q, ckpt)
-    finally deleteRecursively(storeDir)
+    }, ckpt, ckpt, storeDir)
     import s.implicits._
     buf.toSeq.toDF("event_id", "user_id", "event_type", "value", "props")
   }

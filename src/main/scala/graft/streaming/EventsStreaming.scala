@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the `events` table (SURVEY §2.9 —
@@ -209,782 +209,410 @@ object EventsStreaming {
       .dropDuplicatesWithinWatermark(Seq(fpCol))
   }
 
-  /** Streaming incremental NEAR-dup (X134) — the [[streamingIncrementalDedup]]
-    * arrangement for the MinHash family, closing the streaming side of
-    * the ingestion quartet's near-dup member. Append-mode streaming
-    * SQL cannot express X113's candidate-verify joins plus per-doc
-    * aggregation (unbounded-state aggregations after a stream-static
-    * join), so the always-on form is the MICRO-BATCH COMPOSITION:
-    * `foreachBatch` runs the batch increment
-    * ([[graft.operators.Dedup.incrementalNearDup]]) VERBATIM against
-    * the store, appends the survivors' store records before the batch
-    * completes, and frees the increment's tracked caches via the
-    * scoped release — so the next micro-batch's store read already
-    * contains this batch's survivors. That hand-off is EXACT per
-    * micro-batch: a near-dup of any earlier survivor drops however far
-    * apart the two arrive — no watermark-window approximation, which
-    * is what moving the aggregation off the streaming state store
-    * buys. The store stays index-only (id, shingles, sig — X113's
-    * contract) and each batch's plan inherits every X113 pin
-    * (shuffle-hash store joins, banding-parameter fail-fast,
-    * budget-gated candidate broadcasts).
-    *
-    * `sink` receives each batch's survivors (original columns +
-    * shingles/sig) and the batch id; the caller starts the returned
-    * writer with its own trigger/checkpoint. A pre-bootstrapped store
-    * must live under its own `batch=<negative id>` partition (e.g.
-    * `batch=-1`) — micro-batches write `batch=<batchId>` partitions,
-    * and parquet partition discovery rejects a layout mixing flat
-    * files with partition directories. */
+  // ---------------- store-maintenance streams ----------------
+  //
+  // Every form below is one [[Store.maintain]] step over `batch=<id>`
+  // stores; the protocol (layout, self-excluded prior reads, per-batch
+  // overwrite, negative-id bootstrap, pre-write checkpoint, scoped
+  // release) is stated once on [[Store]]. Each scaladoc says only what
+  // its family adds. `sink` receives the batch's result and id; the
+  // caller starts the returned writer with its own trigger and
+  // checkpoint.
+
+  private val nearDupStore = Store(new StructType().add("id", LongType)
+    .add("shingles", ArrayType(StringType)).add("sig", ArrayType(StringType)))
+  private val exactStore = Store(new StructType().add("fp", StringType))
+  private val ttlStore = Store(new StructType().add("fp", StringType).add("last_ts", LongType))
+  private val semanticStore = Store(new StructType().add("id", LongType)
+    .add("embedding", ArrayType(FloatType)).add("cell", LongType))
+  private val codesStore = Store(new StructType().add("vec_id", LongType)
+    .add("cell", LongType).add("codes", ArrayType(LongType)))
+  private val videoSigStore = Store(new StructType().add("media_id", LongType)
+    .add("fhash", LongType))
+  private val substringStore = Store(new StructType().add("gh", StringType))
+  private val fingerprintStore = Store(new StructType().add("id", LongType).add("sig", LongType))
+  private val labelStore = Store(new StructType().add("id", LongType)
+    .add("cluster_id", LongType), snapshot = true)
+  private val pickStore = Store(new StructType().add("cluster_id", LongType)
+    .add("canonical_id", LongType).add("score", LongType), snapshot = true)
+  private val weightStore = Store(new StructType().add("id", LongType)
+    .add("cluster_id", LongType).add("cluster_size", LongType)
+    .add("weight_bp", LongType).add("keep", BooleanType), snapshot = true)
+  private val wordCountStore = Store(new StructType().add("w", StringType).add("f", LongType))
+  private val momentStore = Store(new StructType().add("i", IntegerType)
+    .add("j", IntegerType).add("s", DecimalType(38, 0)))
+  private val histogramStore = Store(new StructType().add("bin", LongType).add("n", LongType))
+  private val dqFields = new StructType().add("constraint", StringType)
+    .add("n_bad", LongType).add("value_bp", LongType).add("passed", BooleanType)
+  private val dqStore = Store(dqFields)
+  // the group key bootstraps as STRING, contentDigest's most common key
+  // type; integral keys read back fine from real partitions
+  private def manifestStore(groupCol: String) = Store(new StructType()
+    .add(groupCol, StringType).add("n_rows", LongType)
+    .add("xor_digest", LongType).add("sum_digest", LongType))
+  private def dqGroupStore(groupCol: String) =
+    Store(StructType(StructField(groupCol, StringType) +: dqFields.fields))
+  private def deadLetterStore(rowSchema: StructType) =
+    Store(rowSchema.add("_violations", ArrayType(StringType)))
+
+  /** Streaming incremental NEAR-dup (X134): each micro-batch runs
+    * [[graft.operators.Dedup.incrementalNearDup]] verbatim against the
+    * store — append-mode streaming SQL cannot express X113's
+    * candidate-verify joins plus per-doc aggregation — and appends its
+    * survivors' index records (id, shingles, sig). The hand-off is
+    * exact per micro-batch: a near-dup of any earlier survivor drops
+    * however far apart the two arrive, with no watermark window. Each
+    * batch's plan inherits every X113 pin (shuffle-hash store joins,
+    * banding fail-fast, budget-gated candidate broadcasts). `sink`
+    * receives the survivors (original columns + shingles/sig). */
   def streamingIncrementalNearDup(docs: DataFrame, storePath: String,
       textCol: String, idCol: String, threshold: Double,
       shingleN: Int = 3, bands: Int = 4, rowsPerBand: Int = 3)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          // RETRY-IDEMPOTENT store layout: foreachBatch is
-          // at-least-once, and a plain append would poison a retried
-          // micro-batch — the re-run's store read would contain the
-          // failed attempt's own survivors, every doc would self-match
-          // at Jaccard 1.0, and the sink would silently receive zero
-          // rows. Instead each batch OVERWRITES its own
-          // `batch=<batchId>` partition (the re-run replaces it) and
-          // the read EXCLUDES the current batch's partition, so a
-          // retry sees exactly the store state the first attempt saw.
-          val store = storeForBatch(readNearDupStore(spark, storePath), batchId)
-          // EAGER localCheckpoint, not persist: the store write below
-          // rewrites storePath, and Spark's recacheByPath would
-          // RECOMPUTE a merely-persisted survivors plan against the
-          // just-written store — every survivor then matches itself
-          // and the sink sees zero rows. Lineage truncation pins the
-          // computed rows; blocks are reclaimed by the ContextCleaner
-          // once the batch's references drop (Caches class-3 policy).
-          val survivors = Dedup.incrementalNearDup(batch.toDF(), store,
-            textCol, idCol, threshold, shingleN, bands, rowsPerBand)
-            .localCheckpoint()
-          survivors
-            .select(col(idCol).cast("long").as("id"),
-              col("shingles"), col("sig"))
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(survivors.drop("band_keys"), batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      val store = nearDupStore.prior(batch.sparkSession, storePath, batchId)
+      val survivors = Dedup.incrementalNearDup(batch, store,
+        textCol, idCol, threshold, shingleN, bands, rowsPerBand).localCheckpoint()
+      Store.write(survivors.select(col(idCol).cast("long").as("id"),
+        col("shingles"), col("sig")), storePath, batchId)
+      sink(survivors.drop("band_keys"), batchId)
     }
 
-  /** Streaming incremental EXACT dedup, micro-batch-composed (X145) —
-    * the foreachBatch sibling of [[streamingIncrementalDedup]], with
-    * the EXACT store hand-off the DSL form's stream-start Bloom cannot
-    * give: each micro-batch runs the batch increment
-    * ([[graft.operators.Dedup.incrementalExactDedup]]) verbatim — its
-    * Bloom is rebuilt FROM the store every batch and auto-sized by the
-    * store's own count, so a fingerprint first ingested by THIS stream
-    * is caught on any later recurrence, however far apart the two
-    * arrive (the DSL form's re-emit window is its stream lifetime;
-    * here it is zero). The trade is one extra store scan per
-    * micro-batch (Bloom build + anti-join right side); pick this form
-    * when exactness across arbitrary gaps matters more than per-batch
-    * latency, and the DSL form when the watermark window is an
-    * acceptable dedup horizon. Store layout, retry idempotence
-    * (batch=<id> partitions, self-excluded reads, per-batch
-    * overwrite) and scoped cache release follow
-    * [[streamingIncrementalNearDup]] exactly; a pre-bootstrapped
-    * store lives under `batch=<negative id>`. */
+  /** Streaming incremental EXACT dedup, micro-batch-composed (X145):
+    * [[graft.operators.Dedup.incrementalExactDedup]] per batch, its
+    * Bloom rebuilt from the store and sized by the store's count every
+    * batch, so a fingerprint first ingested by THIS stream is caught on
+    * any later recurrence (the DSL form [[streamingIncrementalDedup]]
+    * re-emits for its stream lifetime). The trade is one extra store
+    * scan per micro-batch; the store holds the survivors' `fp`. */
   def streamingIncrementalExactDedup(docs: DataFrame, storePath: String,
       textCol: String, idCol: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          val store = storeForBatch(readExactStore(spark, storePath), batchId)
-          // localCheckpoint before the store write: same recacheByPath
-          // hazard as the near-dup form — the survivors plan reads the
-          // path the write rewrites
-          val survivors = Dedup.incrementalExactDedup(batch.toDF(), store,
-            textCol, idCol).localCheckpoint()
-          survivors.select(col("fp"))
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(survivors, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      val store = exactStore.prior(batch.sparkSession, storePath, batchId)
+      val survivors = Dedup.incrementalExactDedup(batch, store,
+        textCol, idCol).localCheckpoint()
+      Store.write(survivors.select(col("fp")), storePath, batchId)
+      sink(survivors, batchId)
     }
 
-  /** Streaming TTL dedup, micro-batch-composed (X203) — the always-on
-    * form of the freshness-aware dedup, the one dedup variant that
-    * previously had no streaming ladder: each micro-batch runs
+  /** Streaming TTL dedup (X203): each micro-batch runs
     * [[graft.operators.Dedup.incrementalTtlDedup]] against the folded
-    * (fp, last_ts) store — the fp's first in-batch row sessions
-    * against the STORED last observation, so a within-window repeat
-    * drops across any batch gap and a post-expiry re-arrival is
-    * READMITTED as fresh — and appends
-    * [[graft.operators.Dedup.ttlStoreRecords]] (the batch's per-fp
-    * max observation time: observations, not survivors, advance the
-    * chain). APPEND layout: the read folds max(last_ts) per fp across
-    * partitions, exact because the chain is monotone — which is also
-    * why out-of-order arrival fails loud inside the increment rather
-    * than silently mis-sessioning. Store contracts verbatim
-    * (batch=<id> partitions, self-excluded reads, per-batch
-    * overwrite retry idempotence, one-checkpoint-per-store lineage
-    * guard, negative-id bootstrap, pre-write localCheckpoint, scoped
-    * cache release). */
+    * (fp, last_ts) store — a within-window repeat drops across any
+    * batch gap, a post-expiry re-arrival is readmitted — and appends
+    * [[graft.operators.Dedup.ttlStoreRecords]] (the batch's per-fp max
+    * observation: observations, not survivors, advance the chain). The
+    * read folds max(last_ts) per fp across partitions, exact because
+    * the chain is monotone; out-of-order arrival fails loud inside the
+    * increment. The batch is checkpointed too: it feeds two plans. */
   def streamingTtlDedup(docs: DataFrame, storePath: String,
       textCol: String, idCol: String, tsCol: String, ttlSeconds: Long)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          val folded = storeForBatch(readTtlStore(spark, storePath), batchId)
-            .groupBy(col("fp")).agg(max(col("last_ts")).as("last_ts"))
-          // the batch feeds two plans (survivors + store records):
-          // checkpoint once so the source is read once and the records
-          // plan cannot observe the path its own write extends
-          val b = batch.toDF().localCheckpoint()
-          val survivors = Dedup.incrementalTtlDedup(b, folded,
-            textCol, idCol, tsCol, ttlSeconds).localCheckpoint()
-          Dedup.ttlStoreRecords(b, textCol, tsCol)
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(survivors, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      val folded = ttlStore.prior(batch.sparkSession, storePath, batchId)
+        .groupBy(col("fp")).agg(max(col("last_ts")).as("last_ts"))
+      val b = batch.localCheckpoint()
+      val survivors = Dedup.incrementalTtlDedup(b, folded,
+        textCol, idCol, tsCol, ttlSeconds).localCheckpoint()
+      Store.write(Dedup.ttlStoreRecords(b, textCol, tsCol), storePath, batchId)
+      sink(survivors, batchId)
     }
 
-  /** The TTL-dedup observation store (fp, last_ts — micros),
-    * empty-with-schema when the path does not exist yet; APPEND
-    * layout (fold max per fp on read), same narrow catch as
-    * [[readNearDupStore]]. */
-  def readTtlStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("fp", StringType),
-        StructField("last_ts", LongType))))
+  /** The TTL-dedup observation store (fp, last_ts — micros). */
+  def readTtlStore(spark: SparkSession, path: String): DataFrame = ttlStore.read(spark, path)
 
-  /** Streaming incremental SEMANTIC dedup, micro-batch-composed
-    * (X146) — the third member of the streaming increment family
-    * (exact X145, near-dup X134): each micro-batch of embedded docs
-    * runs [[graft.operators.Similarity.incrementalSemanticDedup]]
-    * verbatim against the store under the caller's FROZEN quantizer
-    * (the X116 contract — centroids ride the closure as plan
-    * literals, so every batch's map-side assignment is bit-identical
-    * to the one that built the store), and appends its survivors'
-    * (id, embedding, cell) records before the batch completes. The
-    * hand-off is exact per micro-batch; retry idempotence
-    * (batch=<id> partitions, self-excluded reads, per-batch
-    * overwrite) and scoped cache release follow X134. */
+  /** Streaming incremental SEMANTIC dedup (X146):
+    * [[graft.operators.Similarity.incrementalSemanticDedup]] per batch
+    * under the caller's FROZEN quantizer (X116 — centroids ride the
+    * closure as plan literals, so every batch's cell assignment is
+    * bit-identical to the one that built the store); appends the
+    * survivors' (id, embedding, cell). */
   def streamingIncrementalSemanticDedup(docs: DataFrame, storePath: String,
       cents: Array[(Int, Array[Long])], threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding")(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          val store = storeForBatch(readSemanticStore(spark, storePath), batchId)
-          // localCheckpoint before the store write (recacheByPath —
-          // the survivors plan reads the path the write rewrites)
-          val survivors = graft.operators.Similarity
-            .incrementalSemanticDedup(batch.toDF(), store, cents, threshold,
-              idCol, vecCol)
-            .localCheckpoint()
-          survivors
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(survivors, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      val store = semanticStore.prior(batch.sparkSession, storePath, batchId)
+      val survivors = graft.operators.Similarity.incrementalSemanticDedup(
+        batch, store, cents, threshold, idCol, vecCol).localCheckpoint()
+      Store.write(survivors, storePath, batchId)
+      sink(survivors, batchId)
     }
 
-  /** Streaming IVF-PQ serving-store maintenance (X200) — the
-    * always-on form of
-    * [[graft.operators.Similarity.incrementalIvfPqCodes]], following
-    * the X146 template: each micro-batch of embedded vectors encodes
-    * MAP-SIDE under the caller's FROZEN (centroids, codebooks) — the
-    * index rides the closure as plan literals, so every batch's codes
-    * are bit-identical to a full rebuild's — and appends its (id,
-    * cell, codes) rows under `batch=<id>` before the batch completes.
-    * The duplicate-id fail-loud guard runs against the store snapshot
-    * each batch (a serving store is id-keyed; see the batch
-    * operator). Store layout, retry idempotence (batch=<id>
-    * partitions, self-excluded reads, per-batch overwrite), the
-    * one-checkpoint-per-store lineage guard, negative-id bootstrap,
-    * the pre-write localCheckpoint (recacheByPath) and scoped cache
-    * release all follow [[streamingIncrementalNearDup]]. */
+  /** Streaming IVF-PQ serving-store maintenance (X200): each batch
+    * encodes MAP-SIDE under the caller's FROZEN (centroids, codebooks),
+    * bit-identical to a full rebuild's codes, and appends (id, cell,
+    * codes). The duplicate-id guard of
+    * [[graft.operators.Similarity.incrementalIvfPqCodes]] runs against
+    * the prior store every batch (a serving store is id-keyed). */
   def streamingIncrementalIvfPqCodes(vecs: DataFrame, storePath: String,
       coarseCents: Array[(Int, Array[Long])],
       codebooks: Array[Array[(Int, Array[Long])]],
       idCol: String = "vec_id", vecCol: String = "embedding",
       scale: Double = 1e6)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vecs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          val store = storeForBatch(readCodesStore(spark, storePath), batchId)
-          val newRows = graft.operators.Similarity
-            .guardedIvfPqEncode(store, batch.toDF(), idCol, vecCol,
-              coarseCents, codebooks, scale)
-            .localCheckpoint()
-          newRows.write.mode("overwrite")
-            .parquet(s"$storePath/batch=$batchId")
-          sink(newRows, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(vecs) { (batch, batchId) =>
+      val store = codesStore.prior(batch.sparkSession, storePath, batchId)
+      val newRows = graft.operators.Similarity.guardedIvfPqEncode(store, batch,
+        idCol, vecCol, coarseCents, codebooks, scale).localCheckpoint()
+      Store.write(newRows, storePath, batchId)
+      sink(newRows, batchId)
     }
 
-  /** The IVF-PQ codes store (vec_id, cell, codes), empty-with-schema
-    * when the path does not exist yet; same narrow catch and
-    * partition-layout contract as [[readNearDupStore]]. */
-  def readCodesStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("cell", LongType),
-        StructField("codes", ArrayType(LongType)))))
+  /** The IVF-PQ codes store (vec_id, cell, codes). */
+  def readCodesStore(spark: SparkSession, path: String): DataFrame = codesStore.read(spark, path)
 
-  /** Streaming incremental VIDEO near-dup (X207) — the always-on form
-    * of [[graft.operators.Multimodal.incrementalVideoNearDup]],
-    * completing the video family's ladder (batch X205 → increment
-    * X206 → this): each micro-batch of frame-signature rows (decode +
-    * hash run UPSTREAM in the streaming DAG — payloads never reach
-    * the store) dedups against the store's kept (id, fhash) rows by
-    * frame-set Jaccard and appends its survivors' signature rows
-    * under `batch=<id>`. Store contracts verbatim (append layout,
-    * self-excluded reads + per-batch overwrite retry idempotence,
-    * one-checkpoint-per-store lineage guard, negative-id bootstrap,
-    * pre-write localCheckpoint, scoped cache release). */
-  /** SERVING CONTRACT (r20 decade, PLANS.md "streaming video cap"):
+  /** Streaming incremental VIDEO near-dup (X207): each batch of
+    * frame-signature rows (decode + hash run UPSTREAM in the streaming
+    * DAG; payloads never reach the store) runs
+    * [[graft.operators.Multimodal.incrementalVideoNearDup]] against the
+    * kept (media_id, fhash) rows by frame-set Jaccard and appends its
+    * survivors' signature rows.
+    *
+    * SERVING CONTRACT (r20 decade, PLANS.md "streaming video cap"):
     * pass a FINITE `maxFrameDf` in any always-on composition — the
-    * per-micro-batch increment inherits
-    * [[graft.operators.Multimodal.incrementalVideoNearDup]]'s
-    * inverted-index pair term, and uncapped on a densifying corpus
-    * that term grows with dup-class² (measured: the uncapped
-    * streaming gate hit α 1.54 across the sf0.1→sf1 decade, 5.4 s →
-    * 187 s, while the capped form stays flat). The uncapped default
-    * exists for mining/parity runs only. */
+    * increment's inverted-index pair term grows with dup-class² on a
+    * densifying corpus uncapped (the uncapped streaming gate hit α 1.54
+    * across sf0.1→sf1, 5.4 s → 187 s; the capped form stays flat). The
+    * uncapped default exists for mining/parity runs only. */
   def streamingIncrementalVideoNearDup(sigs: DataFrame, storePath: String,
       threshold: Double, idCol: String = "media_id",
       sigCol: String = "fhash", maxFrameDf: Long = Long.MaxValue)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    sigs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          val store = storeForBatch(
-            readVideoSigStore(spark, storePath), batchId)
-          val survivors = graft.operators.Multimodal
-            .incrementalVideoNearDup(batch.toDF(), store, threshold,
-              idCol, sigCol, maxFrameDf)
-            .localCheckpoint()
-          survivors.select(col(idCol).as("media_id"),
-              col(sigCol).as("fhash"))
-            .write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(survivors, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(sigs) { (batch, batchId) =>
+      val store = videoSigStore.prior(batch.sparkSession, storePath, batchId)
+      val survivors = graft.operators.Multimodal.incrementalVideoNearDup(batch,
+        store, threshold, idCol, sigCol, maxFrameDf).localCheckpoint()
+      Store.write(survivors.select(col(idCol).as("media_id"),
+        col(sigCol).as("fhash")), storePath, batchId)
+      sink(survivors, batchId)
     }
 
-  /** The video frame-signature store (media_id, fhash),
-    * empty-with-schema when the path does not exist yet; APPEND
-    * layout, same narrow catch as [[readNearDupStore]]. */
+  /** The video frame-signature store (media_id, fhash). */
   def readVideoSigStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("media_id", LongType),
-        StructField("fhash", LongType))))
+    videoSigStore.read(spark, path)
 
-  /** Streaming incremental SUBSTRING dedup, micro-batch-composed
-    * (X147) — the fourth dedup family's always-on form, completing the
-    * streaming quartet (exact X145, near-dup X134, semantic X146):
-    * each micro-batch runs [[graft.operators.Dedup.incrementalSubstringDedup]]
-    * VERBATIM against the store's distinct window-hash index and
-    * appends `substringStoreRecords(batch)` — the BATCH's original
-    * windows, not the post-removal survivors' (X132's store contract:
-    * a span removed as a later occurrence stays covered via its first
-    * occurrence's record) — before the batch completes. The hand-off
-    * is exact per micro-batch: a window recurrence drops through the
-    * store however many batches apart the two occurrences arrive.
-    * Retry idempotence (batch=<id> partitions, self-excluded reads,
-    * per-batch overwrite), the new-checkpoint fail-loud guard, the
-    * pre-write localCheckpoint (the survivors AND record plans both
-    * read the path the write rewrites), and scoped cache release all
-    * follow [[streamingIncrementalNearDup]]; a pre-bootstrapped store
-    * lives under `batch=<negative id>`. */
+  /** Streaming incremental SUBSTRING dedup (X147):
+    * [[graft.operators.Dedup.incrementalSubstringDedup]] per batch
+    * against the store's distinct window-hash index, appending
+    * `substringStoreRecords(batch)` — the BATCH's original windows, not
+    * the survivors' (X132: a span removed as a later occurrence stays
+    * covered through its first occurrence's record). The records plan
+    * is checkpointed too, so the tokenize work runs once. */
   def streamingIncrementalSubstringDedup(docs: DataFrame, storePath: String,
       textCol: String, idCol: String, L: Int,
       posBase: Long = 100000L)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          val store = storeForBatch(readSubstringStore(spark, storePath), batchId)
-          // localCheckpoint BOTH frames before the store write: the
-          // survivors plan reads storePath (recacheByPath would
-          // recompute it against the just-appended store and cover
-          // every batch window against itself); the records plan
-          // doesn't read the store, but eager-checkpointing it too
-          // keeps the tokenize work from running twice
-          val survivors = Dedup.incrementalSubstringDedup(batch.toDF(), store,
-            idCol, textCol, L, posBase).localCheckpoint()
-          val records = Dedup.substringStoreRecords(batch.toDF(), idCol,
-            textCol, L, posBase).localCheckpoint()
-          records.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(survivors, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      val store = substringStore.prior(batch.sparkSession, storePath, batchId)
+      val survivors = Dedup.incrementalSubstringDedup(batch, store,
+        idCol, textCol, L, posBase).localCheckpoint()
+      val records = Dedup.substringStoreRecords(batch, idCol,
+        textCol, L, posBase).localCheckpoint()
+      Store.write(records, storePath, batchId)
+      sink(survivors, batchId)
     }
 
-  /** ALWAYS-ON COMPOSED INGESTION, quartet form (X156) — the
-    * foreachBatch composition of the FULL X139 pipeline, turning the
-    * four singleton streaming increments (exact X145, near-dup X134,
-    * substring X147, semantic X146) into one stream: each micro-batch
-    * runs exact → (near-dup ∥ substring, both over the stage-1
-    * survivors) → semantic over the docs both passes keep, each stage
-    * consuming its own store under `basePath/{exact,neardup,substring,
-    * semantic}` and appending its records before the batch completes —
-    * so a doc that is a near-dup of a BATCH-1 survivor and a
-    * substring-dup of BATCH-2 windows still drops in batch 3 (the
-    * cross-batch hand-off is exact per stage, no watermark windows).
+  /** ALWAYS-ON COMPOSED INGESTION, quartet form (X156): the full X139
+    * pipeline per micro-batch — exact → (near-dup ∥ substring, both
+    * over the stage-1 survivors) → semantic over the docs both keep —
+    * each stage on its own store under `basePath/{exact,neardup,
+    * substring,semantic}`, so a doc that near-dups a batch-1 survivor
+    * and substring-dups batch-2 windows still drops in batch 3.
     *
-    * Store-append contract per stage, inherited from the singletons:
-    * exact gets the stage-1 survivors' fingerprints; near-dup gets the
-    * stage-2 SURVIVORS' index records (id, shingles, sig); substring
-    * gets the STAGE INPUT's original windows (X132's covered-forever
-    * rule — s1's windows, so a span that later recurs stays covered
-    * via its first occurrence); semantic gets the final survivors'
-    * (id, embedding, cell) under the caller's FROZEN quantizer (X116).
-    * Embeddings ride a stream-static left-semi join on the shared id
-    * space (the X139 arrangement), so the streamed frame carries text
-    * only. Retry idempotence (batch=<id> partitions, self-excluded
-    * reads, per-batch overwrite), the lineage guard, pre-write
-    * localCheckpoints (every stage plan reads a path some write below
-    * rewrites), and scoped cache release all follow the singletons;
-    * pre-bootstrapped stores live under `batch=<negative id>`;
-    * [[compactStore]] (append layout) compacts all four.
-    *
-    * `sink` receives each batch's final survivors (id, cell, n_kept)
-    * — the X139 output shape. */
+    * Per stage the store gets what its singleton appends: exact the
+    * stage-1 survivors' fingerprints; near-dup the stage-2 survivors'
+    * (id, shingles, sig); substring the stage INPUT's original windows
+    * (X132); semantic the final survivors' (id, embedding, cell) under
+    * the caller's FROZEN quantizer. Embeddings ride a stream-static
+    * left-semi join on the shared id space, so the stream carries text
+    * only. Every stage is checkpointed before any write (each reads a
+    * path some write extends); the three stage-1 consumers and the
+    * four writes (disjoint paths) run concurrently. [[compactStore]]
+    * (append layout) compacts all four. `sink` receives the final
+    * survivors (id, cell, n_kept) — the X139 output shape. */
   def streamingIngestQuartet(docs: DataFrame, basePath: String,
       emb: DataFrame, cents: Array[(Int, Array[Long])],
       textCol: String, idCol: String, threshold: Double,
       shingleN: Int, bands: Int, rowsPerBand: Int,
       L: Int, semThreshold: Double, posBase: Long = 100000L,
       embIdCol: String = "vec_id", embVecCol: String = "embedding")(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          val exactStore = storeForBatch(
-            readExactStore(spark, s"$basePath/exact"), batchId)
-          val ndStore = storeForBatch(
-            readNearDupStore(spark, s"$basePath/neardup"), batchId)
-          val subStore = storeForBatch(
-            readSubstringStore(spark, s"$basePath/substring"), batchId)
-          val semStore = storeForBatch(
-            readSemanticStore(spark, s"$basePath/semantic"), batchId)
-          // stage 1: exact — survivors checkpointed before ANY write
-          // below (three downstream plans read s1). r22 note: the
-          // per-batch tokenBase/FromToks rewrite was MEASURED and
-          // reverted — the extra eager checkpoint action per micro-batch
-          // outweighed the saved re-splits of a bounded batch.
-          val s1 = Dedup.incrementalExactDedup(batch.toDF(), exactStore,
-            textCol, idCol).localCheckpoint()
-          // stage 2 ∥ 3 over the stage-1 survivors (the X139 shape).
-          // r22 (guide §2.6): the three s1 consumers are independent —
-          // plans built HERE (construction runs the budget probes on
-          // the batch thread, the releaseScoped contract), then
-          // materialized concurrently instead of three sequential
-          // checkpoint waves.
-          val s2Plan = Dedup.incrementalNearDup(s1, ndStore, textCol, idCol,
-            threshold, shingleN, bands, rowsPerBand)
-          val subPlan = Dedup.incrementalSubstringDedup(s1, subStore,
-            idCol, textCol, L, posBase)
-            .filter(col("n_kept") > 0)
-            .select(col("id").as(idCol), col("n_kept"))
-          val recPlan = Dedup.substringStoreRecords(s1, idCol, textCol,
-            L, posBase)
-          val cps = graft.core.Caches.runConcurrently[DataFrame](Seq(
-            () => s2Plan.localCheckpoint(),
-            () => subPlan.localCheckpoint(),
-            () => recPlan.localCheckpoint()))
-          val (s2, sub, records) = (cps(0), cps(1), cps(2))
-          val s3 = sub.join(s2.select(col(idCol)), Seq(idCol))
-            .localCheckpoint()
-          // stage 4: semantic over the embeddings of the docs both
-          // passes keep (stream-static left-semi on the shared ids)
-          val batchEmb = emb.join(
-            s3.select(col(idCol).cast("long").as(embIdCol)),
-            Seq(embIdCol), "left_semi")
-          val sem = graft.operators.Similarity.incrementalSemanticDedup(
-            batchEmb, semStore, cents, semThreshold, embIdCol, embVecCol)
-            .localCheckpoint()
-          // all four store appends AFTER every read of prior state is
-          // pinned (everything above is checkpointed); a retry
-          // overwrites its own partitions and re-reads exactly what the
-          // first attempt saw. The four writes land on four disjoint
-          // paths — run them concurrently (§2.6).
-          graft.core.Caches.runConcurrently[Unit](Seq(
-            () => s1.select(col("fp"))
-              .write.mode("overwrite").parquet(s"$basePath/exact/batch=$batchId"),
-            () => s2.select(col(idCol).cast("long").as("id"),
-                col("shingles"), col("sig"))
-              .write.mode("overwrite").parquet(s"$basePath/neardup/batch=$batchId"),
-            () => records
-              .write.mode("overwrite").parquet(s"$basePath/substring/batch=$batchId"),
-            () => sem
-              .write.mode("overwrite").parquet(s"$basePath/semantic/batch=$batchId")))
-          val out = sem.select(col("id").as(idCol), col("cell"))
-            .join(s3, Seq(idCol))
-            .select(col(idCol), col("cell"), col("n_kept"))
-          sink(out, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val (exactPath, ndPath, subPath, semPath) = (s"$basePath/exact",
+        s"$basePath/neardup", s"$basePath/substring", s"$basePath/semantic")
+      val exactPrior = exactStore.prior(spark, exactPath, batchId)
+      val ndPrior = nearDupStore.prior(spark, ndPath, batchId)
+      val subPrior = substringStore.prior(spark, subPath, batchId)
+      val semPrior = semanticStore.prior(spark, semPath, batchId)
+      // r22 note: a per-batch tokenBase/FromToks rewrite was MEASURED and
+      // reverted — the extra eager checkpoint per micro-batch outweighed
+      // the saved re-splits of a bounded batch
+      val s1 = Dedup.incrementalExactDedup(batch, exactPrior,
+        textCol, idCol).localCheckpoint()
+      // plans built HERE (construction runs the budget probes on the
+      // batch thread, the releaseScoped contract), materialized
+      // concurrently
+      val s2Plan = Dedup.incrementalNearDup(s1, ndPrior, textCol, idCol,
+        threshold, shingleN, bands, rowsPerBand)
+      val subPlan = Dedup.incrementalSubstringDedup(s1, subPrior,
+        idCol, textCol, L, posBase)
+        .filter(col("n_kept") > 0)
+        .select(col("id").as(idCol), col("n_kept"))
+      val recPlan = Dedup.substringStoreRecords(s1, idCol, textCol,
+        L, posBase)
+      val cps = graft.core.Caches.runConcurrently[DataFrame](Seq(
+        () => s2Plan.localCheckpoint(),
+        () => subPlan.localCheckpoint(),
+        () => recPlan.localCheckpoint()))
+      val (s2, sub, records) = (cps(0), cps(1), cps(2))
+      val s3 = sub.join(s2.select(col(idCol)), Seq(idCol)).localCheckpoint()
+      val batchEmb = emb.join(
+        s3.select(col(idCol).cast("long").as(embIdCol)),
+        Seq(embIdCol), "left_semi")
+      val sem = graft.operators.Similarity.incrementalSemanticDedup(
+        batchEmb, semPrior, cents, semThreshold, embIdCol, embVecCol)
+        .localCheckpoint()
+      graft.core.Caches.runConcurrently[Unit](Seq(
+        () => Store.write(s1.select(col("fp")), exactPath, batchId),
+        () => Store.write(s2.select(col(idCol).cast("long").as("id"),
+          col("shingles"), col("sig")), ndPath, batchId),
+        () => Store.write(records, subPath, batchId),
+        () => Store.write(sem, semPath, batchId)))
+      sink(sem.select(col("id").as(idCol), col("cell"))
+        .join(s3, Seq(idCol))
+        .select(col(idCol), col("cell"), col("n_kept")), batchId)
     }
 
-  /** Streaming incremental CLUSTER maintenance (X152) — the always-on
-    * form of [[graft.operators.Dedup.incrementalConnectedComponents]],
-    * giving the ingestion quartet's canonicalization pass the same
-    * micro-batch treatment as the dedup increments that feed it: each
-    * micro-batch of verified duplicate PAIRS folds into the stored
-    * labels by graph contraction (CC over the batch-bounded contracted
-    * graph only — zero corpus-sized shuffles per batch).
-    *
-    * Store layout differs from the append-only siblings because labels
-    * are REPLACED, not appended: each batch writes the complete updated
-    * label table as a SNAPSHOT under `batch=<batchId>`, and reads the
-    * LATEST snapshot with id ≠ its own — so a retried batch sees
-    * exactly the snapshot the first attempt saw (its own partial write
-    * is excluded and then overwritten), and the one-checkpoint-per-
-    * store lineage guard ([[storeForBatch]]'s rule) fails loud on a
-    * foreign-checkpoint store. Old snapshots are the retry/rollback
-    * history — [[compactStore]] (snapshot layout) collapses them to
-    * the newest once its batch commits. A pre-bootstrapped label
-    * table lives under `batch=<negative id>`. */
+  /** Streaming incremental CLUSTER maintenance (X152): each batch of
+    * verified duplicate PAIRS folds into the stored labels by graph
+    * contraction ([[graft.operators.Dedup.incrementalConnectedComponents]]
+    * — CC over the batch-bounded contracted graph, zero corpus-sized
+    * shuffles). SNAPSHOT store: labels are replaced, not appended, so
+    * each batch writes the complete updated label table; older
+    * snapshots are retry history that [[compactStore]] (snapshot
+    * layout) collapses to the newest. */
   def streamingIncrementalClusters(pairs: DataFrame, storePath: String,
       id1: String = "id1", id2: String = "id2")(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    pairs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          val prior = labelSnapshotForBatch(
-            readLabelStore(spark, storePath), batchId)
-          // localCheckpoint before the snapshot write: the updated plan
-          // reads the path the write extends (recacheByPath hazard,
-          // shared with the whole family)
-          val updated = Dedup.incrementalConnectedComponents(
-            prior, batch.toDF(), id1, id2).localCheckpoint()
-          updated.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(updated, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(pairs) { (batch, batchId) =>
+      val prior = labelStore.prior(batch.sparkSession, storePath, batchId)
+      val updated = Dedup.incrementalConnectedComponents(
+        prior, batch, id1, id2).localCheckpoint()
+      Store.write(updated, storePath, batchId)
+      sink(updated, batchId)
     }
 
-  /** The cluster-label store (id, cluster_id), empty-with-schema when
-    * the path does not exist yet; SNAPSHOT-per-batch layout (see
-    * [[streamingIncrementalClusters]]), same narrow catch as
-    * [[readNearDupStore]]. */
-  def readLabelStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("id", LongType),
-        StructField("cluster_id", LongType))))
+  /** The cluster-label snapshot store (id, cluster_id). */
+  def readLabelStore(spark: SparkSession, path: String): DataFrame = labelStore.read(spark, path)
 
-  /** Streaming CANONICAL maintenance (X197) — the streaming form of
-    * [[graft.operators.Dedup.incrementalCanonical]], completing the
-    * canonical family's ladder (X181 batch → X195 increment → X196
-    * retract → this): each micro-batch of verified duplicate PAIRS
-    * folds into the label SNAPSHOT store (the X152 contraction — zero
-    * corpus-sized shuffles) AND re-elects canonical picks for touched
-    * clusters only, writing both whole-table snapshots under
-    * `batch=<id>`. The pick store is what serving reads; after any
-    * batch it equals the full argmax over the current labels
-    * (spec-pinned through the increment law). Store contracts
-    * verbatim: snapshot layout, per-batch overwrite retry idempotence,
-    * the one-checkpoint-per-store lineage guard, negative-id
-    * bootstrap, eager localCheckpoint before the writes that extend
-    * the read paths (the recacheByPath hazard). `scores` is a STATIC
-    * id-keyed table (quality scores are per-doc ingest facts). */
+  /** Streaming CANONICAL maintenance (X197): each batch of verified
+    * duplicate PAIRS folds into the label snapshot (the X152
+    * contraction) AND re-elects canonical picks for touched clusters
+    * only ([[graft.operators.Dedup.incrementalCanonical]]), writing
+    * both tables as snapshots. The pick store is what serving reads;
+    * after any batch it equals the full argmax over the current labels.
+    * `scores` is a STATIC id-keyed table (quality scores are per-doc
+    * ingest facts). */
   def streamingCanonicalMaintenance(pairs: DataFrame,
       labelStorePath: String, pickStorePath: String, scores: DataFrame,
       idCol: String, scoreCol: String,
       id1: String = "id1", id2: String = "id2")(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    pairs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          val priorLabels = labelSnapshotForBatch(
-            readLabelStore(spark, labelStorePath), batchId)
-          val priorPicks = snapshotForBatch(
-            readPickStore(spark, pickStorePath), batchId,
-            StructType(Seq(
-              StructField("cluster_id", LongType),
-              StructField("canonical_id", LongType),
-              StructField("score", LongType))))
-          // Normalize the pair columns to the default (id1, id2) names
-          // BEFORE both calls: incrementalCanonical's inner explode and
-          // contraction use the defaults, so a non-default-named batch
-          // would fail with an AnalysisException on the picks path while
-          // the labels path silently honored the params.
-          val b = batch.toDF()
-            .select(col(id1).as("id1"), col(id2).as("id2"))
-            .localCheckpoint()
-          // both snapshots are built from the prior stores before either
-          // is written; checkpointing and writing them concurrently
-          // measured no faster (sf0.01, 6 paired runs), so they run in turn
-          val lblPlan = Dedup.incrementalConnectedComponents(
-            priorLabels, b, "id1", "id2")
-          val pickPlan = Dedup.incrementalCanonical(
-            priorLabels, priorPicks, b, scores, idCol, scoreCol)
-          val updatedLabels = lblPlan.localCheckpoint()
-          val updatedPicks = pickPlan.localCheckpoint()
-          updatedLabels.write.mode("overwrite")
-            .parquet(s"$labelStorePath/batch=$batchId")
-          updatedPicks.write.mode("overwrite")
-            .parquet(s"$pickStorePath/batch=$batchId")
-          sink(updatedPicks, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(pairs) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val priorLabels = labelStore.prior(spark, labelStorePath, batchId)
+      val priorPicks = pickStore.prior(spark, pickStorePath, batchId)
+      // normalize the pair columns to (id1, id2) BEFORE both calls:
+      // incrementalCanonical's explode and contraction use the defaults
+      val b = batch.select(col(id1).as("id1"), col(id2).as("id2"))
+        .localCheckpoint()
+      // checkpointing and writing the two snapshots concurrently
+      // measured no faster (sf0.01, 6 paired runs), so they run in turn
+      val lblPlan = Dedup.incrementalConnectedComponents(
+        priorLabels, b, "id1", "id2")
+      val pickPlan = Dedup.incrementalCanonical(
+        priorLabels, priorPicks, b, scores, idCol, scoreCol)
+      val updatedLabels = lblPlan.localCheckpoint()
+      val updatedPicks = pickPlan.localCheckpoint()
+      Store.write(updatedLabels, labelStorePath, batchId)
+      Store.write(updatedPicks, pickStorePath, batchId)
+      sink(updatedPicks, batchId)
     }
 
-  /** Streaming SOFT-DEDUP weight maintenance (X217) — the always-on
-    * form completing the soft-dedup ladder (X213 batch → X216
-    * increment → this), and the second member of the SNAPSHOT-store
-    * family after the canonical picks: the weight table is serving
-    * state a trainer reads, and a cluster merge rewrites EVERY
-    * member's row (weight = 1/size), so the store is replaced
-    * per batch, not appended. Each micro-batch of verified duplicate
-    * PAIRS folds in via [[graft.operators.Dedup.incrementalSoftDedup]]
-    * (affected-component-bounded re-weight, one map-side store scan);
-    * a pair-free new document streams as a SELF-LOOP (id, id) — the
-    * operator's pair filter drops the loop but the endpoint enters the
-    * batch spine, so singletons get their full-weight row. The batch
-    * spine derives as the non-stored endpoints; doc-level re-arrival
-    * protection therefore lives in the upstream doc-dedup streams
-    * (at the pair level a stored endpoint IS the normal cross-pair
-    * case). Store contracts verbatim from the canonical family:
-    * snapshot layout under `batch=<id>`, per-batch overwrite retry
-    * idempotence via self-excluded latest-snapshot reads, the
-    * one-checkpoint-per-store lineage guard, negative-id bootstrap,
-    * eager localCheckpoint before the write that extends the read
-    * path. After any batch the store equals the batch operator over
-    * everything streamed (spec-pinned through the increment law). */
+  /** Streaming SOFT-DEDUP weight maintenance (X217): each batch of
+    * verified duplicate PAIRS folds in through
+    * [[graft.operators.Dedup.incrementalSoftDedup]]
+    * (affected-component-bounded re-weight, one map-side store scan).
+    * SNAPSHOT store: a cluster merge rewrites every member's weight
+    * (1/size), so the weight table a trainer reads is replaced per
+    * batch. A pair-free new document streams as a SELF-LOOP (id, id):
+    * the operator drops the loop but the endpoint enters the batch
+    * spine, which derives as the non-stored endpoints — doc-level
+    * re-arrival protection lives in the upstream doc-dedup streams.
+    * After any batch the store equals the batch operator over
+    * everything streamed. */
   def streamingSoftDedupMaintenance(pairs: DataFrame,
       weightStorePath: String, id1: String = "id1", id2: String = "id2")(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    pairs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          val prior = snapshotForBatch(
-            readWeightStore(spark, weightStorePath), batchId,
-            weightStoreSchema)
-          val b = batch.toDF()
-            .select(col(id1).cast("long").as("id1"),
-              col(id2).cast("long").as("id2"))
-            .localCheckpoint()
-          val ends = b.select(explode(array(col("id1"), col("id2"))).as("id"))
-            .distinct()
-          val storedEnds = prior.join(broadcast(ends), Seq("id"))
-            .select(col("id"))
-          val batchIds = ends.exceptAll(storedEnds)
-          val updated = graft.operators.Dedup.incrementalSoftDedup(
-            prior, b, batchIds).localCheckpoint()
-          updated.write.mode("overwrite")
-            .parquet(s"$weightStorePath/batch=$batchId")
-          sink(updated, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(pairs) { (batch, batchId) =>
+      val prior = weightStore.prior(batch.sparkSession, weightStorePath, batchId)
+      val b = batch.select(col(id1).cast("long").as("id1"),
+        col(id2).cast("long").as("id2")).localCheckpoint()
+      val ends = b.select(explode(array(col("id1"), col("id2"))).as("id"))
+        .distinct()
+      val storedEnds = prior.join(broadcast(ends), Seq("id")).select(col("id"))
+      val updated = graft.operators.Dedup.incrementalSoftDedup(
+        prior, b, ends.exceptAll(storedEnds)).localCheckpoint()
+      Store.write(updated, weightStorePath, batchId)
+      sink(updated, batchId)
     }
 
-  private val weightStoreSchema = StructType(Seq(
-    StructField("id", LongType),
-    StructField("cluster_id", LongType),
-    StructField("cluster_size", LongType),
-    StructField("weight_bp", LongType),
-    StructField("keep", BooleanType)))
+  /** The soft-dedup weight snapshot store (softDedup's schema). */
+  def readWeightStore(spark: SparkSession, path: String): DataFrame = weightStore.read(spark, path)
 
-  /** The soft-dedup weight store (softDedup's schema), empty-with-
-    * schema when the path does not exist yet; SNAPSHOT-per-batch
-    * layout, same narrow catch as [[readNearDupStore]]. */
-  def readWeightStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path, weightStoreSchema)
+  /** The canonical-pick snapshot store (cluster_id, canonical_id, score). */
+  def readPickStore(spark: SparkSession, path: String): DataFrame = pickStore.read(spark, path)
 
-  /** The canonical-pick store (cluster_id, canonical_id, score),
-    * empty-with-schema when the path does not exist yet;
-    * SNAPSHOT-per-batch layout, same narrow catch as
-    * [[readNearDupStore]]. */
-  def readPickStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("cluster_id", LongType),
-        StructField("canonical_id", LongType),
-        StructField("score", LongType))))
-
-  /** Max batch id present in a partitioned store, derived from the
-    * store's FILE LISTING on the driver — each input file path carries
-    * its `batch=<id>` partition directory segment, so the probe is
-    * pure path parsing: zero Spark jobs, zero data pages (the previous
-    * form aggregated the partition column, which column-prunes but
-    * still schedules a scan task per file every micro-batch). The
-    * LAST `batch=` segment in a path wins, so a store rooted under a
-    * directory that itself contains "batch=" still parses its own
-    * partitions. A partition directory with no files is invisible —
-    * exactly like it was to the aggregation probe (no rows). */
-  private def maxBatchFromFiles(df: DataFrame,
-      excluding: Option[Long] = None): Option[Long] = {
-    val re = "/batch=(-?\\d+)/".r
-    df.inputFiles.toSeq
-      .flatMap(f => re.findAllMatchIn(f).toSeq.lastOption.map(_.group(1).toLong))
-      .filterNot(b => excluding.contains(b))
-      .reduceOption(_ max _)
-  }
-
-  /** Latest label SNAPSHOT visible to `batchId`: the partition with
-    * the highest batch id among those ≠ batchId (self-excluded for
-    * retry idempotence), after the same foreign-lineage guard as
-    * [[storeForBatch]] — a partition BEYOND the current batch id can
-    * only come from a different checkpoint whose id reset would
-    * silently roll the labels back. Empty-with-schema when no prior
-    * snapshot exists (stream-first bootstrap). Both probes are
-    * driver-side file-listing parses ([[maxBatchFromFiles]]) — no
-    * per-batch store scan. */
-  private def labelSnapshotForBatch(store0: DataFrame,
-      batchId: Long): DataFrame =
-    snapshotForBatch(store0, batchId, StructType(Seq(
-      StructField("id", LongType),
-      StructField("cluster_id", LongType))))
-
-  /** SNAPSHOT-layout store read for batch `batchId`: the latest prior
-    * snapshot (whole-table-per-batch stores — labels, canonical
-    * picks), with the one-checkpoint-per-store lineage guard and the
-    * empty-with-schema stream-first bootstrap. Both probes are
-    * driver-side file-listing parses ([[maxBatchFromFiles]]) — no
-    * per-batch store scan. */
-  private def snapshotForBatch(store0: DataFrame, batchId: Long,
-      emptySchema: StructType): DataFrame =
-    if (store0.columns.contains("batch")) {
-      val maxAll = maxBatchFromFiles(store0)
-      val maxPrev = maxBatchFromFiles(store0, excluding = Some(batchId))
-      require(maxAll.forall(_ <= batchId),
-        s"streaming snapshot store: found batch=${maxAll.get} snapshot beyond " +
-          s"this run's batch id $batchId — the store was written by a " +
-          "different checkpoint lineage (one checkpoint per store); " +
-          "restarting with a fresh checkpoint needs the store " +
-          "re-bootstrapped under batch=<negative id>")
-      maxPrev match {
-        case None =>
-          store0.sparkSession.createDataFrame(
-            store0.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            emptySchema)
-        case Some(mp) =>
-          store0.filter(col("batch") === mp).drop("batch")
-      }
-    } else store0
-
-  /** The substring-dedup window-hash store (gh), empty-with-schema
-    * when the path does not exist yet; same narrow catch and
-    * partition-layout contract as [[readNearDupStore]]. */
+  /** The substring-dedup window-hash store (gh). */
   def readSubstringStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(StructField("gh", StringType))))
+    substringStore.read(spark, path)
 
-  /** ONE-CHECKPOINT-PER-STORE guard + self-exclusion for the
-    * foreachBatch increment family. The `batch=<id>` layout is
-    * retry-idempotent WITHIN one checkpoint (a retried batch
-    * overwrites its own partition and reads everything else), but
-    * restarting a stream with a NEW checkpoint (batch ids reset to 0)
-    * against an existing store would silently overwrite the prior
-    * run's `batch=0..N` partitions — permanently dropping those
-    * survivors' records, so previously-ingested duplicates would be
-    * re-admitted. Streaming batches commit in order, so a legitimate
-    * run can only ever see store partitions ≤ its own batch id (its
-    * retry's partition included); any partition BEYOND it proves the
-    * store belongs to a different checkpoint lineage — fail loud. The
-    * probe is a driver-side file-listing parse ([[maxBatchFromFiles]])
-    * — zero jobs, zero data pages, however many partitions the store
-    * has grown. Bootstrap partitions use negative ids, which never
-    * trip the guard. */
-  private def storeForBatch(store0: DataFrame, batchId: Long): DataFrame =
-    if (store0.columns.contains("batch")) {
-      val maxB = maxBatchFromFiles(store0).getOrElse(Long.MinValue)
-      require(maxB <= batchId,
-        s"streaming increment store: found batch=$maxB partition beyond " +
-          s"this run's batch id $batchId — the store was written by a " +
-          "different checkpoint lineage (one checkpoint per store); " +
-          "restarting with a fresh checkpoint needs a compacted store " +
-          "re-bootstrapped under batch=<negative id>")
-      store0.filter(col("batch") =!= batchId).drop("batch")
-    } else store0
-
-  /** Compact a streaming increment store's `batch=<id>` partitions
-    * into ONE bootstrap partition — the operator form of what was
-    * previously a documented manual delete. Both layouts:
+  /** Compact a store's `batch=<id>` partitions into ONE bootstrap
+    * partition `batch=<keepBatch>`:
     *
-    *  - APPEND family (exact/near-dup/substring/semantic stores, the
-    *    [[streamingIncrementalNearDup]] contract): the compacted
-    *    content is the UNION of every partition's rows — a pure
+    *  - APPEND layout: the UNION of every partition's rows — a pure
     *    merge, read-equivalent before and after.
-    *  - SNAPSHOT family (the [[streamingIncrementalClusters]] label
-    *    store): each partition is a complete replacement table, so
-    *    the compacted content is ONLY the newest snapshot's rows;
-    *    older snapshots are retry/rollback history whose usefulness
-    *    ends once their batch commits.
+    *  - SNAPSHOT layout: only the newest snapshot's rows; older
+    *    snapshots are retry history whose use ends once their batch
+    *    commits.
     *
-    * The result lands under `batch=<keepBatch>` with keepBatch
-    * REQUIRED negative — the bootstrap-id convention, which is
-    * exactly what makes the compacted store safe against the
-    * one-checkpoint-per-store lineage guard: a NEW stream checkpoint
-    * restarts at batch 0, and a store whose only partition is
-    * negative can never sit beyond it. (Compacting is therefore the
-    * sanctioned way to hand a store to a fresh checkpoint — the
-    * guard's error message points here.)
+    * keepBatch must be negative, the bootstrap-id convention: a NEW
+    * checkpoint restarts at batch 0, and a store whose only partition
+    * is negative never sits beyond it, so compacting is the sanctioned
+    * way to hand a store to a fresh checkpoint (the lineage guard's
+    * error points here).
     *
     * Scale shape: one store scan + one write + three filesystem
-    * metadata ops — content is written to a SIBLING temp directory
-    * (`<store>.compacting`) and swapped in FAIL-SAFE: the live store
-    * renames to `<store>.old`, the temp dir renames into place, then
-    * `.old` deletes. The operator never reads a path it is
-    * concurrently rewriting (the recacheByPath hazard) and never pins
-    * store-sized data in executor memory; at EVERY crash point a
-    * complete copy of the store survives on disk (live, `.old`, or
-    * `.compacting`), and the store READERS refuse to bootstrap empty
-    * while swap debris exists ([[readStoreOrEmpty]] fails loud on a
-    * missing store path with a sibling `.old`/`.compacting` dir), so
-    * an interrupted swap can never silently restart history and
-    * re-admit every duplicate. Recovery is renaming the surviving
-    * copy back — the reader's error message says which. Run it only
-    * while the stream is stopped (the same discipline as any
-    * checkpoint surgery). A flat (unpartitioned) store or a missing
-    * path is a no-op. */
+    * metadata ops. Content is written to a SIBLING `<store>.compacting`
+    * and swapped in fail-safe: the live store renames to `<store>.old`,
+    * the temp dir renames into place, then `.old` deletes. The operator
+    * never reads a path it is rewriting, and at every crash point a
+    * complete copy survives on disk; [[Store.read]] refuses to start
+    * empty while that debris exists, and so does this operator. Run it
+    * only while the stream is stopped. A flat store or a missing path
+    * is a no-op. */
   def compactStore(spark: SparkSession, storePath: String,
       snapshotLayout: Boolean, keepBatch: Long = -1L): Unit = {
     require(keepBatch < 0,
       s"compacted partition must use a bootstrap (negative) batch id " +
         s"so the lineage guard accepts a fresh checkpoint, got $keepBatch")
-    val store =
-      try spark.read.option("basePath", storePath).parquet(storePath)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if Seq("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-              .exists(c => Option(e.getCondition).exists(_.startsWith(c))) =>
-          val p = new org.apache.hadoop.fs.Path(storePath)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val debris = Seq(".old", ".compacting")
-            .map(s => new org.apache.hadoop.fs.Path(storePath + s))
-            .filter(fs.exists)
-          if (debris.nonEmpty) throw new IllegalStateException(
-            s"compactStore: store at $storePath is missing but a prior " +
-              s"interrupted swap left ${debris.mkString(", ")} — recover " +
-              "by renaming the surviving copy back before compacting")
-          return // nothing to compact
-      }
-    if (!store.columns.contains("batch")) return // already flat
+    // a missing store reads as a column-less frame: nothing to compact
+    val store = Store(new StructType()).read(spark, storePath)
+    if (!store.columns.contains("batch")) return // missing or already flat
     val content =
-      if (snapshotLayout) maxBatchFromFiles(store) match {
+      if (snapshotLayout) Store.batchIds(store).reduceOption(_ max _) match {
         case Some(mb) => store.filter(col("batch") === mb).drop("batch")
         case None => store.drop("batch") // partitions exist but hold no files
       }
@@ -995,12 +623,7 @@ object EventsStreaming {
     val tmp = new org.apache.hadoop.fs.Path(storePath + ".compacting")
     val oldP = new org.apache.hadoop.fs.Path(storePath + ".old")
     fs.delete(tmp, true)
-    content.write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(tmp, s"batch=$keepBatch").toString)
-    // fail-safe three-step swap: live -> .old, temp -> live, drop
-    // .old. A complete store copy exists on disk at every crash
-    // point, and readStoreOrEmpty fails loud (never bootstraps empty)
-    // while .old/.compacting debris exists next to a missing store.
+    Store.write(content, tmp.toString, keepBatch)
     fs.delete(oldP, true) // debris from a crash AFTER a completed swap
     if (!fs.rename(storeP, oldP))
       throw new IllegalStateException(
@@ -1015,108 +638,58 @@ object EventsStreaming {
     fs.delete(oldP, true)
   }
 
-  /** Streaming MANIFEST maintenance (X160) — the always-on form of the
-    * X128/X159 versioning loop: each micro-batch reduces to its
+  /** Streaming MANIFEST maintenance (X160): each batch appends its
     * content-digest manifest (#groups rows — counts, 60-bit XOR, mod-p
-    * sum) and appends it under `batch=<id>`; the corpus manifest at
-    * any moment is [[graft.operators.ScaleOps.mergeManifests]] over
-    * the store ([[readManifestStore]]/[[mergedManifest]]), EXACTLY
-    * equal to a full-corpus digest — so snapshot validation and X129
-    * diffs never rescan what the stream already ingested. The store is
-    * APPEND layout: retry idempotence via per-batch overwrite +
-    * self-excluded guard, the one-checkpoint-per-store lineage guard,
-    * and X155 compaction all apply verbatim (compaction merges
-    * partition rows; the merge-at-read collapses them — order-free by
-    * construction). The batch manifest plan reads only the batch, so
-    * no pre-write localCheckpoint is needed (no recacheByPath hazard,
-    * unlike the dedup siblings whose plans read the store path). */
+    * sum); the corpus manifest at any moment is [[mergedManifest]]
+    * over the store, EXACTLY a full-corpus digest, so validation and
+    * X129 diffs never rescan what the stream ingested. Compaction
+    * merges partition rows and the merge-at-read collapses them,
+    * order-free by construction. The manifest reads only the batch:
+    * the prior read is the lineage guard alone, and no checkpoint. */
   def streamingManifestMaintenance(docs: DataFrame, storePath: String,
       groupCol: String, cols: Seq[String])(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          // lineage guard only — the batch manifest never reads the store
-          storeForBatch(readManifestStore(spark, storePath, groupCol), batchId)
-          val manifest = graft.operators.ScaleOps
-            .contentDigest(batch.toDF(), groupCol, cols)
-          manifest.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(manifest, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      manifestStore(groupCol).prior(batch.sparkSession, storePath, batchId)
+      val manifest = graft.operators.ScaleOps.contentDigest(batch, groupCol, cols)
+      Store.write(manifest, storePath, batchId)
+      sink(manifest, batchId)
     }
 
-  /** Streaming PCA training-state maintenance (X221) — the X160
-    * manifest pattern applied to the X220 moment algebra: each
-    * micro-batch of vectors reduces to its (dims+1)²-row moment table
-    * and APPENDS it under `batch=<id>` (moments are exact mergeable
-    * partials, so the layout is append + merge-at-read like the
-    * manifests, not snapshot-per-batch); the corpus training state at
-    * any moment is [[foldedMoments]] over the store, and components
-    * trained from it are BIT-EQUAL to a full-corpus retrain — the
-    * always-on PCA index never rescans what the stream ingested.
-    * Append contracts verbatim: retry idempotence by per-batch
-    * overwrite, the one-checkpoint-per-store lineage guard, negative-id
-    * bootstrap; no pre-write localCheckpoint needed (the batch moment
-    * plan never reads the store path). */
+  /** Streaming PCA training-state maintenance (X221): the X160 pattern
+    * on the X220 moment algebra — each batch appends its
+    * (dims+1)²-row moment table (exact mergeable partials), and
+    * components trained from [[foldedMoments]] are BIT-EQUAL to a
+    * full-corpus retrain. Guard-only prior read, no checkpoint. */
   def streamingPcaMoments(vectors: DataFrame, storePath: String,
       vecCol: String, dims: Int, scale: Double = 1e6)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          // lineage guard only — the batch moments never read the store
-          storeForBatch(readMomentStore(spark, storePath), batchId)
-          val m = graft.operators.Similarity.pcaMomentRecords(
-            batch.toDF(), vecCol, dims, scale)
-          m.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(m, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(vectors) { (batch, batchId) =>
+      momentStore.prior(batch.sparkSession, storePath, batchId)
+      val m = graft.operators.Similarity.pcaMomentRecords(batch, vecCol, dims, scale)
+      Store.write(m, storePath, batchId)
+      sink(m, batchId)
     }
 
-  /** STREAMING unigram-LM training-state maintenance (X225) — the
-    * X221 pattern applied to the tokenizer's word-frequency dict:
-    * each micro-batch of documents reduces to its (w, f) word-count
-    * table and APPENDS it under `batch=<id>` (word counts are exact
-    * mergeable partials — [[graft.operators.Corpus.unigramWordCounts]]
-    * — so the layout is append + merge-at-read like the moment and
-    * manifest stores, NOT snapshot-per-batch); the training state at
-    * any moment is the word-keyed fold over the store
-    * ([[foldedWordCounts]], a vocab·#batches-row aggregation, never a
-    * corpus rescan), and a model trained from the fold is BIT-equal
-    * to a full retrain over everything streamed. Append contracts
-    * verbatim: per-batch overwrite retry idempotence, the
-    * one-checkpoint-per-store lineage guard, negative-id bootstrap;
-    * no pre-write localCheckpoint needed (the batch dict plan never
-    * reads the store path). */
+  /** STREAMING unigram-LM training-state maintenance (X225): the X221
+    * pattern on the tokenizer's word dict — each batch appends its
+    * (w, f) counts ([[graft.operators.Corpus.unigramWordCounts]], exact
+    * mergeable partials), and a model trained from [[foldedWordCounts]]
+    * is BIT-equal to a full retrain over everything streamed.
+    * Guard-only prior read, no checkpoint. */
   def streamingUnigramCounts(docs: DataFrame, storePath: String,
       textCol: String)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          // lineage guard only — the batch dict never reads the store
-          storeForBatch(readWordCountStore(spark, storePath), batchId)
-          val c = graft.operators.Corpus.unigramWordCounts(
-            batch.toDF(), textCol)
-          c.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(c, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      wordCountStore.prior(batch.sparkSession, storePath, batchId)
+      val c = graft.operators.Corpus.unigramWordCounts(batch, textCol)
+      Store.write(c, storePath, batchId)
+      sink(c, batchId)
     }
 
-  /** The per-batch word-count store (w, f), empty-with-schema when
-    * the path does not exist yet; append layout, same narrow catch as
-    * [[readNearDupStore]]. */
+  /** The per-batch word-count store (w, f). */
   def readWordCountStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("w", StringType),
-        StructField("f", LongType))))
+    wordCountStore.read(spark, path)
 
   /** The tokenizer training state AS OF NOW: every batch partition's
     * dict folded word-wise — feed it to
@@ -1125,15 +698,9 @@ object EventsStreaming {
     readWordCountStore(spark, path).drop("batch")
       .groupBy(col("w")).agg(sum(col("f")).as("f"))
 
-  /** The per-batch PCA moment store (i, j, s), empty-with-schema when
-    * the path does not exist yet; append layout, same narrow catch as
-    * [[readNearDupStore]]. */
+  /** The per-batch PCA moment store (i, j, s). */
   def readMomentStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("i", IntegerType),
-        StructField("j", IntegerType),
-        StructField("s", DecimalType(38, 0)))))
+    momentStore.read(spark, path)
 
   /** The corpus training state AS OF NOW: every batch partition's
     * moment table folded cell-wise — a (dims+1)²·#batches-row
@@ -1144,20 +711,10 @@ object EventsStreaming {
       .agg(sum(col("s")).cast("decimal(38,0)").as("s"))
 
   /** The per-batch manifest store (groupCol, n_rows, xor_digest,
-    * sum_digest), empty-with-schema when the path does not exist yet;
-    * same narrow catch and partition-layout contract as
-    * [[readNearDupStore]]. The group column bootstraps as STRING —
-    * matching [[graft.operators.ScaleOps.contentDigest]]'s
-    * exactly-stringifying column contract's most common key type;
-    * integral group keys read back fine from real partitions. */
+    * sum_digest); the group column bootstraps as STRING. */
   def readManifestStore(spark: SparkSession, path: String,
       groupCol: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField(groupCol, StringType),
-        StructField("n_rows", LongType),
-        StructField("xor_digest", LongType),
-        StructField("sum_digest", LongType))))
+    manifestStore(groupCol).read(spark, path)
 
   /** The corpus manifest AS OF NOW: every batch partition's manifest
     * folded by [[graft.operators.ScaleOps.mergeManifests]] — a
@@ -1190,295 +747,132 @@ object EventsStreaming {
     graft.operators.ScaleOps.mergeManifests(upTo, groupCol)
   }
 
-  /** Streaming DATA-QUALITY maintenance (X168) — X164 connected to the
-    * ops loop the way X160 did for manifests: each micro-batch runs
-    * [[graft.operators.ScaleOps.dqSuite]] over the batch and appends
-    * the #constraints-row verdict table under `batch=<id>`; the
-    * constraint HISTORY is the store, and
-    * [[graft.operators.ScaleOps.dqDrift]] over it gives the
-    * Deequ-style "quality moved" anomaly signal (metric vs trailing
-    * window, integer arithmetic). The store contracts apply verbatim:
-    * retry idempotence via per-batch overwrite, the
-    * one-checkpoint-per-store lineage guard ([[storeForBatch]] —
-    * probe only; the verdict never reads the store), bootstrap
-    * partitions at negative ids, X155 compaction layout. Per-batch
-    * cost is dqSuite's ONE aggregation pass over the batch (+ one
-    * short-key shuffle per uniqueness key set) and a
-    * #constraints-row write — the corpus is never rescanned and the
-    * history never rewritten. */
+  /** Streaming DATA-QUALITY maintenance (X168): each batch appends the
+    * #constraints-row [[graft.operators.ScaleOps.dqSuite]] verdict
+    * table; the store is the constraint HISTORY, and
+    * [[graft.operators.ScaleOps.dqDrift]] over it is the Deequ-style
+    * "quality moved" signal. Per batch: dqSuite's one aggregation pass
+    * (+ one short-key shuffle per uniqueness key set) and a
+    * #constraints-row write. Guard-only prior read, no checkpoint. */
   def streamingDqMaintenance(docs: DataFrame, storePath: String,
       rowChecks: Seq[(String, org.apache.spark.sql.Column)],
       completeness: Seq[String] = Nil,
       uniqueness: Seq[Seq[String]] = Nil)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          // lineage guard only — the verdict never reads the store
-          storeForBatch(readDqStore(spark, storePath), batchId)
-          val verdict = graft.operators.ScaleOps.dqSuite(
-            batch.toDF(), rowChecks, completeness, uniqueness)
-          verdict.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(verdict, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      dqStore.prior(batch.sparkSession, storePath, batchId)
+      val verdict = graft.operators.ScaleOps.dqSuite(
+        batch, rowChecks, completeness, uniqueness)
+      Store.write(verdict, storePath, batchId)
+      sink(verdict, batchId)
     }
 
-  /** Streaming HISTOGRAM maintenance (X191) — the distribution-drift
-    * monitor connected to the stream the way X168 did for constraint
-    * verdicts: each micro-batch appends its
+  /** Streaming HISTOGRAM maintenance (X191): each batch appends its
     * [[graft.operators.ScaleOps.binnedCounts]] partial (one (bin, n)
-    * row per occupied bin) under `batch=<id>`; the per-batch
-    * histogram HISTORY is the store, and
-    * [[graft.operators.ScaleOps.histogramStoreDrift]] over it is the
-    * "did the values move" signal per ingest batch. Store contracts
-    * verbatim (per-batch overwrite retry idempotence, the
-    * one-checkpoint-per-store lineage guard, negative-id bootstrap,
-    * X155 compaction layout). Per-batch cost: ONE bin partial-agg
-    * pass over the batch and a #bins-row write — the corpus is never
-    * rescanned, and histograms merge downstream by plain summation
-    * (the mergeable-partials property). */
+    * row per occupied bin); the store is the per-batch histogram
+    * history, and [[graft.operators.ScaleOps.histogramStoreDrift]] over
+    * it is the "did the values move" signal. Histograms merge
+    * downstream by plain summation. Guard-only prior read, no
+    * checkpoint. */
   def streamingHistogramMaintenance(docs: DataFrame, storePath: String,
       valueCol: String, binWidth: Long)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          // lineage guard only — the histogram never reads the store
-          storeForBatch(readHistogramStore(spark, storePath), batchId)
-          val h = graft.operators.ScaleOps.binnedCounts(
-            batch.toDF(), valueCol, binWidth)
-          h.write.mode("overwrite").parquet(s"$storePath/batch=$batchId")
-          sink(h, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      histogramStore.prior(batch.sparkSession, storePath, batchId)
+      val h = graft.operators.ScaleOps.binnedCounts(batch, valueCol, binWidth)
+      Store.write(h, storePath, batchId)
+      sink(h, batchId)
     }
 
-  /** The per-batch histogram store (bin, n), empty-with-schema when
-    * the path does not exist yet; same narrow catch and
-    * partition-layout contract as [[readNearDupStore]]. */
+  /** The per-batch histogram store (bin, n). */
   def readHistogramStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("bin", LongType),
-        StructField("n", LongType))))
+    histogramStore.read(spark, path)
 
-  /** Streaming PER-GROUP DQ maintenance (X184) — the keyed form of
-    * [[streamingDqMaintenance]], completing the DQ family's ladder
-    * the way the dedup families did (suite → keyed suite → stream →
-    * keyed stream): each micro-batch runs
-    * [[graft.operators.ScaleOps.dqSuiteByGroup]] and appends the
-    * (group × constraint)-row verdict table under `batch=<id>`; the
-    * keyed history is the store, and
-    * [[graft.operators.ScaleOps.dqGroupDrift]] over it is the
-    * per-TENANT anomaly signal — the monitor that catches a drifting
-    * source the global X168 report averages away. Store contracts
-    * verbatim (per-batch overwrite retry idempotence, the
-    * one-checkpoint-per-store lineage guard, negative-id bootstrap,
-    * X155 compaction layout). Per-batch cost is ONE group-keyed
-    * partial-agg pass over the batch (+ one (group, keys) shuffle per
-    * uniqueness set) and a #groups·#constraints-row write — the
-    * corpus is never rescanned, the history never rewritten. */
+  /** Streaming PER-GROUP DQ maintenance (X184): the keyed form of
+    * [[streamingDqMaintenance]] — each batch appends the
+    * (group × constraint)-row [[graft.operators.ScaleOps.dqSuiteByGroup]]
+    * verdicts, and [[graft.operators.ScaleOps.dqGroupDrift]] over the
+    * keyed history is the per-TENANT anomaly signal that catches a
+    * drifting source the global report averages away. Guard-only prior
+    * read, no checkpoint. */
   def streamingDqByGroupMaintenance(docs: DataFrame, storePath: String,
       groupCol: String,
       rowChecks: Seq[(String, org.apache.spark.sql.Column)],
       completeness: Seq[String] = Nil,
       uniqueness: Seq[Seq[String]] = Nil)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          // lineage guard only — the verdict never reads the store
-          storeForBatch(readDqGroupStore(spark, storePath, groupCol),
-            batchId)
-          val verdict = graft.operators.ScaleOps.dqSuiteByGroup(
-            batch.toDF(), groupCol, rowChecks, completeness, uniqueness)
-          verdict.write.mode("overwrite")
-            .parquet(s"$storePath/batch=$batchId")
-          sink(verdict, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      dqGroupStore(groupCol).prior(batch.sparkSession, storePath, batchId)
+      val verdict = graft.operators.ScaleOps.dqSuiteByGroup(
+        batch, groupCol, rowChecks, completeness, uniqueness)
+      Store.write(verdict, storePath, batchId)
+      sink(verdict, batchId)
     }
 
   /** The per-batch KEYED DQ verdict store — [[readDqStore]]'s layout
-    * with the group column in front (stored as string; the suite's
-    * group values round-trip through parquet as written). */
+    * with the group column (as string) in front. */
   def readDqGroupStore(spark: SparkSession, path: String,
       groupCol: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField(groupCol, StringType),
-        StructField("constraint", StringType),
-        StructField("n_bad", LongType),
-        StructField("value_bp", LongType),
-        StructField("passed", BooleanType))))
+    dqGroupStore(groupCol).read(spark, path)
 
-  /** Streaming incremental FINGERPRINT near-dup, micro-batch-composed
-    * (X169) — the streaming form of
-    * [[graft.operators.Dedup.incrementalFingerprintNearDup]], closing
-    * the modality symmetry: the perceptual-hash family (image grid
-    * phash, audio block hash) now has batch → increment → stream
-    * forms like the text families. The stream input is HASH records
-    * (idCol, hashCol) — decode/phash are map-side projections the
-    * caller composes upstream in the streaming DAG (typed
-    * mapPartitions, streaming-compatible), so payloads never reach
-    * the store or the shuffle. Each micro-batch dedups against the
-    * store (band keys bit-sliced from STORED hashes — history never
-    * re-decoded), then appends its survivors under `batch=<id>`.
-    * Store layout, retry idempotence (per-batch overwrite +
-    * self-excluded read), the lineage guard, and scoped cache release
-    * follow [[streamingIncrementalNearDup]] exactly; the survivors
-    * localCheckpoint eagerly because their plan READS the store path
-    * the write below extends (the recacheByPath hazard). */
+  /** Streaming incremental FINGERPRINT near-dup (X169): the
+    * perceptual-hash family's stream form. The input is HASH records
+    * (idCol, hashCol) — decode/phash are map-side projections composed
+    * upstream, so payloads never reach the store or the shuffle. Each
+    * batch runs [[graft.operators.Dedup.incrementalFingerprintNearDup]]
+    * against the store (band keys bit-sliced from STORED hashes) and
+    * appends its survivors. */
   def streamingIncrementalFingerprintNearDup(hashes: DataFrame,
       storePath: String, idCol: String, hashCol: String, bits: Int,
       bands: Int, maxDist: Int)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    hashes.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          val store = storeForBatch(
-            readFingerprintStore(spark, storePath), batchId)
-          val survivors = Dedup.incrementalFingerprintNearDup(
-            batch.toDF(), store, idCol, hashCol, bits, bands, maxDist)
-            .localCheckpoint()
-          survivors.write.mode("overwrite")
-            .parquet(s"$storePath/batch=$batchId")
-          sink(survivors, batchId)
-        }
-        ()
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(hashes) { (batch, batchId) =>
+      val store = fingerprintStore.prior(batch.sparkSession, storePath, batchId)
+      val survivors = Dedup.incrementalFingerprintNearDup(batch, store,
+        idCol, hashCol, bits, bands, maxDist).localCheckpoint()
+      Store.write(survivors, storePath, batchId)
+      sink(survivors, batchId)
     }
 
-  /** The fingerprint near-dup store (id, sig — one integer hash per
-    * media object), empty-with-schema when the path does not exist
-    * yet; same narrow catch and partition-layout contract as
-    * [[readNearDupStore]]. */
+  /** The fingerprint near-dup store (id, sig — one hash per object). */
   def readFingerprintStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("id", LongType),
-        StructField("sig", LongType))))
+    fingerprintStore.read(spark, path)
 
-  /** Streaming QUARANTINE routing (X177) — X165 connected to the
-    * stream: each micro-batch splits on the row checks (pure map-side
-    * — routing adds ZERO shuffles to the stream), valid rows flow to
-    * the caller's sink, and quarantined rows land in a DEAD-LETTER
-    * store under `batch=<id>` carrying their `_violations` reason
-    * list — the audit trail a takedown/review loop replays. Store
-    * contracts verbatim: per-batch overwrite (retry idempotence), the
-    * one-checkpoint-per-store lineage guard (a foreign checkpoint
-    * would silently overwrite audit history), negative-id bootstrap
-    * partitions, X155 compaction layout. The guard read derives its
-    * empty-bootstrap schema from the batch itself (the dead-letter
-    * schema IS the input schema + `_violations`). */
+  /** Streaming QUARANTINE routing (X177): each batch splits on the row
+    * checks (map-side — routing adds no shuffle), valid rows flow to
+    * `valid`, and quarantined rows land in a DEAD-LETTER store with
+    * their `_violations` reason list — the audit trail a review loop
+    * replays. The dead-letter schema is the batch's own plus
+    * `_violations`. Guard-only prior read, no checkpoint. */
   def streamingQuarantine(docs: DataFrame, deadLetterPath: String,
       checks: Seq[(String, org.apache.spark.sql.Column)])(
-      valid: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.core.Caches.releaseScoped[Unit] {
-          // lineage guard only — routing never reads the store
-          storeForBatch(readDeadLetterStore(spark, deadLetterPath,
-            batch.schema), batchId)
-          val (ok, bad) = graft.operators.ScaleOps.quarantineSplit(
-            batch.toDF(), checks)
-          bad.write.mode("overwrite")
-            .parquet(s"$deadLetterPath/batch=$batchId")
-          valid(ok, batchId)
-        }
-        ()
+      valid: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    Store.maintain(docs) { (batch, batchId) =>
+      deadLetterStore(batch.schema).prior(batch.sparkSession, deadLetterPath, batchId)
+      val (ok, bad) = graft.operators.ScaleOps.quarantineSplit(batch, checks)
+      Store.write(bad, deadLetterPath, batchId)
+      valid(ok, batchId)
     }
 
-  /** The dead-letter store: the ROUTED rows' own schema plus their
-    * `_violations` reason list; empty-with-schema when the path does
-    * not exist yet (same narrow catch and partition-layout contract
-    * as [[readNearDupStore]]). Callers pass the row schema the
-    * stream routes (reason list appended here). */
+  /** The dead-letter store: the routed rows' schema `rowSchema` plus
+    * their `_violations` reason list. */
   def readDeadLetterStore(spark: SparkSession, path: String,
       rowSchema: StructType): DataFrame =
-    readStoreOrEmpty(spark, path, StructType(rowSchema.fields :+
-      StructField("_violations", ArrayType(StringType))))
+    deadLetterStore(rowSchema).read(spark, path)
 
-  /** The per-batch DQ verdict store (constraint, n_bad, value_bp,
-    * passed), empty-with-schema when the path does not exist yet; same
-    * narrow catch and partition-layout contract as
-    * [[readNearDupStore]]. */
-  def readDqStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("constraint", StringType),
-        StructField("n_bad", LongType),
-        StructField("value_bp", LongType),
-        StructField("passed", BooleanType))))
+  /** The per-batch DQ verdict store (constraint, n_bad, value_bp, passed). */
+  def readDqStore(spark: SparkSession, path: String): DataFrame = dqStore.read(spark, path)
 
-  /** The semantic-dedup store (id, embedding, cell), empty-with-schema
-    * when the path does not exist yet; same narrow catch and
-    * partition-layout contract as [[readNearDupStore]]. */
+  /** The semantic-dedup store (id, embedding, cell). */
   def readSemanticStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("id", LongType),
-        StructField("embedding", ArrayType(FloatType)),
-        StructField("cell", LongType))))
+    semanticStore.read(spark, path)
 
-  /** The exact-dedup fingerprint store, empty-with-schema when the
-    * path does not exist yet; same narrow catch and partition-layout
-    * contract as [[readNearDupStore]]. */
-  def readExactStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(StructField("fp", StringType))))
+  /** The exact-dedup fingerprint store (fp). */
+  def readExactStore(spark: SparkSession, path: String): DataFrame = exactStore.read(spark, path)
 
-  /** The near-dup store as a DataFrame, empty-with-schema when the
-    * path does not exist yet (stream-first deployments bootstrap the
-    * store from their own first batches). Partition discovery exposes
-    * the per-batch `batch=` directories as a `batch` column (the
-    * retry-idempotence layout); a flat bootstrap store reads without
-    * it. The catch is NARROW — only the no-data-at-path conditions;
-    * a real read failure (corrupt store) must fail the batch, not
-    * silently restart history. */
+  /** The near-dup index store (id, shingles, sig). */
   def readNearDupStore(spark: SparkSession, path: String): DataFrame =
-    readStoreOrEmpty(spark, path,
-      StructType(Seq(
-        StructField("id", LongType),
-        StructField("shingles", ArrayType(StringType)),
-        StructField("sig", ArrayType(StringType)))))
-
-  /** Shared store-or-empty read for the streaming increment family:
-    * partition discovery exposes the per-batch `batch=` dirs as a
-    * `batch` column; a not-yet-existing path yields the empty frame
-    * with the store's declared schema (stream-first bootstrap). The
-    * catch is NARROW — only the no-data-at-path conditions, kept in
-    * ONE place; a real read failure (corrupt store) must fail the
-    * batch, not silently restart history. */
-  private def readStoreOrEmpty(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    try spark.read.option("basePath", path).parquet(path)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if Seq("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            .exists(c => Option(e.getCondition).exists(_.startsWith(c))) =>
-        // a missing store is a legitimate stream-first bootstrap ONLY
-        // when no interrupted compactStore swap left a complete copy
-        // next door — bootstrapping empty over swap debris would
-        // silently restart history and re-admit every duplicate
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val debris = Seq(".old", ".compacting")
-          .map(s => new org.apache.hadoop.fs.Path(path + s))
-          .filter(fs.exists)
-        if (debris.nonEmpty) throw new IllegalStateException(
-          s"store at $path is missing but an interrupted compactStore " +
-            s"swap left ${debris.mkString(", ")} — recover by renaming " +
-            "the surviving copy back to the store path instead of " +
-            "bootstrapping empty (which would re-admit every duplicate)")
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    nearDupStore.read(spark, path)
 
   // ---------------- sessionization ----------------
 

@@ -48,7 +48,7 @@ class SimilaritySpec extends SparkSpec {
       (Seq(1.0f, 0.0f), Seq(0.0f, 1.0f), 0.0),
       (Seq(1.0f, 1.0f), Seq(1.0f, 0.0f), 0.707107))
       .toDF("a", "b", "want")
-    val got = df.select(Similarity.cosineAuto(df, col("a"), col("b")).as("c"), col("want"))
+    val got = df.select(Similarity.cosineAuto(col("a"), col("b")).as("c"), col("want"))
       .as[(Double, Double)].collect()
     got.foreach { case (c, want) => assert(c == want) }
   }
@@ -168,9 +168,9 @@ class SimilaritySpec extends SparkSpec {
       keys.groupBy("band", "bucket").count()
         .agg(max("count")).as[Long].collect()(0)
     val single = emb.select(lit(0).as("band"),
-      Similarity.signSignatureAuto(emb, col("embedding"), 8, 64).as("bucket"))
+      Similarity.signSignatureAuto(col("embedding"), 8).as("bucket"))
     val sig60 = emb.select(
-      Similarity.signSignatureAuto(emb, col("embedding"), 60, 64).as("sig"))
+      Similarity.signSignatureAuto(col("embedding"), 60).as("sig"))
     val banded = sig60.select(posexplode(array((0 until 6).map(b =>
       shiftrightunsigned(col("sig"), b * 10).bitwiseAND(lit(1023L))): _*))
       .as(Seq("band", "bucket")))

@@ -1450,6 +1450,80 @@ class StreamingSpec extends SparkSpec {
     assert(EventsStreaming.readExactStore(spark, s"$base/fresh").count() == 0L)
   }
 
+  /** Runs `stream` over `rows` (one source file, so one micro-batch 0)
+    * against a store bootstrapped with `boot`, twice: cleanly, and with
+    * the sink throwing on its first call — after the store write,
+    * before the commit — then, with that write torn to one row,
+    * restarted from the SAME checkpoint, which replays batch 0 over its
+    * own partial write. Returns each run's (sink rows, store rows with
+    * their `batch`). */
+  private def cleanAndReplayed(rows: org.apache.spark.sql.DataFrame,
+      boot: org.apache.spark.sql.DataFrame)(
+      stream: (org.apache.spark.sql.DataFrame, String,
+        (org.apache.spark.sql.DataFrame, Long) => Unit) =>
+        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
+      : Seq[(Set[org.apache.spark.sql.Row], Set[org.apache.spark.sql.Row])] =
+    Seq(false, true).map { inject =>
+      val base = Files.createTempDirectory("graft-replay-spec").toString
+      val store = s"$base/store"
+      rows.coalesce(1).write.parquet(s"$base/src")
+      boot.write.parquet(s"$store/batch=-1")
+      val sunk = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
+      var failNext = inject
+      def run(): Unit =
+        stream(spark.readStream.schema(rows.schema).parquet(s"$base/src"), store,
+          { (out, _) =>
+            if (failNext) {
+              failNext = false
+              throw new IllegalStateException("injected sink failure")
+            }
+            sunk ++= out.collect()
+          })
+          .option("checkpointLocation", s"$base/ckpt")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start().awaitTermination()
+      if (inject) {
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+        val torn = s"$store/batch=0"
+        assert(Files.exists(java.nio.file.Paths.get(torn)),
+          "the failed attempt must have written its partition before the sink")
+        // a crash mid-write leaves the partition torn: keep one of its rows
+        val part = spark.read.parquet(torn)
+        spark.createDataFrame(java.util.Arrays.asList(part.head()), part.schema)
+          .write.mode("overwrite").parquet(torn)
+      }
+      run()
+      (sunk.toSet, spark.read.option("basePath", store).parquet(store).collect().toSet)
+    }
+
+  test("at-least-once replay from the same checkpoint: append store (exact dedup) equals a clean run") {
+    val runs = cleanAndReplayed(
+      Seq((1L, "aaa bbb"), (2L, "ccc ddd"), (3L, "aaa bbb"), (4L, "stored text"))
+        .toDF("doc_id", "text"),
+      Seq("stored text").toDF("t")
+        .select(graft.functions.TextFunctions.fingerprintMd5(col("t")).as("fp"))) {
+      (src, store, sink) =>
+        EventsStreaming.streamingIncrementalExactDedup(src, store, "text", "doc_id")(sink)
+    }
+    val (clean, replayed) = (runs(0), runs(1))
+    assert(clean._1.map(_.getAs[Long]("doc_id")) == Set(1L, 2L))
+    assert(replayed._1 == clean._1, "the replayed batch must reproduce the clean sink rows")
+    assert(replayed._2 == clean._2, "the replayed batch must leave the clean store")
+  }
+
+  test("at-least-once replay from the same checkpoint: snapshot store (soft-dedup weights) equals a clean run") {
+    val runs = cleanAndReplayed(Seq((2L, 10L), (30L, 30L)).toDF("id1", "id2"),
+      Seq((1L, 1L, 2L, 5000L, true), (2L, 1L, 2L, 5000L, false), (20L, 20L, 1L, 10000L, true))
+        .toDF("id", "cluster_id", "cluster_size", "weight_bp", "keep")) {
+      (src, store, sink) =>
+        EventsStreaming.streamingSoftDedupMaintenance(src, store)(sink)
+    }
+    val (clean, replayed) = (runs(0), runs(1))
+    assert(clean._1.map(_.getAs[Long]("id")) == Set(1L, 2L, 10L, 20L, 30L))
+    assert(replayed._1 == clean._1, "the replayed batch must reproduce the clean snapshot")
+    assert(replayed._2 == clean._2, "the replayed batch must leave the clean store")
+  }
+
   test("stateful sessionize emits closed sessions matching batch") {
     val ckpt = Files.createTempDirectory("graft-ckpt-sess").toString
     val evStream = spark.readStream.schema(EventsStreaming.eventSchema)

@@ -10,12 +10,13 @@ import org.apache.spark.sql.functions.{array, col, sin}
 
 import graft.graph.Ranks
 import graft.operators.{Clustering, ScaleOps, Similarity}
+import graft.streaming.EventsStreaming
 
 /** Job-shape guard for the operators that finish a small input on the
   * driver (the rank series' supersteps, k-means / IVF-PQ training,
-  * sequence packing): a per-round shuffle, materialization or job must
-  * fail here, on a tiny input, long before it shows as wall time at
-  * scale. */
+  * sequence packing) and for one micro-batch of the store-maintenance
+  * streams: a per-round shuffle, materialization or job must fail
+  * here, on a tiny input, long before it shows as wall time at scale. */
 class SuperstepGuardSpec extends SparkSpec {
   import spark.implicits._
 
@@ -114,5 +115,51 @@ class SuperstepGuardSpec extends SparkSpec {
     assert(small == driver)
     // the distributed loop: one shuffling job per update round
     assert(jobs.count(_.stages > 1) >= 2, s"$jobs")
+  }
+
+  /** Jobs of ONE micro-batch: `rows` land as one source file, a store
+    * holds `boot` under its bootstrap partition, and `run` starts the
+    * maintenance stream over the source and store directories. */
+  private def oneBatchJobs(rows: org.apache.spark.sql.DataFrame,
+      boot: org.apache.spark.sql.DataFrame)(
+      run: (org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Seq[Job] = {
+    val base = java.nio.file.Files.createTempDirectory("graft-batch-guard").toString
+    rows.coalesce(1).write.parquet(s"$base/src")
+    boot.coalesce(1).write.parquet(s"$base/store/batch=-1")
+    val src = spark.readStream.schema(rows.schema).parquet(s"$base/src")
+    jobsOf {
+      run(src, s"$base/store").option("checkpointLocation", s"$base/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+    }
+  }
+
+  // The bounds are the counts measured before the store protocol moved
+  // behind graft.streaming.Store (exact dedup 13 in every run, soft
+  // dedup 41 or 42 across runs); a new probe, checkpoint or write per
+  // batch raises them.
+
+  test("one micro-batch of streaming exact dedup issues at most 13 jobs") {
+    val jobs = oneBatchJobs(
+      Seq((1L, "aaa bbb"), (2L, "ccc ddd"), (3L, "aaa bbb"), (4L, "eee fff"))
+        .toDF("doc_id", "text"),
+      Seq("x").toDF("fp")) { (src, store) =>
+      EventsStreaming.streamingIncrementalExactDedup(src, store, "text", "doc_id") {
+        (sv, _) => assert(sv.count() == 3L)
+      }
+    }
+    assert(jobs.size <= 13, s"${jobs.size} jobs: $jobs")
+  }
+
+  test("one micro-batch of streaming soft-dedup maintenance issues at most 42 jobs") {
+    val jobs = oneBatchJobs(Seq((2L, 10L), (30L, 30L)).toDF("id1", "id2"),
+      Seq((1L, 1L, 2L, 5000L, true), (2L, 1L, 2L, 5000L, false))
+        .toDF("id", "cluster_id", "cluster_size", "weight_bp", "keep")) { (src, store) =>
+      EventsStreaming.streamingSoftDedupMaintenance(src, store) {
+        (upd, _) => assert(upd.count() == 4L)
+      }
+    }
+    assert(jobs.size <= 42, s"${jobs.size} jobs: $jobs")
   }
 }

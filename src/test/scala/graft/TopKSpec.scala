@@ -15,7 +15,7 @@ class TopKSpec extends SparkSpec {
     val queries = corpus.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val scored = corpus.join(broadcast(queries))
-      .withColumn("score", Similarity.cosineAuto(corpus, col("embedding"), col("q_vec")))
+      .withColumn("score", Similarity.cosineAuto(col("embedding"), col("q_vec")))
       .select("q_id", "vec_id", "score")
 
     // independent window reference (bruteForceTopK itself now uses the
