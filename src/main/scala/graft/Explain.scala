@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Plan/timing inspector: `runMain graft.Explain <query> <sfDir>`
   * prints the formatted physical plan, then executes to the noop sink
-  * with per-run timing. Dev tool for the "is this the plan I'd want at
-  * 100 TB" iteration loop. */
+  * with per-run timing, jobs, stages and generated classes compiled.
+  * Dev tool for the "is this the plan I'd want at 100 TB" iteration
+  * loop. */
 object Explain {
   def main(args: Array[String]): Unit = {
     // comma-separated list → one warm JVM measures them all (per-query
@@ -40,11 +42,15 @@ object Explain {
         // (connected components, k-means, localCheckpoint supersteps) do
         // real work at construction — Bench pays it, so Explain must too
         jobs.set(0); stages.set(0)
+        val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
+        // a warm run reuses its generated classes: nonzero means the
+        // codegen cache evicted them or the plan changed between runs
+        val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
         println(f"[explain] $name run$i: ${(System.nanoTime() - t0) / 1e9}%.2fs " +
-          s"(${jobs.get()} jobs, ${stages.get()} stages)")
+          s"(${jobs.get()} jobs, ${stages.get()} stages, $compiled classes compiled)")
         // cold-cache, warm-JVM: drop what the query persisted so run2/3
         // time the real per-pass cost Bench pays, not a cache replay
         spark.catalog.clearCache()

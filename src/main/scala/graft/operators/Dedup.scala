@@ -322,7 +322,8 @@ object Dedup {
   /** LSH candidate pairs: split the signature into `bands` bands of
     * `rowsPerBand`, bucket on (bandIdx, concat(band)), emit distinct
     * (id1 < id2) pairs sharing any bucket. The band explode costs
-    * rows×bands; the self-join shuffles only (bandKey, id) pairs. */
+    * rows×bands; the one bucket exchange shuffles only (bandKey, id)
+    * pairs. */
   def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, bands: Int = 4, rowsPerBand: Int = 3): DataFrame = {
     val numHashes = bands * rowsPerBand
@@ -332,14 +333,26 @@ object Dedup {
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
         b => array_join(slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)), "|"))))
       .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
-    val a = banded.select(col("band"), col("bucket"), col("id").as("id1"))
-    val b = banded.select(col("band"), col("bucket"), col("id").as("id2"))
-    // shuffle-hash: the banded index is corpus-sized — never a
-    // driver-side broadcast build, at any scale
-    a.hint("shuffle_hash").join(b, Seq("band", "bucket"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
+    bucketMatePairs(banded)
   }
+
+  /** Distinct `(id1 < id2)` pairs sharing a `(band, bucket)` of
+    * `banded` (`id, band, bucket`): one hash exchange on the bucket
+    * key gathers each bucket's ids, and the pairs are generated after
+    * it. A self-join would shuffle `banded` once per side — two map
+    * stages that each recompute the signatures, since a cached input
+    * gets fresh attribute ids on the second side and the two exchanges
+    * no longer match for reuse. A bucket's ids sit in one row, as they
+    * sat in one join build; the pairs stream out of two explodes. */
+  private def bucketMatePairs(banded: DataFrame): DataFrame =
+    banded.filter(col("bucket").isNotNull && col("id").isNotNull)
+      .groupBy("band", "bucket").agg(array_sort(collect_list(col("id"))).as("_ids"))
+      .filter(size(col("_ids")) > 1)
+      .select(col("_ids"), posexplode(col("_ids")).as(Seq("_i", "id1")))
+      .select(col("id1"), explode(slice(col("_ids"), col("_i") + 2,
+        size(col("_ids")) - col("_i") - 1)).as("id2"))
+      .filter(col("id1") < col("id2"))
+      .distinct()
 
   /** MinHash near-dup pairs, verified: LSH candidates filtered by
     * exact n-gram Jaccard ≥ threshold.
@@ -356,7 +369,7 @@ object Dedup {
     * (one bounded limit-probe over the persisted pair list, never a
     * full count) and falls back to an equivalent shuffle-hash join
     * above it. Shuffles whose volume grows with the corpus: the
-    * banded self-join on short bucket keys — plus, only above the
+    * bucket exchange on short bucket keys — plus, only above the
     * gate, the verification join on id.
     *
     * `spreadInput = false` skips the round-robin pre-shuffle — pass it
@@ -398,14 +411,7 @@ object Dedup {
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => array_join(slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)), "|"))))
       .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
-    val a = banded.select(col("band"), col("bucket"), col("id").as("id1"))
-    val b = banded.select(col("band"), col("bucket"), col("id").as("id2"))
-    // shuffle-hash: the banded index is corpus-sized — never a
-    // driver-side broadcast build, at any scale
-    val cand = a.hint("shuffle_hash").join(b, Seq("band", "bucket"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-      .persistTracked()
+    val cand = bucketMatePairs(banded).persistTracked()
     val candLong = cand.select(col("id1"), col("id2"),
       explode(array(col("id1"), col("id2"))).as("id"))
     val verified =
@@ -590,12 +596,9 @@ object Dedup {
       .join(sBands, Seq("band", "bucket"))
       .select("_bid", "_sid").distinct()
       .persistTracked()
-    // within-batch candidates: the X2 self-join shape on the batch only
-    val cb1 = bBands.select(col("band"), col("bucket"), col("_bid").as("_id1"))
-    val cb2 = bBands.select(col("band"), col("bucket"), col("_bid").as("_id2"))
-    val candBatch = cb1.hint("shuffle_hash").join(cb2, Seq("band", "bucket"))
-      .filter(col("_id1") < col("_id2"))
-      .select("_id1", "_id2").distinct()
+    // within-batch candidates: the X2 bucket-mate pairs on the batch only
+    val candBatch = bucketMatePairs(bBands.withColumnRenamed("_bid", "id"))
+      .select(col("id1").as("_id1"), col("id2").as("_id2"))
       .persistTracked()
 
     val storeFits = fitsBudget(candStore, pairBroadcastBudget)

@@ -1078,8 +1078,11 @@ object Similarity {
 
   /** Final per-query top-k over a scored frame — aggregator path
     * (bounded per-partition heaps, map-side combine), NOT a window:
-    * a window `row_number` has no partial aggregation and shuffles
-    * every scored row. Output is provably identical to
+    * Spark ≥ 3.5 cuts a `row_number() <= k` window before its exchange
+    * too (a partial `WindowGroupLimit`, as `Dedup.exactDedup`'s plan
+    * shows), but only after sorting each partition's scored rows; the
+    * heaps hold O(k) per query and sort nothing. Output is provably
+    * identical to
     * `row_number over (partition by q order by score desc, id)` ≤ k
     * (same tie-break; see TopKSpec). */
   private def finishTopK(scored: DataFrame, qIdCol: String, idCol: String,
@@ -1818,7 +1821,7 @@ object Similarity {
     * same hyperplanes; each query scans only corpus rows whose full
     * signature matches (single-probe). Equi-join on the signature —
     * shuffle keys are (sig, id), never the vectors at rest twice. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int, dims: Int,
+  def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       qIdCol: String = "q_id", qVecCol: String = "q_vec"): DataFrame = {
     val c = spread(corpus).withColumn("_sig", signSignatureAuto(col(vecCol), bits))
@@ -1851,7 +1854,7 @@ object Similarity {
     * (a hot bucket can make candidates quadratic-ish; the corpus-sized
     * join side must never ride an AQE broadcast guess). */
   def lshTopKMultiBand(corpus: DataFrame, queries: DataFrame, k: Int,
-      bands: Int, bits: Int, dims: Int,
+      bands: Int, bits: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       qIdCol: String = "q_id", qVecCol: String = "q_vec",
       candBroadcastBudget: Long = 1000000L): DataFrame = {
@@ -2402,7 +2405,7 @@ object Similarity {
     * by 2^(bits−single) — within-bucket pairing is the quadratic term
     * at scale. `maxBucketSize` skips pathological hot buckets (like
     * `Dedup.maxDocFreq`); default unbounded for exactness. */
-  def embeddingNearDupPairs(df: DataFrame, threshold: Double, bits: Int, dims: Int,
+  def embeddingNearDupPairs(df: DataFrame, threshold: Double, bits: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       bands: Int = 1, maxBucketSize: Long = Long.MaxValue): DataFrame = {
     val total = bits * bands

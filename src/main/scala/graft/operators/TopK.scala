@@ -7,8 +7,11 @@ import org.apache.spark.sql.functions._
 /** Typed top-k aggregator (SURVEY §2.9 "top-k `Aggregator`"): keeps a
   * bounded per-partition heap of (score, id) and merges heaps, so the
   * shuffle carries k rows per (group × partition) instead of the whole
-  * scored set — the map-side-combine shape a window `row_number`
-  * cannot produce. Deterministic: ordering is (score desc, id asc),
+  * scored set. A window `row_number() <= k` filter gets a like cut
+  * before its exchange on Spark ≥ 3.5 (a partial `WindowGroupLimit`,
+  * as `Dedup.exactDedup`'s plan shows), but only by sorting each
+  * partition's whole scored set; the heap holds O(k) per group and
+  * sorts nothing. Deterministic: ordering is (score desc, id asc),
   * identical to the window form's tie-break, so results are
   * interchangeable with `Similarity.bruteForceTopK`.
   */

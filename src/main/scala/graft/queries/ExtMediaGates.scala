@@ -67,7 +67,7 @@ trait ExtMediaGates { this: ExtAllGates =>
 
   val embedAnn: Q = (s, d) =>
     Similarity.lshTopK(
-      Tables.embeddings(s, d), queriesDf(s, d), k = 10, bits = ANN_BITS, dims = EMB_DIMS)
+      Tables.embeddings(s, d), queriesDf(s, d), k = 10, bits = ANN_BITS)
       .select(col("q_id"), col("vec_id"), col("score"), col("rank"))
 
   val embedAnnSql: String =
@@ -108,7 +108,7 @@ trait ExtMediaGates { this: ExtAllGates =>
   val embedAnnMulti: Q = (s, d) =>
     Similarity.lshTopKMultiBand(
       Tables.embeddings(s, d), queriesDf(s, d), k = 10,
-      bands = ANN_MULTI_BANDS, bits = ANN_MULTI_BITS, dims = EMB_DIMS)
+      bands = ANN_MULTI_BANDS, bits = ANN_MULTI_BITS)
       .select(col("q_id"), col("vec_id"), col("score"), col("rank"))
 
   val embedAnnMultiSql: String = {
@@ -225,7 +225,7 @@ trait ExtMediaGates { this: ExtAllGates =>
 
   val embedNearDup: Q = (s, d) =>
     Similarity.embeddingNearDupPairs(
-      Tables.embeddings(s, d), threshold = 0.4, bits = NEARDUP_BITS, dims = EMB_DIMS,
+      Tables.embeddings(s, d), threshold = 0.4, bits = NEARDUP_BITS,
       bands = NEARDUP_BANDS)
 
   /** Per-band bucket expression: bit j of band `band` is the sign of

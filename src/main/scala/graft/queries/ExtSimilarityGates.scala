@@ -1645,11 +1645,9 @@ trait ExtSimilarityGates { this: ExtAllGates =>
     // shared tagged agg over their union
     val frames = materializeConcurrent(Seq(
       Similarity.bruteForceTopK(emb, qs, k = 10),
-      tag("lsh", Similarity.lshTopK(emb, qs, k = 10,
-        bits = ANN_BITS, dims = EMB_DIMS)),
+      tag("lsh", Similarity.lshTopK(emb, qs, k = 10, bits = ANN_BITS)),
       tag("lsh_multi", Similarity.lshTopKMultiBand(emb, qs,
-        k = 10, bands = ANN_MULTI_BANDS, bits = ANN_MULTI_BITS,
-        dims = EMB_DIMS)),
+        k = 10, bands = ANN_MULTI_BANDS, bits = ANN_MULTI_BITS)),
       tag("lsh_probe", Similarity.lshMultiProbeTopK(emb, qs,
         k = 10, bits = ANN_BITS, dims = EMB_DIMS, nprobe = ANN_PROBE_T,
         poolSize = ANN_PROBE_POOL, maxFlips = ANN_PROBE_FLIPS)),
@@ -1748,8 +1746,7 @@ trait ExtSimilarityGates { this: ExtAllGates =>
         coarseK = 50, k = 10)),
       tag("binary", Similarity.binaryRerankTopK(emb, qs,
         coarseK = 50, k = 10, dims = EMB_DIMS)),
-      tag("lsh", Similarity.lshTopK(emb, qs, k = 10,
-        bits = ANN_BITS, dims = EMB_DIMS)),
+      tag("lsh", Similarity.lshTopK(emb, qs, k = 10, bits = ANN_BITS)),
       tag("pq", Similarity.pqTopK(emb, qs, k = 10, pqBooks,
         coarseK = PQ_COARSE)),
       tag("ivfpq", Similarity.ivfPqTopK(emb, qs, k = 10,

@@ -276,9 +276,9 @@ class EmptyInputSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val qs = Seq((10L, Array(1.0f, 0.1f))).toDF("q_id", "q_vec")
     assert(graft.operators.Similarity.lshTopKMultiBand(
-      noVecs, qs, k = 5, bands = 2, bits = 3, dims = 2).count() == 0)
+      noVecs, qs, k = 5, bands = 2, bits = 3).count() == 0)
     assert(graft.operators.Similarity.lshTopKMultiBand(
-      vecs, noQ, k = 5, bands = 2, bits = 3, dims = 2).count() == 0)
+      vecs, noQ, k = 5, bands = 2, bits = 3).count() == 0)
     assert(graft.operators.Similarity.lshMultiProbeTopK(
       noVecs, qs, k = 5, bits = 3, dims = 2, nprobe = 2,
       poolSize = 2, maxFlips = 1).count() == 0)

@@ -32,9 +32,9 @@ class LshRecallSpec extends SparkSpec {
     // one band over B bits IS the single-table probe: same candidates
     // (full-signature equality), same exact-cosine scores, same ranks
     val single = asSet(graft.operators.Similarity.lshTopK(
-      emb, queries, k = 10, bits = 8, dims = 64))
+      emb, queries, k = 10, bits = 8))
     val multi1 = asSet(graft.operators.Similarity.lshTopKMultiBand(
-      emb, queries, k = 10, bands = 1, bits = 8, dims = 64))
+      emb, queries, k = 10, bands = 1, bits = 8))
     assert(multi1 == single)
     // OR-over-bands: band 0 of the 4×8 signature uses planes 0..7 —
     // the same planes as the single 8-bit table — so every single-table
@@ -46,9 +46,9 @@ class LshRecallSpec extends SparkSpec {
       graft.operators.Similarity.recallAtK(bf, ann)
         .select("q_id", "recall").as[(Long, Double)].collect().toMap
     val rSingle = recallOf(graft.operators.Similarity.lshTopK(
-      emb, queries, k = 10, bits = 8, dims = 64))
+      emb, queries, k = 10, bits = 8))
     val rMulti = recallOf(graft.operators.Similarity.lshTopKMultiBand(
-      emb, queries, k = 10, bands = 4, bits = 8, dims = 64))
+      emb, queries, k = 10, bands = 4, bits = 8))
     assert(rMulti.keySet == rSingle.keySet && rSingle.nonEmpty)
     rSingle.foreach { case (q, r) =>
       assert(rMulti(q) >= r, s"query $q: multi-band recall ${rMulti(q)} < single $r")
@@ -66,7 +66,7 @@ class LshRecallSpec extends SparkSpec {
       df.select("q_id", "vec_id", "rank").as[(Long, Long, Int)].collect().toSet
     // nprobe=1 probes only the query's own bucket — exactly lshTopK
     val single = asSet(graft.operators.Similarity.lshTopK(
-      emb, queries, k = 10, bits = 8, dims = 64))
+      emb, queries, k = 10, bits = 8))
     val probe1 = asSet(graft.operators.Similarity.lshMultiProbeTopK(
       emb, queries, k = 10, bits = 8, dims = 64, nprobe = 1))
     assert(probe1 == single)

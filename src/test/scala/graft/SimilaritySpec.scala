@@ -129,7 +129,7 @@ class SimilaritySpec extends SparkSpec {
     val perturbed = base.updated(0, base(0) + 0.001f)
     val corpus = Seq((1L, base), (2L, perturbed)).toDF("vec_id", "embedding")
     val queries = Seq((9L, base)).toDF("q_id", "q_vec")
-    val got = Similarity.lshTopK(corpus, queries, k = 2, bits = 8, dims = 64)
+    val got = Similarity.lshTopK(corpus, queries, k = 2, bits = 8)
       .select("vec_id").as[Long].collect().toSet
     assert(got == Set(1L, 2L))
   }
@@ -139,7 +139,7 @@ class SimilaritySpec extends SparkSpec {
     val dup = base.updated(3, base(3) + 0.0001f)
     val other = (0 until 64).map(i => math.cos(i * 2.0).toFloat)
     val df = Seq((1L, base), (2L, dup), (3L, other)).toDF("vec_id", "embedding")
-    val got = Similarity.embeddingNearDupPairs(df, threshold = 0.99, bits = 8, dims = 64)
+    val got = Similarity.embeddingNearDupPairs(df, threshold = 0.99, bits = 8)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 2L)))
   }
@@ -150,12 +150,12 @@ class SimilaritySpec extends SparkSpec {
     val other = (0 until 64).map(i => math.cos(i * 2.0).toFloat)
     val df = Seq((1L, base), (2L, dup), (3L, other)).toDF("vec_id", "embedding")
     val got = Similarity.embeddingNearDupPairs(df, threshold = 0.99,
-      bits = 10, dims = 64, bands = 6)
+      bits = 10, bands = 6)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 2L)))
     // hot-bucket guard: a cap of 1 skips every ≥2 bucket -> no pairs
     val guarded = Similarity.embeddingNearDupPairs(df, threshold = 0.99,
-      bits = 10, dims = 64, bands = 6, maxBucketSize = 1L)
+      bits = 10, bands = 6, maxBucketSize = 1L)
       .count()
     assert(guarded == 0L)
   }
