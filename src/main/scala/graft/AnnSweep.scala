@@ -21,7 +21,7 @@ object AnnSweep {
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = graft.core.Caches.persistTracked(
-      spark.read.parquet(s"$d/embeddings.parquet")
+      graft.core.Tables.embeddings(spark, d)
         .select(col("vec_id"), col("embedding")))
     val qs = graft.core.Caches.persistTracked(
       emb.filter(col("vec_id") % 50 === 0)

@@ -68,7 +68,7 @@ object BenchScaleUp {
       System.err.println(s"[scaleup] materializing $sf1 from $base (x10)")
       val reps = spark.range(0, 10).select(col("id").as("_rep"))
       def amp(table: String, idCol: String): Unit =
-        spark.read.parquet(s"$base/$table.parquet")
+        graft.core.Tables.load(spark, base, table)
           .crossJoin(reps)
           .withColumn(idCol, col(idCol) + col("_rep") * 10000000L)
           .drop("_rep")

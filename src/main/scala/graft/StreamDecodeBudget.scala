@@ -49,7 +49,7 @@ object StreamDecodeBudget {
         .filter(col("decoded")).count()
 
     for ((name, dir) <- Seq("sf0.1" -> base, "sf1" -> sf1)) {
-      val slice = spark.read.parquet(s"$dir/documents.parquet")
+      val slice = graft.core.Tables.documents(spark, dir)
         .filter(col("doc_id") % 3 =!= 0)
       // batch shape: untimed warm pass, then min of two
       sigCount(slice)
@@ -63,7 +63,7 @@ object StreamDecodeBudget {
       println(f"[decode-budget] $name batch frames=$n1 secs=$bs%.2f fps=${n1 / bs}%.0f")
 
       // streaming shape: the gate's source, decode, AvailableNow
-      val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+      val schema = graft.core.Tables.documents(spark, dir).schema
       val src = operators.Multimodal.videoFrameSignatures(
         operators.Multimodal.videoMediaFromDocuments(
           spark.readStream.schema(schema)

@@ -1,23 +1,90 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver's synthetic parquet tables
   * (`/root/testdata/sf*`, schemas in FIXTURES.md §B).
   *
-  * All loads are plain `spark.read.parquet` so Catalyst keeps full
+  * Loads are parquet scans with no options, so Catalyst keeps full
   * pushdown/pruning freedom — at 100 TB these would be partitioned
   * tables behind a catalog; nothing here assumes single-file inputs.
+  *
+  * Each table's schema is inferred at most once per session and file
+  * state: a plain `spark.read.parquet` runs a one-task job that reads a
+  * footer, and a pass that loads seven tables paid it seven times.
+  * Later loads read with the resolved schema, which plans the same scan
+  * and starts no job; Spark still lists the files on every load. See
+  * [[load]] for the cache key.
+  *
+  * Every read of a fixed input in `src/main` goes through [[load]].
+  * Three kinds of read stay outside it:
+  *  - `graft.streaming.Store.read`: a store changes every batch, and
+  *    its callers read with an empty declared schema (`compactStore`)
+  *    or carry their own `metaCols` (the codes store), so a read with a
+  *    declared schema would drop columns;
+  *  - the `readStream` sources, which declare their schema already;
+  *  - `q_merge_schema`'s `mergeSchema` read, whose point is the merge.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The session confs that change what parquet schema inference
+    * returns for the same files. */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  /** A table's data files: (path, length, modification time). */
+  private type FileStamp = Set[(String, Long, Long)]
+  private final case class Resolved(files: FileStamp, schema: StructType)
+
+  /** Per session (weakly held, so an entry goes with its session):
+    * (path, inference confs) → the files the schema was inferred from,
+    * and that schema. */
+  private val resolved =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[(String, Seq[Option[String]]), Resolved]]
+
+  /** `spark.read.parquet(path)` for `path` = `dir/name.parquet`,
+    * inferring the schema only when this session has not resolved it
+    * for the same files and inference confs. The file stamp comes from
+    * the file index of the relation Spark builds for the read, so a
+    * directory table is listed once per load, as before; a table
+    * rewritten at the same path carries new files (or a new length or
+    * modification time) and is inferred again. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = (path, InferenceConfs.map(spark.conf.getOption))
+    val schemas = resolved.synchronized(
+      resolved.computeIfAbsent(spark, _ => new ConcurrentHashMap()))
+    Option(schemas.get(key))
+      .map(r => r -> spark.read.schema(r.schema).parquet(path))
+      .collect { case (r, df) if fileStamp(df).contains(r.files) => df }
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        fileStamp(df).foreach(files => schemas.put(key, Resolved(files, df.schema)))
+        df
+      }
+  }
+
+  /** The data files of a file-source scan, read from the index the
+    * relation already holds (no listing of its own). */
+  private def fileStamp(df: DataFrame): Option[FileStamp] =
+    df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _),
+          _, _, _, _) =>
+        index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -2404,7 +2404,8 @@ object Similarity {
     * signature this keeps recall (OR over bands) while buckets shrink
     * by 2^(bits−single) — within-bucket pairing is the quadratic term
     * at scale. `maxBucketSize` skips pathological hot buckets (like
-    * `Dedup.maxDocFreq`); default unbounded for exactness. */
+    * `Dedup.maxDocFreq`): a bucket of more rows yields no pairs;
+    * default unbounded for exactness. */
   def embeddingNearDupPairs(df: DataFrame, threshold: Double, bits: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       bands: Int = 1, maxBucketSize: Long = Long.MaxValue): DataFrame = {
@@ -2417,22 +2418,21 @@ object Similarity {
       shiftrightunsigned(col("_sig"), b * bits).bitwiseAND(lit(mask)))
     val banded = base.select(col("id"), col("_v"),
       posexplode(array(bandCols: _*)).as(Seq("_band", "_bucket")))
-    val guarded =
-      if (maxBucketSize == Long.MaxValue) banded
-      else {
-        val keep = banded.groupBy("_band", "_bucket").count()
-          .filter(col("count") <= maxBucketSize).drop("count")
-        banded.join(keep.hint("shuffle_hash"), Seq("_band", "_bucket"), "left_semi")
-      }
-    val a = guarded.select(col("_band"), col("_bucket"), col("id").as("id1"), col("_v").as("_v1"))
-    val b = guarded.select(col("_band"), col("_bucket"), col("id").as("id2"), col("_v").as("_v2"))
-    // shuffle_hash: both sides are the corpus-sized banded index — AQE
-    // must not broadcast one (same reasoning as Dedup's inverted index)
-    a.hint("shuffle_hash").join(b, Seq("_band", "_bucket"))
-      .filter(col("id1") < col("id2"))
-      .withColumn("cosine", cosineAuto(col("_v1"), col("_v2")))
+    // one exchange on (band, bucket) gathers each bucket's (id, vector)
+    // rows, sorted by id, and the (id1 < id2) pairs stream out of two
+    // explodes (the `Dedup.bucketMatePairs` shape): a self-join would
+    // scan, sign and shuffle the corpus once per side
+    val members = array_sort(collect_list(struct(col("id"), col("_v"))))
+    banded.filter(col("_bucket").isNotNull)
+      .groupBy("_band", "_bucket").agg(members.as("_m"))
+      .filter(size(col("_m")).between(2, maxBucketSize))
+      .select(col("_m"), posexplode(col("_m")).as(Seq("_i", "_a")))
+      .select(col("_a"), explode(slice(col("_m"), col("_i") + 2,
+        size(col("_m")) - col("_i") - 1)).as("_b"))
+      .filter(col("_a.id") < col("_b.id"))
+      .select(col("_a.id").as("id1"), col("_b.id").as("id2"),
+        cosineAuto(col("_a._v"), col("_b._v")).as("cosine"))
       .filter(col("cosine") >= threshold)
-      .select("id1", "id2", "cosine")
       .distinct() // a pair may match in several bands
   }
 }

@@ -1,12 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.functions.TextFunctions
@@ -148,25 +142,8 @@ class DedupSpec extends SparkSpec {
     assert(!got.exists(p => p._1 == 5L || p._2 == 5L))
   }
 
-  /** Hash exchanges on `(band, bucket)` the executed plan ran, cached
-    * subplans included; a reused exchange does not count. */
-  private def bandExchanges(df: DataFrame): Int = {
-    df.collect()
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case s: QueryStageExec => walk(s.plan)
-      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
-      case other => other +: other.children.flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan).count {
-      case e: ShuffleExchangeExec => e.outputPartitioning match {
-        case h: HashPartitioning =>
-          h.expressions.collect { case a: Attribute => a.name } == Seq("band", "bucket")
-        case _ => false
-      }
-      case _ => false
-    }
-  }
+  private def bandExchanges(df: DataFrame): Int =
+    Probes.hashExchanges(df, Seq("band", "bucket"))
 
   test("LSH banding computes the signatures once: one banded exchange") {
     assert(bandExchanges(Dedup.lshCandidatePairs(docs, "doc_id", "text")) == 1)

@@ -160,6 +160,12 @@ class SimilaritySpec extends SparkSpec {
     assert(guarded == 0L)
   }
 
+  test("q_embed_neardup signs and shuffles the embeddings once: one banded exchange") {
+    val pairs = SparkEntry.queries("q_embed_neardup")(spark, s"${SparkSpec.TestData}/sf0.001")
+    assert(Probes.hashExchanges(pairs, Seq("_band", "_bucket")) == 1)
+    graft.core.Caches.release(spark)
+  }
+
   test("banded 10-bit buckets are smaller than the single 8-bit signature's") {
     // the quadratic within-bucket pairing term at scale is governed by
     // the LARGEST bucket; banding must shrink it

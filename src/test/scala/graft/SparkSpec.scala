@@ -12,6 +12,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The parquet fixtures, one directory per scale factor (TESTDATA.md). */
+  val TestData = "/root/testdata"
+
   lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")

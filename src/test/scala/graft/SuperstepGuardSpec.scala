@@ -1,13 +1,9 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import org.apache.spark.LiveConf
 import org.apache.spark.sql.functions.{array, col, sin}
 
+import graft.Probes.Job
 import graft.graph.Ranks
 import graft.operators.{Clustering, ScaleOps, Similarity}
 import graft.streaming.EventsStreaming
@@ -20,26 +16,9 @@ import graft.streaming.EventsStreaming
 class SuperstepGuardSpec extends SparkSpec {
   import spark.implicits._
 
-  /** `stages` counts every stage of the job, skipped ones included: a
-    * shuffle adds its map stage, so a one-stage job reads no shuffle. */
-  private final case class Job(description: String, stages: Int)
+  private def jobsOf(body: => Unit): Seq[Job] = Probes.jobsOf(spark.sparkContext)(body)
 
-  /** Jobs started while `body` runs, in order. */
-  private def jobsOf(body: => Unit): Seq[Job] = {
-    val sc = spark.sparkContext
-    val jobs = mutable.ArrayBuffer.empty[Job]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        jobs += Job(Option(e.properties).map(_.getProperty("spark.job.description"))
-          .orNull, e.stageInfos.size)
-      }
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBusDrain(sc) }
-    finally sc.removeSparkListener(listener)
-    jobs.synchronized(jobs.toList)
-  }
+  private val Sf0001 = s"${SparkSpec.TestData}/sf0.001"
 
   test("rankStateTable driver-state path: iters + c jobs, each superstep one shuffle-free stage") {
     val edges = (0 until 40).flatMap(i => Seq((s"v$i", s"v${(i + 1) % 40}"),
@@ -115,6 +94,21 @@ class SuperstepGuardSpec extends SparkSpec {
     assert(small == driver)
     // the distributed loop: one shuffling job per update round
     assert(jobs.count(_.stages > 1) >= 2, s"$jobs")
+  }
+
+  test("building nationTradeEdges again in a session starts no job before its action") {
+    SparkEntry.nationTradeEdges(spark, Sf0001)
+    val jobs = jobsOf(SparkEntry.nationTradeEdges(spark, Sf0001))
+    assert(jobs.isEmpty, s"a second build resolves every input's schema again: $jobs")
+  }
+
+  test("q_kcore at sf0.001 runs at most 7 jobs once its inputs are resolved") {
+    def run(): Unit = SparkEntry.queries("q_kcore")(spark, Sf0001).collect()
+    run()
+    // measured 7 once the session has resolved its five input tables'
+    // schemas; a schema-inference job per load would add 5
+    val jobs = jobsOf(run())
+    assert(jobs.size <= 7, s"${jobs.size} jobs: $jobs")
   }
 
   /** Jobs of ONE micro-batch: `rows` land as one source file, a store
