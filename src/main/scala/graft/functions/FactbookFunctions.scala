@@ -39,11 +39,6 @@ object FactbookFunctions {
     when(y =!= "", y.cast("double"))
   }
 
-  /** F2 strict variant (`scrape_cia.py:227-228`): whole token must be
-    * a 4-digit year, else empty string. */
-  def strictYear(c: Column): Column =
-    when(c.rlike("^\\d{4}$"), c).otherwise(lit(""))
-
   /** F3 — trailing-percentage parse (`scrape_cia.py:118-129`):
     * `"China 24%"` -> (0.24, "China"); `"almost entirely India"` ->
     * (0.9, "India"). Returns the percentage column. */

@@ -330,29 +330,17 @@ object Dedup {
     val withSig = spread(df).select(col(idCol).as("id"),
       Native.minhash(shinglesAuto(df, textCol, shingleN), numHashes).as("_sig"))
     val banded = withSig.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => array_join(slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)), "|"))))
+      posexplode(bandKeys(col("_sig"), bands, rowsPerBand)))
       .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
-    bucketMatePairs(banded)
+    Candidates.bucketMates(banded, Seq("band", "bucket"), col("id"))
+      .select("id1", "id2").distinct()
   }
 
-  /** Distinct `(id1 < id2)` pairs sharing a `(band, bucket)` of
-    * `banded` (`id, band, bucket`): one hash exchange on the bucket
-    * key gathers each bucket's ids, and the pairs are generated after
-    * it. A self-join would shuffle `banded` once per side — two map
-    * stages that each recompute the signatures, since a cached input
-    * gets fresh attribute ids on the second side and the two exchanges
-    * no longer match for reuse. A bucket's ids sit in one row, as they
-    * sat in one join build; the pairs stream out of two explodes. */
-  private def bucketMatePairs(banded: DataFrame): DataFrame =
-    banded.filter(col("bucket").isNotNull && col("id").isNotNull)
-      .groupBy("band", "bucket").agg(array_sort(collect_list(col("id"))).as("_ids"))
-      .filter(size(col("_ids")) > 1)
-      .select(col("_ids"), posexplode(col("_ids")).as(Seq("_i", "id1")))
-      .select(col("id1"), explode(slice(col("_ids"), col("_i") + 2,
-        size(col("_ids")) - col("_i") - 1)).as("id2"))
-      .filter(col("id1") < col("id2"))
-      .distinct()
+  /** The `bands` band keys of a MinHash signature: band `b` is the
+    * signature's hashes `b·rowsPerBand + 1 ..` joined by `|`. */
+  private def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => array_join(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), "|"))
 
   /** MinHash near-dup pairs, verified: LSH candidates filtered by
     * exact n-gram Jaccard ≥ threshold.
@@ -407,20 +395,11 @@ object Dedup {
     val numHashes = bands * rowsPerBand
     val banded = base
       .select(col("id"), Native.minhash(col("_sh"), numHashes).as("_sig"))
-      .select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => array_join(slice(col("_sig"), b * rowsPerBand + 1, lit(rowsPerBand)), "|"))))
+      .select(col("id"), posexplode(bandKeys(col("_sig"), bands, rowsPerBand)))
       .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
-    val cand = bucketMatePairs(banded).persistTracked()
-    val candLong = cand.select(col("id1"), col("id2"),
-      explode(array(col("id1"), col("id2"))).as("id"))
-    val verified =
-      if (fitsBudget(cand, pairBroadcastBudget))
-        base.join(broadcast(candLong), Seq("id"))
-      else base.hint("shuffle_hash").join(candLong, Seq("id"))
-    verified
-      .groupBy(col("id1"), col("id2"))
-      .agg(collect_list(col("_sh")).as("_ab"))
+    val cand = Candidates.bucketMates(banded, Seq("band", "bucket"), col("id"))
+      .select("id1", "id2").distinct().persistTracked()
+    Candidates.verify(cand, base, "id", pairBroadcastBudget)
       .withColumn("jaccard",
         jaccardArr(element_at(col("_ab"), 1), element_at(col("_ab"), 2)))
       .filter(col("jaccard") >= threshold)
@@ -510,8 +489,7 @@ object Dedup {
       spreadInput: Boolean = true,
       pairBroadcastBudget: Long = 1000000L): DataFrame = {
     val clash = newDocs.columns.filter(Set("_sh", "_sig", "_bid", "_sid",
-      "_id1", "_id2", "_ab", "_j", "band", "bucket",
-      "shingles", "sig", "band_keys")).distinct
+      "_ab", "band", "bucket", "shingles", "sig", "band_keys")).distinct
     require(clash.isEmpty,
       s"incrementalNearDup: input columns ${clash.mkString(", ")} collide with internal markers")
     incrementalNearDupCore(
@@ -570,9 +548,6 @@ object Dedup {
             "different banding parameters")
       }
 
-    def bandKeysOf(sig: Column): Column =
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => array_join(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), "|"))
     // zero-shingle docs are excluded by the sig SENTINEL (both minhash
     // paths emit "zz_empty" signatures for an empty shingle set; a real
     // hash is 32 hex chars), NOT by size(shingles) — the store-side
@@ -581,7 +556,7 @@ object Dedup {
     def bandRows(df: DataFrame, id: Column, sig: Column,
         idName: String): DataFrame =
       df.filter(element_at(sig, 1) =!= "zz_empty")
-        .select(id.as(idName), posexplode(bandKeysOf(sig)))
+        .select(id.as(idName), posexplode(bandKeys(sig, bands, rowsPerBand)))
         .select(col(idName), col("pos").as("band"), col("col").as("bucket"))
 
     val bBands = bandRows(batch, col(idCol), col("_sig"), "_bid")
@@ -597,9 +572,8 @@ object Dedup {
       .select("_bid", "_sid").distinct()
       .persistTracked()
     // within-batch candidates: the X2 bucket-mate pairs on the batch only
-    val candBatch = bucketMatePairs(bBands.withColumnRenamed("_bid", "id"))
-      .select(col("id1").as("_id1"), col("id2").as("_id2"))
-      .persistTracked()
+    val candBatch = Candidates.bucketMates(bBands, Seq("band", "bucket"), col("_bid"))
+      .select("id1", "id2").distinct().persistTracked()
 
     val storeFits = fitsBudget(candStore, pairBroadcastBudget)
     val batchFits = fitsBudget(candBatch, pairBroadcastBudget)
@@ -616,19 +590,9 @@ object Dedup {
       .filter(jaccardArr(col("_sh"), col("_ssh")) >= threshold)
       .select(col("_bid"))
 
-    val candBatchLong = candBatch.select(col("_id1"), col("_id2"),
-      explode(array(col("_id1"), col("_id2"))).as("_bid"))
-    val vb =
-      if (batchFits) batchSh.join(broadcast(candBatchLong), Seq("_bid"))
-      else batchSh.hint("shuffle_hash").join(candBatchLong, Seq("_bid"))
-    // Jaccard is symmetric, so collect_list's nondeterministic order
-    // is immaterial (the minhashNearDupPairs verify idiom)
-    val dupInBatch = vb.groupBy(col("_id1"), col("_id2"))
-      .agg(collect_list(col("_sh")).as("_ab"))
-      .withColumn("_j",
-        jaccardArr(element_at(col("_ab"), 1), element_at(col("_ab"), 2)))
-      .filter(col("_j") >= threshold)
-      .select(col("_id2").as("_bid"))
+    val dupInBatch = Candidates.verify(candBatch, batchSh, "_bid", batchFits)
+      .filter(jaccardArr(element_at(col("_ab"), 1), element_at(col("_ab"), 2)) >= threshold)
+      .select(col("id2").as("_bid"))
 
     val dups = dupVsStore.unionByName(dupInBatch).distinct()
     val dupJoin =
@@ -637,7 +601,7 @@ object Dedup {
     batch.join(dupJoin, batch(idCol) === dupJoin("_bid"), "left_anti")
       .withColumnRenamed("_sh", "shingles")
       .withColumnRenamed("_sig", "sig")
-      .withColumn("band_keys", bandKeysOf(col("sig")))
+      .withColumn("band_keys", bandKeys(col("sig"), bands, rowsPerBand))
   }
 
   /** Exact Jaccard over two pre-distinct arrays. */
@@ -666,23 +630,11 @@ object Dedup {
     * output. */
   def ngramJaccardPairsFromBase(base: DataFrame, threshold: Double,
       maxDocFreq: Long = Long.MaxValue): DataFrame = {
-    val sh = base.withColumn("_size", size(col("_sh")))
-    val inv = sh.select(col("id"), col("_size"), explode(col("_sh")).as("shingle"))
-    val invF =
-      if (maxDocFreq == Long.MaxValue) inv
-      else {
-        val hot = inv.groupBy("shingle").count().filter(col("count") > maxDocFreq)
-        inv.join(broadcast(hot.select("shingle")), Seq("shingle"), "left_anti")
-      }
-    val a = invF.select(col("shingle"), col("id").as("id1"), col("_size").as("_s1"))
-    val b = invF.select(col("shingle"), col("id").as("id2"), col("_size").as("_s2"))
-    a.hint("shuffle_hash").join(b, Seq("shingle"))
-      .filter(col("id1") < col("id2"))
-      .groupBy(col("id1"), col("id2"), col("_s1"), col("_s2"))
-      .agg(count(lit(1)).as("_inter"))
-      .withColumn("jaccard",
-        col("_inter").cast("double") /
-          (col("_s1") + col("_s2") - col("_inter")).cast("double"))
+    // sizes are taken before the hot-shingle cap: a capped shingle
+    // still counts in both sets' union
+    val inv = base.select(col("id"), size(col("_sh")).as("_size"),
+      explode(col("_sh")).as("shingle"))
+    Candidates.sharedKeyJaccard(inv, "shingle", maxDocFreq)
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
   }
@@ -709,7 +661,8 @@ object Dedup {
     * limit-probe over the persisted list) with an equivalent
     * shuffle-hash fallback. The corpus is scanned once, shuffled once
     * (the per-document prefix regroup); the only other shuffle whose
-    * volume grows with data is the prefix self-join on short md5 keys.
+    * volume grows with data is the prefix bucket aggregation on short
+    * md5 keys.
     *
     * Use a threshold exactly representable in binary (0.5, 0.75…) so
     * ⌈t·|S|⌉ computes identically on any engine. */
@@ -725,40 +678,20 @@ object Dedup {
       .persistTracked()
     val inv = sets.select(col("id"), col("_size"), explode(col("_sh")).as("_gk"))
     val prefix = prefixPostings(inv, threshold)
-    val a = prefix.select(col("_gk"), col("id").as("id1"), col("_size").as("_za"))
-    val b = prefix.select(col("_gk"), col("id").as("id2"), col("_size").as("_zb"))
     // length filter (PPJoin): J ≥ t bounds the partner's set size to
-    // [t·|A|, |A|/t] — prunes dissimilar-size pairs before they ever
-    // become candidates. The two sides are the same plan — AQE
-    // ReuseExchange materializes the prefix exchange once.
-    val cand = a.hint("shuffle_hash").join(b, Seq("_gk"))
-      .filter(col("id1") < col("id2") &&
-        col("_zb") >= ceil(col("_za") * threshold) &&
-        col("_zb") * threshold <= col("_za"))
-      .select(col("id1"), col("id2")).distinct()
+    // [t·|A|, |A|/t] — prunes dissimilar-size pairs before they are
+    // verified. Distinct: a pair sharing several prefix keys is one
+    // candidate, and verify needs each pair once.
+    val cand = Candidates.bucketMates(prefix, Seq("_gk"), struct(col("id"), col("_size")))
+      .filter(col("id1.id") < col("id2.id") &&
+        col("id2._size") >= ceil(col("id1._size") * threshold) &&
+        col("id2._size") * threshold <= col("id1._size"))
+      .select(col("id1.id").as("id1"), col("id2.id").as("id2")).distinct()
       .persistTracked()
-    // exact |A∩B|: unpivot each (distinct — duplicates would double
-    // rows per group below) candidate to one row per member id,
-    // broadcast that against the set table (no corpus shuffle) when it
-    // fits the gate, and regroup by pair — each group holds exactly
-    // the pair's two key arrays, intersected per-row
-    val candLong = cand.select(col("id1"), col("id2"),
-      explode(array(col("id1"), col("id2"))).as("id"))
-    val attached =
-      if (fitsBudget(cand, pairBroadcastBudget))
-        sets.join(broadcast(candLong), Seq("id"))
-      else sets.hint("shuffle_hash").join(candLong, Seq("id"))
-    attached
-      .groupBy(col("id1"), col("id2"))
-      .agg(
-        max(when(col("id") === col("id1"), col("_size"))).as("_s1"),
-        max(when(col("id") === col("id2"), col("_size"))).as("_s2"),
-        collect_list(col("_sh")).as("_ab"))
-      .withColumn("_inter",
-        size(array_intersect(element_at(col("_ab"), 1), element_at(col("_ab"), 2))))
+    // exact Jaccard of the pair's two distinct key arrays
+    Candidates.verify(cand, sets.select(col("id"), col("_sh")), "id", pairBroadcastBudget)
       .withColumn("jaccard",
-        col("_inter").cast("double") /
-          (col("_s1") + col("_s2") - col("_inter")).cast("double"))
+        jaccardArr(element_at(col("_ab"), 1), element_at(col("_ab"), 2)))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
   }
@@ -1146,8 +1079,9 @@ object Dedup {
   /** SimHash near-dup pairs with Hamming ≤ maxDist, candidates via
     * 4-way band pigeonhole (any pair within Hamming 3 shares at least
     * one intact 15-bit quarter). Verified with exact
-    * `bit_count(xor)`. */
-  /** `maxDist` must be ≤ 3: the 4-band pigeonhole is lossless only
+    * `bit_count(xor)`.
+    *
+    * `maxDist` must be ≤ 3: the 4-band pigeonhole is lossless only
     * there, and the pre-refactor behavior above 3 SILENTLY missed
     * pairs (banding recall < 1 with no signal) — the delegated guard
     * now fails loud instead, per the repo convention. Widen the
@@ -1176,14 +1110,14 @@ object Dedup {
     * millions of blank/monochrome/boilerplate media objects share one
     * sig exactly, and banding raw doc rows would put all of them (×
     * bands) into the same buckets: a quadratic candidate explosion in
-    * one shuffle partition. Instead the banded self-join runs over
+    * one shuffle partition. Instead the band buckets hold
     * DISTINCT sigs only, so a band bucket holds at most
     * min(#distinct sigs, 2^(bits − bits/bands)) rows no matter how
     * skewed the corpus — multiplicity cannot inflate a bucket.
     * Verified sig-level pairs then re-expand to member pairs by two
-    * sig-keyed joins (cross-sig pairs) plus one sig-keyed self-join
-    * (within-sig pairs, Hamming 0 by definition) — LOSSLESS: the
-    * output pair set is bit-identical to the uncollapsed form
+    * sig-keyed joins (cross-sig pairs) plus the sig groups' own
+    * bucket mates (within-sig pairs, Hamming 0 by definition) —
+    * LOSSLESS: the output pair set is bit-identical to the uncollapsed form
     * (spec-pinned on a heavy-multiplicity corpus), and any remaining
     * skew is proportional to the caller-requested OUTPUT, never to
     * spurious candidates. Shuffles carry (band, bucket, sig) /
@@ -1204,8 +1138,8 @@ object Dedup {
     // docs feed the distinct-sig collapse plus three expansion scans —
     // persist once (registry-released), PRE-PARTITIONED on sig: the
     // cached partitioning satisfies every downstream sig-keyed
-    // consumer (distinct's partial agg, the within-sig self-join's
-    // both sides, the member-expansion probe sides), so the collapse
+    // consumer (distinct's partial agg, the within-sig bucket
+    // aggregation, the member-expansion probe sides), so the collapse
     // costs ONE up-front exchange instead of one per consumer
     val docs = hashes.select(col(idCol).as("id"), col(hashCol).as("sig"))
       .repartition(col("sig"))
@@ -1216,15 +1150,12 @@ object Dedup {
         posexplode(array((0 until bands).map(q =>
           shiftrightunsigned(col("sig"), q * w).bitwiseAND(lit(mask))): _*)))
       .select(col("sig"), col("pos").as("band"), col("col").as("bucket"))
-    val a = banded.select(col("band"), col("bucket"), col("sig").as("_sigA"))
-    val b = banded.select(col("band"), col("bucket"), col("sig").as("_sigB"))
     // sig-level candidates: bucket population is entropy-bounded (see
     // doc above); canonical _sigA < _sigB halves the pair space and
     // distinct() collapses multi-band rediscoveries of one sig pair
-    val repPairs = a.hint("shuffle_hash").join(b, Seq("band", "bucket"))
-      .filter(col("_sigA") < col("_sigB"))
-      .select(col("_sigA"), col("_sigB"),
-        call_function("bit_count", col("_sigA").bitwiseXOR(col("_sigB")))
+    val repPairs = Candidates.bucketMates(banded, Seq("band", "bucket"), col("sig"))
+      .select(col("id1").as("_sigA"), col("id2").as("_sigB"),
+        call_function("bit_count", col("id1").bitwiseXOR(col("id2")))
           .cast("int").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxDist)
@@ -1238,10 +1169,7 @@ object Dedup {
         greatest(col("_idA"), col("_idB")).as("id2"), col("hamming"))
     // ...plus within-sig pairs — identical fingerprints, Hamming 0,
     // no banding or verification needed
-    val d1 = docs.select(col("sig"), col("id").as("id1"))
-    val d2 = docs.select(col("sig"), col("id").as("id2"))
-    val within = d1.hint("shuffle_hash").join(d2, Seq("sig"))
-      .filter(col("id1") < col("id2"))
+    val within = Candidates.bucketMates(docs, Seq("sig"), col("id"))
       .select(col("id1"), col("id2"), lit(0).cast("int").as("hamming"))
     cross.unionByName(within)
   }
@@ -1334,14 +1262,11 @@ object Dedup {
     // within-batch at group level: G's min drops iff some group H
     // within maxDist has a strictly smaller min (the pairwise
     // lowest-id rule, collapsed)
-    val g1 = bBands.select(col("band"), col("bucket"),
-      col("sig").as("_s1"), col("_minId").as("_m1"))
-    val g2 = bBands.select(col("band"), col("bucket"),
-      col("sig").as("_s2"), col("_minId").as("_m2"))
-    val dropInBatch = g1.hint("shuffle_hash").join(g2, Seq("band", "bucket"))
-      .filter(col("_m1") < col("_m2"))
-      .filter(ham(col("_s1"), col("_s2")) <= maxDist)
-      .select(col("_s2").as("_dsig"))
+    val dropInBatch = Candidates.bucketMates(bBands, Seq("band", "bucket"),
+        struct(col("_minId"), col("sig")))
+      .filter(col("id1._minId") < col("id2._minId"))
+      .filter(ham(col("id1.sig"), col("id2.sig")) <= maxDist)
+      .select(col("id2.sig").as("_dsig"))
     val dropped = dropVsStore.unionByName(dropInBatch).distinct()
     bGroups.join(dropped.hint("shuffle_hash"),
         bGroups("sig") === dropped("_dsig"), "left_anti")

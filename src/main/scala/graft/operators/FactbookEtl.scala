@@ -144,12 +144,4 @@ object FactbookEtl {
       .groupBy("mapped_good")
       .agg(array_sort(collect_set("goods")).as("goods"))
   }
-
-  /** Graph-store write (S6/S8 semantics): MERGE-by-key == dedup on the
-    * key before an overwrite write, with uniqueness asserted. */
-  def writeNodes(df: DataFrame, key: String, path: String): Unit = {
-    val deduped = df.dropDuplicates(key)
-    EtlOps.assertUniqueKey(deduped, Seq(key))
-    deduped.write.mode("overwrite").parquet(path)
-  }
 }

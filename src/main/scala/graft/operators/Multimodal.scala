@@ -755,22 +755,6 @@ object Multimodal {
       }
   }
 
-  /** VIDEO near-dup by frame-signature set overlap (X205) — the
-    * production pattern for video dedup at scale (per-frame
-    * fingerprints + set containment, not raw-pixel comparison): two
-    * videos pair when the Jaccard of their DISTINCT frame-hash sets
-    * meets the threshold. The [[graft.operators.Dedup.ngramJaccardPairs]]
-    * shape applied to the frame domain: one inverted index on the
-    * 8-byte frame hash (never all-pairs — candidates only where a
-    * hash is shared), one (id1, id2) partial-agg count, exact Jaccard
-    * from the per-video distinct-hash sizes, 6dp-rounded for
-    * hash-portability. `maxFrameDf` drops frame hashes shared by more
-    * than that many videos from the index — the hot-shingle cap:
-    * a ubiquitous frame (intro card, black frame) is the stopword of
-    * the video domain, and its inverted-index bucket is the quadratic
-    * hazard; dropped hashes leave BOTH the index and the set sizes,
-    * so the Jaccard stays a true set statistic over the retained
-    * vocabulary (spec-pinned). */
   /** INCREMENTAL (cross-snapshot) video near-dup (X206) — the
     * ingestion form, following the family discipline (batch →
     * increment → stream) every dedup family keeps: a batch of new
@@ -832,7 +816,10 @@ object Multimodal {
     def sized(d: DataFrame): DataFrame =
       d.join(d.groupBy(col("id")).agg(count(lit(1)).as("_size"))
         .hint("shuffle_hash"), Seq("id"))
-    val bS = sized(b).select(col("h"), col("id").as("bid"),
+    // pre-partitioned on h: the store join and the within-batch
+    // bucket aggregation read one batch exchange
+    val bSized = sized(b).repartition(col("h"))
+    val bS = bSized.select(col("h"), col("id").as("bid"),
       col("_size").as("_sb"))
     val sS = sized(s).select(col("h"), col("id").as("sid"),
       col("_size").as("_ss"))
@@ -843,19 +830,30 @@ object Multimodal {
       .agg(count(lit(1)).as("_shared"))
       .filter(jac(col("_shared"), col("_sb"), col("_ss")) >= threshold)
       .select(col("bid"))
-    val b2 = bS.select(col("h"), col("bid").as("bid2"),
-      col("_sb").as("_sb2"))
-    val within = bS.hint("shuffle_hash").join(b2, Seq("h"))
-      .filter(col("bid") < col("bid2"))
-      .groupBy(col("bid"), col("bid2"), col("_sb"), col("_sb2"))
-      .agg(count(lit(1)).as("_shared"))
-      .filter(jac(col("_shared"), col("_sb"), col("_sb2")) >= threshold)
-      .select(col("bid2").as("bid"))
+    val within = Candidates.sharedKeyJaccard(bSized, "h")
+      .filter(round(col("jaccard"), 6) >= threshold)
+      .select(col("id2").as("bid"))
     val dups = vsStore.unionByName(within).distinct()
     b0.join(dups.hint("shuffle_hash"), b0("id") === dups("bid"), "left_anti")
       .select(col("id").as(idCol), col("h").as(sigCol))
   }
 
+  /** VIDEO near-dup by frame-signature set overlap (X205) — the
+    * production pattern for video dedup at scale (per-frame
+    * fingerprints + set containment, not raw-pixel comparison): two
+    * videos pair when the Jaccard of their DISTINCT frame-hash sets
+    * meets the threshold. The [[graft.operators.Dedup.ngramJaccardPairs]]
+    * shape applied to the frame domain: one inverted index on the
+    * 8-byte frame hash (never all-pairs — candidates only where a
+    * hash is shared), one (id1, id2) partial-agg count, exact Jaccard
+    * from the per-video distinct-hash sizes, 6dp-rounded for
+    * hash-portability. `maxFrameDf` drops frame hashes shared by more
+    * than that many videos from the index — the hot-shingle cap:
+    * a ubiquitous frame (intro card, black frame) is the stopword of
+    * the video domain, and its inverted-index bucket is the quadratic
+    * hazard; dropped hashes leave BOTH the index and the set sizes,
+    * so the Jaccard stays a true set statistic over the retained
+    * vocabulary (spec-pinned). */
   def videoNearDupPairs(sigs: DataFrame, threshold: Double,
       idCol: String = "media_id", sigCol: String = "fhash",
       maxFrameDf: Long = Long.MaxValue): DataFrame = {
@@ -876,14 +874,8 @@ object Multimodal {
     val sized = d.join(
       d.groupBy(col("id")).agg(count(lit(1)).as("_size"))
         .hint("shuffle_hash"), Seq("id"))
-    val a = sized.select(col("h"), col("id").as("id1"), col("_size").as("_s1"))
-    val b = sized.select(col("h"), col("id").as("id2"), col("_size").as("_s2"))
-    a.hint("shuffle_hash").join(b, Seq("h"))
-      .filter(col("id1") < col("id2"))
-      .groupBy(col("id1"), col("id2"), col("_s1"), col("_s2"))
-      .agg(count(lit(1)).as("shared"))
-      .withColumn("jaccard", round(col("shared").cast("double") /
-        (col("_s1") + col("_s2") - col("shared")).cast("double"), 6))
+    Candidates.sharedKeyJaccard(sized, "h")
+      .withColumn("jaccard", round(col("jaccard"), 6))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), col("shared"), col("jaccard"))
   }

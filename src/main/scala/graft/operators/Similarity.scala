@@ -1690,18 +1690,21 @@ object Similarity {
     val cand = candidates
       .select(col(qIdCol), col(idCol), col("rel").cast("long").as("_rel"))
     // stage 2: pairwise candidate sims — candidates rejoin the corpus
-    // for their vectors ONCE (fetchK·|Q| rows), then self-join per
-    // query: |Q|·fetchK² short (q, a, b, sim) rows, never corpus-sized
+    // for their vectors ONCE (fetchK·|Q| rows), then pair up per query:
+    // |Q|·fetchK² short (q, a|b, sim) rows, never corpus-sized. Cosine
+    // is symmetric, so each unordered pair is scored once and keyed
+    // both ways.
     val cv = corpus.join(broadcast(cand.select(col(qIdCol), col(idCol))),
       Seq(idCol)).select(col(qIdCol), col(idCol), col(vecCol))
-    val a = cv.select(col(qIdCol), col(idCol).as("_a"), col(vecCol).as("_va"))
-    val b = cv.select(col(qIdCol), col(idCol).as("_b"), col(vecCol).as("_vb"))
-    val sims = a.join(b, Seq(qIdCol))
-      .filter(col("_a") =!= col("_b"))
+    def key(a: Column, b: Column): Column =
+      concat_ws("|", a.cast("string"), b.cast("string"))
+    val sims = Candidates.bucketMates(cv, Seq(qIdCol),
+        struct(col(idCol).as("id"), col(vecCol).as("_v")))
+      .filter(col("id1.id") =!= col("id2.id"))
       .select(col(qIdCol),
-        concat_ws("|", col("_a").cast("string"), col("_b").cast("string"))
-          .as("_k"),
-        cos6(col("_va"), col("_vb")).as("_sim"))
+        explode(array(key(col("id1.id"), col("id2.id")),
+          key(col("id2.id"), col("id1.id")))).as("_k"),
+        cos6(col("id1._v"), col("id2._v")).as("_sim"))
     // stage 3: per-query bounded state — candidate array (canonical id
     // order) + sim lookup map — then the greedy fold, map-side
     val candArr = cand.groupBy(col(qIdCol))
@@ -2152,34 +2155,41 @@ object Similarity {
     * ([[Clustering.kmeansFixedPoint]]: driver rounds after one bounded
     * collect below the size gate; above it broadcast literal centroids,
     * map-side argmin, one partial-agg shuffle per round); the
-    * quadratic term is confined to within-cell pairing via an
-    * equi-join on cluster id, pinned shuffle-hash (both sides
-    * corpus-sized — never a driver broadcast). Cells are corpus/k, so
-    * k must grow with the corpus (the paper uses k ≈ √n-ish) to bound
-    * the per-cell pair volume; the drop rule (exists a lower-id
-    * similar sibling) is a distinct + anti-join, no transitive
-    * closure needed. */
+    * quadratic term is confined to within-cell pairing: one hash
+    * aggregation on cluster id gathers each cell
+    * ([[Candidates.bucketMates]]), never a driver broadcast. Cells are
+    * corpus/k, so k must grow with the corpus (the paper uses k ≈
+    * √n-ish) to bound the per-cell pair volume; the drop rule (exists
+    * a lower-id similar sibling) is a distinct + anti-join, no
+    * transitive closure needed. */
   def semanticDedup(corpus: DataFrame, k: Int, iters: Int, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val assigned = Clustering.kmeansFixedPoint(corpus, idCol, vecCol, k, iters)
       .select(col("vec_id").as(idCol), col("cluster"))
-    // (id, vector, cluster) feeds three structurally different
-    // consumers: both pair sides (AQE reuses that exchange) and the
-    // survivor anti-join
+    // (id, vector, cluster) feeds the cell pairing and the survivor
+    // anti-join.
     // shuffle-hash pinned: both sides are corpus-sized — AQE would
     // broadcast `assigned` from small-SF stats and that dies at scale
     val withCell = spread(corpus).select(col(idCol), col(vecCol))
       .hint("shuffle_hash").join(assigned, Seq(idCol))
       .persistTracked()
-    val a = withCell.select(col("cluster"), col(idCol).as("id1"), col(vecCol).as("_v1"))
-    val b = withCell.select(col("cluster"), col(idCol).as("id2"), col(vecCol).as("_v2"))
-    val dropped = a.hint("shuffle_hash").join(b, Seq("cluster"))
-      .filter(col("id1") < col("id2") &&
-        cosineAuto(col("_v1"), col("_v2")) >= threshold)
+    val dropped = cellMates(withCell, "cluster", idCol, vecCol, threshold)
       .select(col("id2").as(idCol)).distinct()
     withCell.join(dropped, Seq(idCol), "left_anti")
       .select(col(idCol), col("cluster"))
   }
+
+  /** `(id1, id2)` pairs of `cells` rows that share `cell`, with
+    * `id1 < id2` and cosine ≥ `threshold`: the within-cell quadratic
+    * pass of the SemDeDup family. A cell's rows sit in one collected
+    * row, the rows a hash-join build on `cell` would hold. */
+  private def cellMates(cells: DataFrame, cell: String, idCol: String,
+      vecCol: String, threshold: Double): DataFrame =
+    Candidates.bucketMates(cells, Seq(cell),
+        struct(col(idCol).as("id"), col(vecCol).as("_v")))
+      .filter(col("id1.id") < col("id2.id") &&
+        cosineAuto(col("id1._v"), col("id2._v")) >= threshold)
+      .select(col("id1.id").as("id1"), col("id2.id").as("id2"))
 
   /** [[semanticDedup]] with k DERIVED from the corpus instead of
     * caller-supplied — the scale-ergonomics variant: the caller states
@@ -2284,12 +2294,13 @@ object Similarity {
     * map-side to the FROZEN centroids (plan literals — zero shuffle
     * between scan and cell id, and bit-identical to the assignment that
     * built the store), and the quadratic cosine pass runs only inside a
-    * cell — batch-vs-store and batch-vs-batch both equi-join on `cell`,
-    * never all-pairs. A batch vector drops iff it scores rounded-6dp
+    * cell — batch-vs-store equi-joins on `cell` and batch-vs-batch
+    * pairs each cell's rows ([[Candidates.bucketMates]]), never
+    * all-pairs. A batch vector drops iff it scores rounded-6dp
     * cosine ≥ `threshold` against any store cell-sibling or any
     * SMALLER-id batch cell-sibling (the pairwise lowest-id rule shared
     * with the other two increments — closure is
-    * [[Dedup.connectedComponents]]' job). Both cell joins are pinned
+    * [[Dedup.connectedComponents]]' job). The store join is pinned
     * shuffle-hash: the store side is corpus-sized and the batch side
     * is caller-sized — neither may ride an AQE broadcast guess. The
     * dup-id anti-join probe IS gated (`fitsBudget`): dup ids are
@@ -2307,8 +2318,9 @@ object Similarity {
     require(needed.subsetOf(store.columns.toSet),
       s"incrementalSemanticDedup: store must have columns id/embedding/cell " +
         s"(semanticStoreRecords' schema), got ${store.columns.mkString(", ")}")
-    // batch records feed the vs-store join, both vs-batch sides, and
-    // the survivor anti-join — persist once (registry-released)
+    // batch records feed the vs-store join, the within-batch cell
+    // pairing, and the survivor anti-join — persist once
+    // (registry-released)
     val batch = Clustering.assignCells(spread(newBatch), idCol, vecCol, cents, scale)
       .persistTracked()
     val storeSide = store.select(col("cell"), col("id").as("_sid"),
@@ -2318,15 +2330,11 @@ object Similarity {
       .hint("shuffle_hash").join(storeSide, Seq("cell"))
       .filter(cosineAuto(col("_bv"), col("_sv")) >= threshold)
       .select(col("_bid"))
-    val a = batch.select(col("cell"), col(idCol).as("_id1"), col(vecCol).as("_v1"))
-    val b = batch.select(col("cell"), col(idCol).as("_id2"), col(vecCol).as("_v2"))
-    val dupInBatch = a.hint("shuffle_hash").join(b, Seq("cell"))
-      .filter(col("_id1") < col("_id2") &&
-        cosineAuto(col("_v1"), col("_v2")) >= threshold)
-      .select(col("_id2").as("_bid"))
+    val dupInBatch = cellMates(batch, "cell", idCol, vecCol, threshold)
+      .select(col("id2").as("_bid"))
     // persisted BEFORE the budget probe (fitsBudget's contract): the
-    // probe and the anti-join share one computation of the two
-    // corpus-sized cell joins instead of running them twice
+    // probe and the anti-join share one computation of the store cell
+    // join and the batch cell aggregation instead of running them twice
     val dups = dupVsStore.unionByName(dupInBatch).distinct()
       .persistTracked()
     val dupJoin =
@@ -2418,20 +2426,11 @@ object Similarity {
       shiftrightunsigned(col("_sig"), b * bits).bitwiseAND(lit(mask)))
     val banded = base.select(col("id"), col("_v"),
       posexplode(array(bandCols: _*)).as(Seq("_band", "_bucket")))
-    // one exchange on (band, bucket) gathers each bucket's (id, vector)
-    // rows, sorted by id, and the (id1 < id2) pairs stream out of two
-    // explodes (the `Dedup.bucketMatePairs` shape): a self-join would
-    // scan, sign and shuffle the corpus once per side
-    val members = array_sort(collect_list(struct(col("id"), col("_v"))))
-    banded.filter(col("_bucket").isNotNull)
-      .groupBy("_band", "_bucket").agg(members.as("_m"))
-      .filter(size(col("_m")).between(2, maxBucketSize))
-      .select(col("_m"), posexplode(col("_m")).as(Seq("_i", "_a")))
-      .select(col("_a"), explode(slice(col("_m"), col("_i") + 2,
-        size(col("_m")) - col("_i") - 1)).as("_b"))
-      .filter(col("_a.id") < col("_b.id"))
-      .select(col("_a.id").as("id1"), col("_b.id").as("id2"),
-        cosineAuto(col("_a._v"), col("_b._v")).as("cosine"))
+    Candidates.bucketMates(banded, Seq("_band", "_bucket"),
+        struct(col("id"), col("_v")), maxBucketSize)
+      .filter(col("id1.id") < col("id2.id"))
+      .select(col("id1.id").as("id1"), col("id2.id").as("id2"),
+        cosineAuto(col("id1._v"), col("id2._v")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .distinct() // a pair may match in several bands
   }

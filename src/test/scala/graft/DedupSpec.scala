@@ -152,6 +152,29 @@ class DedupSpec extends SparkSpec {
     graft.core.Caches.release(spark)
   }
 
+  test("fingerprint gates gather each band bucket once: one banded exchange per pairing") {
+    // the incremental gates also shuffle both sides of the batch-vs-store join
+    for ((q, n) <- Seq("q_simhash_pairs" -> 1, "q_image_neardup" -> 1,
+        "q_audio_neardup" -> 1, "q_incremental_image_neardup" -> 3,
+        "q_incremental_audio_neardup" -> 3)) {
+      val got = bandExchanges(SparkEntry.queries(q)(spark, s"${SparkSpec.TestData}/sf0.001"))
+      assert(got == n, s"$q: $got (band, bucket) exchanges")
+      graft.core.Caches.release(spark)
+    }
+  }
+
+  test("n-gram miners gather each shingle and prefix key in one exchange") {
+    def exchanges(q: String, keys: String*): Int = {
+      val n = Probes.hashExchanges(
+        SparkEntry.queries(q)(spark, s"${SparkSpec.TestData}/sf0.001"), keys)
+      graft.core.Caches.release(spark)
+      n
+    }
+    assert(exchanges("q_ngram_jaccard", "shingle") == 1)
+    // the other `_gk` exchange is the document-frequency count
+    assert(exchanges("q_ngram_prefix", "_gk") == 2)
+  }
+
   test("simhash: identical docs have distance 0; near-dups small distance") {
     val sigs = docs.select(col("doc_id"),
       Dedup.simhash60Auto(docs, "text").as("sig"))

@@ -376,6 +376,17 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
+  test("video gates gather each frame hash in one exchange per side") {
+    // the increment's batch side feeds its store join and its own
+    // pairing from one exchange; the store side has the other
+    for ((q, n) <- Seq("q_video_neardup" -> 1, "q_incremental_video_neardup" -> 2)) {
+      val got = Probes.hashExchanges(
+        SparkEntry.queries(q)(spark, s"${SparkSpec.TestData}/sf0.001"), Seq("h"))
+      assert(got == n, s"$q: $got (h) exchanges")
+      graft.core.Caches.release(spark)
+    }
+  }
+
   test("sampleFrames per-row frame size: mixed geometries in one corpus") {
     import graft.operators.Multimodal.{VideoFrameW, VideoFrameH, VideoFrameBytes}
     // geometry A: the fixture's 16x14 (726 B); geometry B: 8x6 BMP ->

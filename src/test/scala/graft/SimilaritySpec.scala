@@ -166,6 +166,20 @@ class SimilaritySpec extends SparkSpec {
     graft.core.Caches.release(spark)
   }
 
+  test("q_mmr_rerank pairs each query's candidates without a self-join") {
+    val picked = SparkEntry.queries("q_mmr_rerank")(spark, s"${SparkSpec.TestData}/sf0.001")
+    // the one join on q_id left is the candidate-array ⋈ sim-map state join
+    assert(Probes.joinsOn(picked, Seq("q_id")) == 1)
+    assert(Probes.hashExchanges(picked, Seq("q_id")) == 1)
+    graft.core.Caches.release(spark)
+  }
+
+  test("q_semantic_dedup gathers each k-means cell in one exchange") {
+    val kept = SparkEntry.queries("q_semantic_dedup")(spark, s"${SparkSpec.TestData}/sf0.001")
+    assert(Probes.hashExchanges(kept, Seq("cluster")) == 1)
+    graft.core.Caches.release(spark)
+  }
+
   test("banded 10-bit buckets are smaller than the single 8-bit signature's") {
     // the quadratic within-bucket pairing term at scale is governed by
     // the LARGEST bucket; banding must shrink it
