@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan/timing inspector: `runMain graft.Explain <query> <sfDir>`
   * prints the formatted physical plan, then executes to the noop sink
-  * with per-run timing, jobs, stages and generated classes compiled.
+  * with per-run timing, jobs, stages, generated classes compiled and
+  * the formatted plan's length in characters.
   * Dev tool for the "is this the plan I'd want at 100 TB" iteration
   * loop. */
 object Explain {
@@ -44,13 +46,15 @@ object Explain {
         jobs.set(0); stages.set(0)
         val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        val secs = (System.nanoTime() - t0) / 1e9
         // a warm run reuses its generated classes: nonzero means the
         // codegen cache evicted them or the plan changed between runs
         val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
-        println(f"[explain] $name run$i: ${(System.nanoTime() - t0) / 1e9}%.2fs " +
-          s"(${jobs.get()} jobs, ${stages.get()} stages, $compiled classes compiled)")
+        println(f"[explain] $name run$i: $secs%.2fs " +
+          s"(${jobs.get()} jobs, ${stages.get()} stages, $compiled classes compiled, " +
+          s"${formattedPlanChars(df)} plan chars)")
         // cold-cache, warm-JVM: drop what the query persisted so run2/3
         // time the real per-pass cost Bench pays, not a cache replay
         spark.catalog.clearCache()
@@ -58,4 +62,10 @@ object Explain {
     }
     spark.stop()
   }
+
+  /** Length of `df`'s formatted physical plan (`explain("formatted")`):
+    * the text the driver renders for every execution and AQE update, so
+    * a plan that carries its constants inline shows up here. */
+  def formattedPlanChars(df: DataFrame): Int =
+    df.queryExecution.explainString(FormattedMode).length
 }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSessionExtensions
   * `spark.sql.extensions=graft.GraftExtensions`.
   *
   * Besides registering the `graft_*` SQL functions it sizes Spark's
-  * generated-class cache ([[CodegenCacheMaxEntries]]) on the starting
+  * generated-class cache ([[CodegenCacheMaxEntries]]) and makes
+  * whole-stage class names id-free ([[ClassNameIdKey]]) on the starting
   * context's conf. Spark applies the extension inside `getOrCreate`,
   * before `SharedState` copies the static SQL confs and before the first
   * code generation builds `CodeGenerator`'s JVM-wide cache, so when the
@@ -16,7 +17,10 @@ import org.apache.spark.sql.SparkSessionExtensions
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private val inner = new graft.functions.GraftFunctionExtensions
   override def apply(ext: SparkSessionExtensions): Unit = {
-    Option(SparkEnv.get).foreach(env => GraftExtensions.sizeCodegenCache(env.conf))
+    Option(SparkEnv.get).foreach { env =>
+      GraftExtensions.sizeCodegenCache(env.conf)
+      GraftExtensions.idFreeClassNames(env.conf)
+    }
     inner(ext)
   }
 }
@@ -38,4 +42,14 @@ object GraftExtensions {
   /** Set [[CodegenCacheMaxEntries]] unless `conf` already names the key. */
   def sizeCodegenCache(conf: SparkConf): Unit =
     conf.setIfMissing(CodegenCacheKey, CodegenCacheMaxEntries.toString)
+
+  /** Whether a whole-stage class name carries its `codegenStageId`. The
+    * id is part of the generated source, which keys the class cache, and
+    * AQE numbers stages in the order they finish: two pipelines that
+    * finish in either order (the train and eval sides of
+    * `q_decontaminate`) swap ids from run to run and recompile. */
+  val ClassNameIdKey = "spark.sql.codegen.useIdInClassName"
+
+  /** Turn [[ClassNameIdKey]] off unless `conf` already names the key. */
+  def idFreeClassNames(conf: SparkConf): Unit = conf.setIfMissing(ClassNameIdKey, "false")
 }

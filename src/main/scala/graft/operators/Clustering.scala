@@ -21,12 +21,12 @@ import graft.functions.Native
   * instead of one per round.
   *
   * Scale shape, above the gate (the broadcast-k-means plan):
-  *  - centroids (k × dims values) live on the driver and are folded
-  *    into the plan as literals each round — the cluster never shuffles
-  *    vectors to compare them;
-  *  - ASSIGNMENT is a pure map-side argmin against those literals
-  *    (zero shuffle between the scan and the cluster id), exactly like
-  *    [[Similarity.ivfTopK]]'s cell assignment;
+  *  - centroids (k × dims values) live on the driver and ride in the
+  *    plan each round as one plan constant of the native nearest-k
+  *    kernel ([[Native.nearestK]]; the plan prints its shape, not its
+  *    values) — the cluster never shuffles vectors to compare them;
+  *  - ASSIGNMENT is a pure map-side argmin, one k·dims integer loop per
+  *    row (zero shuffle between the scan and the cluster id);
   *  - the UPDATE is one partial-agg shuffle keyed by (cluster, dim):
   *    map-side combine reduces each partition to ≤ k·dims rows before
   *    the exchange, so shuffle volume is O(partitions · k · dims),
@@ -50,26 +50,18 @@ import graft.functions.Native
   */
 object Clustering {
 
-  /** Quantize array<float|double> to scaled fixed-point BIGINT. */
-  def fixedPoint(vec: Column, scale: Double): Column =
-    transform(vec, v => floor(v.cast("double") * scale + 0.5).cast("long"))
+  /** Quantize a numeric array to scaled fixed-point BIGINT:
+    * floor(x·scale + 0.5) per element ([[Native.fixedPoint]]). */
+  def fixedPoint(vec: Column, scale: Double): Column = Native.fixedPoint(vec, scale)
 
-  /** Exact squared L2 distance to a literal centroid: the native
-    * codegen kernel ([[Native.sqDistI64]]), which runs k times per row
-    * in the assignment hot path and raises on a Long overflow. */
-  private[operators] def sqDistToLit(qv: Column, cv: Array[Long]): Column =
-    Native.sqDistI64(qv, typedlit(cv.toSeq))
-
-  private[operators] def assignTo(cents: Array[(Int, Array[Long])])(df: DataFrame): DataFrame = {
-    val entries = cents.map { case (cid, cv) =>
-      struct(sqDistToLit(col("qv"), cv).as("d"), lit(cid.toLong).as("c"))
-    }
-    // lexicographic struct sort: min distance, ties to lowest cluster
-    df.withColumn("_best", sort_array(array(entries: _*)).getItem(0))
+  /** Appends each `qv` row's nearest centroid (`cluster`) and its exact
+    * squared distance (`dist`): min distance, ties to the lowest cluster
+    * id, a Long overflow raising ([[Native.nearestK]]). */
+  private[operators] def assignTo(cents: Array[(Int, Array[Long])])(df: DataFrame): DataFrame =
+    df.withColumn("_best", Native.nearestK(col("qv"), cents, 1).getItem(0))
       .withColumn("cluster", col("_best").getField("c"))
       .withColumn("dist", col("_best").getField("d"))
       .drop("_best")
-  }
 
   /** Job description of the bounded collect that brings a small
     * training corpus to the driver (and of the length probe before it,
@@ -80,7 +72,7 @@ object Clustering {
   private[operators] def fixedPointLocal(x: Double, scale: Double): Long =
     math.floor(x * scale + 0.5).toLong
 
-  /** Exact squared L2 distance as [[sqDistToLit]] computes it: Long
+  /** Exact squared L2 distance as [[assignTo]] computes it: Long
     * arithmetic that fails loudly on overflow. */
   private[operators] def sqDist(a: Array[Long], b: Array[Long]): Long = {
     var acc = 0L
@@ -294,9 +286,10 @@ object Clustering {
     * [[kmeansFixedPoint]]'s corpus does and run the identical integer
     * argmin (ties to the lowest cluster id), so any vector gets the
     * same cell whether it was in the training corpus or arrives in a
-    * later increment. Pure projection over `k·dims` plan literals:
-    * zero shuffle between the scan and the cell id. Keeps the caller's
-    * id and vector columns and appends `cell`. */
+    * later increment. Pure projection, one native k·dims loop per row
+    * over the centroids as a plan constant: zero shuffle between the
+    * scan and the cell id. Keeps the caller's id and vector columns and
+    * appends `cell`. */
   def assignCells(df: DataFrame, idCol: String, vecCol: String,
       cents: Array[(Int, Array[Long])], scale: Double = 1e6): DataFrame = {
     require(cents.nonEmpty, "assignCells: empty centroid set")
@@ -309,7 +302,7 @@ object Clustering {
   /** [[assignCells]] keeping the winning centroid's EXACT integer
     * squared distance — the assignment-quality signal
     * [[graft.operators.Similarity.ivfDriftReport]] aggregates. Same
-    * map-side literal-argmin plan; emits (idCol, cell, dist). */
+    * map-side argmin plan; emits (idCol, cell, dist). */
   def assignCellsWithDist(df: DataFrame, idCol: String, vecCol: String,
       cents: Array[(Int, Array[Long])], scale: Double = 1e6): DataFrame = {
     require(cents.nonEmpty, "assignCellsWithDist: empty centroid set")

@@ -234,14 +234,15 @@ object Similarity {
   /** PQ-coarse → exact-rerank top-k — the memory-tier ANN serving
     * shape (X150), completing the repo's compression ladder (float32
     * brute → int8 [[quantizedRerankTopK]] 4× → PQ 32-128×): corpus
-    * vectors ENCODE once to m sub-codes (map-side argmin against the
-    * literal codebooks — the [[Clustering.assignCells]] plan per
-    * sub-space, zero shuffles); each query builds its asymmetric
-    * distance LUT (exact integer dot of its fixed-point sub-vector
-    * with every codebook entry — m·codes values, computed once per
-    * query);
+    * vectors ENCODE once to m sub-codes (map-side argmin per sub-space,
+    * the k-means assignment rule, in one native loop over the codebooks
+    * held as a plan constant — [[Native.pqEncode]], zero shuffles);
+    * each query builds its asymmetric distance LUT (exact integer dot
+    * of its fixed-point sub-vector with every codebook entry — m·codes
+    * values, computed once per query, [[Native.adcLut]]);
     * scoring a pair is then m array lookups + an integer sum
-    * (`lut[i][code[i]]` — the ADC trick that makes PQ fast), top
+    * (`lut[i][code[i]]` — the ADC trick that makes PQ fast,
+    * [[Native.adcScore]]), top
     * `coarseK` per query via the bounded-heap aggregator, and the
     * float-cosine rerank joins ONLY those candidates back by id
     * (X7c's shape). Integer LUT scores + id tie-breaks keep both
@@ -253,40 +254,20 @@ object Similarity {
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       "pqTopK: empty codebooks")
     require(k <= coarseK, s"k=$k must be <= coarseK=$coarseK")
-    val m = codebooks.length
-    val subDim = codebooks(0)(0)._2.length
-    def subQ(vec: Column, i: Int): Column =
-      Clustering.fixedPoint(slice(vec, i * subDim + 1, subDim), scale)
-    // encode: per sub-space, argmin over literal codebook entries
-    // (lexicographic struct sort — min dist, ties to lowest code id),
-    // exactly the k-means assignment rule
-    val enc = spread(corpus).select(
-      (col("vec_id") +: (0 until m).map(i =>
-        subQ(col("embedding"), i).as(s"_q$i"))): _*)
-    val codesDf = enc.select(col("vec_id"), array((0 until m).map { i =>
-      val entries = codebooks(i).map { case (cid, cv) =>
-        struct(Clustering.sqDistToLit(col(s"_q$i"), cv).as("d"),
-          lit(cid.toLong).as("c"))
-      }
-      sort_array(array(entries: _*)).getItem(0).getField("c")
-    }: _*).as("_codes"))
+    // encode: per sub-space, the nearest codeword (min dist, ties to
+    // the lowest code id), exactly the k-means assignment rule
+    val codesDf = spread(corpus).select(col("vec_id"),
+      Native.pqEncode(Clustering.fixedPoint(col("embedding"), scale), codebooks)
+        .as("_codes"))
     // per-query ADC lookup table: lut[i][c] = <query sub i, codebook
     // entry c> as an exact integer dot (fixed-point both sides; |x| ≤
     // scale ⇒ per-product ≤ scale², sub-sums ≪ Long.Max)
-    def dotToLit(a: Column, cv: Array[Long]): Column =
-      aggregate(zip_with(a, typedlit(cv.toSeq), (x, y) => x * y),
-        lit(0L), (acc, v) => acc + v)
-    val qLut = queries.select(col("q_id"), array((0 until m).map { i =>
-      val sub = subQ(col("q_vec"), i)
-      array(codebooks(i).sortBy(_._1).map { case (_, cv) =>
-        dotToLit(sub, cv) }: _*)
-    }: _*).as("_lut"))
+    val qLut = queries.select(col("q_id"),
+      Native.adcLut(Clustering.fixedPoint(col("q_vec"), scale), codebooks, dot = true)
+        .as("_lut"))
     val scored = codesDf.crossJoin(broadcast(qLut))
       .select(col("q_id"), col("vec_id"),
-        aggregate(
-          zip_with(col("_codes"), col("_lut"),
-            (c, l) => element_at(l, (c + 1).cast("int"))),
-          lit(0L), (acc, v) => acc + v).as("score"))
+        Native.adcScore(col("_codes"), col("_lut")).as("score"))
     val cand = finishTopK(scored, "q_id", "vec_id", coarseK)
       .select(col("q_id"), col("vec_id"))
     val rescored = corpus
@@ -360,20 +341,18 @@ object Similarity {
   /** (id, cell, rv) — each vector's coarse cell plus its EXACT integer
     * residual (fixed-point vector minus the assigned centroid,
     * element-wise BIGINT subtraction — no re-quantization round
-    * trip), the shared front half of IVF-PQ training and encoding. */
+    * trip, [[Native.residual]]), the shared front half of IVF-PQ
+    * training and encoding. */
   private def residualFrame(df: DataFrame, idCol: String, vecCol: String,
       coarseCents: Array[(Int, Array[Long])], scale: Double,
       metaCols: Seq[String] = Nil): DataFrame = {
-    val centLit = typedlit(coarseCents.sortBy(_._1).map(_._2.toSeq).toSeq)
     val q = df.select(
       (col(idCol) +: metaCols.map(col)) :+
         Clustering.fixedPoint(col(vecCol), scale).as("qv"): _*)
     Clustering.assignTo(coarseCents)(q)
       .select(
         (col(idCol) +: metaCols.map(col)) :+ col("cluster").as("cell") :+
-          zip_with(col("qv"),
-            element_at(centLit, (col("cluster") + 1).cast("int")),
-            (x, y) => x - y).as("rv"): _*)
+          Native.residual(col("qv"), col("cluster"), coarseCents).as("rv"): _*)
   }
 
   /** Train an IVF-PQ index (X151; Jégou et al. 2011 §IV) — the
@@ -417,8 +396,7 @@ object Similarity {
       case Some(rows) =>
         val coarse = Clustering.lloyd(rows, cells, cellIters)
         val cents = coarse.map(_._2)
-        // the residual frame's `zip_with(x - y)`, which raises on
-        // overflow under ANSI
+        // the residual frame's subtraction, which raises on overflow
         val res = rows.map { case (id, v) =>
           val c = cents(Clustering.nearest(cents, v))
           (id, Array.tabulate(v.length)(j => Math.subtractExact(v(j), c(j))))
@@ -454,8 +432,9 @@ object Similarity {
     * a query probes only its `nprobe` nearest cells, so the scored
     * row count drops by ~cells/nprobe AND each scored row costs m
     * table lookups instead of dims multiplies. Concretely: corpus
-    * rows encode map-side (literal centroids/codebooks, zero
-    * shuffles); each query explodes to its nprobe (cell, LUT) rows
+    * rows encode map-side (native kernels over the centroids and
+    * codebooks held as plan constants, zero shuffles); each query
+    * explodes to its nprobe (cell, LUT) rows
     * where LUT[i][c] = exact integer sqdist of the query's residual
     * sub-vector to codeword c (ADC in the residual domain —
     * approximates ‖q − x‖²); the probe is a broadcast EQUI-join on
@@ -476,8 +455,10 @@ object Similarity {
   /** Map-side IVF-PQ ENCODE under a FROZEN index (X157) — each vector
     * becomes its serving-store row (id, cell, codes): coarse cell by
     * the exact integer argmin, then per sub-space the nearest residual
-    * codeword (k-means' tie rule) against LITERAL codebooks. Pure
-    * projection, zero shuffles — the encode is embarrassingly parallel
+    * codeword (k-means' tie rule), each one native loop over codebooks
+    * held as plan constants ([[Native.nearestK]], [[Native.residual]],
+    * [[Native.pqEncode]]). Pure projection, zero shuffles — the encode
+    * is embarrassingly parallel
     * and ARRIVAL-TIME-INVARIANT (a vector gets identical codes whether
     * it was in the bootstrap corpus or lands in a later increment —
     * the same frozen-quantizer contract as [[semanticStoreRecords]]),
@@ -501,29 +482,16 @@ object Similarity {
       s"ivfPqCodes: metaCols collide with reserved store/internal names " +
         s"(vec_id, cell, codes, qv, rv, cluster, dist, _best, _r<i>): " +
         metaCols.mkString(", "))
-    val m = codebooks.length
-    val subDim = codebooks(0)(0)._2.length
-    // cell + residual sub-slices -> m codes (map-side argmin per
-    // sub-space against literal codebooks; k-means' tie rule).
-    // metaCols denormalize filterable attributes INTO the store row
-    // (lang, source, license, ...) — still a pure projection, and the
-    // one design that lets a later predicate-constrained search run
-    // as a scan filter on the codes store instead of an id join.
+    // cell + residual -> m codes (map-side argmin per sub-space;
+    // k-means' tie rule). metaCols denormalize filterable attributes
+    // INTO the store row (lang, source, license, ...) — still a pure
+    // projection, and the one design that lets a later
+    // predicate-constrained search run as a scan filter on the codes
+    // store instead of an id join.
     val res = residualFrame(vecs, idCol, vecCol, coarseCents, scale, metaCols)
-    val enc0 = res.select(
-      (col(idCol).cast("long").as("vec_id") +: metaCols.map(col)) ++
-        (col("cell") +:
-          (0 until m).map(i =>
-            slice(col("rv"), i * subDim + 1, subDim).as(s"_r$i"))): _*)
-    enc0.select(
-      (col("vec_id") +: metaCols.map(col)) :+ col("cell") :+
-        array((0 until m).map { i =>
-          val entries = codebooks(i).map { case (cid, cw) =>
-            struct(Clustering.sqDistToLit(col(s"_r$i"), cw).as("d"),
-              lit(cid.toLong).as("c"))
-          }
-          sort_array(array(entries: _*)).getItem(0).getField("c")
-        }: _*).as("codes"): _*)
+    res.select(
+      (col(idCol).cast("long").as("vec_id") +: metaCols.map(col)) :+ col("cell") :+
+        Native.pqEncode(col("rv"), codebooks).as("codes"): _*)
   }
 
   /** IVF-PQ probe against a PRE-ENCODED codes store (X157) — the
@@ -550,39 +518,22 @@ object Similarity {
     require(Set("vec_id", "cell", "codes").subsetOf(codes.columns.toSet),
       s"ivfPqTopKFromCodes: codes store needs vec_id/cell/codes " +
         s"(ivfPqCodes' schema), got ${codes.columns.mkString(", ")}")
-    val m = codebooks.length
-    val subDim = codebooks(0)(0)._2.length
     // queries: nprobe nearest cells by the SAME integer argmin, then
     // per probed cell the query residual and its m x codes sqdist LUT
     val qq = queries.select(col("q_id"),
       Clustering.fixedPoint(col("q_vec"), scale).as("_qv"))
-    val centEntries = coarseCents.map { case (cid, cv) =>
-      struct(Clustering.sqDistToLit(col("_qv"), cv).as("d"),
-        lit(cid.toLong).as("c"))
-    }
-    val centLit = typedlit(coarseCents.sortBy(_._1).map(_._2.toSeq).toSeq)
     val probed = qq
-      .withColumn("_pc",
-        explode(slice(sort_array(array(centEntries: _*)), 1, nprobe)))
+      .withColumn("_pc", explode(Native.nearestK(col("_qv"), coarseCents, nprobe)))
       .select(col("q_id"), col("_qv"), col("_pc").getField("c").as("cell"))
-      .withColumn("_qr", zip_with(col("_qv"),
-        element_at(centLit, (col("cell") + 1).cast("int")),
-        (x, y) => x - y))
     val lut = probed.select(col("q_id"), col("cell"),
-      array((0 until m).map { i =>
-        val sub = slice(col("_qr"), i * subDim + 1, subDim)
-        array(codebooks(i).sortBy(_._1).map { case (_, cw) =>
-          Clustering.sqDistToLit(sub, cw) }: _*)
-      }: _*).as("_lut"))
+      Native.adcLut(Native.residual(col("_qv"), col("cell"), coarseCents), codebooks,
+        dot = false).as("_lut"))
     // the probe: keyed equi-join on cell — approximate distance is the
     // LUT sum, negated so the shared desc-top-k ranks ascending dist
     val scored = codes.select(col("vec_id"), col("cell"), col("codes"))
       .join(broadcast(lut), Seq("cell"))
       .select(col("q_id"), col("vec_id"),
-        (-aggregate(
-          zip_with(col("codes"), col("_lut"),
-            (c, l) => element_at(l, (c + 1).cast("int"))),
-          lit(0L), (acc, v) => acc + v)).as("score"))
+        (-Native.adcScore(col("codes"), col("_lut"))).as("score"))
     val cand = finishTopK(scored, "q_id", "vec_id", coarseK)
       .select(col("q_id"), col("vec_id"))
     val rescored = rerankVecs
@@ -2384,13 +2335,8 @@ object Similarity {
     val eq = evalSet.select(col(idCol).cast("long").as("_eid"),
       col(vecCol).as("_ev"),
       Clustering.fixedPoint(col(vecCol), scale).as("_eq"))
-    val entries = cents.map { case (cid, cv) =>
-      struct(Clustering.sqDistToLit(col("_eq"), cv).as("d"),
-        lit(cid.toLong).as("c"))
-    }
     val probed = eq
-      .withColumn("_pc",
-        explode(slice(sort_array(array(entries: _*)), 1, nprobe)))
+      .withColumn("_pc", explode(Native.nearestK(col("_eq"), cents, nprobe)))
       .select(col("_eid"), col("_ev"), col("_pc").getField("c").as("cell"))
     val matches = t.join(broadcast(probed), Seq("cell"))
       .withColumn("_sim", cosineAuto(col("_tv"), col("_ev")))

@@ -148,4 +148,29 @@ class PlanGuardSpec extends SparkSpec {
       }
     assert(bad.isEmpty, bad.map { case (n, p) => s"\n$n: $p" }.mkString)
   }
+
+  /** Formatted-plan length ceilings (`Explain.formattedPlanChars`) at
+    * sf0.001 for the queries that score against trained centroids or
+    * codebooks: each is the length with the codebooks held as kernel
+    * constants, plus headroom. A plan that spells every centroid,
+    * codeword and LUT entry out as literals is several times longer and
+    * is re-rendered by the driver on every execution and AQE update. */
+  private val planCharsCeiling = Map(
+    "q_embed_ivfpq" -> 24000, // 16,348 as kernel constants; 54,453 as literals
+    "q_embed_pq" -> 22000, // 14,840; 59,725
+    "q_incremental_ivfpq" -> 40000, // 26,354; 96,013
+    "q_semantic_decontam" -> 9000, // 5,788; 16,059
+    // trains and assigns on the driver at sf0.001: a local relation
+    "q_kmeans" -> 1000, // 168; 168
+    "q_ivf_drift" -> 16000) // 13,561; 18,654
+
+  test("the plans that score against trained codebooks stay within their length ceilings") {
+    val over = planCharsCeiling.toSeq.sortBy(_._1).flatMap { case (name, ceiling) =>
+      val chars = Explain.formattedPlanChars(SparkEntry.queries(name)(spark, sfDir))
+      spark.catalog.clearCache()
+      info(s"$name: $chars formatted-plan chars (ceiling $ceiling)")
+      if (chars > ceiling) Some(s"$name: $chars > $ceiling") else None
+    }
+    assert(over.isEmpty, over.mkString("\n", "\n", ""))
+  }
 }

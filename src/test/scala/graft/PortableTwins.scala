@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.Native
 import graft.functions.TextFunctions.tokens
 import graft.operators.Similarity.planeCoef
 
@@ -93,6 +94,65 @@ object PortableTwins {
   def sqDist(a: Column, b: Column): Column =
     aggregate(
       zip_with(a, b, (x, y) => (x - y) * (x - y)),
+      lit(0L), (acc, v) => acc + v)
+
+  /** Fixed-point quantization: floor(x·scale + 0.5) per element, as
+    * `Native.fixedPoint` computes it. */
+  def fixedPoint(vec: Column, scale: Double): Column =
+    transform(vec, v => floor(v.cast("double") * scale + 0.5).cast("long"))
+
+  /** Exact squared L2 distance to a literal centroid. */
+  def sqDistToLit(qv: Column, cv: Array[Long]): Column =
+    Native.sqDistI64(qv, typedlit(cv.toSeq))
+
+  /** The `k` nearest centroids as `Native.nearestK` returns them: a
+    * lexicographic struct sort over one literal distance per centroid —
+    * min distance, ties to the lowest id, a null distance first. */
+  def nearestK(qv: Column, cents: Array[(Int, Array[Long])], k: Int): Column = {
+    val entries = cents.map { case (cid, cv) =>
+      struct(sqDistToLit(qv, cv).as("d"), lit(cid.toLong).as("c"))
+    }
+    slice(sort_array(array(entries: _*)), 1, k)
+  }
+
+  /** `qv` minus the centroid at position `cell` of the id-sorted literal
+    * centroid matrix. */
+  def residual(qv: Column, cell: Column, cents: Array[(Int, Array[Long])]): Column = {
+    val centLit = typedlit(cents.sortBy(_._1).map(_._2.toSeq).toSeq)
+    zip_with(qv, element_at(centLit, (cell + 1).cast("int")), (x, y) => x - y)
+  }
+
+  /** PQ codes: per sub-space, the struct-sort argmin over the literal
+    * codewords. */
+  def pqEncode(rv: Column, books: Array[Array[(Int, Array[Long])]]): Column = {
+    val subDim = books(0)(0)._2.length
+    array(books.indices.map { i =>
+      val entries = books(i).map { case (cid, cw) =>
+        struct(sqDistToLit(slice(rv, i * subDim + 1, subDim), cw).as("d"),
+          lit(cid.toLong).as("c"))
+      }
+      sort_array(array(entries: _*)).getItem(0).getField("c")
+    }: _*)
+  }
+
+  /** ADC lookup table: per sub-space, one literal squared distance (or
+    * integer dot, `dot`) per codeword in id order. */
+  def adcLut(v: Column, books: Array[Array[(Int, Array[Long])]], dot: Boolean): Column = {
+    val subDim = books(0)(0)._2.length
+    def dotToLit(a: Column, cv: Array[Long]): Column =
+      aggregate(zip_with(a, typedlit(cv.toSeq), (x, y) => x * y),
+        lit(0L), (acc, v) => acc + v)
+    array(books.indices.map { i =>
+      val sub = slice(v, i * subDim + 1, subDim)
+      array(books(i).sortBy(_._1).map { case (_, cw) =>
+        if (dot) dotToLit(sub, cw) else sqDistToLit(sub, cw) }: _*)
+    }: _*)
+  }
+
+  /** ADC score: the HOF fold of one table lookup per sub-space. */
+  def adcScore(codes: Column, lut: Column): Column =
+    aggregate(
+      zip_with(codes, lut, (c, l) => element_at(l, (c + 1).cast("int"))),
       lit(0L), (acc, v) => acc + v)
 
   /** Rolling polynomial hash over the characters of the normalized
