@@ -70,6 +70,11 @@ object Dedup {
     df.limit(budget.toInt + 1).count() <= budget
   }
 
+  /** `df` as a join's build side: broadcast when `fits` (a
+    * [[fitsBudget]] verdict), else a pinned shuffle-hash build. */
+  private def gate(df: DataFrame, fits: Boolean): DataFrame =
+    if (fits) broadcast(df) else df.hint("shuffle_hash")
+
   /** Exact dedup: keep the lowest-`idCol` row per normalized-content
     * fingerprint. One shuffle, deterministic survivor. */
   def exactDedup(df: DataFrame, textCol: String, idCol: String): DataFrame = {
@@ -595,9 +600,7 @@ object Dedup {
       .select(col("id2").as("_bid"))
 
     val dups = dupVsStore.unionByName(dupInBatch).distinct()
-    val dupJoin =
-      if (storeFits && batchFits) broadcast(dups)
-      else dups.hint("shuffle_hash")
+    val dupJoin = gate(dups, storeFits && batchFits)
     batch.join(dupJoin, batch(idCol) === dupJoin("_bid"), "left_anti")
       .withColumnRenamed("_sh", "shingles")
       .withColumnRenamed("_sig", "sig")
@@ -932,10 +935,7 @@ object Dedup {
     require(ids.columns.contains("id"),
       s"retractSubstringPostings: ids need an id column, got ${ids.columns.mkString(", ")}")
     val idOnly = ids.select(col("id")).persistTracked()
-    val idsJ =
-      if (fitsBudget(idOnly, idBroadcastBudget)) broadcast(idOnly)
-      else idOnly.hint("shuffle_hash")
-    postings.join(idsJ, Seq("id"), "left_anti")
+    postings.join(gate(idOnly, fitsBudget(idOnly, idBroadcastBudget)), Seq("id"), "left_anti")
   }
 
   /** Incremental (cross-snapshot) EXACT-SUBSTRING dedup (X132) — the
@@ -1506,434 +1506,174 @@ object Dedup {
     val lbl = labels.join(sizes, Seq("cluster_id"))
       .select(col("id").as("_lid"), col("cluster_id").as("_lcid"),
         col("_csize"))
-    val bucket = conv(substring(
-      md5(concat(lit("soft:"), col(idCol).cast("string"))), 1, 4), 16, 10)
-      .cast("long") % 10000
-    spine.join(lbl, col(idCol) === col("_lid"), "left")
+    weigh(spine.join(lbl, col(idCol) === col("_lid"), "left")
       .select(col(idCol),
         coalesce(col("_lcid"), col(idCol).cast("long")).as("cluster_id"),
-        coalesce(col("_csize"), lit(1L)).as("cluster_size"))
-      .withColumn("weight_bp", expr("10000L div cluster_size"))
+        coalesce(col("_csize"), lit(1L)).as("cluster_size")), col(idCol))
+  }
+
+  /** The soft-dedup weight columns of rows carrying `cluster_size`:
+    * `weight_bp` = ⌊10⁴ / cluster_size⌋ and `keep` = the salted-md5
+    * bucket of `id` below `weight_bp`. */
+  private def weigh(df: DataFrame, id: Column): DataFrame = {
+    val bucket = conv(substring(
+      md5(concat(lit("soft:"), id.cast("string"))), 1, 4), 16, 10)
+      .cast("long") % 10000
+    df.withColumn("weight_bp", expr("10000L div cluster_size"))
       .withColumn("keep", bucket < col("weight_bp"))
   }
 
-  /** Incremental (cross-snapshot) cluster maintenance (X133) — the
-    * canonicalization pass that closes the ingestion story: the
-    * increments (X112/X113/X116/X132) resolve duplicates by a
-    * documented NON-transitive pairwise lowest-id rule; this operator
-    * folds a batch's verified duplicate pairs into the STORED cluster
-    * labels (a previous [[connectedComponents]] output, cluster_id =
-    * min member id) without re-running CC over history.
-    *
-    * Warm start via graph CONTRACTION: each new-pair endpoint maps to
-    * its stored label (or itself when unlabeled — a brand-new id), the
-    * batch's pairs become edges over that contracted node set, and CC
-    * runs on THAT graph only — its size is bounded by the batch, never
-    * the corpus, and since every stored label is already the minimum
-    * of its component, the contracted minimum IS the global minimum.
-    * Labels touched by no new pair are provably unchanged, so the
-    * result equals full CC over (stored pairs ∪ new pairs) exactly
-    * (spec-pinned, including cross-cluster merges and a new id
-    * becoming the new minimum).
-    *
-    * Scale shape: ZERO corpus-sized shuffles — the endpoint-label
-    * lookup streams the store once map-side against the broadcast
-    * endpoint set (budget-gated, shuffle-hash fallback), and the final
-    * relabel streams it once more against the broadcast old→new
-    * mapping (bounded by the contracted graph, same gate). The id
-    * space is shared across snapshots and batch-new ids must not
-    * collide with stored ids — the X112-family store contract.
-    *
-    * Returns the complete updated label table (every stored id + every
-    * id in `newPairs`) — what the caller persists for the next
-    * increment. */
-  def incrementalConnectedComponents(storedLabels: DataFrame,
-      newPairs: DataFrame, id1: String = "id1", id2: String = "id2",
-      mapBroadcastBudget: Long = 1000000L): DataFrame = {
-    val needed = Set("id", "cluster_id")
-    require(needed.subsetOf(storedLabels.columns.toSet),
-      s"incrementalConnectedComponents: storedLabels must have columns " +
-        s"id/cluster_id (connectedComponents' schema), got ${storedLabels.columns.mkString(", ")}")
-    val stored = storedLabels.select(col("id").cast("long").as("id"),
-      col("cluster_id").cast("long").as("cluster_id"))
-    val pairs = newPairs
-      .select(col(id1).cast("long").as("_a"), col(id2).cast("long").as("_b"))
-      .filter(col("_a").isNotNull && col("_b").isNotNull && col("_a") =!= col("_b"))
-      .persistTracked() // feeds the endpoint set and both contracted-edge maps
-    // endpoint → stored-label lookup: the batch-bounded endpoint set
-    // broadcasts INTO the store scan (inner join, map-side — the store
-    // is never shuffled), then the label attach happens small-vs-small
-    val ends = pairs.select(explode(array(col("_a"), col("_b"))).as("id")).distinct()
-    val endsFits = fitsBudget(ends, mapBroadcastBudget)
-    val endsJoin = if (endsFits) broadcast(ends) else ends.hint("shuffle_hash")
-    val endLabels = ends.join(stored.join(endsJoin, Seq("id")), Seq("id"), "left")
-      .select(col("id"), col("cluster_id").as("_lbl"))
-      .persistTracked() // three consumers: two edge maps + new-id slice
-    val la = endLabels.select(col("id").as("_a"), col("_lbl").as("_la"))
-    val lb = endLabels.select(col("id").as("_b"), col("_lbl").as("_lb"))
-    val contracted = pairs.join(la, Seq("_a")).join(lb, Seq("_b"))
-      .select(coalesce(col("_la"), col("_a")).as("ra"),
-        coalesce(col("_lb"), col("_b")).as("rb"))
-      .filter(col("ra") =!= col("rb"))
-    // CC over the contracted graph only — batch-bounded; nodes are
-    // stored labels and brand-new ids
-    val cc = graft.core.Caches.persistTracked(
-      connectedComponents(contracted, "ra", "rb"))
-    val mapping = cc.select(col("id").as("_old"), col("cluster_id").as("_new"))
-    // |mapping| = |contracted nodes| ≤ |ends| (each node is an
-    // endpoint's label or the endpoint itself) — when ends fit the
-    // budget, mapping provably does too, so the probe action is
-    // derived, not re-run (r21, guide §1.2: each probe is a driver job)
-    val mapJoin =
-      if (endsFits || fitsBudget(mapping, mapBroadcastBudget)) broadcast(mapping)
-      else mapping.hint("shuffle_hash")
-    val remapped = stored.join(mapJoin, col("cluster_id") === col("_old"), "left")
-      .select(col("id"), coalesce(col("_new"), col("cluster_id")).as("cluster_id"))
-    // brand-new ids (no stored label): their contracted-CC label is
-    // final — every one appears in >= 1 contracted edge (a pair with a
-    // stored id contracts to (new, label); ids are snapshot-disjoint)
-    val fresh = endLabels.filter(col("_lbl").isNull).select(col("id"))
-      .join(cc, Seq("id"))
-      .select(col("id"), col("cluster_id"))
-    remapped.unionByName(fresh)
-  }
+  // ---- cluster-store maintenance -------------------------------------
+  // The label store (connectedComponents), the weight store (softDedup)
+  // and the pick store (canonicalByScore) are each a per-cluster function
+  // of the labels. Their six maintenance operators share one change:
+  // [[foldPairs]] (an increment) or [[forget]] (a retraction) yields a
+  // [[ClusterDelta]], and [[applyDelta]] drops the retired clusters'
+  // rows and derives the changed clusters' rows anew.
 
-  /** Incremental SOFT-dedup weight maintenance (X216) — the ingestion
-    * form of [[softDedup]], keeping the family discipline (every dedup
-    * variant gets its increment): the (id, cluster_id, cluster_size,
-    * weight_bp, keep) table is what a down-weighting trainer READS, and
-    * unlike the canonical-pick store a cluster merge invalidates EVERY
-    * member's row (the weight is 1/size — all siblings re-weight, not
-    * just a pick). A batch of new docs + verified near-dup pairs folds
-    * in with work bounded by the AFFECTED components:
-    *
-    *  - an old cluster can change only if one of its members is a new
-    *    pair's endpoint (contraction edges connect endpoint labels, so
-    *    an endpoint-free cluster cannot merge) — `affectedOld` is the
-    *    endpoint→stored-cluster lookup, batch-bounded;
-    *  - the contracted CC over (endpoint labels ∪ batch ids) yields
-    *    the old→new mapping and the batch labels — bounded graphs,
-    *    [[incrementalConnectedComponents]]' warm-start argument;
-    *  - new sizes count over (affected stored members ∪ batch rows)
-    *    ONLY — every member of a changed cluster is in that set;
-    *  - untouched rows pass through VERBATIM (their cluster gained no
-    *    member, so size, weight, and keep are provably unchanged).
-    *
-    * Result provably equals [[softDedup]]'s tail over the union corpus
-    * under (stored pairs ∪ new pairs) — the oracle IS the full
-    * recompute. Scale shape: ONE store scan (map-side against the
-    * broadcast batch/affected sets, budget-gated shuffle-hash
-    * fallback), bounded CC, bounded re-weight; the re-arrival guard
-    * (a batch id already in the store — the X112-family id contract)
-    * rides the cluster_id column so no projection prunes it. Batch
-    * ids must cover every new-pair endpoint that is not stored.
-    *
-    * `mapBroadcastBudget` is a row-count HEURISTIC for picking the
-    * join strategy, not a hard memory cap: sets provably within 2× of
-    * a probed set reuse its verdict (the r21 derive-bounded
-    * discipline), so a frame of up to 2× the budget can broadcast —
-    * size executors for 2× budget rows of longs (~32 MB at the
-    * default) or lower the budget. */
-  def incrementalSoftDedup(storedWeights: DataFrame, newPairs: DataFrame,
-      batchIds: DataFrame, idCol: String = "id",
-      mapBroadcastBudget: Long = 1000000L): DataFrame = {
-    val needed = Set("id", "cluster_id", "cluster_size", "weight_bp", "keep")
-    require(needed.subsetOf(storedWeights.columns.toSet),
-      "incrementalSoftDedup: storedWeights must carry softDedup's schema " +
-        s"(id, cluster_id, cluster_size, weight_bp, keep), got ${storedWeights.columns.mkString(", ")}")
-    val batch = batchIds.select(col(idCol).cast("long").as("id")).distinct()
-      .persistTracked() // spine, dup guard, endpoint slice, singleton slice
-    def gatedIf(df: DataFrame, fits: Boolean): DataFrame =
-      if (fits) broadcast(df) else df.hint("shuffle_hash")
-    def gated(df: DataFrame): DataFrame =
-      gatedIf(df, fitsBudget(df, mapBroadcastBudget))
-    // probe ONCE per independent set; derived sets provably bounded by
-    // a probed one reuse its verdict instead of paying another driver
-    // job (r21, guide §1.2 — each probe is an action, and with AQE an
-    // action is several scheduled jobs)
-    val batchFits = fitsBudget(batch, mapBroadcastBudget)
-    // ONE store scan: dup-arrival guard + endpoint/affected routing.
-    // The raise rides cluster_id so Catalyst cannot prune it.
-    val st = storedWeights.select(col("id").cast("long").as("id"),
+  /** Broadcast row budget of the family: a set probed at or below it
+    * joins by broadcast, a larger one by shuffle-hash. A set provably
+    * bounded by probed sets reuses their verdicts instead of paying
+    * another probe job, so a broadcast side can reach twice the budget
+    * (about 32 MB of longs). Specs reach the shuffle-hash side through
+    * the `private[graft]` forms that take a budget. */
+  private[graft] val DeltaBudget = 1000000L
+
+  /** A change to the near-dup clusters: `retired` holds the old
+    * cluster ids (`_old`) whose rows leave a store, `rows` one `(id,
+    * cluster_id)` row for every member of every changed cluster, with
+    * `cluster_id` null for a member left in no pair. `retiredFits` is
+    * the broadcast verdict of `retired`, `clustersFit` that of the
+    * clusters in `rows`. */
+  private case class ClusterDelta(retired: DataFrame, rows: DataFrame,
+      retiredFits: Boolean, clustersFit: Boolean)
+
+  private def requireColumns(op: String, name: String, df: DataFrame,
+      cols: String*): Unit =
+    require(cols.toSet.subsetOf(df.columns.toSet),
+      s"$op: $name must carry (${cols.mkString(", ")}), got ${df.columns.mkString(", ")}")
+
+  private def labelsOf(df: DataFrame): DataFrame =
+    df.select(col("id").cast("long").as("id"),
+      col("cluster_id").cast("long").as("cluster_id"))
+
+  private def pairsOf(df: DataFrame, id1: String, id2: String): DataFrame =
+    df.select(col(id1).cast("long").as("_a"), col(id2).cast("long").as("_b"))
+
+  private val WeightCols = Seq("id", "cluster_id", "cluster_size", "weight_bp", "keep")
+
+  private def weightsOf(df: DataFrame): DataFrame =
+    df.select(col("id").cast("long").as("id"),
       col("cluster_id").cast("long").as("cluster_id"),
       col("cluster_size").cast("long").as("cluster_size"),
       col("weight_bp").cast("long").as("weight_bp"), col("keep"))
-      .join(gatedIf(batch.withColumn("_dup", lit(1)), batchFits),
-        Seq("id"), "left")
-      .withColumn("cluster_id",
-        when(col("_dup") === 1, raise_error(concat(
-          lit("incrementalSoftDedup: batch id "), col("id").cast("string"),
-          lit(" already stored — re-arrival violates the snapshot-disjoint id contract"))))
-          .otherwise(col("cluster_id")))
-      .drop("_dup")
-      .persistTracked()
+
+  private val PickCols = Seq("cluster_id", "canonical_id", "score")
+
+  private def picksOf(df: DataFrame): DataFrame =
+    df.select(PickCols.map(c => col(c).cast("long").as(c)): _*)
+
+  /** The distinct non-null retract ids, persisted, and their verdict:
+    * the one probe of the retract set. */
+  private def retractSet(op: String, retractIds: DataFrame,
+      budget: Long): (DataFrame, Boolean) = {
+    require(retractIds.columns.contains("id"),
+      s"$op: retractIds need an id column, got ${retractIds.columns.mkString(", ")}")
+    val rids = retractIds.select(col("id").cast("long").as("id"))
+      .filter(col("id").isNotNull).distinct().persistTracked()
+    (rids, fitsBudget(rids, budget))
+  }
+
+  /** The delta of folding `newPairs` (`_a`, `_b`) into `stored` (`id`,
+    * `cluster_id`, each label its cluster's minimum id) by graph
+    * contraction: every endpoint maps to its stored label (itself when
+    * not stored), the pairs become edges over those nodes, and
+    * [[connectedComponents]] runs on that graph only, whose size is
+    * bounded by the batch. Every stored label is already its cluster's
+    * minimum, so the contracted minimum is the global one and the
+    * result equals components over (stored pairs ∪ new pairs). A stored
+    * cluster changes only if a contracted edge touches its label, so
+    * `retired` is the contracted graph's nodes (the batch-new ones
+    * among them label no stored row). New ids are the non-stored
+    * endpoints, or `batch` (persisted, with its verdict) when given; a
+    * non-stored endpoint outside `batch` raises, as its cluster would
+    * be under-counted. One probe: the endpoint set. Batch-new ids must
+    * not collide with stored ids (the snapshot-disjoint id contract). */
+  private def foldPairs(stored: DataFrame, newPairs: DataFrame,
+      batch: Option[(DataFrame, Boolean)], budget: Long): ClusterDelta = {
     val pairs = newPairs
-      .select(col("id1").cast("long").as("_a"), col("id2").cast("long").as("_b"))
       .filter(col("_a").isNotNull && col("_b").isNotNull && col("_a") =!= col("_b"))
+      .persistTracked() // endpoint set and both contracted-edge maps
+    // persisted: the probe and both sides of the endpoint lookup read it
+    val ends = pairs.select(explode(array(col("_a"), col("_b"))).as("id")).distinct()
       .persistTracked()
-    val ends = pairs.select(explode(array(col("_a"), col("_b"))).as("id"))
-      .distinct().persistTracked()
-    val endsFits = fitsBudget(ends, mapBroadcastBudget)
-    // endpoint → stored label (null = batch-new endpoint)
-    val endLabels = ends.join(st.join(gatedIf(ends, endsFits), Seq("id"))
+    val endsFits = fitsBudget(ends, budget)
+    // the endpoint set broadcasts into the store scan (map-side: the
+    // store never shuffles); null label = a new endpoint
+    val endLabels = ends.join(stored.join(gate(ends, endsFits), Seq("id"))
         .select(col("id"), col("cluster_id")), Seq("id"), "left")
       .select(col("id"), col("cluster_id").as("_lbl"))
       .persistTracked()
-    val la = endLabels.select(col("id").as("_a"), col("_lbl").as("_la"))
-    val lb = endLabels.select(col("id").as("_b"), col("_lbl").as("_lb"))
-    val contracted = pairs.join(la, Seq("_a")).join(lb, Seq("_b"))
+    val contracted = pairs
+      .join(endLabels.select(col("id").as("_a"), col("_lbl").as("_la")), Seq("_a"))
+      .join(endLabels.select(col("id").as("_b"), col("_lbl").as("_lb")), Seq("_b"))
       .select(coalesce(col("_la"), col("_a")).as("ra"),
         coalesce(col("_lb"), col("_b")).as("rb"))
       .filter(col("ra") =!= col("rb"))
-    val cc = graft.core.Caches.persistTracked(
-      connectedComponents(contracted, "ra", "rb"))
-    // affected old clusters = stored labels of pair endpoints —
-    // |affectedOld| ≤ |ends|, and |mapping| = |contracted nodes| ≤
-    // |ends| too: both reuse the ends verdict instead of re-probing
-    val affectedOld = endLabels.filter(col("_lbl").isNotNull)
-      .select(col("_lbl").as("cluster_id")).distinct().persistTracked()
-    val affectedOldFits = endsFits ||
-      fitsBudget(affectedOld, mapBroadcastBudget)
-    val mapping = cc.select(col("id").as("_old"), col("cluster_id").as("_new"))
-    // affected stored members relabeled through the bounded mapping
-    val affMembers = st.join(gatedIf(affectedOld, affectedOldFits),
-        Seq("cluster_id"))
-      .join(gatedIf(mapping,
-        endsFits || fitsBudget(mapping, mapBroadcastBudget)),
-        col("cluster_id") === col("_old"), "left")
-      .select(col("id"),
-        coalesce(col("_new"), col("cluster_id")).as("cluster_id"))
-    // batch rows: pair-touched take their contracted-CC label (a
-    // stored label as minimum stays the global minimum), singletons
-    // label themselves
-    val batchLbl = batch
-      .join(cc.select(col("id"), col("cluster_id").as("_bl")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("_bl"), col("id")).as("cluster_id"))
-    // a new-pair endpoint that is neither stored nor in the batch has
-    // no row to carry its weight — raise instead of silently dropping
-    // a cluster member (the count below would under-size the cluster)
-    val orphan = endLabels.filter(col("_lbl").isNull)
-      .join(batch, Seq("id"), "left_anti")
-      .select(col("id"), raise_error(concat(
-        lit("incrementalSoftDedup: new-pair endpoint "),
-        col("id").cast("string"),
-        lit(" is neither stored nor in the batch"))).cast("long")
-        .as("cluster_id"))
-    // re-weight ONLY the affected + batch rows
-    val rewrite = affMembers.unionByName(batchLbl).unionByName(orphan)
-      .persistTracked()
-    val sizes = rewrite.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).cast("long").as("cluster_size"))
-    val bucket = conv(substring(
-      md5(concat(lit("soft:"), col("id").cast("string"))), 1, 4), 16, 10)
-      .cast("long") % 10000
-    // |sizes| (one row per rewritten cluster) ≤ |affectedOld| + |batch|
-    // — every rewritten cluster either existed (had an endpoint) or is
-    // batch-new. Within 2× of the probed budget, a safety-margin
-    // heuristic, not a hard cap (budget rows ≈ 16 MB of longs) — so
-    // the verdict derives from the two probes already paid.
-    val rewritten = rewrite.join(gatedIf(sizes,
-        (affectedOldFits && batchFits) ||
-          fitsBudget(sizes, mapBroadcastBudget)), Seq("cluster_id"))
-      .withColumn("weight_bp", expr("10000L div cluster_size"))
-      .withColumn("keep", bucket < col("weight_bp"))
-      .select(col("id"), col("cluster_id"), col("cluster_size"),
-        col("weight_bp"), col("keep"))
-    // untouched rows pass through verbatim (anti on the bounded set)
-    val untouched = st.join(gatedIf(affectedOld, affectedOldFits),
-      Seq("cluster_id"), "left_anti")
-      .select(col("id"), col("cluster_id"), col("cluster_size"),
-        col("weight_bp"), col("keep"))
-    untouched.unionByName(rewritten)
+    // old → new label of every contracted node; |cc| ≤ |ends| (each
+    // node is an endpoint or its label). connectedComponents returns
+    // driver rows or a persisted frame, so every join below reads it
+    // without recomputing it
+    val mapping = connectedComponents(contracted, "ra", "rb")
+      .select(col("id").as("_old"), col("cluster_id").as("_new"))
+    val moved = stored.join(gate(mapping, endsFits), col("cluster_id") === col("_old"))
+      .select(col("id"), col("_new").as("cluster_id"))
+    val fresh = endLabels.filter(col("_lbl").isNull).select(col("id"))
+    val arrived = batch.fold(fresh)(_._1)
+      .join(gate(mapping, endsFits), col("id") === col("_old"), "left")
+      .select(col("id"), col("_new").as("cluster_id"))
+    val orphans = batch.map { case (ids, _) =>
+      fresh.join(ids, Seq("id"), "left_anti")
+        .select(col("id"), raise_error(concat(lit("incrementalSoftDedup: new-pair endpoint "),
+          col("id").cast("string"), lit(" is neither stored nor in the batch")))
+          .cast("long").as("cluster_id"))
+    }
+    // a changed cluster is a contracted one or a batch-new one
+    ClusterDelta(mapping, (Seq(moved, arrived) ++ orphans).reduce(_ unionByName _),
+      endsFits, endsFits && batch.forall(_._2))
   }
 
-  /** SOFT-DEDUP WEIGHT retraction (X218) — right-to-be-forgotten for
-    * the X213 weight store, completing the family's lifecycle (batch →
-    * increment → stream → retract, the ladder every serving store
-    * keeps). Like the canonical picks (X196), rows cannot simply be
-    * deleted — twice over: a retracted member shrinks its cluster, so
-    * every SURVIVING sibling's weight moves UP (weight = 1/size), and
-    * a retracted bridge can SPLIT a component into fragments that each
-    * re-weight independently (or become full-weight singletons).
-    * Labels update via [[retractClusterLabels]]' affected-component
-    * reruns over the kept pair store; weights recompute ONLY for the
-    * affected survivors (new sizes count over that bounded set —
-    * retraction never merges clusters, so every member of a
-    * post-retraction fragment came from an affected old cluster);
-    * untouched rows pass through verbatim; a retracted singleton's row
-    * simply disappears. Unknown retract ids raise (the raise rides the
-    * cluster_id column through the re-weight — a silent no-op forget
-    * is the failure a forget API must not have). Result ≡ the batch
-    * operator over surviving docs under surviving pairs — the oracle
-    * is that full recompute. */
-  def retractSoftDedup(storedWeights: DataFrame, storedPairs: DataFrame,
-      retractIds: DataFrame, broadcastBudget: Long = 1000000L): DataFrame = {
-    val needed = Set("id", "cluster_id", "cluster_size", "weight_bp", "keep")
-    require(needed.subsetOf(storedWeights.columns.toSet),
-      "retractSoftDedup: storedWeights must carry softDedup's schema " +
-        s"(id, cluster_id, cluster_size, weight_bp, keep), got ${storedWeights.columns.mkString(", ")}")
-    val stored = storedWeights.select(col("id").cast("long").as("id"),
-      col("cluster_id").cast("long").as("cluster_id"),
-      col("cluster_size").cast("long").as("cluster_size"),
-      col("weight_bp").cast("long").as("weight_bp"), col("keep"))
+  /** The delta of retracting `rids` (persisted, with its verdict) from
+    * `stored` (`id`, `cluster_id`, ...) over `storedPairs` (`_a`, `_b`),
+    * the pairs `stored` was computed from. Components are disjoint and
+    * removing nodes never merges them, so only the retracted ids'
+    * clusters change (`retired`), and [[connectedComponents]] reruns on
+    * their surviving members' surviving pairs only; a survivor left in
+    * no pair gets a null cluster. Rows where `unpaired` holds may sit in
+    * no pair (the weight store's singletons). Fails loud when `stored`
+    * is not components over `storedPairs`. One probe: the member set. */
+  private def forget(stored: DataFrame, storedPairs: DataFrame,
+      rids: DataFrame, ridsFits: Boolean, unpaired: Column,
+      budget: Long): ClusterDelta = {
+    // |retired| ≤ |rids|: one label per retract id (repeats are
+    // harmless, `retired` is only semi- and anti-joined)
+    val retired = stored.join(gate(rids, ridsFits), Seq("id"))
+      .select(col("cluster_id").as("_old")).persistTracked()
+    val members = stored
+      .join(gate(retired, ridsFits), col("cluster_id") === col("_old"), "left_semi")
+      .select(col("id")).join(gate(rids, ridsFits), Seq("id"), "left_anti")
       .persistTracked()
-    val rids = retractIds.select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct().persistTracked()
-    def gatedIf(df: DataFrame, fits: Boolean): DataFrame =
-      if (fits) broadcast(df) else df.hint("shuffle_hash")
-    // probe each independent set ONCE; sets provably bounded by a
-    // probed one derive its verdict instead of paying another driver
-    // job (r21, guide §1.2 — rids was probed three times here)
-    val ridsFits = fitsBudget(rids, broadcastBudget)
-    val ridsJ = gatedIf(rids, ridsFits)
-    // the weight store carries singleton self-labels the LABEL store
-    // does not (X149 validates its input against the pair store) —
-    // only the clustered slice re-clusters; a retracted singleton has
-    // no siblings to re-weight and simply drops below
-    val labels2 = graft.core.Caches.persistTracked(
-      retractClusterLabels(
-        stored.filter(col("cluster_size") > 1)
-          .select(col("id"), col("cluster_id")),
-        storedPairs, rids, broadcastBudget = broadcastBudget))
-    val found = stored.join(ridsJ, Seq("id")).select(col("id"))
-      .persistTracked()
-    // |affectedOld| ≤ |rids| (one label per retracted id) — derive
-    val affectedOld = stored.join(ridsJ, Seq("id"))
-      .select(col("cluster_id")).distinct().persistTracked()
-    val affectedOldFits = ridsFits || fitsBudget(affectedOld, broadcastBudget)
-    val affectedOldJ = gatedIf(affectedOld, affectedOldFits)
-    // a retract id with no stored row is a silent-no-op forget — raise
-    val unknown = rids.exceptAll(found)
-      .select(col("id"), raise_error(concat(
-        lit("retractSoftDedup: retract id "), col("id").cast("string"),
-        lit(" is not stored — nothing to forget"))).cast("long")
-        .as("cluster_id"))
-    // affected survivors take their post-retraction labels (bounded:
-    // members of affected clusters minus the retracted slice)
-    val members = stored.join(affectedOldJ, Seq("cluster_id"))
-      .select(col("id"))
-      .join(ridsJ, Seq("id"), "left_anti")
-    // X149 drops pair-less survivors from the LABEL store (labels only
-    // track pair-involved docs); the WEIGHT store must keep them — an
-    // isolated survivor becomes its own full-weight singleton
-    val membersFits = fitsBudget(members, broadcastBudget)
-    val labeled = labels2.join(gatedIf(members, membersFits), Seq("id"))
-      .select(col("id"), col("cluster_id"))
-    val isolated = members.exceptAll(labeled.select(col("id")))
-      .select(col("id"), col("id").as("cluster_id"))
-    val rewrite = labeled.unionByName(isolated).unionByName(unknown)
-      .persistTracked()
-    val sizes = rewrite.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).cast("long").as("cluster_size"))
-    val bucket = conv(substring(
-      md5(concat(lit("soft:"), col("id").cast("string"))), 1, 4), 16, 10)
-      .cast("long") % 10000
-    // |sizes| ≤ |rewrite| = |members| + |unknown ids| ≤ |members| +
-    // |rids| — within 2× of the probed budgets (safety-margin
-    // heuristic, not a hard cap), so the verdict derives
-    val rewritten = rewrite.join(gatedIf(sizes,
-        (membersFits && ridsFits) || fitsBudget(sizes, broadcastBudget)),
-        Seq("cluster_id"))
-      .withColumn("weight_bp", expr("10000L div cluster_size"))
-      .withColumn("keep", bucket < col("weight_bp"))
-      .select(col("id"), col("cluster_id"), col("cluster_size"),
-        col("weight_bp"), col("keep"))
-    val untouched = stored.join(affectedOldJ, Seq("cluster_id"), "left_anti")
-      .select(col("id"), col("cluster_id"), col("cluster_size"),
-        col("weight_bp"), col("keep"))
-    untouched.unionByName(rewritten)
-  }
-
-  /** CLUSTER-LABEL retraction (X149) — right-to-be-forgotten for the
-    * X133 label store, completing the retraction story across all five
-    * stores (the substring postings retract via
-    * [[retractSubstringPostings]], the id-keyed stores by anti-join;
-    * the label store could NOT, because labels are DERIVED state: a
-    * retracted doc that IS a cluster minimum leaves every sibling
-    * labeled by a ghost id, and deleting a node can SPLIT a component,
-    * so rows cannot simply be dropped). Given the stored labels, the
-    * accumulated duplicate-PAIR store they were computed from (the
-    * retraction-capable deployment keeps pairs, exactly as X140 keeps
-    * postings — deletability's storage price), and the retract id set,
-    * this returns labels equal to `connectedComponents(pairs with
-    * NEITHER endpoint retracted)` — the X140 law, retract ≡
-    * rebuild-without, spec-pinned including ghost-minimum and
-    * component-split cases — while recomputing ONLY the affected
-    * components.
-    *
-    * Why that is exact: components are disjoint, and edge removal
-    * never merges components — so every component untouched by the
-    * retraction keeps its labels verbatim (its minimum is unchanged),
-    * and CC need re-run only on the surviving pairs of components that
-    * contained a retracted id. Affected components are identified by
-    * the retracted ids' LABELS (bounded by the retract batch);
-    * members whose every pair is retracted disappear from the table,
-    * matching the rebuild exactly (an absent id is unclustered).
-    *
-    * Contract: `storedLabels` must be [[connectedComponents]] over
-    * exactly `storedPairs` (the X133 maintenance invariant); ids
-    * absent from the store retract as no-ops.
-    *
-    * Scale shape: the retract set and the affected-label set are
-    * batch-bounded — both ride budget-gated broadcasts into map-side
-    * store scans (three label-store passes, one pair-store pass; the
-    * stores never shuffle). The affected MEMBER set is bounded by the
-    * affected components' sizes, not the batch — its pair-filter join
-    * is budget-gated with a shuffle-hash fallback, and the CC rerun is
-    * bounded the same way. Nothing corpus-sized shuffles. */
-  def retractClusterLabels(storedLabels: DataFrame, storedPairs: DataFrame,
-      retractIds: DataFrame, id1: String = "id1", id2: String = "id2",
-      broadcastBudget: Long = 1000000L): DataFrame = {
-    require(Set("id", "cluster_id").subsetOf(storedLabels.columns.toSet),
-      s"retractClusterLabels: storedLabels must have columns id/cluster_id " +
-        s"(connectedComponents' schema), got ${storedLabels.columns.mkString(", ")}")
-    require(retractIds.columns.contains("id"),
-      s"retractClusterLabels: retractIds need an id column, got " +
-        retractIds.columns.mkString(", "))
-    val stored = storedLabels.select(col("id").cast("long").as("id"),
-      col("cluster_id").cast("long").as("cluster_id"))
-    val rids = retractIds.select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct().persistTracked()
-    val ridsFits = fitsBudget(rids, broadcastBudget)
-    val ridsJ = if (ridsFits) broadcast(rids) else rids.hint("shuffle_hash")
-    // labels of the retracted ids — bounded by the retract batch:
-    // |affected| ≤ |rids|, so the probe verdict derives (r21)
-    val affected = stored.join(ridsJ, Seq("id"))
-      .select(col("cluster_id")).distinct().persistTracked()
-    val affectedJ =
-      if (ridsFits || fitsBudget(affected, broadcastBudget))
-        broadcast(affected)
-      else affected.hint("shuffle_hash")
-    // untouched components keep their rows verbatim (map-side anti
-    // against the broadcast affected set — the store streams once)
-    val keep = stored.join(affectedJ, Seq("cluster_id"), "left_anti")
-      .select(col("id"), col("cluster_id"))
-    // members of affected components (bounded by their sizes): the
-    // ids whose pairs must be re-clustered
-    val members = stored.join(affectedJ, Seq("cluster_id"))
-      .select(col("id")).persistTracked()
-    // pairs inside affected components: both endpoints share a
-    // component, so filtering on id1-membership is complete; then
-    // forget every pair touching a retracted id (its evidence
-    // involves the deleted document)
-    // persist-before-probe convention (incrementalExactDedup's store
-    // projection): the narrow (_a, _b) projection is consumed by BOTH
-    // the invariant probe below and the affected-pair filter — without
-    // the persist an expensive caller-side pair plan would run twice
-    val pairs = storedPairs
-      .select(col(id1).cast("long").as("_a"), col(id2).cast("long").as("_b"))
-      .persistTracked()
-    // maintenance-invariant probe (bounded: at most 6 violations come
-    // back, and the collect-limit executes partitions incrementally):
-    // the exactness argument above rests ENTIRELY on storedLabels ==
-    // connectedComponents(storedPairs), and a drifted store — pairs
-    // appended without refreshing labels — would otherwise yield
-    // labels silently violating the retract ≡ rebuild-without law. A
-    // pair is a witness of drift iff either endpoint is missing from
-    // the labels or the endpoints carry different cluster ids. Cost is
-    // one pair-store pass + two label-keyed shuffle-hash joins;
-    // retraction is an offline admin operation, and fail-loud is the
-    // repo convention (the resumeRankTable duplicate-state probe).
+    val membersFits = fitsBudget(members, budget)
+    // persisted: the two probes below and the surviving-pair filter
+    // share the pair projection
+    val pairs = storedPairs.persistTracked()
+    // maintenance-invariant probes (at most 6 witnesses come back; the
+    // limit-collect runs partitions incrementally). Exactness rests on
+    // stored == connectedComponents(storedPairs): a pair with an
+    // unlabeled endpoint or endpoints in different clusters witnesses
+    // drift (pairs appended without refreshing labels), and so does a
+    // label row whose id sits in no pair (pairs dropped without
+    // refreshing labels), which would otherwise pass through verbatim.
     val lblA = stored.select(col("id").as("_a"), col("cluster_id").as("_pla"))
     val lblB = stored.select(col("id").as("_b"), col("cluster_id").as("_plb"))
     val drift = pairs
@@ -1943,46 +1683,228 @@ object Dedup {
         col("_pla") =!= col("_plb"))
       .select(col("_a"), col("_b"))
       .limit(6).collect()
-    require(drift.isEmpty,
-      "retractClusterLabels: storedLabels is not connectedComponents(" +
-        "storedPairs) — drifted pairs (endpoints unlabeled or in " +
-        "different clusters): " +
-        drift.take(5).map(r => s"(${r.get(0)}, ${r.get(1)})").mkString(", ") +
-        " — refresh the label store (incrementalConnectedComponents) " +
-        "before retracting")
-    // the REVERSE direction of the same invariant: a label row whose
-    // id appears in NO stored pair is a stale orphan (its evidence
-    // pairs were dropped without refreshing labels) — it would ride
-    // the untouched-component keep path verbatim while violating
-    // storedLabels == connectedComponents(storedPairs) just as surely
-    // as a drifted pair. Same bounded fail-loud probe shape: one pair
-    // pass + one label-keyed anti-join, limit 6.
+    def refresh(what: String): String =
+      "storedLabels is not connectedComponents(storedPairs) — " + what +
+        " — refresh the label store (incrementalConnectedComponents) before retracting"
+    require(drift.isEmpty, refresh("drifted pairs (endpoints unlabeled " +
+      "or in different clusters): " +
+      drift.take(5).map(r => s"(${r.get(0)}, ${r.get(1)})").mkString(", ")))
     val endpoints = pairs.select(col("_a").as("id"))
       .unionByName(pairs.select(col("_b").as("id")))
-    val orphans = stored.select(col("id"))
+    val orphans = stored.filter(!unpaired).select(col("id"))
       .join(endpoints.hint("shuffle_hash"), Seq("id"), "left_anti")
       .limit(6).collect()
-    require(orphans.isEmpty,
-      "retractClusterLabels: storedLabels is not connectedComponents(" +
-        "storedPairs) — orphan labels whose ids appear in no stored " +
-        "pair: " + orphans.take(5).map(_.get(0)).mkString(", ") +
-        " — refresh the label store (incrementalConnectedComponents) " +
-        "before retracting")
-    // rids' verdict was probed once above — its two renamed projections
-    // reuse it (this path probed rids twice more before r21)
-    def ridsAs(c: String) = {
-      val r = rids.select(col("id").as(c))
-      if (ridsFits) broadcast(r) else r.hint("shuffle_hash")
-    }
-    val membersA = members.select(col("id").as("_a"))
-    val membersJ =
-      if (fitsBudget(membersA, broadcastBudget)) broadcast(membersA)
-      else membersA.hint("shuffle_hash")
-    val survPairs = pairs.join(membersJ, Seq("_a"))
-      .join(ridsAs("_a"), Seq("_a"), "left_anti")
-      .join(ridsAs("_b"), Seq("_b"), "left_anti")
-    val cc = connectedComponents(survPairs, "_a", "_b")
-    keep.unionByName(cc.select(col("id"), col("cluster_id")))
+    require(orphans.isEmpty, refresh("orphan labels whose ids appear in " +
+      "no stored pair: " + orphans.take(5).map(_.get(0)).mkString(", ")))
+    // both endpoints of a stored pair share a component, so a member
+    // `_a` and a kept `_b` select exactly the surviving affected pairs
+    val cc = connectedComponents(
+      pairs.join(gate(members.select(col("id").as("_a")), membersFits), Seq("_a"))
+        .join(gate(rids.select(col("id").as("_b")), ridsFits), Seq("_b"), "left_anti"),
+      "_a", "_b")
+    // every post-retraction fragment lies inside a retired cluster. The
+    // pair-less survivors come as a separate branch: a store that drops
+    // null clusters prunes it from the plan
+    val isolated = members.join(gate(cc.select(col("id")), membersFits), Seq("id"), "left_anti")
+      .select(col("id"), lit(null).cast("long").as("cluster_id"))
+    ClusterDelta(retired, cc.select(col("id"), col("cluster_id")).unionByName(isolated),
+      ridsFits, membersFits && ridsFits)
+  }
+
+  /** `store` without the retired clusters' rows, plus `derive` of the
+    * changed clusters' rows. */
+  private def applyDelta(store: DataFrame, delta: ClusterDelta,
+      derive: DataFrame => DataFrame): DataFrame =
+    store.join(gate(delta.retired, delta.retiredFits),
+        col("cluster_id") === col("_old"), "left_anti")
+      .unionByName(derive(delta.rows))
+
+  /** Label rows: the members left in some pair. */
+  private def labelRows(rows: DataFrame): DataFrame =
+    rows.filter(col("cluster_id").isNotNull)
+
+  /** Weight rows: a member in no pair is its own cluster; sizes count
+    * over `rows`, which hold every member of their clusters. `fits` is
+    * the verdict of those clusters. */
+  private def weightRows(fits: Boolean)(rows: DataFrame): DataFrame = {
+    val rewrite = rows.select(col("id"),
+      coalesce(col("cluster_id"), col("id")).as("cluster_id")).persistTracked()
+    val sizes = rewrite.groupBy(col("cluster_id"))
+      .agg(count(lit(1)).cast("long").as("cluster_size"))
+    weigh(rewrite.join(gate(sizes, fits), Seq("cluster_id")), col("id"))
+  }
+
+  /** Pick rows: [[canonicalByScore]]'s canonical member per cluster. */
+  private def pickRows(scores: DataFrame, idCol: String, scoreCol: String)(
+      rows: DataFrame): DataFrame =
+    canonicalByScore(labelRows(rows), scores, idCol, scoreCol)
+      .filter(col("is_canonical"))
+      .select(col("cluster_id"), col("id").as("canonical_id"), col("score"))
+
+  /** Incremental (cross-snapshot) cluster maintenance (X133): folds a
+    * batch's verified duplicate pairs into the STORED labels (a
+    * previous [[connectedComponents]] output, cluster_id = min member
+    * id) without re-running components over history; the result equals
+    * [[connectedComponents]] over (stored pairs ∪ new pairs) exactly
+    * (spec-pinned, including cross-cluster merges and a new id becoming
+    * the new minimum).
+    *
+    * Scale shape: zero corpus-sized shuffles. The endpoint set (one
+    * budget probe, [[DeltaBudget]]) broadcasts into one map-side store
+    * scan for the endpoint labels; components run on the contracted
+    * batch graph only; the relabel and the untouched pass-through scan
+    * the store against the broadcast old→new label set of that graph,
+    * bounded by the endpoints. Above the budget those sides join by
+    * shuffle-hash. The id space is shared across snapshots and batch-new
+    * ids must not collide with stored ids.
+    *
+    * Returns the complete updated label table (every stored id + every
+    * id in `newPairs`) — what the caller persists for the next
+    * increment. */
+  def incrementalConnectedComponents(storedLabels: DataFrame,
+      newPairs: DataFrame, id1: String = "id1", id2: String = "id2"): DataFrame =
+    incrementalConnectedComponents(storedLabels, newPairs, id1, id2, DeltaBudget)
+
+  /** [[incrementalConnectedComponents]] at broadcast budget `budget`. */
+  private[graft] def incrementalConnectedComponents(storedLabels: DataFrame,
+      newPairs: DataFrame, id1: String, id2: String, budget: Long): DataFrame = {
+    requireColumns("incrementalConnectedComponents", "storedLabels",
+      storedLabels, "id", "cluster_id")
+    val stored = labelsOf(storedLabels)
+    applyDelta(stored, foldPairs(stored, pairsOf(newPairs, id1, id2), None, budget),
+      labelRows)
+  }
+
+  /** Incremental SOFT-dedup weight maintenance (X216) — the ingestion
+    * form of [[softDedup]]: the (id, cluster_id, cluster_size,
+    * weight_bp, keep) table is what a down-weighting trainer reads, and
+    * unlike the canonical-pick store a cluster merge invalidates EVERY
+    * member's row (the weight is 1/size). A batch of new docs
+    * (`batchIds`) and their verified near-dup pairs fold in through
+    * [[incrementalConnectedComponents]]' contraction: the rows of the
+    * merged old clusters and of the batch re-weigh, with sizes
+    * counted over exactly that set (every member of a changed cluster is
+    * in it); every other row passes through verbatim. Result equals
+    * [[softDedup]]'s table over the union corpus under (stored pairs ∪
+    * new pairs) — the oracle is the full recompute.
+    *
+    * Scale shape: one store scan (persisted) feeds the endpoint lookup,
+    * the changed members and the pass-through, each map-side against a
+    * broadcast batch-bounded set; two budget probes ([[DeltaBudget]]):
+    * the batch and the endpoints. The re-weigh joins the per-cluster
+    * sizes, at most |endpoints| + |batch| rows, so that broadcast can
+    * reach twice the budget. A batch id already stored raises (the
+    * raise rides the cluster_id column every consumer reads); batch ids
+    * must cover every new-pair endpoint that is not stored. */
+  def incrementalSoftDedup(storedWeights: DataFrame, newPairs: DataFrame,
+      batchIds: DataFrame, idCol: String = "id"): DataFrame =
+    incrementalSoftDedup(storedWeights, newPairs, batchIds, idCol, DeltaBudget)
+
+  /** [[incrementalSoftDedup]] at broadcast budget `budget`. */
+  private[graft] def incrementalSoftDedup(storedWeights: DataFrame,
+      newPairs: DataFrame, batchIds: DataFrame, idCol: String,
+      budget: Long): DataFrame = {
+    requireColumns("incrementalSoftDedup", "storedWeights", storedWeights,
+      WeightCols: _*)
+    val batch = batchIds.select(col(idCol).cast("long").as("id")).distinct()
+      .persistTracked() // dup guard, new-id rows, orphan check
+    val batchFits = fitsBudget(batch, budget)
+    val st = weightsOf(storedWeights)
+      .join(gate(batch.withColumn("_dup", lit(1)), batchFits), Seq("id"), "left")
+      .withColumn("cluster_id",
+        when(col("_dup") === 1, raise_error(concat(
+          lit("incrementalSoftDedup: batch id "), col("id").cast("string"),
+          lit(" already stored — re-arrival violates the snapshot-disjoint id contract"))))
+          .otherwise(col("cluster_id")))
+      .drop("_dup")
+      .persistTracked()
+    val delta = foldPairs(st.select(col("id"), col("cluster_id")),
+      pairsOf(newPairs, "id1", "id2"), Some((batch, batchFits)), budget)
+    applyDelta(st, delta, weightRows(delta.clustersFit))
+  }
+
+  /** SOFT-DEDUP WEIGHT retraction (X218) — right-to-be-forgotten for
+    * the weight store. Rows cannot simply be deleted: a retracted member
+    * shrinks its cluster, so every surviving sibling's weight moves UP,
+    * and a retracted bridge can SPLIT a component into fragments that
+    * re-weigh independently (or become full-weight singletons). The
+    * retracted ids' clusters rerun [[retractClusterLabels]]' affected-
+    * component components over the kept pair store and their survivors
+    * re-weigh; untouched rows pass through verbatim; a retracted
+    * singleton's row simply disappears. Unknown retract ids raise (the
+    * raise rides the cluster_id column through the re-weigh — a silent
+    * no-op forget is the failure a forget API must not have). Result ≡
+    * the batch operator over surviving docs under surviving pairs.
+    *
+    * Scale shape: [[retractClusterLabels]]' — two budget probes
+    * ([[DeltaBudget]]): the retract ids and the retracted clusters'
+    * survivors; the store (persisted) streams map-side against
+    * broadcast bounded sets. The re-weigh joins the per-cluster sizes,
+    * at most |survivors| + |retract ids| rows, so that broadcast can
+    * reach twice the budget. */
+  def retractSoftDedup(storedWeights: DataFrame, storedPairs: DataFrame,
+      retractIds: DataFrame): DataFrame =
+    retractSoftDedup(storedWeights, storedPairs, retractIds, DeltaBudget)
+
+  /** [[retractSoftDedup]] at broadcast budget `budget`. */
+  private[graft] def retractSoftDedup(storedWeights: DataFrame,
+      storedPairs: DataFrame, retractIds: DataFrame, budget: Long): DataFrame = {
+    requireColumns("retractSoftDedup", "storedWeights", storedWeights,
+      WeightCols: _*)
+    val stored = weightsOf(storedWeights).persistTracked()
+    val (rids, ridsFits) = retractSet("retractSoftDedup", retractIds, budget)
+    val found = stored.join(gate(rids, ridsFits), Seq("id")).select(col("id"))
+    val unknown = rids.join(gate(found, ridsFits), Seq("id"), "left_anti")
+      .select(col("id"), raise_error(concat(
+        lit("retractSoftDedup: retract id "), col("id").cast("string"),
+        lit(" is not stored — nothing to forget"))).cast("long")
+        .as("cluster_id"))
+    // a weight-store singleton sits in no pair by design
+    val delta = forget(stored, pairsOf(storedPairs, "id1", "id2"), rids,
+      ridsFits, col("cluster_size") === 1L, budget)
+    applyDelta(stored, delta.copy(rows = delta.rows.unionByName(unknown)),
+      weightRows(delta.clustersFit))
+  }
+
+  /** CLUSTER-LABEL retraction (X149) — right-to-be-forgotten for the
+    * X133 label store. Labels are DERIVED state: a retracted doc that IS
+    * a cluster minimum leaves every sibling labeled by a ghost id, and
+    * deleting a node can SPLIT a component, so rows cannot simply be
+    * dropped. Given the stored labels, the accumulated duplicate-PAIR
+    * store they were computed from (the retraction-capable deployment
+    * keeps pairs — deletability's storage price), and the retract id
+    * set, this returns labels equal to `connectedComponents(pairs with
+    * NEITHER endpoint retracted)` — retract ≡ rebuild-without,
+    * spec-pinned including ghost-minimum and component-split cases —
+    * while recomputing ONLY the affected components: edge removal never
+    * merges components, so every component without a retracted id keeps
+    * its rows verbatim. Members whose every pair is retracted disappear
+    * (an absent id is unclustered).
+    *
+    * Contract: `storedLabels` must be [[connectedComponents]] over
+    * exactly `storedPairs`; a drifted store fails loud (two bounded
+    * probes). Ids absent from the store retract as no-ops.
+    *
+    * Scale shape: two budget probes ([[DeltaBudget]]): the retract ids
+    * and the affected components' survivors. The retract and
+    * retired-cluster sets broadcast into map-side label-store scans; the
+    * survivor set filters the pair store map-side by broadcast, or by
+    * shuffle-hash above the budget, and bounds the components rerun.
+    * Nothing corpus-sized shuffles outside the invariant probes. */
+  def retractClusterLabels(storedLabels: DataFrame, storedPairs: DataFrame,
+      retractIds: DataFrame, id1: String = "id1", id2: String = "id2"): DataFrame =
+    retractClusterLabels(storedLabels, storedPairs, retractIds, id1, id2, DeltaBudget)
+
+  /** [[retractClusterLabels]] at broadcast budget `budget`. */
+  private[graft] def retractClusterLabels(storedLabels: DataFrame,
+      storedPairs: DataFrame, retractIds: DataFrame, id1: String, id2: String,
+      budget: Long): DataFrame = {
+    requireColumns("retractClusterLabels", "storedLabels", storedLabels,
+      "id", "cluster_id")
+    val stored = labelsOf(storedLabels)
+    val (rids, ridsFits) = retractSet("retractClusterLabels", retractIds, budget)
+    applyDelta(stored, forget(stored, pairsOf(storedPairs, id1, id2), rids,
+      ridsFits, lit(false), budget), labelRows)
   }
 
   /** Corpus-level LINE dedup (the C4/RefinedWeb pass): every line that
@@ -2073,10 +1995,8 @@ object Dedup {
       .filter(col("_df") >= minDocFreq)
       .select("_h")
       .persistTracked()
-    val bl =
-      if (fitsBudget(boiler, lineBroadcastBudget)) broadcast(boiler)
-      else boiler.hint("shuffle_hash")
-    val reassembled = lines.join(bl, Seq("_h"), "left_anti")
+    val reassembled = lines
+      .join(gate(boiler, fitsBudget(boiler, lineBroadcastBudget)), Seq("_h"), "left_anti")
       .groupBy(col("_doc"))
       .agg(array_join(
         transform(array_sort(collect_list(struct(col("_idx"), col("_line")))),
@@ -2170,146 +2090,79 @@ object Dedup {
     * batch of new near-dup pairs can change picks three ways — a
     * cluster MERGE must re-elect one winner, a fresh higher-quality
     * arrival must take its cluster over, and everything else must
-    * survive verbatim. This folds a batch into the stored labels via
-    * [[incrementalConnectedComponents]] (zero corpus-sized shuffles)
-    * and re-runs the argmax ONLY over clusters containing a batch
-    * endpoint; stored picks of untouched clusters pass through
-    * unread. Result provably equals the full
-    * [[canonicalByScore]](updated labels, scores) pick table
-    * (spec-pinned: merge re-election, fresh-winner takeover,
-    * untouched-verbatim, and equality on a random two-increment
-    * chain).
+    * survive verbatim. The batch folds into the stored labels through
+    * [[incrementalConnectedComponents]]' contraction; the picks of the
+    * merged old clusters retire and the argmax reruns ONLY over the
+    * members of the clusters they merged into (a cluster's membership
+    * changes only along a new pair, and distinct components have
+    * disjoint members, so a recomputed row never collides with a kept
+    * one). Result equals the full [[canonicalByScore]](updated labels,
+    * scores) pick table (spec-pinned: merge re-election, fresh-winner
+    * takeover, untouched-verbatim, equality on random increments).
     *
-    * Correctness of the touched set: a cluster's membership changes
-    * only if some new pair endpoint lies in it (merges happen along
-    * new edges; fresh ids form new clusters), so clusters whose OLD
-    * label no endpoint carries keep their pick; and distinct
-    * components have disjoint members, so a recomputed (new-label)
-    * row can never collide with a kept one.
-    *
-    * Scale shape: the touched NEW-cluster id set is batch-bounded and
-    * broadcasts into the label-table scan (budget-gated, shuffle-hash
-    * fallback); the argmax recompute is [[canonicalByScore]]'s
-    * partial-agg over touched members only; the scores side joins
-    * id-keyed (16-byte rows). Returns the complete updated pick
-    * table — what the caller persists for the next increment,
-    * alongside the labels. */
+    * Scale shape: [[incrementalConnectedComponents]]' — one budget
+    * probe ([[DeltaBudget]]), the endpoint set; the pick store streams
+    * map-side against the broadcast retired-cluster set; the argmax is
+    * [[canonicalByScore]]'s partial aggregate over the changed members
+    * only, with the scores joined by id. Returns the complete updated
+    * pick table. */
   def incrementalCanonical(storedLabels: DataFrame, storedPicks: DataFrame,
       newPairs: DataFrame, scores: DataFrame, idCol: String,
-      scoreCol: String, mapBroadcastBudget: Long = 1000000L): DataFrame = {
-    require(Set("cluster_id", "canonical_id", "score")
-      .subsetOf(storedPicks.columns.toSet),
-      s"incrementalCanonical: storedPicks must carry (cluster_id, " +
-        s"canonical_id, score), got ${storedPicks.columns.mkString(", ")}")
-    val labels2 = graft.core.Caches.persistTracked(
-      incrementalConnectedComponents(storedLabels, newPairs,
-        mapBroadcastBudget = mapBroadcastBudget))
-    val ends = newPairs
-      .select(explode(array(col("id1").cast("long"),
-        col("id2").cast("long"))).as("id"))
-      .filter(col("id").isNotNull).distinct()
-      .persistTracked() // old-touched + new-touched lookups
-    val endsFits = fitsBudget(ends, mapBroadcastBudget)
-    val endsJoin = if (endsFits) broadcast(ends) else ends.hint("shuffle_hash")
-    // clusters whose membership could have changed: old labels of the
-    // endpoints (their picks retire) and new labels of the endpoints
-    // (their picks recompute)
-    val oldTouched = storedLabels
-      .select(col("id").cast("long").as("id"),
-        col("cluster_id").cast("long").as("cluster_id"))
-      .join(endsJoin, Seq("id")).select(col("cluster_id")).distinct()
-    val newTouched = labels2.join(endsJoin, Seq("id"))
-      .select(col("cluster_id")).distinct()
-    // |newTouched| ≤ |ends| (one new label per endpoint) — the probe
-    // verdict derives from the ends probe already paid (r21)
-    val touchJoin =
-      if (endsFits || fitsBudget(newTouched, mapBroadcastBudget))
-        broadcast(newTouched)
-      else newTouched.hint("shuffle_hash")
-    val touchedMembers = labels2.join(touchJoin, Seq("cluster_id"),
-      "left_semi")
-    val recomputed = canonicalByScore(touchedMembers, scores, idCol, scoreCol)
-      .filter(col("is_canonical"))
-      .select(col("cluster_id"), col("id").as("canonical_id"), col("score"))
-    val kept = storedPicks
-      .select(col("cluster_id").cast("long").as("cluster_id"),
-        col("canonical_id").cast("long").as("canonical_id"),
-        col("score").cast("long").as("score"))
-      .join(oldTouched.hint("shuffle_hash"), Seq("cluster_id"), "left_anti")
-    kept.unionByName(recomputed)
+      scoreCol: String): DataFrame =
+    incrementalLabelsAndPicks(storedLabels, storedPicks, newPairs, scores,
+      idCol, scoreCol)._2
+
+  /** The updated label and pick tables of [[incrementalCanonical]],
+    * both from one contraction of `newPairs`. */
+  private[graft] def incrementalLabelsAndPicks(storedLabels: DataFrame,
+      storedPicks: DataFrame, newPairs: DataFrame, scores: DataFrame,
+      idCol: String, scoreCol: String,
+      budget: Long = DeltaBudget): (DataFrame, DataFrame) = {
+    requireColumns("incrementalCanonical", "storedLabels", storedLabels,
+      "id", "cluster_id")
+    requireColumns("incrementalCanonical", "storedPicks", storedPicks, PickCols: _*)
+    val stored = labelsOf(storedLabels)
+    val delta = foldPairs(stored, pairsOf(newPairs, "id1", "id2"), None, budget)
+    (applyDelta(stored, delta, labelRows),
+      applyDelta(picksOf(storedPicks), delta, pickRows(scores, idCol, scoreCol)))
   }
 
   /** Canonical-pick RETRACTION (X196) — the forget half of the X195
-    * serving store, the one retraction the row-deletion rule cannot
-    * handle twice over: a retracted doc that IS a cluster's canonical
+    * serving store: a retracted doc that IS a cluster's canonical
     * forces a RE-ELECTION among the survivors, and a retracted bridge
     * doc can SPLIT a component into several clusters that each need
-    * their own pick. Labels update via [[retractClusterLabels]]
-    * (X149 — affected-component reruns over the kept pair store);
-    * picks then recompute ONLY for the new clusters of the affected
-    * components' surviving members, stored picks of untouched
-    * clusters pass through unread, and a cluster that retracts away
-    * entirely simply loses its row. Result provably equals the full
-    * [[canonicalByScore]] over the post-retraction labels
-    * (spec-pinned: canonical re-election, component split into
-    * per-fragment picks, full-cluster disappearance, untouched
-    * verbatim).
+    * their own pick. The labels update as in [[retractClusterLabels]]
+    * (affected-component reruns over the kept pair store); the picks of
+    * the retracted ids' clusters retire and recompute ONLY over their
+    * survivors' new clusters; stored picks of untouched clusters pass
+    * through unread, and a cluster that retracts away entirely loses
+    * its row. Result equals the full [[canonicalByScore]] over the
+    * post-retraction labels (spec-pinned: canonical re-election,
+    * component split into per-fragment picks, full-cluster
+    * disappearance, untouched verbatim).
     *
-    * Scale shape: the retract-id and affected-cluster sets are
-    * retraction-bounded and broadcast (budget-gated, shuffle-hash
-    * fallback); the argmax recompute is [[canonicalByScore]]'s
-    * partial-agg over affected members only. Returns the complete
-    * updated pick table. */
+    * Scale shape: [[retractClusterLabels]]' — two budget probes
+    * ([[DeltaBudget]]), the retract ids and the survivors; the pick
+    * store streams map-side against the broadcast retired-cluster set;
+    * the argmax is [[canonicalByScore]]'s partial aggregate over the
+    * survivors only. Returns the complete updated pick table. */
   def retractCanonical(storedLabels: DataFrame, storedPicks: DataFrame,
       storedPairs: DataFrame, scores: DataFrame, retractIds: DataFrame,
-      idCol: String, scoreCol: String,
-      broadcastBudget: Long = 1000000L): DataFrame = {
-    require(Set("cluster_id", "canonical_id", "score")
-      .subsetOf(storedPicks.columns.toSet),
-      s"retractCanonical: storedPicks must carry (cluster_id, " +
-        s"canonical_id, score), got ${storedPicks.columns.mkString(", ")}")
-    val labels2 = graft.core.Caches.persistTracked(
-      retractClusterLabels(storedLabels, storedPairs, retractIds,
-        broadcastBudget = broadcastBudget))
-    val stored = storedLabels.select(col("id").cast("long").as("id"),
-      col("cluster_id").cast("long").as("cluster_id"))
-    val rids = retractIds.select(col("id").cast("long").as("id"))
-      .filter(col("id").isNotNull).distinct()
-    // probe once; bounded derivations reuse the verdict (r21):
-    // |oldAffected| ≤ |rids|, |newTouched| ≤ |survivors|
-    val ridsFits = fitsBudget(rids, broadcastBudget)
-    val ridsJoin = if (ridsFits) broadcast(rids) else rids.hint("shuffle_hash")
-    // clusters containing a retracted id: their picks retire; their
-    // surviving members' NEW clusters recompute
-    val oldAffected = stored.join(ridsJoin, Seq("id"))
-      .select(col("cluster_id")).distinct()
-    val oldAffJoin =
-      if (ridsFits || fitsBudget(oldAffected, broadcastBudget))
-        broadcast(oldAffected)
-      else oldAffected.hint("shuffle_hash")
-    val survivors = stored.join(oldAffJoin, Seq("cluster_id"), "left_semi")
-      .select(col("id"))
-      .join(ridsJoin, Seq("id"), "left_anti")
-    val survivorsFits = fitsBudget(survivors, broadcastBudget)
-    val newTouched = labels2.join(
-        if (survivorsFits) broadcast(survivors)
-        else survivors.hint("shuffle_hash"),
-        Seq("id"), "left_semi")
-      .select(col("cluster_id")).distinct()
-    val touchJoin =
-      if (survivorsFits || fitsBudget(newTouched, broadcastBudget))
-        broadcast(newTouched)
-      else newTouched.hint("shuffle_hash")
-    val recomputed = canonicalByScore(
-      labels2.join(touchJoin, Seq("cluster_id"), "left_semi"),
-      scores, idCol, scoreCol)
-      .filter(col("is_canonical"))
-      .select(col("cluster_id"), col("id").as("canonical_id"), col("score"))
-    storedPicks
-      .select(col("cluster_id").cast("long").as("cluster_id"),
-        col("canonical_id").cast("long").as("canonical_id"),
-        col("score").cast("long").as("score"))
-      .join(oldAffJoin, Seq("cluster_id"), "left_anti")
-      .unionByName(recomputed)
+      idCol: String, scoreCol: String): DataFrame =
+    retractCanonical(storedLabels, storedPicks, storedPairs, scores,
+      retractIds, idCol, scoreCol, DeltaBudget)
+
+  /** [[retractCanonical]] at broadcast budget `budget`. */
+  private[graft] def retractCanonical(storedLabels: DataFrame,
+      storedPicks: DataFrame, storedPairs: DataFrame, scores: DataFrame,
+      retractIds: DataFrame, idCol: String, scoreCol: String,
+      budget: Long): DataFrame = {
+    requireColumns("retractCanonical", "storedLabels", storedLabels,
+      "id", "cluster_id")
+    requireColumns("retractCanonical", "storedPicks", storedPicks, PickCols: _*)
+    val stored = labelsOf(storedLabels)
+    val (rids, ridsFits) = retractSet("retractCanonical", retractIds, budget)
+    applyDelta(picksOf(storedPicks), forget(stored, pairsOf(storedPairs, "id1", "id2"),
+      rids, ridsFits, lit(false), budget), pickRows(scores, idCol, scoreCol))
   }
 }

@@ -478,9 +478,9 @@ object Similarity {
     require(coarseCents.nonEmpty, "ivfPqCodes: empty coarse centroids")
     require(!metaCols.exists(c =>
       Set("vec_id", "cell", "codes", "qv", "rv", "cluster", "dist",
-        "_best")(c) || c.matches("_r\\d+")),
+        "_best")(c)),
       s"ivfPqCodes: metaCols collide with reserved store/internal names " +
-        s"(vec_id, cell, codes, qv, rv, cluster, dist, _best, _r<i>): " +
+        s"(vec_id, cell, codes, qv, rv, cluster, dist, _best): " +
         metaCols.mkString(", "))
     // cell + residual -> m codes (map-side argmin per sub-space;
     // k-means' tie rule). metaCols denormalize filterable attributes

@@ -511,8 +511,9 @@ object EventsStreaming {
     * duplicate PAIRS folds into the label snapshot (the X152
     * contraction) AND re-elects canonical picks for touched clusters
     * only ([[graft.operators.Dedup.incrementalCanonical]]), writing
-    * both tables as snapshots. The pick store is what serving reads;
-    * after any batch it equals the full argmax over the current labels.
+    * both tables as snapshots from one contraction per batch. The pick
+    * store is what serving reads; after any batch it equals the full
+    * argmax over the current labels.
     * `scores` is a STATIC id-keyed table (quality scores are per-doc
     * ingest facts). */
   def streamingCanonicalMaintenance(pairs: DataFrame,
@@ -524,15 +525,13 @@ object EventsStreaming {
       val spark = batch.sparkSession
       val priorLabels = labelStore.prior(spark, labelStorePath, batchId)
       val priorPicks = pickStore.prior(spark, pickStorePath, batchId)
-      // normalize the pair columns to (id1, id2) BEFORE both calls:
-      // incrementalCanonical's explode and contraction use the defaults
+      // the pair columns as incrementalLabelsAndPicks reads them
       val b = batch.select(col(id1).as("id1"), col(id2).as("id2"))
         .localCheckpoint()
-      // checkpointing and writing the two snapshots concurrently
-      // measured no faster (sf0.01, 6 paired runs), so they run in turn
-      val lblPlan = Dedup.incrementalConnectedComponents(
-        priorLabels, b, "id1", "id2")
-      val pickPlan = Dedup.incrementalCanonical(
+      // one contraction feeds both snapshots. Checkpointing and writing
+      // them concurrently measured no faster (sf0.01, 6 paired runs), so
+      // they run in turn
+      val (lblPlan, pickPlan) = Dedup.incrementalLabelsAndPicks(
         priorLabels, priorPicks, b, scores, idCol, scoreCol)
       val updatedLabels = lblPlan.localCheckpoint()
       val updatedPicks = pickPlan.localCheckpoint()

@@ -1060,7 +1060,7 @@ class DedupSpec extends SparkSpec {
     // shuffle-hash fallback (budget 1 — every gated frame exceeds it)
     // produces the identical result
     val gotSh = Dedup.retractClusterLabels(labels, pairs,
-      retract.toDF("id"), broadcastBudget = 1L)
+      retract.toDF("id"), "id1", "id2", budget = 1L)
       .as[(Long, Long)].collect().toSet
     assert(gotSh == rebuilt)
     intercept[IllegalArgumentException] {
@@ -1099,6 +1099,99 @@ class DedupSpec extends SparkSpec {
       Dedup.retractClusterLabels(orphaned, pairs, Seq(1L).toDF("id"))
     }
     assert(e3.getMessage.contains("orphan labels"))
+  }
+
+  // Cluster-store laws over one seeded graph, for the label, weight and
+  // pick stores on both join sides (broadcast at the family budget,
+  // shuffle-hash at budget 1): an increment into an empty store equals
+  // the batch form; two increments equal the batch form over the union;
+  // a retraction equals the batch form over the survivors. Ids 0..59
+  // arrive with the first batch and 60..119 with the second; 58, 59,
+  // 118 and 119 sit in no pair. Planted: the chain 0-1-2 (retracting
+  // the bridge 1 splits it) and the star 10-{11,12,13} with the edge
+  // 12-13, whose minimum 10 is retracted (12 takes over the ghost
+  // minimum's fragment); 59 is a retracted singleton.
+  private object Laws {
+    private val rnd = new scala.util.Random(23)
+    private def draw(lo: Seq[Long], hi: Seq[Long], n: Int): Seq[(Long, Long)] =
+      Seq.fill(n)((lo(rnd.nextInt(lo.size)), hi(rnd.nextInt(hi.size))))
+        .filter(p => p._1 != p._2)
+    private val free = (20L to 57L) ++ (60L to 117L)
+    val first: Seq[(Long, Long)] = Seq((0L, 1L), (1L, 2L), (10L, 11L),
+      (10L, 12L), (10L, 13L), (12L, 13L)) ++ draw(20L to 57L, 20L to 57L, 30)
+    val second: Seq[(Long, Long)] = draw(60L to 117L, free, 40)
+    val all: Seq[(Long, Long)] = first ++ second
+    val ids1: Seq[Long] = 0L until 60L
+    val ids2: Seq[Long] = 60L until 120L
+    val retract: Seq[Long] = Seq(1L, 10L, 59L) ++ (20L until 120L).filter(_ % 9 == 4)
+    val kept: Seq[(Long, Long)] =
+      all.filter(p => !retract.contains(p._1) && !retract.contains(p._2))
+    val budgets: Seq[Long] = Seq(Dedup.DeltaBudget, 1L)
+  }
+
+  private def pairDf(ps: Seq[(Long, Long)]): DataFrame = ps.toDF("id1", "id2")
+  private def components(ps: Seq[(Long, Long)]): DataFrame =
+    Dedup.connectedComponents(pairDf(ps), "id1", "id2")
+  private def labelSet(df: DataFrame): Set[(Long, Long)] =
+    df.select("id", "cluster_id").as[(Long, Long)].collect().toSet
+
+  test("cluster-store laws: labels increment and retract like the batch form, both join sides") {
+    import Laws._
+    val empty = Seq.empty[(Long, Long)].toDF("id", "cluster_id")
+    for (b <- budgets) {
+      val once = Dedup.incrementalConnectedComponents(empty, pairDf(first), "id1", "id2", b)
+      assert(labelSet(once) == labelSet(components(first)), s"empty store, budget $b")
+      val twice = Dedup.incrementalConnectedComponents(once, pairDf(second), "id1", "id2", b)
+      assert(labelSet(twice) == labelSet(components(all)), s"two increments, budget $b")
+      val gone = Dedup.retractClusterLabels(components(all), pairDf(all),
+        retract.toDF("id"), "id1", "id2", b)
+      assert(labelSet(gone) == labelSet(components(kept)), s"retraction, budget $b")
+    }
+  }
+
+  test("cluster-store laws: weights increment and retract like the batch form, both join sides") {
+    import Laws._
+    def weights(ids: Seq[Long], ps: Seq[(Long, Long)]): DataFrame =
+      Dedup.softDedupFromPairs(ids.toDF("id"), "id", pairDf(ps))
+    def rows(df: DataFrame): Set[(Long, Long, Long, Long, Boolean)] =
+      df.select("id", "cluster_id", "cluster_size", "weight_bp", "keep")
+        .as[(Long, Long, Long, Long, Boolean)].collect().toSet
+    val empty = Seq.empty[(Long, Long, Long, Long, Boolean)]
+      .toDF("id", "cluster_id", "cluster_size", "weight_bp", "keep")
+    for (b <- budgets) {
+      val once = Dedup.incrementalSoftDedup(empty, pairDf(first), ids1.toDF("id"), "id", b)
+      assert(rows(once) == rows(weights(ids1, first)), s"empty store, budget $b")
+      val twice = Dedup.incrementalSoftDedup(once, pairDf(second), ids2.toDF("id"), "id", b)
+      assert(rows(twice) == rows(weights(ids1 ++ ids2, all)), s"two increments, budget $b")
+      val gone = Dedup.retractSoftDedup(weights(ids1 ++ ids2, all), pairDf(all),
+        retract.toDF("id"), b)
+      assert(rows(gone) == rows(weights((ids1 ++ ids2).filterNot(retract.contains), kept)),
+        s"retraction, budget $b")
+    }
+  }
+
+  test("cluster-store laws: picks increment and retract like the batch form, both join sides") {
+    import Laws._
+    val scores = (0L until 120L).map(i => (i, i * 37 % 11)).toDF("doc_id", "q")
+    def picks(labels: DataFrame): DataFrame =
+      Dedup.canonicalByScore(labels, scores, "doc_id", "q")
+        .filter(col("is_canonical"))
+        .select(col("cluster_id"), col("id").as("canonical_id"), col("score"))
+    def rows(df: DataFrame): Set[(Long, Long, Long)] =
+      df.select("cluster_id", "canonical_id", "score").as[(Long, Long, Long)].collect().toSet
+    val noLabels = Seq.empty[(Long, Long)].toDF("id", "cluster_id")
+    val noPicks = Seq.empty[(Long, Long, Long)].toDF("cluster_id", "canonical_id", "score")
+    for (b <- budgets) {
+      val (l1, p1) = Dedup.incrementalLabelsAndPicks(noLabels, noPicks, pairDf(first),
+        scores, "doc_id", "q", budget = b)
+      assert(rows(p1) == rows(picks(components(first))), s"empty store, budget $b")
+      val (_, p2) = Dedup.incrementalLabelsAndPicks(l1, p1, pairDf(second),
+        scores, "doc_id", "q", budget = b)
+      assert(rows(p2) == rows(picks(components(all))), s"two increments, budget $b")
+      val gone = Dedup.retractCanonical(components(all), picks(components(all)),
+        pairDf(all), scores, retract.toDF("id"), "doc_id", "q", b)
+      assert(rows(gone) == rows(picks(components(kept))), s"retraction, budget $b")
+    }
   }
 
   test("incrementalSubstringDedup: store windows cover everywhere, fresh dups keep batch-first") {

@@ -1204,17 +1204,21 @@ class SimilaritySpec extends SparkSpec {
       coarseK = emb.count().toInt, pred)
     assert(rows(exhaustive) ==
       rows(Similarity.bruteForceTopK(emb.filter(pred), q, 10)))
-    // reserved-name collision fails loud — including the internal
-    // residual-slice names _r0.._r{m-1}, which would otherwise die
-    // later with an opaque ambiguous-column error
+    // reserved-name collision fails loud
     intercept[IllegalArgumentException] {
       Similarity.ivfPqCodes(emb.withColumnRenamed("label", "cell"),
         "vec_id", "embedding", coarse, books, metaCols = Seq("cell"))
     }
-    intercept[IllegalArgumentException] {
-      Similarity.ivfPqCodes(emb.withColumnRenamed("label", "_r0"),
-        "vec_id", "embedding", coarse, books, metaCols = Seq("_r0"))
-    }
+    // no internal column is named _r<i>: such a metaCol lands in the
+    // store like any other, codes unchanged
+    val r0 = Similarity.ivfPqCodes(emb.withColumnRenamed("label", "_r0"),
+      "vec_id", "embedding", coarse, books, metaCols = Seq("_r0"))
+    assert(r0.columns.toSeq == Seq("vec_id", "_r0", "cell", "codes"))
+    val r0Codes = r0.select("vec_id", "cell", "codes")
+    assert(r0Codes.exceptAll(bare).isEmpty && bare.exceptAll(r0Codes).isEmpty)
+    val labels = emb.select(col("vec_id"), col("label").as("_r0"))
+    assert(r0.select("vec_id", "_r0").exceptAll(labels).isEmpty &&
+      labels.exceptAll(r0.select("vec_id", "_r0")).isEmpty)
   }
 
   test("incremental IVF-PQ store: increment == rebuild, retract, refresh, guards") {

@@ -129,10 +129,13 @@ class SuperstepGuardSpec extends SparkSpec {
     }
   }
 
-  // The bounds are the counts measured before the store protocol moved
-  // behind graft.streaming.Store (exact dedup 13 in every run, soft
-  // dedup 41 or 42 across runs); a new probe, checkpoint or write per
-  // batch raises them.
+  // Exact dedup's bound is the count measured before the store protocol
+  // moved behind graft.streaming.Store (13 in every run). The soft-dedup
+  // and canonical bounds are the largest counts since their maintenance
+  // became one cluster delta per batch: soft dedup 34 in three runs of
+  // this spec alone and 35 in a run of the whole suite (41 or 42
+  // before), canonical 32 in each (52 before). A new probe, checkpoint
+  // or write per batch raises them.
 
   test("one micro-batch of streaming exact dedup issues at most 13 jobs") {
     val jobs = oneBatchJobs(
@@ -146,7 +149,7 @@ class SuperstepGuardSpec extends SparkSpec {
     assert(jobs.size <= 13, s"${jobs.size} jobs: $jobs")
   }
 
-  test("one micro-batch of streaming soft-dedup maintenance issues at most 42 jobs") {
+  test("one micro-batch of streaming soft-dedup maintenance issues at most 35 jobs") {
     val jobs = oneBatchJobs(Seq((2L, 10L), (30L, 30L)).toDF("id1", "id2"),
       Seq((1L, 1L, 2L, 5000L, true), (2L, 1L, 2L, 5000L, false))
         .toDF("id", "cluster_id", "cluster_size", "weight_bp", "keep")) { (src, store) =>
@@ -154,6 +157,25 @@ class SuperstepGuardSpec extends SparkSpec {
         (upd, _) => assert(upd.count() == 4L)
       }
     }
-    assert(jobs.size <= 42, s"${jobs.size} jobs: $jobs")
+    assert(jobs.size <= 35, s"${jobs.size} jobs: $jobs")
+  }
+
+  test("one micro-batch of streaming canonical maintenance issues at most 32 jobs") {
+    // the pick store's bootstrap sits beside the label store the helper
+    // writes; the batch merges {1,2} with {10,11} and brings in 30
+    val picks = java.nio.file.Files.createTempDirectory("graft-pick-guard").toString
+    Seq((1L, 2L, 9L), (10L, 10L, 8L)).toDF("cluster_id", "canonical_id", "score")
+      .coalesce(1).write.parquet(s"$picks/batch=-1")
+    val scores = Seq((1L, 5L), (2L, 9L), (10L, 8L), (11L, 3L), (30L, 100L))
+      .toDF("doc_id", "q")
+    val jobs = oneBatchJobs(Seq((2L, 10L), (11L, 30L)).toDF("id1", "id2"),
+      Seq((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L)).toDF("id", "cluster_id")) {
+      (src, store) =>
+        EventsStreaming.streamingCanonicalMaintenance(src, store, picks, scores,
+          "doc_id", "q") { (upd, _) => assert(upd.count() == 1L) }
+    }
+    // one contraction per batch feeds both snapshots (contracting once
+    // per snapshot took 52 jobs)
+    assert(jobs.size <= 32, s"${jobs.size} jobs: $jobs")
   }
 }
